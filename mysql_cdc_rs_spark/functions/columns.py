@@ -91,6 +91,18 @@ def host_of_url(url: Column) -> Column:
     return F.parse_url(url, F.lit("HOST"))
 
 
+# Number of url-hash buckets used for explicit partitioning/lineage. At
+# 10^12 docs this is the table's physical partition key (Iceberg bucket
+# transform); locally it sizes lineage granularity.
+URL_BUCKETS = 256
+
+
+def url_bucket(url: Column) -> Column:
+    """Deterministic url-hash bucket in [0, URL_BUCKETS): the decoded
+    table's ``url_bucket`` column and every checkpoint's lineage key."""
+    return F.pmod(F.xxhash64(url), F.lit(URL_BUCKETS)).cast("int")
+
+
 def salted_key(key: Column, unique: Column, salt_buckets: int) -> Column:
     """Skew salt: composite of the hot key and a deterministic per-row bucket.
 

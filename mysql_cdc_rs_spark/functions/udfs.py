@@ -28,7 +28,6 @@ from pyspark.sql.types import (
 
 from mysql_cdc_rs_spark.kernel import jsonb as _jsonb
 from mysql_cdc_rs_spark.kernel.batchdecode import decode_batch
-from mysql_cdc_rs_spark.kernel.decode import decode_page  # noqa: F401 — re-export; oracle/tests import it from here
 
 DECODED_FIELDS = [
     ("status", IntegerType()),
@@ -60,6 +59,9 @@ def make_decode_udf():
     registered functions BY VALUE with the UDF — the Spark analog of the
     reference handing its decoder registry to each reader thread
     (/root/reference/binlog/src/decoder/event_decoder_registry.rs:65-140).
+    Each batch REPLACES the worker's registries with the snapshot: a reused
+    worker would otherwise keep an earlier plan's decoders and route
+    overrides live.
     """
     from mysql_cdc_rs_spark.kernel import registry as _reg
 
@@ -70,7 +72,9 @@ def make_decode_udf():
     def _decode(html: pd.Series) -> pd.DataFrame:
         from mysql_cdc_rs_spark.kernel import registry as _r
 
+        _r._MIME_DECODERS.clear()  # noqa: SLF001
         _r._MIME_DECODERS.update(mime_decoders)  # noqa: SLF001
+        _r._ROUTE_OVERRIDES.clear()  # noqa: SLF001
         _r._ROUTE_OVERRIDES.update(route_overrides)  # noqa: SLF001
         # fused batch loop (kernel/batchdecode.py): byte-identical to
         # [decode_page(b) for b in html] but +28% single-thread — column

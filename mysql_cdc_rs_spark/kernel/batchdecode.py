@@ -31,8 +31,6 @@ place.
 
 from __future__ import annotations
 
-import zlib
-
 from mysql_cdc_rs_spark.kernel import charset as _cs
 from mysql_cdc_rs_spark.kernel import http as _http
 from mysql_cdc_rs_spark.kernel import textextract as _tx
@@ -64,14 +62,13 @@ def decode_batch(raws, mime_decoders=None) -> dict[str, list]:
     path is cold by design).  None/empty skips the per-row membership test's
     dict lookup entirely on the common path.
 
-    Snapshot isolation, deliberately: DISPATCH consults the snapshot the
-    UDF was built with (``mime in mds``), so a decoder some earlier UDF
-    left in a reused worker's live registry cannot change which rows take
-    the extension path — each plan sees exactly the extensions registered
-    when it was built.  Rows that DO dispatch run through ``decode_page``,
-    whose registry the caller (functions.udfs.make_decode_udf) primes from
-    the same snapshot, so the byte-identity contract with
-    ``[decode_page(r) for r in raws]`` holds per snapshot.
+    Snapshot isolation: DISPATCH consults the snapshot the UDF was built
+    with (``mime in mds``).  Rows that dispatch run through ``decode_page``,
+    whose registries the caller (functions.udfs.make_decode_udf) replaces
+    with the same snapshot before every batch, so decoders AND route
+    overrides are exactly those registered when the plan was built — even
+    in a worker an earlier plan reused — and the byte-identity contract
+    with ``[decode_page(r) for r in raws]`` holds per snapshot.
     """
     mds = mime_decoders or None
 
@@ -88,14 +85,7 @@ def decode_batch(raws, mime_decoders=None) -> dict[str, list]:
     markup_sub = _tx._MARKUP_RE.sub
     entity_post = _tx._ENTITY_PASSES_POST_COLLAPSE
     title_search = _TITLE_RE.search
-    zdecompress = zlib.decompress
-    zerror = zlib.error
-    # zstd resolved once per batch (sys.modules makes a loop-local import
-    # ~free, but the prologue is where every other bound local lives)
-    try:
-        import zstandard as _zstd
-    except ImportError:
-        _zstd = None
+    decompress = _http.decompress
 
     c_status: list = []
     c_mime: list = []
@@ -173,41 +163,17 @@ def decode_batch(raws, mime_decoders=None) -> dict[str, list]:
         enc = hdrs.get("content-encoding")
         enc_out = enc.lower() if enc else "identity"
 
-        # --- decompress (mirrors http.decompress_body) ---
-        # dispatch key is STRIPPED (decompress_body strips; the output
-        # column does not — "gzip " must decompress yet surface verbatim)
+        # --- decompress (the same http.decompress as decode_page) ---
+        # dispatch key is STRIPPED (the output column is not — "gzip "
+        # must decompress yet surface verbatim); identity stays inline
         enc_key = enc.strip().lower() if enc else ""
         if enc_key != "" and enc_key != "identity":
-            if enc_key == "gzip":
-                try:
-                    body = zdecompress(body, wbits=31)
-                except zerror:
-                    body = None
-            elif enc_key == "deflate":
-                try:
-                    body = zdecompress(body)
-                except zerror:
-                    try:
-                        body = zdecompress(body, wbits=-15)
-                    except zerror:
-                        body = None
-            elif enc_key == "zstd":
-                if _zstd is None:
-                    body = None
-                else:
-                    try:
-                        body = _zstd.ZstdDecompressor().decompress(
-                            body, max_output_size=1 << 26
-                        )
-                    except _zstd.ZstdError:
-                        body = None
-            else:
-                body = None
-        if body is None:
-            a_st(status); a_mi(mime); a_ch(None); a_cs(None); a_en(enc_out)
-            a_hl(hlen); a_bl(None); a_tx(None); a_ti(None)
-            a_et("error_decode"); a_rt("errors"); a_er(_http.ERR_BAD_GZIP); a_hd(hdrs)
-            continue
+            body, derr = decompress(enc_key, body)
+            if body is None:
+                a_st(status); a_mi(mime); a_ch(None); a_cs(None); a_en(enc_out)
+                a_hl(hlen); a_bl(None); a_tx(None); a_ti(None)
+                a_et("error_decode"); a_rt("errors"); a_er(derr); a_hd(hdrs)
+                continue
         blen = len(body)
 
         if status >= 400:

@@ -17,7 +17,8 @@ sink — SURVEY.md §2.10):
     error_http    status >= 400 (upstream error pages)
     error_frame   malformed record (no magic / bad header) — analog of
                   UnexpectedEof skip (bytes_binlog_reader.rs:94-101)
-    error_decode  framed OK but undecodable (unknown charset, bad gzip)
+    error_decode  framed OK but undecodable (unknown charset, bad gzip,
+                  body inflating past http.MAX_BODY_BYTES)
 
 Routes (sink fan-out): html|plain|binary -> "content_<type>",
 redirect -> "redirect", error_* -> "errors".
@@ -99,10 +100,11 @@ def decode_page(raw: bytes | None) -> dict[str, Any]:
     enc = rec.headers.get("content-encoding")
     out["content_encoding"] = enc.lower() if enc else "identity"
 
-    body = _http.decompress_body(rec)
+    # the dispatch key is stripped; the output column is not
+    body, err = _http.decompress((enc or "").strip().lower(), rec.body)
     if body is None:
         out["event_type"] = "error_decode"
-        out["error"] = _http.ERR_BAD_GZIP
+        out["error"] = err
         return out
     out["body_len"] = len(body)
 

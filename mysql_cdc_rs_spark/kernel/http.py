@@ -43,6 +43,15 @@ ERR_NO_MAGIC = "NO_MAGIC"
 ERR_NO_HEADER_END = "NO_HEADER_END"
 ERR_BAD_STATUS_LINE = "BAD_STATUS_LINE"
 ERR_BAD_GZIP = "BAD_GZIP"
+ERR_BODY_TOO_LARGE = "BODY_TOO_LARGE"
+
+# Largest body any Content-Encoding may inflate to.  Bounds Python-worker
+# memory on a decompression bomb: a larger page takes the error route.
+MAX_BODY_BYTES = 1 << 26
+
+
+class BodyTooLarge(Exception):
+    """A coded body inflates past MAX_BODY_BYTES."""
 
 
 @dataclass(slots=True)
@@ -114,31 +123,48 @@ def parse_record(raw: bytes) -> HttpRecord:
     return rec
 
 
-def decompress_body(rec: HttpRecord) -> bytes | None:
-    """Apply Content-Encoding — the compressed-transaction-payload analog.
+def inflate(data: bytes, wbits: int) -> bytes:
+    """``zlib.decompress(data, wbits=wbits)`` that stops at MAX_BODY_BYTES
+    of output: raises BodyTooLarge past it, and zlib.error wherever
+    zlib.decompress would.  A bounded ``decompressobj`` returns a truncated
+    or empty stream's partial output instead of raising, hence the ``eof``
+    check; bytes after the end of the stream are ignored, as in
+    zlib.decompress."""
+    d = zlib.decompressobj(wbits)
+    out = d.decompress(data, MAX_BODY_BYTES + 1)
+    if len(out) > MAX_BODY_BYTES:
+        raise BodyTooLarge
+    if not d.eof:
+        raise zlib.error("incomplete or truncated stream")
+    return out
+
+
+def decompress(enc: str, body: bytes) -> tuple[bytes | None, str | None]:
+    """Apply a Content-Encoding — the compressed-transaction-payload analog.
 
     The reference handles TRANSACTION_PAYLOAD compressed events
     (/root/reference/binlog/src/decoder/mysql8_decoders.rs:14-88); here the
-    compressed unit is a gzip page body.  Returns None (caller -> error
-    route) on a corrupt stream; never raises.
+    compressed unit is a gzip page body.  ``enc`` is the stripped,
+    lowercased header value.  Returns ``(body, None)``, or ``(None, error
+    code)`` for a corrupt or oversized stream (caller -> error route);
+    never raises.  Both decode loops (``decode.decode_page`` and
+    ``batchdecode.decode_batch``) call this one function.
     """
-    enc = rec.headers.get("content-encoding", "").strip().lower()
     if enc in ("", "identity"):
-        return rec.body
-    if enc == "gzip":
-        try:
-            return zlib.decompress(rec.body, wbits=31)
-        except zlib.error:
-            return None
-    if enc == "deflate":
-        try:
-            return zlib.decompress(rec.body)
-        except zlib.error:
-            # some encoders emit RAW deflate streams (no zlib header)
+        return body, None
+    try:
+        if enc == "gzip":
+            return inflate(body, 31), None
+        if enc == "deflate":
             try:
-                return zlib.decompress(rec.body, wbits=-15)
+                return inflate(body, 15), None
             except zlib.error:
-                return None
+                # some encoders emit RAW deflate streams (no zlib header)
+                return inflate(body, -15), None
+    except zlib.error:
+        return None, ERR_BAD_GZIP
+    except BodyTooLarge:
+        return None, ERR_BODY_TOO_LARGE
     if enc == "zstd":
         # MySQL 8's TRANSACTION_PAYLOAD default algorithm
         # (mysql8_decoders.rs:14-97); gated: the lib may be absent in
@@ -146,11 +172,11 @@ def decompress_body(rec: HttpRecord) -> bytes | None:
         try:
             import zstandard
         except ImportError:
-            return None
+            return None, ERR_BAD_GZIP
         try:
             return zstandard.ZstdDecompressor().decompress(
-                rec.body, max_output_size=1 << 26
-            )
+                body, max_output_size=MAX_BODY_BYTES
+            ), None
         except zstandard.ZstdError:
-            return None
-    return None
+            pass
+    return None, ERR_BAD_GZIP

@@ -10,16 +10,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mysql_cdc_rs_spark.functions.columns import host_of_url, tld_of_url
+from mysql_cdc_rs_spark.functions.columns import host_of_url, tld_of_url, url_bucket
 from mysql_cdc_rs_spark.functions.udfs import with_decoded
 
-# Number of url-hash buckets used for explicit partitioning/lineage. At
-# 10^12 docs this is the table's physical partition key (Iceberg bucket
-# transform); locally it sizes lineage granularity.
-DEFAULT_URL_BUCKETS = 256
 
-
-def decode_pages(pages: DataFrame, url_buckets: int = DEFAULT_URL_BUCKETS) -> DataFrame:
+def decode_pages(pages: DataFrame) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> decoded event DataFrame.
 
     Output columns:
@@ -34,7 +29,7 @@ def decode_pages(pages: DataFrame, url_buckets: int = DEFAULT_URL_BUCKETS) -> Da
         "url",
         "warc_ts",
         "lang",
-        F.pmod(F.xxhash64("url"), F.lit(url_buckets)).cast("int").alias("url_bucket"),
+        url_bucket(F.col("url")).alias("url_bucket"),
         host_of_url(F.col("url")).alias("host"),
         tld_of_url(F.col("url")).alias("tld"),
         F.length("html").alias("raw_len"),

@@ -60,16 +60,16 @@ def write_routes(enriched: DataFrame, catalog: SinkCatalog) -> dict[str, int]:
     """
     routed = route_table(enriched)
     catalog.overwrite(routed, "routed", partition_by=["route"])
-    written = catalog.read("routed")
-    counts = {
-        r["route"]: r["n"]
-        for r in written.groupBy("route").agg(F.count("*").alias("n")).collect()
-    }
+    counts = route_counts(catalog.read("routed"))
     catalog.write_manifest(
         "routes", {"counts": counts, "total": sum(counts.values())}
     )
     return counts
 
 
-def read_route(catalog: SinkCatalog, route: str) -> DataFrame:
-    return catalog.read("routed").filter(F.col("route") == route)
+def route_counts(routed: DataFrame) -> dict[str, int]:
+    """{route: row_count} of a routed table (one aggregate job)."""
+    return {
+        r["route"]: r["n"]
+        for r in routed.groupBy("route").agg(F.count("*").alias("n")).collect()
+    }

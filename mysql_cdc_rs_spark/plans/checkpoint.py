@@ -68,13 +68,17 @@ class CheckpointedStage:
             if bucket_col in persisted.columns
             else {"row_count": persisted.count()}
         )
+        self.mark_complete(input_lineage, out_lineage)
+        return persisted
+
+    def mark_complete(self, input_lineage: dict, output_lineage: dict) -> None:
+        """Record the stage's output as complete over ``input_lineage``."""
         self.catalog.write_manifest(
             self.name,
             {
                 "status": "complete",
                 "stage": self.name,
                 "input_lineage": input_lineage,
-                "output_lineage": out_lineage,
+                "output_lineage": output_lineage,
             },
         )
-        return persisted

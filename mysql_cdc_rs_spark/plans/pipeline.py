@@ -14,11 +14,12 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mysql_cdc_rs_spark.functions.columns import url_bucket
 from mysql_cdc_rs_spark.operators.decode import decode_pages
 from mysql_cdc_rs_spark.operators.enrich import enrich
-from mysql_cdc_rs_spark.operators.route import write_routes
+from mysql_cdc_rs_spark.operators.route import route_counts, write_routes
 from mysql_cdc_rs_spark.operators import stats as S
-from mysql_cdc_rs_spark.plans.checkpoint import lineage_summary
+from mysql_cdc_rs_spark.plans.checkpoint import CheckpointedStage, lineage_summary
 from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
 
 
@@ -43,39 +44,21 @@ def run_pipeline(
     t0 = time.monotonic()
     enriched = build_enriched(pages)
 
-    if resume:
-        # decode+enrich+route is one checkpointable unit; its input lineage
-        # is the pages table's deterministic url-bucket histogram.
-        pages_lineage_df = pages.select(
-            F.pmod(F.xxhash64("url"), F.lit(256)).cast("int").alias("url_bucket")
-        )
-        input_lineage = lineage_summary(pages_lineage_df)
-        manifest = catalog.read_manifest("routed")
-        if (
-            manifest is not None
-            and manifest.get("status") == "complete"
-            and manifest.get("input_lineage") == input_lineage
-            and catalog.exists("routed")
-        ):
-            routed = catalog.read("routed")
-            counts = {
-                r["route"]: r["n"]
-                for r in routed.groupBy("route").agg(F.count("*").alias("n")).collect()
-            }
-        else:
-            counts = write_routes(enriched, catalog)
-            catalog.write_manifest(
-                "routed",
-                {
-                    "status": "complete",
-                    "stage": "routed",
-                    "input_lineage": input_lineage,
-                    "output_lineage": {"row_count": sum(counts.values())},
-                },
-            )
-            routed = catalog.read("routed")
+    # decode+enrich+route is one checkpointable unit; its input lineage is
+    # the pages table's deterministic url-bucket histogram.
+    stage = CheckpointedStage(catalog, "routed")
+    input_lineage = (
+        lineage_summary(pages.select(url_bucket(F.col("url")).alias("url_bucket")))
+        if resume
+        else None
+    )
+    if resume and stage.completed_with(input_lineage):
+        routed = catalog.read("routed")
+        counts = route_counts(routed)
     else:
         counts = write_routes(enriched, catalog)
+        if resume:
+            stage.mark_complete(input_lineage, {"row_count": sum(counts.values())})
         routed = catalog.read("routed")
 
     metrics: dict[str, object] = {}

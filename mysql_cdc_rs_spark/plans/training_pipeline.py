@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mysql_cdc_rs_spark.functions.columns import url_bucket
 from mysql_cdc_rs_spark.functions.text import words_of
 from mysql_cdc_rs_spark.operators import dedup as DD
 from mysql_cdc_rs_spark.operators.decode import decode_pages
@@ -36,17 +37,45 @@ from mysql_cdc_rs_spark.operators.decode import decode_pages
 DEFAULT_MIN_TOKENS = 20
 
 
+def text_bearing(decoded: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
+    """Decoded pages -> (doc_id, text, *keep) of the html/plain docs.
+
+    doc_id is the trailing integer of the url, which both page generators
+    emit."""
+    doc_id = F.regexp_extract("url", r"/(\d+)$", 1).cast("long")
+    return decoded.filter(F.col("event_type").isin("html", "plain")).select(
+        doc_id.alias("doc_id"), "text", *keep
+    )
+
+
+def quality_corpus(
+    decoded: DataFrame,
+    min_tokens: int = DEFAULT_MIN_TOKENS,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """The curation input shared by batch, resumable and streaming curation:
+    text-bearing docs with at least ``min_tokens`` words (JVM-side gate)."""
+    return text_bearing(decoded, keep).filter(
+        F.size(words_of(F.col("text"))) >= min_tokens
+    )
+
+
+def keep_first(quality: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Keep-first policy: any doc that is the HIGHER member of a candidate
+    pair is a near-duplicate of an earlier doc -> dropped.  No broadcast
+    hint: the drop set scales with the corpus's dup mass (see module
+    docstring)."""
+    drops = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
+    return quality.join(drops, "doc_id", "left_anti")
+
+
 def curate(
     pages: DataFrame,
-    doc_id_expr=None,
     min_tokens: int = DEFAULT_MIN_TOKENS,
     verify_jaccard: float | None = None,
     verify_max_pairs: int = 4,
 ) -> DataFrame:
     """pages -> surviving (doc_id, text) corpus.
-
-    doc_id_expr: Column producing a unique numeric doc id (defaults to
-    extracting the trailing integer of the url, which both generators emit).
 
     verify_jaccard: opt-in exact-verification stage.  By default survivors
     drop on LSH candidacy alone, which over-drops on band collisions
@@ -69,14 +98,6 @@ def curate(
     falls outside its k window survives (documented under-drop risk,
     favoring keeping data over dropping it).
     """
-    decoded = decode_pages(pages)
-    if doc_id_expr is None:
-        doc_id_expr = F.regexp_extract("url", r"/(\d+)$", 1).cast("long")
-
-    textful = decoded.filter(
-        F.col("event_type").isin("html", "plain")
-    ).select(doc_id_expr.alias("doc_id"), "text")
-
     # The quality corpus feeds TWO branches (the LSH drops set and the
     # survivors anti-join); without a persist Spark re-executes the whole
     # decode subtree for each — at 100 TB that doubles the most expensive
@@ -84,9 +105,9 @@ def curate(
     # hold their slice.
     from pyspark import StorageLevel
 
-    quality = textful.filter(
-        F.size(words_of(F.col("text"))) >= min_tokens
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    quality = quality_corpus(decode_pages(pages), min_tokens).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     # Materialize the cache in its own job before both branches fan out
     # over it.  The anti-join's first action otherwise runs the drops
     # subtree and the survivors scan as CONCURRENT sibling stages racing
@@ -110,11 +131,7 @@ def curate(
         pairs = DD.ngram_jaccard_pairs(
             quality, min_jaccard=verify_jaccard, candidates=bounded
         )
-    # keep-first policy: any doc that is the HIGHER member of a candidate
-    # pair is a near-duplicate of an earlier doc -> dropped.  No broadcast
-    # hint: drops scales with the corpus's dup mass (see module docstring).
-    drops = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-    survivors = quality.join(drops, "doc_id", "left_anti")
+    survivors = keep_first(quality, pairs)
     # hand the persist lifecycle to the caller: release(survivors) after
     # the consuming action, or the cached quality plan outlives the run
     survivors._curate_persisted = quality
@@ -152,26 +169,18 @@ def curate_resumable(
     """
     from mysql_cdc_rs_spark.plans.checkpoint import CheckpointedStage
 
-    pages_b = pages.withColumn(
-        "url_bucket", F.pmod(F.xxhash64("url"), F.lit(256)).cast("int")
-    )
+    pages_b = pages.withColumn("url_bucket", url_bucket(F.col("url")))
 
     def quality_fn(df: DataFrame) -> DataFrame:
         decoded = decode_pages(df.drop("url_bucket"))
-        doc_id = F.regexp_extract("url", r"/(\d+)$", 1).cast("long")
-        textful = decoded.filter(
-            F.col("event_type").isin("html", "plain")
-        ).select(doc_id.alias("doc_id"), "text", "url_bucket")
-        return textful.filter(F.size(words_of(F.col("text"))) >= min_tokens)
+        return quality_corpus(decoded, min_tokens, keep=("url_bucket",))
 
     quality = CheckpointedStage(catalog, "curate_quality").run(
         pages_b, quality_fn
     )
 
     def survivors_fn(qdf: DataFrame) -> DataFrame:
-        pairs = DD.lsh_candidate_pairs(qdf.select("doc_id", "text"))
-        drops = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-        return qdf.join(drops, "doc_id", "left_anti")
+        return keep_first(qdf, DD.lsh_candidate_pairs(qdf.select("doc_id", "text")))
 
     return CheckpointedStage(catalog, "curate_survivors").run(
         quality, survivors_fn
@@ -181,11 +190,8 @@ def curate_resumable(
 def curation_report(pages: DataFrame, min_tokens: int = DEFAULT_MIN_TOKENS) -> dict:
     """Stage-by-stage exact counts (the per-sink metrics analog)."""
     decoded = decode_pages(pages).cache()
-    doc_id = F.regexp_extract("url", r"/(\d+)$", 1).cast("long")
-    textful = decoded.filter(F.col("event_type").isin("html", "plain")).select(
-        doc_id.alias("doc_id"), "text"
-    )
-    quality = textful.filter(F.size(words_of(F.col("text"))) >= min_tokens)
+    textful = text_bearing(decoded)
+    quality = quality_corpus(decoded, min_tokens)
     survivors = curate(pages, min_tokens=min_tokens)
     out = {
         "input": decoded.count(),

@@ -2177,7 +2177,7 @@ def _p4_deflate(spark, sf):
     """P4 compressed-payload parity beyond gzip: text/plain pages with
     Content-Encoding: deflate — alternating zlib-wrapped and RAW deflate
     streams — are built on executors and pushed through the REAL page
-    decoder (header grok -> decompress_body -> charset -> text), matching
+    decoder (header grok -> http.decompress -> charset -> text), matching
     MySQL 8's TRANSACTION_PAYLOAD multi-algorithm handling
     (/root/reference/binlog/src/decoder/mysql8_decoders.rs:14-97)."""
     import hashlib

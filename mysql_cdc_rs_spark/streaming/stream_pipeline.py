@@ -36,6 +36,10 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from mysql_cdc_rs_spark.operators.decode import decode_pages
 from mysql_cdc_rs_spark.operators.enrich import enrich
 from mysql_cdc_rs_spark.operators.route import route_table
+from mysql_cdc_rs_spark.plans.training_pipeline import (
+    DEFAULT_MIN_TOKENS,
+    quality_corpus,
+)
 
 PAGES_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -227,7 +231,7 @@ def start_curation_stream(
     stream_df: DataFrame,
     catalog,
     checkpoint_dir: str,
-    min_tokens: int = 20,
+    min_tokens: int = DEFAULT_MIN_TOKENS,
     available_now: bool = True,
     compact_every: int | None = None,
     compact_n_buckets: int | None = None,
@@ -300,7 +304,6 @@ def start_curation_stream(
     ``compact_max_minors`` deltas so the probe's generation-join count
     stays bounded (see ``compact_seen_buckets``).
     """
-    from mysql_cdc_rs_spark.functions.text import words_of
     from mysql_cdc_rs_spark.operators import dedup as DD
 
     SEEN, CURATED, MANIFEST = "dedup_seen_buckets", "curated", "stream_curate"
@@ -311,13 +314,8 @@ def start_curation_stream(
         last = m.get("last_batch_id", -1) if m else -1
         if batch_id <= last:
             return  # replayed after restart: this batch is fully applied
-        decoded = decode_pages(_fan_out(batch_df))
-        doc_id = F.regexp_extract("url", r"/(\d+)$", 1).cast("long")
-        textful = decoded.filter(
-            F.col("event_type").isin("html", "plain")
-        ).select(doc_id.alias("doc_id"), "text")
-        quality = textful.filter(
-            F.size(words_of(F.col("text"))) >= min_tokens
+        quality = quality_corpus(
+            decode_pages(_fan_out(batch_df)), min_tokens
         ).persist()
         # Materialize each persisted frame in its OWN job before anything
         # fans out over it.  Without the barrier, the first append's job
@@ -358,7 +356,8 @@ def start_curation_stream(
         # 400k docs vanished from the corpus with every sink invariant
         # green (BENCH/SOAK.md).  The running quality-row total makes that
         # auditable downstream: sum(per-batch quality rows) must equal the
-        # batch-mode quality count over the same corpus.
+        # batch-mode quality count over the same corpus (both sides apply
+        # ``quality_corpus``; ``curation_report``'s ``quality_pass``).
         catalog.write_manifest(
             MANIFEST,
             {

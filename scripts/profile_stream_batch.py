@@ -39,8 +39,8 @@ WORK = "/tmp/spark_graft_profile_stream"
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from mysql_cdc_rs_spark.functions.text import words_of
     from mysql_cdc_rs_spark.operators import dedup as DD
+    from mysql_cdc_rs_spark.plans.training_pipeline import quality_corpus
     from mysql_cdc_rs_spark.session import build_session
     from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
     from mysql_cdc_rs_spark.streaming.stream_pipeline import (
@@ -117,14 +117,7 @@ def main() -> None:
     from mysql_cdc_rs_spark.operators.decode import decode_pages
 
     t0 = time.monotonic()
-    decoded = decode_pages(_fan_out(batch))
-    doc_id = F.regexp_extract("url", r"/(\d+)$", 1).cast("long")
-    quality = (
-        decoded.filter(F.col("event_type").isin("html", "plain"))
-        .select(doc_id.alias("doc_id"), "text")
-        .filter(F.size(words_of(F.col("text"))) >= 20)
-        .persist()
-    )
+    quality = quality_corpus(decode_pages(_fan_out(batch))).persist()
     n_quality = quality.count()
     stages["decode_quality"] = round(time.monotonic() - t0, 3)
 

@@ -81,8 +81,6 @@ def du_mb(path: str) -> float:
 
 
 def main() -> None:
-    from pyspark.sql import functions as F
-
     from mysql_cdc_rs_spark.session import build_session
     from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
     from mysql_cdc_rs_spark.streaming.stream_pipeline import (
@@ -251,15 +249,10 @@ def main() -> None:
     # (written per batch into the stream_curate manifest) must equal the
     # batch-mode quality count — catches silent source-layer input loss
     # (an empty re-executed batch) that every sink invariant misses
-    from mysql_cdc_rs_spark.functions.text import words_of
     from mysql_cdc_rs_spark.operators.decode import decode_pages
+    from mysql_cdc_rs_spark.plans.training_pipeline import quality_corpus
 
-    batch_quality = (
-        decode_pages(pages_all)
-        .filter(F.col("event_type").isin("html", "plain"))
-        .filter(F.size(words_of(F.col("text"))) >= 20)
-        .count()
-    )
+    batch_quality = quality_corpus(decode_pages(pages_all)).count()
     stream_quality = cat.read_manifest("stream_curate").get(
         "quality_rows_total", -1
     )

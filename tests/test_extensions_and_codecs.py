@@ -87,6 +87,78 @@ def test_extension_works_inside_spark_udf(spark):
     assert (row["event_type"], row["text"]) == ("json", '{"k":1}')
 
 
+def test_route_override_does_not_leak_into_later_plan(spark):
+    """A reused Python worker must run each plan with exactly the
+    extensions registered when that plan was built: plan 1's route override
+    stays out of plan 2, which registered the same decoder without one."""
+    from mysql_cdc_rs_spark.functions.udfs import make_decode_udf
+
+    def dec(body, charset):
+        return {"event_type": "json", "text": body.decode("utf-8")}
+
+    page = _raw_json_page(b'{"k":1}')
+    # many one-row tasks, so every pooled worker runs each plan
+    n = 4 * spark.sparkContext.defaultParallelism
+    df = spark.createDataFrame([(page,)] * n, "html binary").repartition(n)
+
+    def routes(udf) -> set:
+        return {
+            r[0] for r in df.select(udf(F.col("html")).alias("d"))
+            .select("d.route").collect()
+        }
+
+    reg.register_mime_decoder("application/json")(dec)
+    reg.register_route("json", "content_json")
+    assert routes(make_decode_udf()) == {"content_json"}
+
+    reg.clear_extensions()
+    reg.register_mime_decoder("application/json")(dec)
+    want = decode_page(page)["route"]
+    assert want == "content_binary"
+    assert routes(make_decode_udf()) == {want}
+
+
+# --- content codecs -------------------------------------------------------------
+
+def _bomb(wbits: int, n: int) -> bytes:
+    """A stream of ``n`` zero bytes, compressed without materializing them."""
+    import zlib
+
+    c = zlib.compressobj(9, zlib.DEFLATED, wbits)
+    chunk = bytes(1 << 20)
+    parts = [c.compress(chunk) for _ in range(n >> 20)]
+    parts += [c.compress(bytes(n & ((1 << 20) - 1))), c.flush()]
+    return b"".join(parts)
+
+
+@pytest.mark.parametrize(
+    "enc,wbits", [("gzip", 31), ("deflate", 15), ("deflate", -15)]
+)
+def test_decompression_bomb_routes_to_errors(enc, wbits):
+    """A body inflating past http.MAX_BODY_BYTES takes the error route
+    through both decode loops; one exactly at the cap still decodes."""
+    from mysql_cdc_rs_spark.kernel.batchdecode import decode_batch
+    from mysql_cdc_rs_spark.kernel.http import MAX_BODY_BYTES
+
+    def page(n: int) -> bytes:
+        return (
+            b"HTTP/1.1 200 OK\r\nContent-Type: application/octet-stream\r\n"
+            b"Content-Encoding: " + enc.encode() + b"\r\n\r\n" + _bomb(wbits, n)
+        )
+
+    bomb, at_cap = page(MAX_BODY_BYTES + 1), page(MAX_BODY_BYTES)
+    batch = decode_batch([bomb, at_cap])
+    for i, raw in enumerate((bomb, at_cap)):
+        d = decode_page(raw)
+        assert d == {k: batch[k][i] for k in batch}
+    d = decode_page(bomb)
+    assert (d["event_type"], d["route"], d["error"], d["body_len"]) == (
+        "error_decode", "errors", "BODY_TOO_LARGE", None
+    )
+    d = decode_page(at_cap)
+    assert (d["event_type"], d["body_len"]) == ("binary", MAX_BODY_BYTES)
+
+
 # --- relay segments -----------------------------------------------------------
 
 def test_segment_roundtrip_and_rollover(spark):

@@ -222,6 +222,45 @@ def test_multimodal_decode_total(blob):
         assert feat is None or len(feat) == 8
 
 
+@given(
+    st.binary(max_size=2000),
+    st.sampled_from([31, 15, -15]),
+    st.sampled_from(
+        ["valid", "truncated", "empty", "suffixed", "two_members", "garbage"]
+    ),
+    st.binary(min_size=1, max_size=40),
+    st.integers(0, 10**6),
+)
+@settings(max_examples=300)
+def test_bounded_inflate_equals_zlib_decompress(payload, wbits, shape, extra, cut):
+    """Under the cap, http.inflate returns what zlib.decompress returns, and
+    raises zlib.error exactly when it does."""
+    import zlib
+
+    from mysql_cdc_rs_spark.kernel.http import inflate
+
+    c = zlib.compressobj(6, zlib.DEFLATED, wbits)
+    stream = c.compress(payload) + c.flush()
+    data = {
+        "valid": stream,
+        "truncated": stream[: cut % len(stream)],
+        "empty": b"",
+        "suffixed": stream + extra,
+        "two_members": stream + stream,
+        "garbage": extra,
+    }[shape]
+
+    def outcome(fn):
+        try:
+            return fn()
+        except zlib.error:
+            return "zlib.error"
+
+    assert outcome(lambda: inflate(data, wbits)) == outcome(
+        lambda: zlib.decompress(data, wbits=wbits)
+    )
+
+
 # --- geometry ----------------------------------------------------------------
 
 _coord = st.integers(-1000, 1000).map(float)
@@ -428,7 +467,7 @@ def test_decode_batch_equals_decode_page_generator_mix():
 
 def test_decode_batch_edge_records():
     """Hand-built records targeting the divergence-prone branches:
-    content-encoding with trailing whitespace (decompress_body strips the
+    content-encoding with trailing whitespace (http.decompress gets the stripped
     dispatch token but the output column is verbatim-lowered), duplicate
     headers (last wins, position of first), unknown encodings, 3xx without
     Location, 4xx with corrupt gzip (decompress runs BEFORE the status

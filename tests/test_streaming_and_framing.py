@@ -326,7 +326,11 @@ def test_streaming_curation_matches_batch_and_resumes(spark):
     micro-batches (with a stream restart between them — the dedup state
     must survive in the table, not the session) yields EXACTLY the batch
     curate() survivor set, and a replayed batch is skipped idempotently."""
-    from mysql_cdc_rs_spark.plans.training_pipeline import curate, release
+    from mysql_cdc_rs_spark.plans.training_pipeline import (
+        curate,
+        curation_report,
+        release,
+    )
     from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
     from mysql_cdc_rs_spark.streaming.stream_pipeline import (
         read_curated,
@@ -366,6 +370,11 @@ def test_streaming_curation_matches_batch_and_resumes(spark):
         q3.awaitTermination()
         again = {r["doc_id"] for r in read_curated(cat).select("doc_id").collect()}
         assert again == want
+
+        # input-lineage tripwire: the stream's running quality-row total
+        # equals batch mode's quality count over the same pages
+        total = cat.read_manifest("stream_curate")["quality_rows_total"]
+        assert total == curation_report(full)["quality_pass"]
 
 
 def test_streaming_curation_drops_cross_batch_dups(spark):
