@@ -44,49 +44,20 @@ class SinkCatalog:
         os.makedirs(self.base, exist_ok=True)
 
     def _path(self, table: str) -> str:
-        return os.path.join(self.base, self.resolve(table))
+        return os.path.join(self.base, table)
 
     def _ident(self, table: str) -> str:
         """Catalog-qualified Iceberg table identifier for a route table."""
-        return f"sink.{self.resolve(table)}"
+        return f"sink.{table}"
 
-    # --- logical -> physical name indirection (atomic table swap) ----------
-
-    def resolve(self, table: str) -> str:
-        """Physical name behind a logical table name.
-
-        Tables rewritten in place by maintenance jobs (seen-bucket
-        compaction) swap via ``flip_pointer``: the new content lands under a
-        versioned physical name and ONE atomic manifest write moves the
-        logical name — a crash on either side of the flip leaves a fully
-        readable table (the Iceberg-snapshot-commit analog for the Parquet
-        leg; os.replace is the commit).  Names without a pointer resolve to
-        themselves, so ordinary tables pay one manifest stat only when a
-        pointer file exists.
+    def drop_physical(self, table: str) -> None:
+        """Best-effort removal of a Parquet-leg table directory that no
+        reader references any more (run AFTER the manifest commit that
+        unlists it; a crash here leaves an orphan dir, never data loss).
         """
-        m = self.read_manifest(f"ptr_{table}")
-        return m["physical"] if m else table
-
-    def flip_pointer(self, logical: str, physical: str) -> str | None:
-        """Atomically repoint ``logical`` at ``physical``.
-
-        Returns the previous physical name (for post-flip cleanup) or None
-        if the logical name had no pointer yet.
-        """
-        prev = self.resolve(logical)
-        self.write_manifest(f"ptr_{logical}", {"physical": physical})
-        return None if prev == physical else prev
-
-    def drop_physical(self, physical: str) -> None:
-        """Best-effort removal of an unreferenced physical table (run AFTER
-        a pointer flip; a crash here leaves an orphan dir, never data loss).
-        """
-        if self.use_iceberg:
-            self.spark.sql(f"DROP TABLE IF EXISTS sink.{physical}")
-            return
         import shutil
 
-        shutil.rmtree(os.path.join(self.base, physical), ignore_errors=True)
+        shutil.rmtree(self._path(table), ignore_errors=True)
 
     def append(self, df, table: str, partition_by: list[str] | None = None) -> None:
         if self.use_iceberg:

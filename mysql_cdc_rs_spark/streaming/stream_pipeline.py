@@ -5,9 +5,10 @@ decode path as files (/root/reference/connection/src/binlog/
 binlog_subscribe.rs:51-96); exactly-once progress is (file, log_pos, GTID)
 checkpointing.  Spark restatement:
 
-- source: ``readStream`` over an arriving-files pages directory (swap for
-  Kafka/Iceberg streaming read in production — the transformations are
-  shared with the batch pipeline verbatim);
+- source: ``readStream`` over an arriving-files pages directory, an
+  unbounded ``rate-micro-batch`` generator or a TCP socket (any streaming
+  source with the pages schema swaps in — the transformations are shared
+  with the batch pipeline verbatim);
 - decode/enrich: the SAME functions as batch (one code path, two runners);
 - sink: ``foreachBatch`` fan-out append per route — micro-batch transactional
   writes are the relay-log segment append analog (S7);
@@ -16,15 +17,15 @@ checkpointing.  Spark restatement:
 - custom stateful operator via ``applyInPandasWithState`` = the reference's
   per-key decoder context (TableMap cache) held in managed state.
 
-Parallelism note: file-arrival (and few-partition Kafka) sources deliver
-micro-batches with fewer partitions than cores — one arriving file is ONE
-partition — which silently caps every narrow per-batch transformation at
-that parallelism.  The foreachBatch sinks here fan the batch out to
-``defaultParallelism`` before decoding (conditional: an already-parallel
-source is never coalesced).  The windowed/stateful aggregation streams
-shuffle at their groupBy anyway; if their upstream decode becomes the
-bottleneck on an under-partitioned source, repartition the source stream
-once at ingest (``stream_df.repartition(n)``) rather than per operator.
+Parallelism note: file-arrival sources deliver micro-batches with fewer
+partitions than cores — one arriving file is ONE partition — which
+silently caps every narrow per-batch transformation at that parallelism.
+The foreachBatch sinks here fan the batch out to ``defaultParallelism``
+before decoding (conditional: an already-parallel source is never
+coalesced).  The windowed/stateful aggregation streams shuffle at their
+groupBy anyway; if their upstream decode becomes the bottleneck on an
+under-partitioned source, repartition the source stream once at ingest
+(``stream_df.repartition(n)``) rather than per operator.
 """
 
 from __future__ import annotations
@@ -66,7 +67,8 @@ def stream_pages_rate(
     restated as an always-on source.  Everything downstream (decode,
     enrich, route, metrics) is shared verbatim with the batch pipeline and
     the file-arrival stream; swapping the source line is the whole diff —
-    which is the point: Kafka in production is the same one-line swap.
+    which is the point: a production message-bus source is the same
+    one-line swap.
     """
     import pandas as pd
 
@@ -101,7 +103,7 @@ def stream_pages_socket(spark, host: str, port: int) -> DataFrame:
     exactly like the reference's live socket.  The plan builds without
     connecting; the connection opens when the stream starts, and everything
     downstream (decode, enrich, route, checkpointing) is shared verbatim
-    with the file/rate/Kafka sources."""
+    with the file and rate sources."""
     raw = (
         spark.readStream.format("socket")
         .option("host", host)
@@ -118,47 +120,10 @@ def stream_pages_socket(spark, host: str, port: int) -> DataFrame:
     )
 
 
-def stream_pages_kafka(
-    spark,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "earliest",
-) -> DataFrame:
-    """Socket-style live source analog #3: Kafka — the literal one-line
-    source swap this module's docstring claims.  The record value carries
-    the raw page bytes (the ``html`` column the decode UDF consumes), the
-    key carries the url, the broker timestamp stands in for ``warc_ts``;
-    everything downstream (decode, enrich, route, metrics, checkpointing)
-    is shared verbatim with the file-arrival and rate sources (parity:
-    the replication-dump subscribe loop,
-    /root/reference/connection/src/binlog/binlog_subscribe.rs:51-96 +
-    /root/reference/connection/src/commands/dump_binlog_command.rs:6-30).
-
-    Requires the spark-sql-kafka connector on the classpath; where it is
-    absent (this sandbox) ``.load()`` raises and callers treat the source
-    as unavailable — the downstream plan is identical either way, which is
-    what tests/test_streaming_and_framing.py::test_kafka_source_swap_plan
-    pins."""
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .load()
-    )
-    return raw.select(
-        F.col("key").cast("string").alias("url"),
-        F.col("timestamp").alias("warc_ts"),
-        F.col("value").alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.lit(None).cast("string").alias("lang"),
-    )
-
-
 def _fan_out(batch_df: DataFrame) -> DataFrame:
     """Fan a foreachBatch micro-batch out to cluster parallelism.
 
-    A file/Kafka source often delivers fewer partitions than cores — one
+    A file-arrival source often delivers fewer partitions than cores — one
     arriving file is ONE partition — which silently caps every narrow
     per-batch transformation (decode, minhash) at source parallelism;
     profiled at 3.5x the whole batch's cost.  Conditional: an
@@ -180,7 +145,7 @@ def start_routing_stream(
     """decode -> enrich -> per-route fan-out append, exactly-once via
     checkpoint.  Returns the StreamingQuery.  ``available_now=True`` drains
     a bounded source then stops (tests/backfills); pass False for unbounded
-    sources (rate / Kafka) to run continuously."""
+    sources (rate / socket) to run continuously."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         routed = route_table(enrich(decode_pages(_fan_out(batch_df))))
@@ -234,9 +199,6 @@ def start_curation_stream(
     min_tokens: int = DEFAULT_MIN_TOKENS,
     available_now: bool = True,
     compact_every: int | None = None,
-    compact_n_buckets: int | None = None,
-    compact_mode: str = "major",
-    compact_max_minors: int = 8,
 ):
     """ONLINE training-data curation: decode -> quality gate -> incremental
     LSH near-dup drop, one micro-batch at a time — the streaming twin of
@@ -289,20 +251,13 @@ def start_curation_stream(
     ONE mid-run compaction spent most of its per-batch budget re-aggregating
     a ~25M-row tail (BENCH/SOAK.md).  A cadence bounds the tail to K
     batches' buckets, making per-batch probe cost independent of stream
-    lifetime; the compaction itself stays crash-safe (versioned table +
-    atomic pointer flip).  A crash DURING a cadence compaction loses no
-    state (the flip is atomic; pre-flip rows stay live) — the batch itself
-    was already manifest-committed, so on restart it replays as a skip and
-    the missed compaction is simply picked up at the next cadence point,
-    with the tail at most 2K batches deep in the interim.
-    ``compact_n_buckets`` selects the bucketed layout on the first
-    compaction (sticky thereafter); size it to at least cluster cores.
-    ``compact_mode="minor"`` makes each cadence point past the first a
-    tail-only delta fold — O(K batches) of work instead of a full
-    O(history) rewrite, which is what makes a tight cadence affordable at
-    fleet scale — auto-promoting to a major merge every
-    ``compact_max_minors`` deltas so the probe's generation-join count
-    stays bounded (see ``compact_seen_buckets``).
+    lifetime.  A crash DURING a cadence compaction loses no state (the
+    manifest commit is atomic; pre-commit state stays live) — the batch
+    itself was already manifest-committed, so on restart it replays as a
+    skip and the missed compaction is simply picked up at the next cadence
+    point, with the tail at most 2K batches deep in the interim.  Layout,
+    bucket count and minor/major choice are ``compact_seen_buckets``' one
+    policy; the cadence is the only compaction option.
     """
     from mysql_cdc_rs_spark.operators import dedup as DD
 
@@ -368,12 +323,7 @@ def start_curation_stream(
             },
         )
         if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_seen_buckets(
-                catalog,
-                n_buckets=compact_n_buckets,
-                mode=compact_mode,
-                max_minors=compact_max_minors,
-            )
+            compact_seen_buckets(catalog)
 
     writer = stream_df.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_dir
@@ -386,11 +336,8 @@ def start_curation_stream(
 def _gen_tables(m: dict | None) -> list[str]:
     """All compacted-generation table names in a ``seen_compact`` manifest:
     the base generation (``table``) followed by the minor deltas
-    (``minors``), oldest first.  Back-compatible: pre-LSM manifests carry
-    only ``table``."""
-    if not m:
-        return []
-    return ([m["table"]] if m.get("table") else []) + m.get("minors", [])
+    (``minors``), oldest first."""
+    return [m["table"]] + m["minors"] if m else []
 
 
 def _ensure_compact_table(catalog, m: dict, table: str) -> None:
@@ -410,9 +357,8 @@ def _ensure_compact_table(catalog, m: dict, table: str) -> None:
     if spark.catalog.tableExists(table):
         return
     loc = os.path.join(os.path.abspath(catalog.base), table)
-    cols = m.get("columns", "band_id INT, bucket STRING, n_members BIGINT")
     spark.sql(
-        f"CREATE TABLE {table} ({cols}) "
+        f"CREATE TABLE {table} ({m['columns']}) "
         "USING parquet CLUSTERED BY (band_id, bucket) "
         f"SORTED BY (band_id, bucket) INTO {m['n_buckets']} BUCKETS "
         f"LOCATION '{loc}'"
@@ -421,11 +367,12 @@ def _ensure_compact_table(catalog, m: dict, table: str) -> None:
 
 def _seen_components(catalog, last: int):
     """The physical pieces of the seen-bucket state as of completed batch
-    ``last``: ``(compacted_generations, tail, through, manifest)``.
+    ``last``: ``(compacted_generations, tail, manifest)``.
 
     ``compacted_generations`` — the LIST of bucketed compacted generations
     (each one PRE-AGGREGATED rows per (band_id, bucket); together covering
-    batches ``<= through``), empty if no bucketed compaction has run.  The
+    batches up to the manifest's ``through``), empty before the first
+    compaction.  The
     list is the base generation plus any minor deltas (LSM levels): a MINOR
     compaction folds only the flat tail into a new delta generation, so its
     cost is O(tail), not O(history) — see ``compact_seen_buckets``.  Every
@@ -435,8 +382,8 @@ def _seen_components(catalog, last: int):
     per bucket across them is exact.
 
     ``tail`` — the flat append-only rows from batches in ``(through,
-    last]``, aggregated to (band_id, bucket, n_members), or None when
-    empty/absent.  Parquet min/max stats on batch_id skip the pre-``through``
+    last]``, aggregated to (band_id, bucket, n_members), or None when the
+    flat table is absent.  Parquet min/max stats on batch_id skip the pre-``through``
     files wholesale (each micro-batch appended its own files), so the tail
     scan is proportional to data since the last compaction, not to history.
 
@@ -447,17 +394,14 @@ def _seen_components(catalog, last: int):
     The ``seen_compact`` manifest dict (or None) rides along so callers
     don't re-stat it.
     """
-    comps, through = [], -1
     m = catalog.read_manifest("seen_compact")
-    if m and m.get("through", -1) >= 0:
-        through = m["through"]
-        for table in _gen_tables(m):
-            _ensure_compact_table(catalog, m, table)
-            comps.append(
-                catalog.spark.table(table).select(
-                    "band_id", "bucket", "n_members"
-                )
-            )
+    through = m["through"] if m else -1
+    comps = []
+    for table in _gen_tables(m):
+        _ensure_compact_table(catalog, m, table)
+        comps.append(
+            catalog.spark.table(table).select("band_id", "bucket", "n_members")
+        )
     tail = None
     if catalog.exists("dedup_seen_buckets"):
         tail = (
@@ -483,7 +427,7 @@ def _seen_components(catalog, last: int):
                 ).alias("n_members")
             )
         )
-    return comps, tail, through, m
+    return comps, tail, m
 
 
 def seen_positions(banded: DataFrame, catalog, last: int) -> DataFrame:
@@ -500,7 +444,7 @@ def seen_positions(banded: DataFrame, catalog, last: int) -> DataFrame:
     per-batch groupBy over 10^9+ state rows) and bucketed on the join key
     (no per-batch exchange, no sort; the scan is the whole cost).  With
     minor compaction the state is a short LIST of such generations (base +
-    deltas, bounded by ``max_minors``); each adds one exchange-free SMJ —
+    deltas, bounded by ``MAX_MINORS``); each adds one exchange-free SMJ —
     the batch side is partitioned once and every join preserves that
     partitioning, so the probe still pays exactly ONE batch-side exchange
     regardless of generation count.  Only the small post-compaction tail
@@ -518,15 +462,15 @@ def seen_positions(banded: DataFrame, catalog, last: int) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    comps, tail, _, m = _seen_components(catalog, last)
+    comps, tail, m = _seen_components(catalog, last)
     if comps:
         # pre-partition the batch side to the state's bucket count so the
         # rank window and the probe joins share ONE exchange: the window
         # needs (band_id, bucket) clustering anyway, and matching the
         # compacted tables' partitioning count lets every SMJ reuse it
-        # instead of inserting a second batch-side shuffle.  NOTE this
-        # makes n_buckets the probe stage's task count — size it at least
-        # to the cluster's parallelism (see compact_seen_buckets).
+        # instead of inserting a second batch-side shuffle.  This makes
+        # n_buckets the probe stage's task count, which is why
+        # compact_seen_buckets sizes it to the cluster's parallelism.
         banded = banded.repartition(m["n_buckets"], "band_id", "bucket")
     w = Window.partitionBy("band_id", "bucket").orderBy("doc_id")
     ranked = banded.withColumn("r", F.row_number().over(w))
@@ -553,172 +497,90 @@ def seen_positions(banded: DataFrame, catalog, last: int) -> DataFrame:
     return ranked.withColumn("p", p).drop(*parts)
 
 
-def _swap_seen(catalog, df: DataFrame) -> None:
-    """Replace the flat ``dedup_seen_buckets`` table with ``df`` behind the
-    versioned-name + atomic-pointer-flip protocol (crash on either side of
-    the flip leaves a readable, correct table).  The generation counter is
-    parsed from the current physical name, so the pointer manifest needs
-    no extra fields and ``catalog.flip_pointer`` stays the one flip API.
-    """
-    import re
-
-    prev = catalog.resolve("dedup_seen_buckets")
-    g = re.search(r"__g(\d+)$", prev)
-    version = f"dedup_seen_buckets__g{(int(g.group(1)) if g else 0) + 1}"
-    # 1. materialize under the version name (overwrite: retries idempotent)
-    catalog.overwrite(df, version)
-    # 2. the commit: one atomic manifest replace moves the live name
-    old = catalog.flip_pointer("dedup_seen_buckets", version)
-    # 3. post-commit cleanup (best-effort; an orphan dir is the worst case)
-    if old:
-        catalog.drop_physical(old)
+# Delta generations a minor compaction may stack on the base before the
+# next compaction promotes itself to a major merge (BENCH/SOAK.md measured
+# minor+promotion at 4 against major-only).
+MAX_MINORS = 4
 
 
-def compact_seen_buckets(
-    catalog,
-    n_buckets: int | None = None,
-    mode: str = "major",
-    max_minors: int = 8,
-) -> int:
-    """Rewrite ``dedup_seen_buckets`` as one summed row per (band_id,
-    bucket).
+def compact_seen_buckets(catalog) -> int:
+    """Fold the flat ``dedup_seen_buckets`` tail into a bucketed generation
+    of one summed row per (band_id, bucket).
 
     The stream appends one file-set per micro-batch and never merges the
     bucket rows across batches; over a long run the table accumulates both
-    small files and repeated buckets.  Compaction collapses it to one row
-    per bucket with ``n_members`` summed (sum is exactly what the probe
-    aggregates at read time, so probe results are unchanged), tagged with
-    the last COMPLETED batch id (torn tails from a mid-batch crash are
-    dropped by the same batch_id filter the probe uses).  Run it BETWEEN stream runs — the availableNow
-    drain-then-stop pattern — never concurrently with one.  At 10^12 docs
-    this is the periodic maintenance job that keeps the probe-side join
-    input proportional to distinct buckets, not to batches.
+    small files and repeated buckets.  Compaction collapses them with
+    ``n_members`` summed (sum is exactly what the probe aggregates at read
+    time, so probe results are unchanged) up to the last COMPLETED batch
+    (torn tails from a mid-batch crash are dropped by the same batch_id
+    filter the probe uses).  Run it BETWEEN batches — the stream's
+    ``compact_every`` cadence or between availableNow drains — never
+    concurrently with a probe.
 
-    Crash safety (round 5): the compacted rows land under a fresh
-    VERSIONED physical table, and the live name moves in ONE atomic
-    pointer flip (``catalog.flip_pointer`` -> os.replace of the manifest).
-    A crash before the flip leaves the old table live and an orphan
-    version dir that the retry overwrites; a crash after the flip leaves
-    the new table live and the old dir pending cleanup — there is no
-    instant at which ``dedup_seen_buckets`` is unreadable or wrong
-    (pinned by test_compact_seen_buckets_crash_safe).  On the Iceberg leg
-    ``overwrite`` is already one atomic snapshot swap (createOrReplace),
-    so the live name is rewritten directly.
+    One policy, the one BENCH/SOAK.md measured fastest at every size:
 
-    ``n_buckets`` (parquet leg) selects the BUCKETED layout: the compacted
-    generation lands as an EXTERNAL table under ``catalog.base`` (a fresh
-    session re-attaches the definition from the manifest — state never
-    depends on session-scoped catalog metadata), bucketed AND sorted on
-    (band_id, bucket) — the probe's join key — with one file per bucket, and the
-    ``seen_compact`` manifest (table name, generation, ``through`` batch
-    watermark) moves in the same atomic os.replace commit.  Why this is the
-    at-scale layout: the compacted generation is the piece of state that
-    grows with corpus history, and every micro-batch joins against it;
-    stored pre-aggregated + pre-hashed + pre-sorted, that join needs no
-    exchange, no sort, and no groupBy on the unbounded side — the probe's
-    per-batch cost over history collapses to a columnar scan (see
-    ``seen_positions``).  The consumed flat tail is then dropped (readers
-    exclude it by the ``through`` watermark either way, so a crash between
-    the manifest commit and the cleanup loses nothing).  The layout is
-    sticky: later calls without ``n_buckets`` reuse the recorded bucket
-    count, so a flat rewrite can never double-count the compacted
-    generation.  On the Iceberg leg the same physical property is declared
-    instead of hand-built — a ``bucket(N, ...)`` partition transform plus
-    storage-partitioned joins — so ``n_buckets`` is ignored there.
+    - Layout: every generation is an EXTERNAL table under ``catalog.base``
+      (a fresh session re-attaches it from the ``seen_compact`` manifest),
+      pre-aggregated and bucketed AND sorted on the probe key (band_id,
+      bucket) with one file per bucket, so the probe joins it with no
+      exchange, no sort and no groupBy on the side that grows with corpus
+      history (see ``seen_positions``).
+    - Bucket count: ``defaultParallelism`` at the first compaction,
+      recorded in the manifest and reused after it.  It is the probe
+      stage's task count (the batch side repartitions to it so the rank
+      window and joins share one exchange), so it must be at least the
+      cluster's cores — the same target ``_fan_out`` uses.
+    - Minor or major: with a base generation, a tail and fewer than
+      ``MAX_MINORS`` deltas, the call folds ONLY the tail into a new delta
+      generation — O(batches since the last compaction), independent of
+      history.  Otherwise it merges base + deltas + tail into one new base,
+      which bounds the probe's generation-join count — the tiered-LSM
+      write-amplification trade.
 
-    Sizing ``n_buckets``: it becomes the probe stage's task count (the
-    batch side repartitions to it so the rank window and join share one
-    exchange), so set it to AT LEAST the cluster's total cores — and high
-    enough that one bucket's state slice stays comfortably in an
-    executor's memory (distinct_buckets / n_buckets rows per task).
-    Too-low n_buckets silently caps probe parallelism the same way an
-    under-partitioned source caps decode (see ``_fan_out``).
+    Crash safety: the generation lands under a fresh versioned name, then
+    ONE atomic ``seen_compact`` manifest replace commits it, then the
+    merged generations and the consumed flat tail are dropped.  A crash
+    before the commit leaves the old state live and an orphan the retry
+    overwrites; a crash after it leaves orphans, never wrong answers (the
+    probe takes tail rows with batch_id > ``through`` only, and a major's
+    manifest unlists the merged generations).
 
-    ``mode="minor"`` (parquet bucketed layout only) is the LSM answer to
-    the 12.8M soak's honest negative — under a cadence, every major
-    compaction re-reads and re-writes the ENTIRE accumulated bucket set, so
-    below ~16 batches of history the cadence costs more than the tail
-    savings it buys.  A minor compaction folds ONLY the flat tail into a
-    NEW bucketed delta generation (cost O(batches since last compaction),
-    independent of history) and appends it to the manifest's ``minors``
-    list; the base and prior deltas are untouched.  The probe then joins
-    base + deltas + tail — every generation exchange-free (see
-    ``seen_positions``) — so probe cost stays flat while compaction cost
-    stops growing with corpus history.  When the delta count reaches
-    ``max_minors`` the call PROMOTES itself to a major merge (base + all
-    deltas + tail -> one new base), bounding the probe's join count; with
-    cadence K and promotion every ``max_minors`` minors, total bytes
-    rewritten over B batches drop from O(B²/K) — every cadence point pays
-    full history — to O(B²/(K·max_minors)) with the quadratic term's
-    constant shrunk by the fan-in (each row is rewritten once per minor it
-    enters plus once per major that merges it) — the classic tiered-LSM
-    write-amplification trade.  Minor mode
-    requires an existing bucketed generation (first call, flat layout and
-    the Iceberg leg fall through to the normal path; on Iceberg the
-    incremental analog would be MERGE INTO / rewrite_data_files, which the
-    runtime jar owns).  Crash safety is unchanged: the delta lands under a
-    versioned table first and the ``minors`` list moves in the same single
-    atomic manifest replace; a replayed batch below the new ``through``
-    watermark is excluded by the probe's batch_id filter either way.
+    On the Iceberg leg the state stays one table rewritten by
+    ``overwrite``, which commits one atomic snapshot swap.
 
-    Returns the distinct bucket count after compaction (for a minor: the
-    bucket count of the new delta generation; 0 for a no-op).
+    Returns the distinct bucket count of the written generation (0 when
+    nothing was appended since the last compaction).
     """
     m = catalog.read_manifest("stream_curate")
     last = m.get("last_batch_id", -1) if m else -1
     if last < 0:
         return 0
-    comps, tail, _, cm = _seen_components(catalog, last)
-    if n_buckets is None and cm:
-        n_buckets = cm["n_buckets"]  # sticky layout
-    # An EXPLICIT n_buckets that disagrees with the recorded layout forces
-    # a major rewrite: a minor would write its delta with the new bucket
-    # count while base and earlier deltas keep their old physical
-    # bucketing, and the single manifest n_buckets field would then
-    # declare a bucket spec that doesn't match those files — the
-    # exchange-free sort-merge probe trusts the declaration, so prior
-    # counts (and dedup drops) would go silently wrong after a restart.
-    # Promoting re-buckets the WHOLE state at the new count in one
-    # generation, keeping declaration and files consistent.
-    rebucket = bool(cm) and n_buckets is not None and n_buckets != cm["n_buckets"]
-    minor = (
-        mode == "minor"
-        and not rebucket
-        and bool(comps)
-        and n_buckets is not None
-        and not getattr(catalog, "use_iceberg", False)
-        and len((cm or {}).get("minors", [])) < max_minors
-    )
-    if minor and tail is None:
+    comps, tail, cm = _seen_components(catalog, last)
+    if tail is None:
         return 0  # nothing new to fold; no generation bump
-    parts = [tail] if minor else comps + ([tail] if tail is not None else [])
-    if not parts:
-        return 0
-    seen = parts[0]
-    for extra in parts[1:]:
-        seen = seen.unionByName(extra)
+    minor = bool(comps) and len(cm["minors"]) < MAX_MINORS
+    seen = tail
     if not minor:  # the tail alone is already one row per bucket
+        for comp in comps:
+            seen = seen.unionByName(comp)
         seen = seen.groupBy("band_id", "bucket").agg(
             F.sum("n_members").alias("n_members")
         )
-    seen = seen.withColumn("batch_id", F.lit(last))
-    if getattr(catalog, "use_iceberg", False):
-        # createOrReplace commits the new snapshot atomically, reading the
-        # prior snapshot as input — no pointer dance needed
-        catalog.overwrite(seen, "dedup_seen_buckets")
-        return catalog.read("dedup_seen_buckets").count()
-    if n_buckets is None:
-        _swap_seen(catalog, seen)
+    if catalog.use_iceberg:
+        catalog.overwrite(
+            seen.withColumn("batch_id", F.lit(last)), "dedup_seen_buckets"
+        )
         return catalog.read("dedup_seen_buckets").count()
     import hashlib
     import os
 
     from mysql_cdc_rs_spark.operators.bucketing import write_bucketed
 
-    gen = (cm.get("gen", 0) if cm else 0) + 1
+    spark = catalog.spark
+    n_buckets = cm["n_buckets"] if cm else spark.sparkContext.defaultParallelism
+    gen = (cm["gen"] if cm else 0) + 1
     tag = hashlib.md5(os.path.abspath(catalog.base).encode()).hexdigest()[:8]
     table = f"dedup_seen_compact_{tag}_g{gen}"
-    body = seen.drop("batch_id")
     # 1. materialize the new generation as an EXTERNAL bucketed table whose
     #    files live under catalog.base (state outlives the session; the
     #    catalog entry is re-attached on demand by _ensure_compact_table).
@@ -726,7 +588,7 @@ def compact_seen_buckets(
     #    so each task owns exactly one bucket -> ONE file per bucket; a
     #    crash here leaves an orphan table the retry overwrites.
     write_bucketed(
-        body.repartition(n_buckets, "band_id", "bucket"),
+        seen.repartition(n_buckets, "band_id", "bucket"),
         table,
         ["band_id", "bucket"],
         n_buckets,
@@ -738,13 +600,13 @@ def compact_seen_buckets(
     #    schema the files were WRITTEN with, not a hardcoded snapshot.
     columns = ", ".join(
         f"{f.name} {f.dataType.simpleString().upper()}"
-        for f in body.schema.fields
+        for f in seen.schema.fields
     )
     catalog.write_manifest(
         "seen_compact",
         {
-            "table": table if not minor else cm["table"],
-            "minors": (cm.get("minors", []) + [table]) if minor else [],
+            "table": cm["table"] if minor else table,
+            "minors": cm["minors"] + [table] if minor else [],
             "gen": gen,
             "through": last,
             "n_buckets": n_buckets,
@@ -752,16 +614,14 @@ def compact_seen_buckets(
         },
     )
     # 3. post-commit cleanup — every dropped target is already invisible to
-    #    readers (the probe takes tail rows with batch_id > through only,
-    #    and a major's manifest replace unlists the merged generations),
-    #    so a crash anywhere below leaves orphans, never wrong answers
-    if not minor and cm:
+    #    readers, so a crash anywhere below leaves orphans, never wrong
+    #    answers
+    if not minor:
         for old in _gen_tables(cm):
-            catalog.spark.sql(f"DROP TABLE IF EXISTS {old}")
+            spark.sql(f"DROP TABLE IF EXISTS {old}")
             catalog.drop_physical(old)
-    if catalog.exists("dedup_seen_buckets"):
-        catalog.drop_physical(catalog.resolve("dedup_seen_buckets"))
-    return catalog.spark.table(table).count()
+    catalog.drop_physical("dedup_seen_buckets")
+    return spark.table(table).count()
 
 
 def read_curated(catalog) -> DataFrame:

@@ -36,7 +36,6 @@ SIZES = [
 ]
 BATCH_DOCS = int(sys.argv[2]) if len(sys.argv) > 2 else 100_000
 BANDS = 16
-N_BUCKETS = 64
 WORK = "/tmp/spark_graft_seen_probe"
 
 
@@ -60,7 +59,7 @@ def main() -> None:
         "metric": "seen_probe_flat_vs_bucketed",
         "batch_docs": BATCH_DOCS,
         "bands": BANDS,
-        "n_buckets": N_BUCKETS,
+        "n_buckets": spark.sparkContext.defaultParallelism,
         "host_load_at_start": [round(x, 2) for x in os.getloadavg()],
         "sizes": {},
     }
@@ -97,7 +96,7 @@ def main() -> None:
             cat.write_manifest("stream_curate", {"last_batch_id": 0})
             if layout == "bucketed":
                 t0 = time.monotonic()
-                compact_seen_buckets(cat, n_buckets=N_BUCKETS)
+                compact_seen_buckets(cat)
                 res["bucketed_compact_sec"] = round(time.monotonic() - t0, 3)
             times = []
             for _ in range(3):

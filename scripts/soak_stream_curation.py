@@ -32,11 +32,6 @@ N_TOTAL = int(sys.argv[1]) if len(sys.argv) > 1 else 1_600_000
 N_CHUNKS = int(sys.argv[2]) if len(sys.argv) > 2 else 16
 CHUNK = N_TOTAL // N_CHUNKS
 WORK = f"/tmp/spark_graft_stream_soak_{N_TOTAL}"
-# SOAK_N_BUCKETS=<n> runs the mid-run compaction in the BUCKETED layout
-# (external pre-aggregated table bucketed on the probe key)
-N_BUCKETS = (
-    int(os.environ["SOAK_N_BUCKETS"]) if "SOAK_N_BUCKETS" in os.environ else None
-)
 # SOAK_COMPACT_EVERY=<k> turns on IN-STREAM compaction cadence (compact
 # the seen state every k micro-batches inside the drain) — the fleet
 # regime; the mid-run compaction step then just picks up the remainder
@@ -45,13 +40,6 @@ COMPACT_EVERY = (
     if "SOAK_COMPACT_EVERY" in os.environ
     else None
 )
-# SOAK_COMPACT_MODE=minor folds only the flat tail per cadence point into
-# a new bucketed delta generation (LSM; O(tail) per compaction) instead of
-# rewriting the whole accumulated state (major; O(history))
-COMPACT_MODE = os.environ.get("SOAK_COMPACT_MODE", "major")
-# SOAK_COMPACT_MAX_MINORS bounds the delta-generation count before a
-# minor promotes itself to a major merge (probe joins base + deltas)
-MAX_MINORS = int(os.environ.get("SOAK_COMPACT_MAX_MINORS", "8"))
 
 
 def chunk_df(spark, start: int, end: int, seed: int = 42):
@@ -84,6 +72,7 @@ def main() -> None:
     from mysql_cdc_rs_spark.session import build_session
     from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
     from mysql_cdc_rs_spark.streaming.stream_pipeline import (
+        _gen_tables,
         compact_seen_buckets,
         read_curated,
         start_curation_stream,
@@ -147,7 +136,6 @@ def main() -> None:
     cat = SinkCatalog(spark, cur)
 
     out["compact_every"] = COMPACT_EVERY
-    out["compact_mode"] = COMPACT_MODE
 
     def drain() -> float:
         t0 = time.monotonic()
@@ -156,9 +144,6 @@ def main() -> None:
             cat,
             ckpt,
             compact_every=COMPACT_EVERY,
-            compact_n_buckets=N_BUCKETS if COMPACT_EVERY else None,
-            compact_mode=COMPACT_MODE,
-            compact_max_minors=MAX_MINORS,
         )
         q.awaitTermination()
         return time.monotonic() - t0
@@ -193,30 +178,21 @@ def main() -> None:
     # whole flat tail already — then this just measures the no-op/remainder)
     if cat.exists("dedup_seen_buckets"):
         seen_before = cat.read("dedup_seen_buckets").count()
-        mb_before = du_mb(os.path.join(cur, cat.resolve("dedup_seen_buckets")))
+        mb_before = du_mb(os.path.join(cur, "dedup_seen_buckets"))
     else:
         seen_before, mb_before = 0, 0.0
     t0 = time.monotonic()
-    seen_after = compact_seen_buckets(
-        cat, n_buckets=N_BUCKETS, mode=COMPACT_MODE, max_minors=MAX_MINORS
-    )
+    seen_after = compact_seen_buckets(cat)
     c_sec = time.monotonic() - t0
-    if N_BUCKETS:
-        from mysql_cdc_rs_spark.streaming.stream_pipeline import _gen_tables
-
-        mb_after = sum(
-            du_mb(os.path.join(cur, t))
-            for t in _gen_tables(cat.read_manifest("seen_compact"))
-        )
-    else:
-        mb_after = du_mb(os.path.join(cur, cat.resolve("dedup_seen_buckets")))
+    m = cat.read_manifest("seen_compact")
     out["compaction"] = {
         "rows_before": seen_before,
         "rows_after": seen_after,
         "mb_before": mb_before,
-        "mb_after": mb_after,
+        "mb_after": sum(du_mb(os.path.join(cur, t)) for t in _gen_tables(m)),
         "sec": round(c_sec, 3),
-        "n_buckets": N_BUCKETS,
+        "n_buckets": m["n_buckets"] if m else None,
+        "generations": len(_gen_tables(m)),
     }
 
     # --- 4. phase B: second half across the restart ------------------------

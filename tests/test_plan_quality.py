@@ -306,7 +306,7 @@ def test_seen_probe_bucketed_state_no_exchange(spark, tmp_path):
         cat.append(state, "dedup_seen_buckets")
         cat.write_manifest("stream_curate", {"last_batch_id": 0})
         if layout == "bucketed":
-            compact_seen_buckets(cat, n_buckets=8)
+            compact_seen_buckets(cat)
         old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
@@ -314,7 +314,8 @@ def test_seen_probe_bucketed_state_no_exchange(spark, tmp_path):
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
-    assert "SelectedBucketsCount: 8 out of 8" in plans["bucketed"]
+    n = spark.sparkContext.defaultParallelism
+    assert f"SelectedBucketsCount: {n} out of {n}" in plans["bucketed"]
 
     def probe_key_exchanges(plan: str) -> int:
         # Exchange details print as "Arguments: hashpartitioning(band_id..."
@@ -376,10 +377,10 @@ def test_seen_probe_lsm_generations_one_exchange(spark, tmp_path):
     lsm = SinkCatalog(spark, str(tmp_path / "lsm"))
     lsm.append(s0, "dedup_seen_buckets")
     lsm.write_manifest("stream_curate", {"last_batch_id": 0})
-    compact_seen_buckets(lsm, n_buckets=8)
+    compact_seen_buckets(lsm)
     lsm.append(s1, "dedup_seen_buckets")
     lsm.write_manifest("stream_curate", {"last_batch_id": 1})
-    compact_seen_buckets(lsm, mode="minor")
+    compact_seen_buckets(lsm)  # base + tail, no deltas yet: a minor
     m = lsm.read_manifest("seen_compact")
     assert m["table"].endswith("_g1") and len(m["minors"]) == 1
 
@@ -399,7 +400,8 @@ def test_seen_probe_lsm_generations_one_exchange(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
     # one bucketed scan per generation, ONE probe-key exchange in total
-    assert plan.count("SelectedBucketsCount: 8 out of 8") == 2
+    n = spark.sparkContext.defaultParallelism
+    assert plan.count(f"SelectedBucketsCount: {n} out of {n}") == 2
     exchanges = sum(
         1
         for ln in plan.splitlines()

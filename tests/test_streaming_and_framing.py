@@ -300,27 +300,6 @@ def test_wss_strategy_dispatch(spark):
     assert got[4]["payload"] == "unknown-action:NOPE"
 
 
-def test_kafka_source_swap_plan(spark):
-    """S5: the claimed one-line Kafka swap — the reader plan must compile
-    with the SAME downstream transformations as the file/rate sources.
-    Where the spark-sql-kafka connector jar is absent (this sandbox), the
-    source resolution itself raises and the test records that as a skip;
-    everything downstream is source-agnostic either way."""
-    from mysql_cdc_rs_spark.operators.decode import decode_pages
-    from mysql_cdc_rs_spark.operators.enrich import enrich
-    from mysql_cdc_rs_spark.streaming.stream_pipeline import stream_pages_kafka
-
-    try:
-        pages = stream_pages_kafka(spark, "localhost:9092", "pages")
-    except Exception as e:  # noqa: BLE001 — connector-absent path
-        msg = str(e).lower()
-        assert "kafka" in msg, f"failed before source resolution: {e}"
-        pytest.skip(f"kafka connector not on classpath: {type(e).__name__}")
-    out = enrich(decode_pages(pages))
-    assert out.isStreaming
-    assert {"url", "warc_ts", "html", "route", "region"} <= set(out.columns)
-
-
 def test_streaming_curation_matches_batch_and_resumes(spark):
     """ONLINE LSH curation: the corpus streamed in two doc_id-ordered
     micro-batches (with a stream restart between them — the dedup state
@@ -444,13 +423,9 @@ def test_streaming_curation_drops_cross_batch_dups(spark):
 
         before = cat.read("dedup_seen_buckets").count()
         after = compact_seen_buckets(cat)
-        distinct = (
-            cat.read("dedup_seen_buckets")
-            .select("band_id", "bucket")
-            .distinct()
-            .count()
-        )
-        assert after == distinct <= before
+        gen = spark.table(cat.read_manifest("seen_compact")["table"])
+        distinct = gen.select("band_id", "bucket").distinct().count()
+        assert after == gen.count() == distinct <= before
         spark.createDataFrame([page(200, uniq + " late copy")], ddl).coalesce(
             1
         ).write.mode("append").parquet(src)
@@ -460,6 +435,7 @@ def test_streaming_curation_drops_cross_batch_dups(spark):
         q3.awaitTermination()
         got3 = {r["doc_id"] for r in read_curated(cat).select("doc_id").collect()}
         assert 200 not in got3 and got3 >= got
+        spark.sql(f"DROP TABLE IF EXISTS {cat.read_manifest('seen_compact')['table']}")
 
 
 def test_socket_source_live_pages(spark):
@@ -564,21 +540,29 @@ def test_metrics_listener_flush_errors_counted(spark):
 
 
 def test_compact_seen_buckets_crash_safe(spark):
-    """Round-5 crash-safety contract: at NO instant during compaction is
-    ``dedup_seen_buckets`` unreadable or wrong.  The compacted rows land
-    under a versioned physical name; the live name moves in one atomic
-    manifest flip.  Simulated crashes on both sides of the flip:
+    """Crash-safety contract of the bucketed compaction: at NO instant is
+    the seen state unreadable or wrong.  A generation lands under a fresh
+    versioned table, ONE atomic ``seen_compact`` manifest replace commits
+    it, and cleanup runs after the commit.  Simulated crashes on both
+    sides of the commit:
 
-      (a) crash AFTER the version-table write, BEFORE the pointer flip:
-          the live table still reads the OLD (uncompacted) rows; a retry
-          completes and the dedup probe behaves identically;
-      (b) crash AFTER the flip, during old-dir cleanup: the live table
-          reads the NEW compacted rows; the orphan dir is cleanup-only.
+      (a) the ``seen_compact`` write fails during a MINOR compaction: the
+          probe positions equal the pre-crash ones, and the retry commits
+          the generation number the crashed attempt was committing;
+      (b) ``drop_physical`` fails after a MAJOR's commit (the promotion at
+          ``MAX_MINORS`` deltas): the new base is live, and a late
+          near-duplicate still drops against it.
     """
+    from mysql_cdc_rs_spark.operators import dedup as DD
+    from mysql_cdc_rs_spark.operators.decode import decode_pages
+    from mysql_cdc_rs_spark.plans.training_pipeline import quality_corpus
     from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
     from mysql_cdc_rs_spark.streaming.stream_pipeline import (
+        MAX_MINORS,
+        _gen_tables,
         compact_seen_buckets,
         read_curated,
+        seen_positions,
         start_curation_stream,
         stream_pages,
     )
@@ -603,91 +587,133 @@ def test_compact_seen_buckets_crash_safe(spark):
     with tempfile.TemporaryDirectory() as tmp:
         src = f"{tmp}/pages"
         cat = SinkCatalog(spark, f"{tmp}/cur")
-        for batch in ([page(1, t1), page(2, t2)], [page(3, t1 + " x"), page(4, t2 + " y")]):
-            spark.createDataFrame(batch, ddl).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
+
+        def feed(*batches, compact_every=None):
+            # one source file per batch, one micro-batch per file
+            for rows in batches:
+                spark.createDataFrame(rows, ddl).coalesce(1).write.mode(
+                    "append"
+                ).parquet(src)
             q = start_curation_stream(
-                stream_pages(spark, src), cat, f"{tmp}/ckpt", min_tokens=10
+                stream_pages(spark, src, max_files_per_trigger=1),
+                cat,
+                f"{tmp}/ckpt",
+                min_tokens=10,
+                compact_every=compact_every,
             )
             q.awaitTermination()
-        baseline_rows = sorted(
-            tuple(r) for r in cat.read("dedup_seen_buckets").collect()
-        )
-        distinct_n = (
-            cat.read("dedup_seen_buckets")
-            .select("band_id", "bucket")
-            .distinct()
-            .count()
+
+        feed([page(1, t1), page(2, t2)], compact_every=1)  # major: the base
+        feed([page(3, t1 + " x"), page(4, t2 + " y")])  # batch 1: the tail
+        base = cat.read_manifest("seen_compact")
+        assert base["gen"] == 1 and base["minors"] == []
+
+        probe = DD.banded_buckets(
+            quality_corpus(
+                decode_pages(
+                    spark.createDataFrame(
+                        [page(60, t1 + " z"), page(61, t2 + " w")], ddl
+                    )
+                ),
+                10,
+            )
         )
 
-        # (a) crash BEFORE the pointer flip: fail the ptr manifest write
+        def positions():
+            return sorted(
+                map(
+                    tuple,
+                    seen_positions(probe, cat, 1)
+                    .select("doc_id", "band_id", "bucket", "r", "p")
+                    .collect(),
+                )
+            )
+
+        pre_crash = positions()
+        assert max(p for *_, p in pre_crash) == 2  # base + tail both count
+
+        # (a) crash at the MINOR's commit: nothing moves
         real_write = cat.write_manifest
+        crashed = {}
 
         def crashing_write(name, payload):
-            if name == "ptr_dedup_seen_buckets":
-                raise RuntimeError("simulated crash before pointer flip")
+            if name == "seen_compact":
+                crashed.update(payload)
+                raise RuntimeError("simulated crash before compact commit")
             real_write(name, payload)
 
         cat.write_manifest = crashing_write
         with pytest.raises(RuntimeError):
             compact_seen_buckets(cat)
         cat.write_manifest = real_write
-        # live table unchanged — still every pre-crash row, still readable
-        assert (
-            sorted(tuple(r) for r in cat.read("dedup_seen_buckets").collect())
-            == baseline_rows
+        assert crashed["table"] == base["table"] and len(crashed["minors"]) == 1
+        assert cat.read_manifest("seen_compact") == base
+        assert cat.exists("dedup_seen_buckets")  # the tail is still live
+        assert positions() == pre_crash
+
+        # the retry commits the same generation and the same positions
+        assert compact_seen_buckets(cat) > 0
+        m = cat.read_manifest("seen_compact")
+        assert m["gen"] == crashed["gen"] == 2
+        assert m["minors"] == crashed["minors"]
+        assert not cat.exists("dedup_seen_buckets")
+        assert positions() == pre_crash
+
+        # stack deltas up to the cap, then leave one batch in the tail
+        feed(
+            *([page(10 + i, t2 + f" extra{i}")] for i in range(MAX_MINORS - 1)),
+            compact_every=1,
         )
+        assert len(cat.read_manifest("seen_compact")["minors"]) == MAX_MINORS
+        feed([page(20, t2 + " more")])
+        merged = _gen_tables(cat.read_manifest("seen_compact"))
 
-        # retry completes; live table is now the distinct set
-        after = compact_seen_buckets(cat)
-        assert after == distinct_n
-        assert cat.read("dedup_seen_buckets").count() == distinct_n
-
-        # (b) crash AFTER the flip, during cleanup of the previous dir
+        # (b) crash in the cleanup after the promoted MAJOR's commit
         real_drop = cat.drop_physical
 
-        def crashing_drop(physical):
+        def crashing_drop(table):
             raise RuntimeError("simulated crash during cleanup")
 
         cat.drop_physical = crashing_drop
         with pytest.raises(RuntimeError):
             compact_seen_buckets(cat)
         cat.drop_physical = real_drop
-        # the flip already committed: live reads the new compacted table
-        assert cat.read("dedup_seen_buckets").count() == distinct_n
-        ptr = cat.read_manifest("ptr_dedup_seen_buckets")
-        assert ptr is not None and ptr["physical"].startswith(
-            "dedup_seen_buckets__g"
-        )
+        m = cat.read_manifest("seen_compact")
+        assert m["gen"] == MAX_MINORS + 2 and m["minors"] == []
+        assert m["table"] not in merged and m["through"] == MAX_MINORS + 1
+        assert spark.table(m["table"]).count() > 0
+        # the merged generations are orphans now, unlisted by the commit
+        assert all(os.path.isdir(os.path.join(f"{tmp}/cur", t)) for t in merged)
 
-        # dedup behavior against the compacted + twice-crashed state: a
-        # late near-dup of doc 1 still drops, fresh content still survives
-        spark.createDataFrame(
-            [page(50, t1 + " tail"), page(51, "planets comets meteors "
-             "asteroids moons rings orbits eccentricity inclination "
-             "perihelion aphelion barycenter libration resonance " * 2)],
-            ddl,
-        ).coalesce(1).write.mode("append").parquet(src)
-        q = start_curation_stream(
-            stream_pages(spark, src), cat, f"{tmp}/ckpt", min_tokens=10
+        # a late near-dup of doc 1 still drops, fresh content survives
+        feed(
+            [
+                page(50, t1 + " tail"),
+                page(
+                    51,
+                    "planets comets meteors asteroids moons rings orbits "
+                    "eccentricity inclination perihelion aphelion "
+                    "barycenter libration resonance " * 2,
+                ),
+            ]
         )
-        q.awaitTermination()
         got = {r["doc_id"] for r in read_curated(cat).select("doc_id").collect()}
-        assert 50 not in got and 51 in got
+        assert {1, 2, 51} <= got and 50 not in got
+        for t in merged + [m["table"]]:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_streaming_curation_bucketed_state_matches_batch(spark):
-    """Bucketed compacted-state layout (round 5): compaction with
-    ``n_buckets=`` rewrites the seen-bucket state as an external
-    pre-aggregated table bucketed on the probe key.  The contract under
-    test: (a) the stream still reproduces batch ``curate()`` EXACTLY across
-    a bucketed compaction; (b) state survives catalog-metadata loss (the
-    probe re-attaches the external table from the manifest — the
-    session-restart case); (c) a second compaction is sticky (reuses the
-    recorded bucket count), bumps the generation, and cleans up the old
-    generation and the consumed flat tail; (d) a crash before the manifest
-    commit leaves the probe on the old state and the retry is idempotent."""
+    """Bucketed compacted-state layout (round 5): compaction rewrites the
+    seen-bucket state as an external pre-aggregated table bucketed on the
+    probe key.  The contract under test: (a) the stream still reproduces
+    batch ``curate()`` EXACTLY across a bucketed compaction; (b) state
+    survives catalog-metadata loss (the probe re-attaches the external
+    table from the manifest — the session-restart case); (c) a second
+    compaction reuses the recorded bucket count, folds the tail into a
+    minor delta generation on top of the untouched base, and drops the
+    consumed flat tail; (d) a crash before the manifest commit leaves the
+    probe on the old state and the retry is idempotent."""
     from mysql_cdc_rs_spark.plans.training_pipeline import curate, release
     from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
     from mysql_cdc_rs_spark.streaming.stream_pipeline import (
@@ -719,15 +745,16 @@ def test_streaming_curation_bucketed_state_matches_batch(spark):
 
         cat.write_manifest = crashing_write
         with pytest.raises(RuntimeError):
-            compact_seen_buckets(cat, n_buckets=16)
+            compact_seen_buckets(cat)
         cat.write_manifest = real_write
         assert cat.read_manifest("seen_compact") is None
         assert cat.exists("dedup_seen_buckets")  # flat tail still live
 
         # retry completes (same generation name, overwrite is idempotent)
-        n_buckets_state = compact_seen_buckets(cat, n_buckets=16)
+        n_buckets_state = compact_seen_buckets(cat)
         m = cat.read_manifest("seen_compact")
-        assert m["gen"] == 1 and m["n_buckets"] == 16
+        assert m["gen"] == 1
+        assert m["n_buckets"] == spark.sparkContext.defaultParallelism
         assert n_buckets_state > 0
         # the consumed flat tail is gone; the state lives in the external
         # table under the catalog base, not the session warehouse
@@ -750,22 +777,22 @@ def test_streaming_curation_bucketed_state_matches_batch(spark):
         release(surv)
         assert got == want
 
-        # (c) sticky second compaction: no n_buckets arg, gen bump, cleanup
-        old_table = m["table"]
+        # (c) second compaction: same bucket count, a minor delta on top of
+        # the untouched base, the consumed flat tail dropped
         compact_seen_buckets(cat)
         m2 = cat.read_manifest("seen_compact")
-        assert m2["gen"] == 2 and m2["n_buckets"] == 16
-        assert m2["table"] != old_table
-        assert not spark.catalog.tableExists(old_table)
-        assert not os.path.isdir(os.path.join(f"{tmp}/cur", old_table))
-        # dedup behavior against gen-2 state: a replay of the full corpus
+        assert m2["gen"] == 2 and m2["n_buckets"] == m["n_buckets"]
+        assert m2["table"] == m["table"] and m2["minors"][0].endswith("_g2")
+        assert not cat.exists("dedup_seen_buckets")
+        # dedup behavior against base + delta: a replay of the full corpus
         # as a late batch drops everything (every doc's buckets are seen)
         full.coalesce(1).write.mode("append").parquet(src)
         q3 = start_curation_stream(stream_pages(spark, src), cat, ckpt)
         q3.awaitTermination()
         again = {r["doc_id"] for r in read_curated(cat).select("doc_id").collect()}
         assert again == want
-        spark.sql(f"DROP TABLE IF EXISTS {m2['table']}")
+        for t in [m2["table"]] + m2["minors"]:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_streaming_curation_seen_replay_not_double_counted(spark):
@@ -1022,13 +1049,13 @@ def test_streaming_curation_compaction_cadence(spark):
             cat,
             ckpt,
             compact_every=2,
-            compact_n_buckets=8,
         )
         q.awaitTermination()
 
-        # (b) cadence fired after batches 1 and 3: two generations
+        # (b) cadence fired after batches 1 and 3: a base and one delta
         m = cat.read_manifest("seen_compact")
-        assert m is not None and m["gen"] == 2 and m["n_buckets"] == 8
+        assert m is not None and m["gen"] == 2 and len(m["minors"]) == 1
+        assert m["n_buckets"] == spark.sparkContext.defaultParallelism
         assert m["through"] == 3
         # (c) final compaction consumed the entire flat tail
         assert not cat.exists("dedup_seen_buckets")
@@ -1046,43 +1073,44 @@ def test_streaming_curation_compaction_cadence(spark):
             cat,
             ckpt,
             compact_every=2,
-            compact_n_buckets=8,
         )
         q2.awaitTermination()
         again = {r["doc_id"] for r in read_curated(cat).select("doc_id").collect()}
         assert again == want
         assert cat.read_manifest("seen_compact")["gen"] == 2
-        spark.sql(f"DROP TABLE IF EXISTS {m['table']}")
+        for t in [m["table"]] + m["minors"]:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_streaming_curation_minor_compaction_lsm(spark):
-    """LSM minor compaction (round 5): under ``compact_mode="minor"`` each
-    cadence point folds ONLY the flat tail into a new bucketed delta
-    generation — O(batches since last compaction), not O(history) — and a
-    major merge auto-fires when the delta count reaches
-    ``compact_max_minors``.  Contract under test, across SEVEN in-stream
-    compactions (major -> minor -> minor -> promoted major -> minor ->
-    minor -> promoted major):
+    """LSM lifecycle of the one compaction policy: each cadence point past
+    the first folds ONLY the flat tail into a new bucketed delta generation
+    — O(batches since last compaction), not O(history) — and a major merge
+    fires once ``MAX_MINORS`` deltas are stacked.  Contract under test,
+    across ``MAX_MINORS + 2`` in-stream compactions (major -> minors up to
+    the cap -> promoted major):
 
       (a) the survivor set still EXACTLY matches batch ``curate()`` — the
           multi-generation probe sums priors correctly;
-      (b) the manifest tracks base + deltas and each promotion resets the
+      (b) the manifest tracks base + deltas and the promotion resets the
           delta list and physically drops every merged generation;
       (c) a probe in a metadata-less session re-attaches ALL generations
           (base and minors) from the manifest;
-      (d) a minor with no new tail is a no-op (no generation bump);
+      (d) a compaction with no new tail is a no-op (no generation bump);
       (e) a replayed drain after everything is still a no-op.
     """
     from mysql_cdc_rs_spark.plans.training_pipeline import curate, release
     from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
     from mysql_cdc_rs_spark.streaming.stream_pipeline import (
+        MAX_MINORS,
         compact_seen_buckets,
         read_curated,
         start_curation_stream,
         stream_pages,
     )
 
-    n = 2800
+    n_batches = MAX_MINORS + 2
+    n = 400 * n_batches
     full = pages_df(spark, n, seed=42)
     docid = F.regexp_extract("url", r"/(\d+)$", 1).cast("long")
     with tempfile.TemporaryDirectory() as tmp:
@@ -1109,48 +1137,42 @@ def test_streaming_curation_minor_compaction_lsm(spark):
                 cat,
                 ckpt,
                 compact_every=1,
-                compact_n_buckets=8,
-                compact_mode="minor",
-                compact_max_minors=2,
             )
             q.awaitTermination()
 
-        for i in range(6):
+        for i in range(n_batches - 1):
             add_chunk(i)
         drain()
 
-        # (b) batch 0 -> first bucketed generation (major: nothing to fold
-        # into); batches 1,2 -> minors; batch 3 -> promotion (merge g1+g2+g3
-        # + tail -> g4, deltas reset, merged generations dropped); batches
-        # 4,5 -> minors again
+        # (b) batch 0 -> first bucketed generation (major: no base to fold
+        # into); every later batch -> a minor, up to the cap
         m = cat.read_manifest("seen_compact")
-        assert m["gen"] == 6 and m["through"] == 5 and m["n_buckets"] == 8
-        assert m["table"].endswith("_g4")
-        assert [t[-3:] for t in m["minors"]] == ["_g5", "_g6"]
-        for g in ("_g1", "_g2", "_g3"):
-            assert not os.path.isdir(
-                os.path.join(f"{tmp}/cur", m["table"][:-3] + g)
-            )
+        assert m["gen"] == MAX_MINORS + 1 and m["through"] == MAX_MINORS
+        assert m["n_buckets"] == spark.sparkContext.defaultParallelism
+        assert m["table"].endswith("_g1")
+        assert [t.rsplit("_", 1)[1] for t in m["minors"]] == [
+            f"g{g}" for g in range(2, MAX_MINORS + 2)
+        ]
         for t in [m["table"]] + m["minors"]:
             assert os.path.isdir(os.path.join(f"{tmp}/cur", t))
         # every cadence point consumed its whole flat tail
         assert not cat.exists("dedup_seen_buckets")
 
-        # (d) no new tail -> minor is a no-op, not an empty generation
-        assert compact_seen_buckets(cat, mode="minor") == 0
-        assert cat.read_manifest("seen_compact")["gen"] == 6
+        # (d) no new tail -> no-op, not an empty generation
+        assert compact_seen_buckets(cat) == 0
+        assert cat.read_manifest("seen_compact")["gen"] == MAX_MINORS + 1
 
         # (c) metadata loss: drop every session catalog entry; the next
         # probe must re-attach base AND minors from the manifest alone
         for t in [m["table"]] + m["minors"]:
             spark.sql(f"DROP TABLE IF EXISTS {t}")
-        add_chunk(6)
+        add_chunk(n_batches - 1)
         drain()
-        # batch 6 probed g4+g5+g6, then its cadence promoted (2 deltas at
-        # the cap): one new base, deltas reset, old generations dropped
+        # the last batch probed base + MAX_MINORS deltas, then its cadence
+        # promoted: one new base, deltas reset, old generations dropped
         m2 = cat.read_manifest("seen_compact")
-        assert m2["gen"] == 7 and m2["table"].endswith("_g7")
-        assert m2["minors"] == [] and m2["through"] == 6
+        assert m2["gen"] == n_batches and m2["table"].endswith(f"_g{n_batches}")
+        assert m2["minors"] == [] and m2["through"] == n_batches - 1
         for t in [m["table"]] + m["minors"]:
             assert not os.path.isdir(os.path.join(f"{tmp}/cur", t))
 
@@ -1165,73 +1187,5 @@ def test_streaming_curation_minor_compaction_lsm(spark):
         drain()
         again = {r["doc_id"] for r in read_curated(cat).select("doc_id").collect()}
         assert again == want
-        assert cat.read_manifest("seen_compact")["gen"] == 7
+        assert cat.read_manifest("seen_compact")["gen"] == n_batches
         spark.sql(f"DROP TABLE IF EXISTS {m2['table']}")
-
-
-
-def test_compact_minor_mismatched_n_buckets_promotes_major(spark):
-    """A minor compaction called with an explicit n_buckets that disagrees
-    with the recorded layout must not fold a delta: the delta would carry
-    the NEW physical bucketing while base generations keep the old one,
-    and the single manifest n_buckets field would declare a bucket spec
-    that doesn't match those files — the exchange-free sort-merge probe
-    trusts the declaration, so prior counts would go silently wrong after
-    a restart.  The call promotes itself to a MAJOR rewrite instead: one
-    generation at the new count, minors reset, probe positions identical
-    to a flat layout over the same state rows."""
-    from mysql_cdc_rs_spark.operators import dedup as DD
-    from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
-    from mysql_cdc_rs_spark.sources.testdata import load
-    from mysql_cdc_rs_spark.streaming.stream_pipeline import (
-        compact_seen_buckets,
-        seen_positions,
-    )
-
-    docs = load(spark, "/root/testdata/sf0.01", "documents").selectExpr(
-        "doc_id", "lower(coalesce(text, '')) as text"
-    )
-    banded = DD.banded_buckets(docs.limit(200).repartition(4))
-
-    def state_of(part, batch_id):
-        return (
-            DD.banded_buckets(part)
-            .groupBy("band_id", "bucket")
-            .agg(F.count("*").alias("n_members"))
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-
-    s0 = state_of(docs.filter(F.col("doc_id") % 2 == 0), 0)
-    s1 = state_of(docs.filter(F.col("doc_id") % 2 == 1), 1)
-
-    with tempfile.TemporaryDirectory() as tmp:
-        cat = SinkCatalog(spark, f"{tmp}/lsm")
-        cat.append(s0, "dedup_seen_buckets")
-        cat.write_manifest("stream_curate", {"last_batch_id": 0})
-        compact_seen_buckets(cat, n_buckets=8)
-        cat.append(s1, "dedup_seen_buckets")
-        cat.write_manifest("stream_curate", {"last_batch_id": 1})
-
-        # mismatched explicit n_buckets + minor mode -> promoted major
-        compact_seen_buckets(cat, n_buckets=4, mode="minor")
-        m = cat.read_manifest("seen_compact")
-        assert m["n_buckets"] == 4
-        assert m["minors"] == []
-        assert m["table"].endswith("_g2")
-        # the whole state (s0 + s1) lives in the one new generation
-        assert not cat.exists("dedup_seen_buckets")
-
-        # probe equality vs a flat layout over the identical rows
-        flat = SinkCatalog(spark, f"{tmp}/flat")
-        flat.append(s0, "dedup_seen_buckets")
-        flat.append(s1, "dedup_seen_buckets")
-        flat.write_manifest("stream_curate", {"last_batch_id": 1})
-        key = ["doc_id", "band_id", "bucket", "r", "p"]
-        got = sorted(
-            map(tuple, seen_positions(banded, cat, 1).select(*key).collect())
-        )
-        want = sorted(
-            map(tuple, seen_positions(banded, flat, 1).select(*key).collect())
-        )
-        assert got == want
-        spark.sql(f"DROP TABLE IF EXISTS {m['table']}")
