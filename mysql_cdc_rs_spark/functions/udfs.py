@@ -55,31 +55,22 @@ def make_decode_udf():
 
     Executors run separate Python workers, so driver-side
     ``register_mime_decoder`` calls would otherwise be invisible there.
-    Capturing the registry dicts in the closure makes cloudpickle ship the
-    registered functions BY VALUE with the UDF — the Spark analog of the
+    Capturing ``registry.snapshot()`` in the closure makes cloudpickle ship
+    the registered functions BY VALUE with the UDF — the Spark analog of the
     reference handing its decoder registry to each reader thread
     (/root/reference/binlog/src/decoder/event_decoder_registry.rs:65-140).
-    Each batch REPLACES the worker's registries with the snapshot: a reused
-    worker would otherwise keep an earlier plan's decoders and route
-    overrides live.
+    The snapshot is an argument of every batch's decode, so a reused worker
+    never sees another plan's decoders or route overrides.
     """
     from mysql_cdc_rs_spark.kernel import registry as _reg
 
-    mime_decoders = dict(_reg._MIME_DECODERS)  # noqa: SLF001
-    route_overrides = dict(_reg._ROUTE_OVERRIDES)  # noqa: SLF001
+    extensions = _reg.snapshot()
 
     @pandas_udf(DECODED_SCHEMA)
     def _decode(html: pd.Series) -> pd.DataFrame:
-        from mysql_cdc_rs_spark.kernel import registry as _r
-
-        _r._MIME_DECODERS.clear()  # noqa: SLF001
-        _r._MIME_DECODERS.update(mime_decoders)  # noqa: SLF001
-        _r._ROUTE_OVERRIDES.clear()  # noqa: SLF001
-        _r._ROUTE_OVERRIDES.update(route_overrides)  # noqa: SLF001
-        # fused batch loop (kernel/batchdecode.py): byte-identical to
-        # [decode_page(b) for b in html] but +28% single-thread — column
-        # lists feed pandas->Arrow without a list-of-dicts detour
-        return pd.DataFrame(decode_batch(html, mime_decoders))
+        # fused batch loop (kernel/batchdecode.py): column lists feed
+        # pandas->Arrow without a list-of-dicts detour
+        return pd.DataFrame(decode_batch(html, extensions))
 
     # asNondeterministic stops the optimizer pushing filters on decoded
     # columns BELOW the projection, which duplicated the whole decode as a

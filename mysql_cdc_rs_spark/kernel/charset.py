@@ -7,9 +7,10 @@ arrives in-band (Content-Type header or <meta> tag) instead of as a MySQL
 collation id, so "lookup by id" becomes "sniff from bytes" — but the codec
 table and the convert-to-UTF-8-lossy contract are the same.
 
-Determinism contract: given the same bytes, ``sniff_charset`` and
-``decode_text`` return the same result on every platform (pure stdlib codecs,
-no locale dependence).
+Determinism contract: given the same bytes, ``sniff_charset`` returns the
+same result on every platform, and so does the decode kernel's lossy
+``body.decode(codec, "replace")`` (pure stdlib codecs, no locale
+dependence).
 """
 
 from __future__ import annotations
@@ -58,7 +59,7 @@ CHARSET_MAP: dict[str, str] = {
 DEFAULT_CHARSET = "utf-8"
 
 # charset=<token> inside a Content-Type header value (bytes + str twins:
-# header values arrive pre-decoded from parse_record, raw bytes from direct
+# header values arrive pre-decoded from the decode loop, raw bytes from direct
 # callers; the token class is pure ASCII so the two match identically —
 # lossy-decoded U+FFFD can no more be part of a token than the raw byte).
 _CT_CHARSET_RE = re.compile(rb"charset\s*=\s*\"?([A-Za-z0-9_\-]+)\"?", re.IGNORECASE)
@@ -141,14 +142,3 @@ def sniff_charset(
             return codec, "meta"
         return m.group(1).decode("ascii", "replace").lower(), "unknown"
     return DEFAULT_CHARSET, "default"
-
-
-def decode_text(body: bytes, codec: str) -> str:
-    """Decode bytes to text with the reference's lossy contract.
-
-    The reference uses lossy UTF-8 conversion (invalid sequences become
-    U+FFFD, /root/reference/binlog/src/utils.rs:96-106); ``errors="replace"``
-    is the exact Python equivalent and is deterministic for every stdlib
-    codec used in CHARSET_MAP.
-    """
-    return body.decode(codec, errors="replace")

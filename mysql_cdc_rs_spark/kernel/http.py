@@ -5,10 +5,12 @@ fixed little-endian header (timestamp, type code, server_id, event_length,
 next_position, flags — /root/reference/binlog/src/events/event_header.rs:205-282)
 and validates a 4-byte magic prologue (:200-202).  The Common-Crawl analog of
 that header is the HTTP response block that precedes every WARC page body:
-a status line plus key:value headers terminated by CRLFCRLF.  ``parse_record``
-is the grok step — one regex pass over a bounded prefix, never the whole body.
+a status line plus key:value headers terminated by CRLFCRLF.  This module
+holds the framing constants, regexes, caches and error codes, and the body
+codecs; the grok step itself (one regex pass over a bounded prefix, never
+the whole body) is the head of ``batchdecode.decode_batch``.
 
-Malformed records do NOT raise: they return an ``error`` field so the Spark
+Malformed records do NOT raise: they get an ``error`` field so the Spark
 plan keeps errors on a side output instead of throwing in the hot path
 (mirrors /root/reference/binlog/src/decoder/bytes_binlog_reader.rs:94-101).
 """
@@ -17,7 +19,6 @@ from __future__ import annotations
 
 import re
 import zlib
-from dataclasses import dataclass, field
 
 # Magic prologue of a well-formed record — the binlog magic's analog.
 MAGIC = b"HTTP/"
@@ -26,7 +27,7 @@ MAGIC = b"HTTP/"
 # size similarly; bounding it keeps per-row work O(1).
 MAX_HEADER_BYTES = 8192
 
-_STATUS_RE = re.compile(rb"^HTTP/(\d\.\d)[ \t]+(\d{3})[ \t]*([^\r\n]*)\r\n")
+_STATUS_RE = re.compile(rb"^HTTP/\d\.\d[ \t]+(\d{3})[ \t]*[^\r\n]*\r\n")
 _HEADER_LINE_RE = re.compile(rb"([!#$%&'*+\-.^_`|~0-9A-Za-z]+):[ \t]*([^\r\n]*)\r\n")
 
 # raw header name -> decoded+lowered name.  Header names repeat across
@@ -54,75 +55,6 @@ class BodyTooLarge(Exception):
     """A coded body inflates past MAX_BODY_BYTES."""
 
 
-@dataclass(slots=True)
-class HttpRecord:
-    version: str = ""
-    status: int = 0
-    reason: str = ""
-    # values are decoded ONCE at parse time (ascii, lossy — the same
-    # contract every consumer applied anyway); keeping bytes here forced a
-    # second decode pass per header in the hot loop
-    headers: dict[str, str] = field(default_factory=dict)
-    body: bytes = b""
-    header_len: int = 0
-    error: str | None = None
-
-    @property
-    def content_type(self) -> str | None:
-        return self.headers.get("content-type")
-
-    @property
-    def mime(self) -> str:
-        ct = self.headers.get("content-type")
-        if not ct:
-            return ""
-        m = _MIME_CACHE.get(ct)
-        if m is None:
-            m = ct.split(";", 1)[0].strip().lower()
-            if len(_MIME_CACHE) < _HEADER_KEY_CACHE_MAX:
-                _MIME_CACHE[ct] = m
-        return m
-
-
-def parse_record(raw: bytes) -> HttpRecord:
-    """Frame one record: magic check -> status line -> header map -> body.
-
-    Single pass, bounded scan — the whole function is the vectorized-UDF
-    per-row kernel, so it must not allocate proportionally to header count
-    beyond the small dict.  findall (tuple results, no Match objects) is
-    measurably faster than finditer here — ~35% of the header-loop cost
-    was Match.group calls.
-    """
-    rec = HttpRecord()
-    if not raw.startswith(MAGIC):
-        rec.error = ERR_NO_MAGIC
-        return rec
-    # bounded find/match via (pos, endpos) — no head slice copy per record
-    end = raw.find(b"\r\n\r\n", 0, MAX_HEADER_BYTES)
-    if end < 0:
-        rec.error = ERR_NO_HEADER_END
-        return rec
-    m = _STATUS_RE.match(raw, 0, end + 2)
-    if not m:
-        rec.error = ERR_BAD_STATUS_LINE
-        return rec
-    rec.version = m.group(1).decode("ascii")
-    rec.status = int(m.group(2))
-    rec.reason = m.group(3).decode("ascii", "replace")
-    hdrs = rec.headers
-    key_cache = _HEADER_KEY_CACHE
-    for k, v in _HEADER_LINE_RE.findall(raw, m.end(), end + 2):
-        name = key_cache.get(k)
-        if name is None:
-            name = k.decode("ascii").lower()
-            if len(key_cache) < _HEADER_KEY_CACHE_MAX:
-                key_cache[k] = name
-        hdrs[name] = v.decode("ascii", "replace")
-    rec.header_len = end + 4
-    rec.body = raw[end + 4 :]
-    return rec
-
-
 def inflate(data: bytes, wbits: int) -> bytes:
     """``zlib.decompress(data, wbits=wbits)`` that stops at MAX_BODY_BYTES
     of output: raises BodyTooLarge past it, and zlib.error wherever
@@ -147,8 +79,7 @@ def decompress(enc: str, body: bytes) -> tuple[bytes | None, str | None]:
     compressed unit is a gzip page body.  ``enc`` is the stripped,
     lowercased header value.  Returns ``(body, None)``, or ``(None, error
     code)`` for a corrupt or oversized stream (caller -> error route);
-    never raises.  Both decode loops (``decode.decode_page`` and
-    ``batchdecode.decode_batch``) call this one function.
+    never raises.
     """
     if enc in ("", "identity"):
         return body, None

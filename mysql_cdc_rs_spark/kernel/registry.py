@@ -5,10 +5,12 @@ conflict strategies (/root/reference/binlog/src/column/type_decoder.rs,
 register at column_parser.rs:209-258) plus RowEventHandler fan-out
 registration (/root/reference/binlog/src/row/event_handler.rs:8-35).
 
-Spark analog: plain-Python registries consulted by the decode kernel and the
-router.  Because the pandas UDF closes over the kernel module, a registered
-decoder ships to executors with the UDF closure — users extend the engine
-without touching engine code:
+Spark analog: plain-Python registries.  ``snapshot()`` copies them, and the
+decode kernel reads only the copy it is handed (``decode_batch(raws,
+snapshot)``): ``functions.udfs.make_decode_udf`` snapshots at plan-build
+time, so the registered decoders ship to executors inside the UDF closure
+and each plan decodes with exactly the extensions registered when it was
+built.  Users extend the engine without touching engine code:
 
     from mysql_cdc_rs_spark.kernel.registry import register_mime_decoder
 
@@ -46,18 +48,15 @@ def register_mime_decoder(mime: str, priority: int = 0):
     return deco
 
 
-def lookup_mime_decoder(mime: str) -> Callable | None:
-    entry = _MIME_DECODERS.get(mime)
-    return entry[1] if entry else None
-
-
 def register_route(event_type: str, route: str) -> None:
     """Register (or re-route) a sink for an event type (R1 handler analog)."""
     _ROUTE_OVERRIDES[event_type] = route
 
 
-def lookup_route(event_type: str) -> str | None:
-    return _ROUTE_OVERRIDES.get(event_type)
+def snapshot() -> tuple[dict[str, Callable], dict[str, str]]:
+    """Copy of the registries as ``(mime -> decoder, event_type -> route)``:
+    the ``extensions`` argument of ``batchdecode.decode_batch``."""
+    return {m: fn for m, (_, fn) in _MIME_DECODERS.items()}, dict(_ROUTE_OVERRIDES)
 
 
 def clear_extensions() -> None:

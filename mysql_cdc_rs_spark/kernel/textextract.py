@@ -82,8 +82,3 @@ def extract_text(html: str) -> str:
             s = s.replace(k, v)
         return s
     return " ".join(s.split())
-
-
-def extract_plain(text: str) -> str:
-    """text/plain bodies: whitespace canonicalization only."""
-    return " ".join(text.split())

@@ -53,8 +53,8 @@ def build_session(
         # hung-worker incident (BENCH/SOAK.md): an unbounded batch would
         # make worker memory proportional to partition size and OOM-kills
         # would correlate with the largest partitions.  With this bound in
-        # place, a dead worker is environmental; speculation (below) is the
-        # fleet-scale backstop either way.
+        # place, a dead worker is environmental; speculation (see below) is
+        # the fleet-scale backstop either way.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2000")
         # --- scan sizing: keep partitions executor-memory-friendly at scale ---
         .config("spark.sql.files.maxPartitionBytes", "134217728")
@@ -64,28 +64,8 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    # Straggler backstop (opt-in locally, mandatory at fleet scale): a dead
-    # Python worker leaves its task blocked in epoll forever; speculation
-    # re-launches it.  Off by default here because single-attempt timing
-    # keeps bench rounds and plan snapshots deterministic — a 10^12-page
-    # run should set it (see BENCH/SOAK.md, hung-worker incident).
-    if os.environ.get("SPARK_GRAFT_SPECULATION") == "1":
-        builder = (
-            builder.config("spark.speculation", "true")
-            .config("spark.speculation.multiplier", "4")
-            .config("spark.speculation.quantile", "0.9")
-        )
-    # Crash forensics (opt-in): when a Python worker dies mid-task the JVM
-    # only reports "worker exited unexpectedly"; the faulthandler makes the
-    # worker dump a Python traceback on hard death (segfault/abort) so the
-    # failing frame is attributable.  Off by default — it adds a signal
-    # handler + temp-file write per worker launch.
-    if os.environ.get("SPARK_GRAFT_FAULTHANDLER") == "1":
-        builder = builder.config(
-            "spark.python.worker.faulthandler.enabled", "true"
-        ).config("spark.sql.execution.pyspark.udf.faulthandler.enabled", "true")
-    # JVM<->Python worker transport: Unix domain sockets (Spark 4.1+),
-    # default ON.  Forensics from a wedged 12.8M soak
+    # JVM<->Python worker transport: Unix domain sockets (Spark 4.1+).
+    # Forensics from a wedged 12.8M soak
     # (BENCH/hang/tcp_retransmit_collapse_batch22.txt) showed the "silent
     # hang" class is a LOOPBACK TCP RETRANSMISSION COLLAPSE: both
     # worker<->JVM pairs sat with 2-3.8 MB retransmitted, dsack_dups 30-70,
@@ -95,14 +75,18 @@ def build_session(
     # earlier daemon-handshake framing was one symptom of the same wedge).
     # AF_UNIX stream sockets have no retransmission, no congestion control
     # and no rto backoff, so the whole failure class is unrepresentable.
-    # NOTE: speculation is NOT a cure in local mode — a speculative copy is
-    # never scheduled on the executor already running the attempt, and
-    # local[N] has exactly one executor; on a real cluster it still is.
-    # SPARK_GRAFT_UNIX_SOCKET=0 restores TCP (e.g. to reproduce forensics).
-    if os.environ.get("SPARK_GRAFT_UNIX_SOCKET", "1") == "1":
-        builder = builder.config(
-            "spark.python.unix.domain.socket.enabled", "true"
-        )
+    #
+    # Left to Spark's own keys (``extra_conf`` or ``spark-submit --conf``):
+    # - straggler backstop, off here so single-attempt timing keeps bench
+    #   runs and plan snapshots deterministic; a fleet-scale run should set
+    #   spark.speculation=true (this engine's soaks used multiplier 4,
+    #   quantile 0.9).  Not a cure in local mode: a speculative copy never
+    #   runs on the one executor already running the attempt.
+    # - worker crash forensics: spark.python.worker.faulthandler.enabled and
+    #   spark.sql.execution.pyspark.udf.faulthandler.enabled make a dying
+    #   Python worker dump its traceback.
+    # - TCP transport: spark.python.unix.domain.socket.enabled=false.
+    builder = builder.config("spark.python.unix.domain.socket.enabled", "true")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

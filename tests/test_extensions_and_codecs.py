@@ -66,11 +66,21 @@ def test_extension_priority_and_crash_isolation():
     def broken(body, charset):
         raise RuntimeError("boom")
 
-    d = decode_page(
-        b"HTTP/1.1 200 OK\r\nContent-Type: text/csv\r\n\r\na,b"
-    )
-    assert d["event_type"] == "error_decode"
-    assert d["error"] == "EXTENSION_ERROR:RuntimeError"
+    @reg.register_mime_decoder("text/tab-separated-values")
+    def not_a_mapping(body, charset):
+        return None
+
+    for mime, err in [
+        ("text/csv", "EXTENSION_ERROR:RuntimeError"),
+        ("text/tab-separated-values", "EXTENSION_ERROR:TypeError"),
+    ]:
+        d = decode_page(
+            f"HTTP/1.1 200 OK\r\nContent-Type: {mime}\r\n\r\na,b".encode()
+        )
+        assert (d["event_type"], d["route"], d["error"]) == (
+            "error_decode", "errors", err
+        )
+        assert (d["charset"], d["text"]) == ("utf-8", None)
 
 
 def test_extension_works_inside_spark_udf(spark):
@@ -135,8 +145,9 @@ def _bomb(wbits: int, n: int) -> bytes:
     "enc,wbits", [("gzip", 31), ("deflate", 15), ("deflate", -15)]
 )
 def test_decompression_bomb_routes_to_errors(enc, wbits):
-    """A body inflating past http.MAX_BODY_BYTES takes the error route
-    through both decode loops; one exactly at the cap still decodes."""
+    """A body inflating past http.MAX_BODY_BYTES takes the error route; one
+    exactly at the cap still decodes.  Each row of the two-row batch equals
+    that row decoded alone."""
     from mysql_cdc_rs_spark.kernel.batchdecode import decode_batch
     from mysql_cdc_rs_spark.kernel.http import MAX_BODY_BYTES
 

@@ -9,22 +9,26 @@ import gzip
 import pytest
 
 from mysql_cdc_rs_spark.kernel import jsonb, mysql_decimal, temporal, varint
-from mysql_cdc_rs_spark.kernel.charset import decode_text, sniff_charset
+from mysql_cdc_rs_spark.kernel.charset import sniff_charset
 from mysql_cdc_rs_spark.kernel.decode import decode_page
-from mysql_cdc_rs_spark.kernel.http import parse_record
 from mysql_cdc_rs_spark.kernel.textextract import extract_text
 
 
 # --- framing (P1/S1) --------------------------------------------------------
+
+def _frame(d):
+    return {k: d[k] for k in ("status", "mime", "header_len", "body_len", "error", "text")}
+
 
 def test_parse_record_ok():
     raw = (
         b"HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n"
         b"Content-Length: 5\r\n\r\nhello"
     )
-    r = parse_record(raw)
-    assert r.error is None
-    assert (r.status, r.mime, r.body) == (200, "text/html", b"hello")
+    assert _frame(decode_page(raw)) == {
+        "status": 200, "mime": "text/html", "header_len": 78, "body_len": 5,
+        "error": None, "text": "hello",
+    }
 
 
 @pytest.mark.parametrize(
@@ -36,7 +40,12 @@ def test_parse_record_ok():
     ],
 )
 def test_parse_record_errors(raw, err):
-    assert parse_record(raw).error == err
+    d = decode_page(raw)
+    assert _frame(d) == {
+        "status": None, "mime": None, "header_len": None, "body_len": None,
+        "error": err, "text": None,
+    }
+    assert (d["event_type"], d["route"]) == ("error_frame", "errors")
 
 
 # --- charset (C16) ----------------------------------------------------------
@@ -49,10 +58,16 @@ def test_sniff_order_header_beats_meta():
     assert sniff_charset(b"text/html; charset=klingon-8", b"")[1] == "unknown"
 
 
+def _plain_page(charset: str, body: bytes) -> bytes:
+    return (
+        f"HTTP/1.1 200 OK\r\nContent-Type: text/plain; charset={charset}\r\n\r\n"
+    ).encode("ascii") + body
+
+
 def test_decode_text_lossy():
     # invalid utf-8 -> U+FFFD, mirrors the reference's lossy conversion
-    assert decode_text(b"a\xffb", "utf-8") == "a�b"
-    assert decode_text("中文".encode("gbk"), "gbk") == "中文"
+    assert decode_page(_plain_page("utf-8", b"a\xffb"))["text"] == "a�b"
+    assert decode_page(_plain_page("gbk", "中文".encode("gbk")))["text"] == "中文"
 
 
 # --- text extraction --------------------------------------------------------
@@ -193,7 +208,7 @@ def test_jsonb_golden_fixtures_documented_layout():
 def test_charset_map_widened_aliases():
     """Reference charset.rs:38-200 breadth: utf16/utf16le/utf32 + windows
     codepages resolve, decode deterministically, and unknown still errors."""
-    from mysql_cdc_rs_spark.kernel.charset import decode_text, normalize_charset
+    from mysql_cdc_rs_spark.kernel.charset import normalize_charset
 
     assert normalize_charset("UTF-16") == "utf-16-be"
     assert normalize_charset("utf16le") == "utf-16-le"
@@ -202,9 +217,13 @@ def test_charset_map_widened_aliases():
     assert normalize_charset("CP1251") == "cp1251"
     assert normalize_charset("windows-1250") == "cp1250"
     assert normalize_charset("no-such-charset") is None
-    assert decode_text("héllo".encode("cp1252"), "cp1252") == "héllo"
-    assert decode_text("привет".encode("cp1251"), "cp1251") == "привет"
-    assert decode_text("ab".encode("utf-16-be"), "utf-16-be") == "ab"
+    for charset, codec, text in [
+        ("windows-1252", "cp1252", "héllo"),
+        ("cp1251", "cp1251", "привет"),
+        ("utf16", "utf-16-be", "ab"),
+    ]:
+        d = decode_page(_plain_page(charset, text.encode(codec)))
+        assert (d["charset"], d["text"]) == (codec, text)
 
 
 def test_sniff_windows_1252_header():

@@ -377,7 +377,7 @@ def test_entity_passes_equal_single_regex_pass(s):
 def test_sniff_charset_str_bytes_equivalent(ct, body):
     """sniff_charset must return the same (codec, source) whether the
     content-type arrives as raw bytes or as the ascii-lossy-decoded string
-    parse_record now stores — the ASCII token class matches identically in
+    the decode loop stores — the ASCII token class matches identically in
     both representations (U+FFFD can no more join a token than the raw
     byte could)."""
     from mysql_cdc_rs_spark.kernel.charset import sniff_charset
@@ -423,32 +423,36 @@ def test_decode_row_safe_truncated_double_and_garbage_json():
     assert cells is None and err == "TRUNCATED_ROW"
 
 
-# --- round-5 fused batch kernel: byte-identity to decode_page -----------------
+# --- the decode loop: goldens and batch independence --------------------------
 
 from mysql_cdc_rs_spark.kernel.batchdecode import COLUMNS as _BD_COLS
 from mysql_cdc_rs_spark.kernel.batchdecode import decode_batch
 
 
-def _batch_equals_per_row(raws, mime_decoders=None):
-    cols = decode_batch(raws, mime_decoders)
-    want = [decode_page(r) for r in raws]
-    for c in _BD_COLS:
-        got_col = cols[c]
-        want_col = [w[c] for w in want]
-        assert got_col == want_col, (c, got_col[:3], want_col[:3])
+def _clear_kernel_caches():
+    from mysql_cdc_rs_spark.kernel import charset as _cs
+    from mysql_cdc_rs_spark.kernel import http as _http
+
+    _http._HEADER_KEY_CACHE.clear()
+    _http._MIME_CACHE.clear()
+    _cs._CT_SNIFF_CACHE.clear()
 
 
-@given(st.lists(st.binary(max_size=400), max_size=8))
-@settings(max_examples=200)
-def test_decode_batch_equals_decode_page_fuzz(raws):
-    """decode_batch is a fused re-statement of [decode_page(r) for r in rs];
-    arbitrary bytes must produce identical columns (incl. the error rows)."""
-    _batch_equals_per_row(raws)
+def _rows_independent_of_batch(raws, extensions=None):
+    """Each row of one batch equals that row decoded alone, from cold
+    module-level header/mime/charset caches: a row's output depends on
+    neither its batch neighbours nor what the caches have seen."""
+    cols = decode_batch(raws, extensions)
+    for i, r in enumerate(raws):
+        _clear_kernel_caches()
+        alone = decode_batch([r], extensions)
+        for c in _BD_COLS:
+            assert cols[c][i] == alone[c][0], (i, c, cols[c][i], alone[c][0])
 
 
-def test_decode_batch_equals_decode_page_generator_mix():
-    """Full generator class mix (html/plain/binary/gzip/redirect/errors,
-    every charset family) — the corpus-shaped identity gate."""
+def _generator_mix():
+    """The generator's full class mix (html/plain/binary/gzip/redirect/
+    errors, every charset family) plus a NULL payload."""
     from mysql_cdc_rs_spark.sources.pages import (
         _CLASS_CDF,
         _LANG_CDF,
@@ -462,7 +466,51 @@ def test_decode_batch_equals_decode_page_generator_mix():
         cls = _pick(_CLASS_CDF, 7, i, "cls")
         raws.append(_encode_record(7, i, lang, cls))
     raws.append(None)  # NULL_PAYLOAD leg
-    _batch_equals_per_row(raws)
+    return raws
+
+
+@given(st.lists(st.binary(max_size=400), max_size=8))
+@settings(max_examples=200)
+def test_decode_row_independent_of_batch_and_caches_fuzz(raws):
+    """Arbitrary bytes, incl. the error rows."""
+    _rows_independent_of_batch(raws)
+
+
+def test_decode_row_independent_of_batch_and_caches_generator_mix():
+    _rows_independent_of_batch(_generator_mix())
+
+
+#: event_type -> sha256 over its rows of the generator mix, in input order:
+#: one JSON line per row of the 13 columns, headers as sorted (key, value)
+#: pairs.  Recorded from the per-row decoder that preceded the fused loop,
+#: where both implementations agreed on every column.
+_GENERATOR_MIX_SHA256 = {
+    "binary": "a03ce1295c425d6699be7ecbbb3bbad79f85c641d5d2c9457ae4cd2005e8ab63",
+    "error_decode": "1cc88600e75bc2ad398e28cf129b56f4f5d734857e22fca4c76ea84ae8403dd4",
+    "error_frame": "12471db7444a56086fd992df7290b15b362f786d88073eb61570225559e635ec",
+    "error_http": "1dd5da2f542f26d69f62aad35cf1a1693f76a205e30f490ac8cb4188500eca2d",
+    "html": "967a1f2c850c2fd0aff881d5c5af9b4d14dfb3ce5cda0e345c7afaf43893c49b",
+    "plain": "4173e08af724bc081f701b5cd8e26e0f73f45b18f0343b2a3fbcd321e0426c8a",
+    "redirect": "821287d997bf09ffee3ab0aa33dc2a6aecf4bbec71eefa86aa3b2f01afadaae0",
+}
+
+
+def test_decode_generator_mix_golden():
+    import hashlib
+    import json
+
+    cols = decode_batch(_generator_mix())
+    digests: dict = {}
+    for i, et in enumerate(cols["event_type"]):
+        row = [cols[c][i] for c in _BD_COLS]
+        hdrs = cols["headers"][i]
+        row[-1] = None if hdrs is None else sorted(hdrs.items())
+        line = json.dumps(row, ensure_ascii=False).encode("utf-8") + b"\n"
+        digests.setdefault(et, hashlib.sha256()).update(line)
+    assert {et: h.hexdigest() for et, h in digests.items()} == _GENERATOR_MIX_SHA256
+
+
+_GOLDEN_FIELDS = ("event_type", "route", "error", "text", "charset", "content_encoding")
 
 
 def test_decode_batch_edge_records():
@@ -479,25 +527,39 @@ def test_decode_batch_edge_records():
         return head.encode("ascii") + body
 
     gz = _gz.compress(b"<html><body>hi &amp; bye</body></html>", mtime=0)
-    raws = [
-        rec("200 OK", ["Content-Type: text/html", "Content-Encoding: gzip "], gz),
-        rec("200 OK", ["Content-Type: text/html", "Content-Encoding: GZIP"], gz),
-        rec("200 OK", ["Content-Type: text/html", "Content-Encoding: br"], b"x"),
-        rec("200 OK", ["X-A: 1", "X-A: 2", "Content-Type: text/plain"], b"a  b"),
-        rec("301 Moved", ["Content-Type: text/html"], b"<p>no location</p>"),
-        rec("404 Not Found", ["Content-Encoding: gzip"], b"\x1f\x8bBROKEN"),
-        rec("200 OK", ["Content-Type: application/xhtml+xml"], b"<p>x&nbsp; y</p>"),
-        rec("200 OK", ["Content-Type: text/html; charset=klingon-8"], b"<p>z</p>"),
-        rec("200 OK", [], b"no content type"),
-        rec("204 No Content", ["Content-Type: text/plain; charset=utf-16"], b"\x00h\x00i"),
+    cases = [
+        (rec("200 OK", ["Content-Type: text/html", "Content-Encoding: gzip "], gz),
+         ("html", "content_html", None, "hi & bye", "utf-8", "gzip ")),
+        (rec("200 OK", ["Content-Type: text/html", "Content-Encoding: GZIP"], gz),
+         ("html", "content_html", None, "hi & bye", "utf-8", "gzip")),
+        (rec("200 OK", ["Content-Type: text/html", "Content-Encoding: br"], b"x"),
+         ("error_decode", "errors", "BAD_GZIP", None, None, "br")),
+        (rec("200 OK", ["X-A: 1", "X-A: 2", "Content-Type: text/plain"], b"a  b"),
+         ("plain", "content_plain", None, "a b", "utf-8", "identity")),
+        (rec("301 Moved", ["Content-Type: text/html"], b"<p>no location</p>"),
+         ("html", "content_html", None, "no location", "utf-8", "identity")),
+        (rec("404 Not Found", ["Content-Encoding: gzip"], b"\x1f\x8bBROKEN"),
+         ("error_decode", "errors", "BAD_GZIP", None, None, "gzip")),
+        (rec("200 OK", ["Content-Type: application/xhtml+xml"], b"<p>x&nbsp; y</p>"),
+         ("html", "content_html", None, "x y", "utf-8", "identity")),
+        (rec("200 OK", ["Content-Type: text/html; charset=klingon-8"], b"<p>z</p>"),
+         ("error_decode", "errors", "UNKNOWN_CHARSET", None, "klingon-8", "identity")),
+        (rec("200 OK", [], b"no content type"),
+         ("binary", "content_binary", None, None, None, "identity")),
+        (rec("204 No Content", ["Content-Type: text/plain; charset=utf-16"], b"\x00h\x00i"),
+         ("plain", "content_plain", None, "hi", "utf-16-be", "identity")),
     ]
-    _batch_equals_per_row(raws)
+    cols = decode_batch([raw for raw, _ in cases])
+    for i, (_, want) in enumerate(cases):
+        assert tuple(cols[f][i] for f in _GOLDEN_FIELDS) == want, i
+    assert cols["headers"][3] == {"x-a": "2", "content-type": "text/plain"}
+    assert list(cols["headers"][3]) == ["x-a", "content-type"]
 
 
 def test_decode_batch_registered_mime_delegates():
-    """A registered mime decoder must behave identically through
-    decode_batch (which delegates such rows to decode_page) — including
-    the crash-isolation contract."""
+    """A registered mime decoder replaces the built-in dispatch for its
+    rows only, with the route override of its event_type, and a decoder
+    that raises becomes an error row."""
     from mysql_cdc_rs_spark.kernel import registry as R
 
     R.clear_extensions()
@@ -523,14 +585,19 @@ def test_decode_batch_registered_mime_delegates():
             rec("application/x-crash", b"x"),
             rec("text/html", b"<p>normal path</p>"),
         ]
-        mds = dict(R._MIME_DECODERS)  # noqa: SLF001
-        _batch_equals_per_row(raws, mds)
-        cols = decode_batch(raws, mds)
-        assert cols["event_type"] == ["json", "error_decode", "html"]
-        assert cols["route"][0] == "content_json"
-        assert cols["error"][1] == "EXTENSION_ERROR:RuntimeError"
+        cols = decode_batch(raws, R.snapshot())
     finally:
         R.clear_extensions()
+    want = [
+        ("json", "content_json", None, '{"a":1}', "utf-8", "identity"),
+        ("error_decode", "errors", "EXTENSION_ERROR:RuntimeError", None, "utf-8",
+         "identity"),
+        ("html", "content_html", None, "normal path", "utf-8", "identity"),
+    ]
+    got = [tuple(cols[f][i] for f in _GOLDEN_FIELDS) for i in range(3)]
+    assert got == want
+    # without the snapshot the same rows take the built-in dispatch
+    assert decode_batch(raws)["event_type"] == ["binary", "binary", "html"]
 
 
 @given(
