@@ -51,6 +51,23 @@ ROUTE_OF_EVENT = {
     "error_decode": "errors",
 }
 
+#: the built-in sinks, one per distinct ``ROUTE_OF_EVENT`` value
+ROUTES = ["content_html", "content_plain", "content_binary", "redirect", "errors"]
+
+#: error classes: the part of ``error`` before the first ':' on every error
+#: row ``decode_batch`` emits (``EXTENSION_ERROR:<Type>`` -> EXTENSION_ERROR).
+#: The run record counts each one, and any other value as ``error.other``.
+ERROR_CLASSES = [
+    "NULL_PAYLOAD",
+    "NO_MAGIC",
+    "NO_HEADER_END",
+    "BAD_STATUS_LINE",
+    "BAD_GZIP",
+    "BODY_TOO_LARGE",
+    "UNKNOWN_CHARSET",
+    "EXTENSION_ERROR",
+]
+
 
 def decode_page(raw: bytes | None) -> dict[str, Any]:
     """Decode one raw page record with the live extension registry: row 0

@@ -20,6 +20,10 @@ from pyspark.sql.functions import broadcast
 
 from mysql_cdc_rs_spark.sources.dimensions import lang_region_df, tld_category_df
 
+#: ``enrich_error`` values: the dimension whose key a row misses
+LANG_MISS = "LANG_DIM_NOT_FOUND"
+TLD_MISS = "TLD_DIM_NOT_FOUND"
+
 
 def enrich(decoded: DataFrame, spark=None) -> DataFrame:
     spark = spark or decoded.sparkSession
@@ -31,8 +35,8 @@ def enrich(decoded: DataFrame, spark=None) -> DataFrame:
         .join(broadcast(tld_dim), "tld", "left")
         .withColumn(
             "enrich_error",
-            F.when(F.col("region").isNull(), F.lit("LANG_DIM_NOT_FOUND"))
-            .when(F.col("category").isNull(), F.lit("TLD_DIM_NOT_FOUND"))
+            F.when(F.col("region").isNull(), F.lit(LANG_MISS))
+            .when(F.col("category").isNull(), F.lit(TLD_MISS))
             .otherwise(F.lit(None).cast("string")),
         )
     )

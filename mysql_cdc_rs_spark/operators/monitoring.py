@@ -1,27 +1,17 @@
-"""Monitoring sink (S10) + action-strategy message routing (R4).
+"""Action-strategy message routing (R4).
 
-Reference: the actix wss server pushes stat snapshots to subscribed
-sessions (/root/reference/web/src/wss/server.rs:41); incoming messages
-dispatch by ActionType via a strategy factory
-(/root/reference/web/src/wss/strategy/factory.rs:42-57;
+Reference: incoming wss messages dispatch by ActionType via a strategy
+factory (reference web/src/wss/strategy/factory.rs:42-57;
 /root/reference/web/src/wss/wss_action_type.rs: CONNECTION=0,
 StartBinlog=1, IGNORE=10, Unknown=-1 — StartBinlog gets a real handler,
 IGNORE is dropped, everything else falls to the Unknown strategy).
 
-Spark-first restatement:
-
-- the monitoring "push" surface is an append-only METRICS TABLE — every
-  dashboard/consumer tails the table (the sessions analog; a web server
-  does not belong in the engine).  ``MetricsListener`` appends one row per
-  micro-batch from Structured Streaming progress events, and
-  ``publish_run_metrics`` appends batch-run snapshots (route counts,
-  throughput) from the same dict the pipeline already returns.
-- message routing is a single routing COLUMN + one pass (the R1 fan-out
-  machinery), never per-message dispatch: strategies register into a
-  factory dict exactly like register.rs; unregistered actions fall through
-  to the ``unknown`` strategy; IGNORE routes to ``ignored`` with no
-  payload.  At 10^12 messages this is one narrow projection — no UDF, no
-  shuffle.
+Spark-first restatement: message routing is a single routing COLUMN + one
+pass (the R1 fan-out machinery), never per-message dispatch: strategies
+register into a factory dict exactly like register.rs; unregistered actions
+fall through to the ``unknown`` strategy; IGNORE routes to ``ignored`` with
+no payload.  At 10^12 messages this is one narrow projection — no UDF, no
+shuffle.
 """
 
 from __future__ import annotations
@@ -30,8 +20,6 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-# --- R4: action-strategy factory -------------------------------------------
 
 # action -> payload Column factory (takes the messages DataFrame's columns)
 _STRATEGIES: dict[str, Callable[[DataFrame], Column]] = {}
@@ -91,117 +79,3 @@ def dispatch_messages(msgs: DataFrame) -> DataFrame:
         .otherwise(F.concat(F.lit("unknown-action:"), F.col("action")))
     )
     return msgs.withColumn("route", route_col).withColumn("payload", payload_col)
-
-
-# --- S10: metrics push table -------------------------------------------------
-
-METRICS_SCHEMA = (
-    "source string, metric string, value double, batch_id long, detail string"
-)
-
-
-def publish_run_metrics(
-    catalog, run_id: str, route_counts: dict[str, int], elapsed_sec: float,
-    table: str = "monitoring_metrics",
-) -> None:
-    """Append a batch-run stat snapshot to the metrics table — the
-    'push stats to every subscribed session' analog: consumers tail the
-    table instead of holding a socket."""
-    total = sum(route_counts.values())
-    rows = [(run_id, f"route_count.{k}", float(v), -1, "") for k, v in
-            sorted(route_counts.items())]
-    rows.append((run_id, "rows_total", float(total), -1, ""))
-    if elapsed_sec > 0:
-        rows.append(
-            (run_id, "rows_per_sec", total / elapsed_sec, -1, "")
-        )
-    df = catalog.spark.createDataFrame(rows, METRICS_SCHEMA)
-    catalog.append(df, table)
-
-
-class MetricsListener:
-    """StreamingQueryListener pushing per-micro-batch progress rows to the
-    metrics table (one row per batch: input rows + rows/sec).
-
-    The listener bus delivers events on a single thread and swallows
-    exceptions, so a slow or failing parquet append there would silently
-    stall ALL listeners.  onQueryProgress therefore only BUFFERS rows; a
-    daemon worker drains the buffer off the bus thread, batching multiple
-    progress events per write, and failed flushes are counted on
-    ``flush_errors`` instead of vanishing."""
-
-    def __new__(cls, catalog, table: str = "monitoring_metrics"):
-        import threading
-
-        from pyspark.sql.streaming import StreamingQueryListener
-
-        class _L(StreamingQueryListener):
-            def __init__(self):
-                self._buf: list[tuple] = []
-                self._lock = threading.Lock()
-                self._wake = threading.Event()
-                self.flush_errors = 0
-                worker = threading.Thread(
-                    target=self._drain_forever, daemon=True,
-                    name="metrics-listener-flush",
-                )
-                worker.start()
-
-            def _drain_forever(self):
-                while True:
-                    self._wake.wait(timeout=1.0)
-                    self._wake.clear()
-                    self.flush()
-
-            def flush(self):
-                with self._lock:
-                    rows, self._buf = self._buf, []
-                if not rows:
-                    return
-                try:
-                    df = catalog.spark.createDataFrame(rows, METRICS_SCHEMA)
-                    catalog.append(df, table)
-                except Exception:  # noqa: BLE001 — metrics must never kill
-                    # the stream; count, don't raise.  The counter is bumped
-                    # UNDER the lock: both the daemon drain thread and direct
-                    # flush() callers land here, and += on an attribute is
-                    # not atomic across threads.
-                    with self._lock:
-                        self.flush_errors += 1
-
-            def onQueryStarted(self, event):
-                pass
-
-            def onQueryIdle(self, event):
-                pass
-
-            def onQueryTerminated(self, event):
-                # Drain SYNCHRONOUSLY: rows buffered after the last batch
-                # would be lost if the session/JVM exits before the daemon
-                # thread's next wakeup.  Termination is off the hot path, so
-                # paying the write here is safe (and flush() never raises).
-                self.flush()
-
-            def onQueryProgress(self, event):
-                p = event.progress
-                rows = [
-                    (
-                        p.name or str(p.id),
-                        "batch_input_rows",
-                        float(p.numInputRows),
-                        int(p.batchId),
-                        p.timestamp,
-                    ),
-                    (
-                        p.name or str(p.id),
-                        "processed_rows_per_sec",
-                        float(p.processedRowsPerSecond or 0.0),
-                        int(p.batchId),
-                        p.timestamp,
-                    ),
-                ]
-                with self._lock:
-                    self._buf.extend(rows)
-                self._wake.set()
-
-        return _L()

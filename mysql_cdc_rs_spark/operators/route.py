@@ -7,19 +7,20 @@ route is a COLUMN, and the fan-out is ONE write partitioned by that column —
 a single pass over the data, no per-route job, no per-route shuffle.  Each
 route directory is then exposed as its own sink table.
 
-Per-sink exact counts (A3) come from the same single pass via a groupBy on
-the route column, written to the metrics sink; `routed-row equality` =
-union(routes) == decoded input, verified in tests with exceptAll.
+Per-sink exact counts (A3) and the rest of the run record come from that
+same pass: an ``Observation`` on the written frame aggregates
+``stats.run_record`` while the write runs (``test_run_record_matches_sink``
+attests them against the sink).  Routed-row equality = union(routes) ==
+decoded input, verified in tests with exceptAll.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, Observation
 
+from mysql_cdc_rs_spark.kernel.decode import ROUTES
+from mysql_cdc_rs_spark.operators import stats as S
 from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
-
-ROUTES = ["content_html", "content_plain", "content_binary", "redirect", "errors"]
 
 # Columns persisted to content sinks (the decode-time scratch stays behind).
 SINK_COLUMNS = [
@@ -51,25 +52,29 @@ def route_table(enriched: DataFrame) -> DataFrame:
 
 
 def write_routes(enriched: DataFrame, catalog: SinkCatalog) -> dict[str, int]:
-    """Single-pass fan-out write + exact per-sink counts.
+    """Single-pass fan-out write; returns {route: row_count}.
 
-    Returns {route: row_count} computed from the written data (read-back),
-    so the counts attest what actually landed in the sink — the analog of
-    the reference's per-table metrics keyed by db.table
-    (/root/reference/binlog/src/row/monitoring.rs:154-180).
+    The write itself computes the run record (``stats.run_record``) — the
+    analog of the reference's per-table metrics keyed by db.table
+    (reference binlog/src/row/monitoring.rs:154-180).  The ``routes``
+    manifest keeps it as ``record`` next to ``counts`` and ``total``.
     """
-    routed = route_table(enriched)
-    catalog.overwrite(routed, "routed", partition_by=["route"])
-    counts = route_counts(catalog.read("routed"))
+    obs = Observation()
+    # observed BEFORE the sink projection, while raw_len is still a column
+    catalog.overwrite(
+        route_table(enriched.observe(obs, *S.run_record())),
+        "routed",
+        partition_by=["route"],
+    )
+    record = obs.get
+    counts = {r: record[f"route.{r}"] for r in ROUTES if record[f"route.{r}"]}
+    if record["route.other"]:
+        # an extension route (registry.register_route): name it from the sink
+        counts = {
+            r["route"]: r["count"]
+            for r in catalog.read("routed").groupBy("route").count().collect()
+        }
     catalog.write_manifest(
-        "routes", {"counts": counts, "total": sum(counts.values())}
+        "routes", {"counts": counts, "total": record["rows"], "record": record}
     )
     return counts
-
-
-def route_counts(routed: DataFrame) -> dict[str, int]:
-    """{route: row_count} of a routed table (one aggregate job)."""
-    return {
-        r["route"]: r["n"]
-        for r in routed.groupBy("route").agg(F.count("*").alias("n")).collect()
-    }

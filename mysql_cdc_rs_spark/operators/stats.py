@@ -1,16 +1,76 @@
-"""Aggregation/metrics layer (SURVEY §2.6 A1-A7).
+"""Aggregation/metrics layer (SURVEY §2.6 A1-A9).
 
-Each reference stats collector becomes one declarative groupBy job; Catalyst
-plans partial (map-side) + final aggregation automatically, which is the
-scalable restatement of the reference's in-memory HashMap collectors
-(/root/reference/binlog/src/decoder/event_statistics.rs:8-200,
- /root/reference/binlog/src/row/monitoring.rs:9-180).
+The reference counts each event while it decodes it
+(binlog/src/decoder/event_statistics.rs:8-200,
+ binlog/src/row/monitoring.rs:9-180).  Here the run record
+is the same idea: ``decode_record``/``run_record`` are global aggregates
+for ``DataFrame.observe``, so the pass that writes the data counts it, with
+no job of their own.  The per-group breakdowns below are one declarative
+groupBy job each; Catalyst plans partial (map-side) + final aggregation.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from mysql_cdc_rs_spark.kernel.decode import ERROR_CLASSES, EVENT_TYPES, ROUTES
+from mysql_cdc_rs_spark.operators.enrich import LANG_MISS, TLD_MISS
+
+
+# The record columns are SQL strings: one F.expr per column is one py4j
+# call, where the Column API takes about ten per count_if; every pipeline
+# run and every stream batch builds them.
+
+
+def _closed_set(prefix: str, expr: str, values: list[str]) -> list[str]:
+    """One ``count_if`` per value, plus ``<prefix>.other`` for any non-null
+    value outside the set."""
+    listed = ", ".join(f"'{v}'" for v in values)
+    return [f"count_if({expr} = '{v}') AS `{prefix}.{v}`" for v in values] + [
+        f"count_if({expr} NOT IN ({listed})) AS `{prefix}.other`"
+    ]
+
+
+def decode_record() -> list[Column]:
+    """Run-record columns of a ``decode_pages`` frame: ``rows``,
+    ``event.<t>`` per ``EVENT_TYPES``, ``error.<class>`` per
+    ``ERROR_CLASSES`` (the class is the ``error`` text before the first
+    ':') and ``bytes_in`` (html bytes)."""
+    return [
+        F.expr(e)
+        for e in [
+            "count(1) AS rows",
+            *_closed_set("event", "event_type", EVENT_TYPES),
+            *_closed_set("error", "substring_index(error, ':', 1)", ERROR_CLASSES),
+            "coalesce(sum(raw_len), 0) AS bytes_in",
+        ]
+    ]
+
+
+def run_record() -> list[Column]:
+    """``decode_record`` plus the enriched, routed side of a pipeline run:
+    ``route.<r>`` rows and ``route_bytes.<r>`` body bytes per ``ROUTES``,
+    ``enrich.<missing dim>``, ``bytes_out`` (body bytes) and
+    ``first_seen``/``last_seen`` (``warc_ts``, as text)."""
+    return decode_record() + [
+        F.expr(e)
+        for e in [
+            *_closed_set("route", "route", ROUTES),
+            *[
+                f"coalesce(sum(if(route = '{r}', body_len, 0)), 0)"
+                f" AS `route_bytes.{r}`"
+                for r in ROUTES
+            ],
+            *[
+                f"count_if(enrich_error = '{e}') AS `enrich.{e}`"
+                for e in (LANG_MISS, TLD_MISS)
+            ],
+            "coalesce(sum(body_len), 0) AS bytes_out",
+            "string(min(warc_ts)) AS first_seen",
+            "string(max(warc_ts)) AS last_seen",
+        ]
+    ]
 
 
 def event_type_stats(decoded: DataFrame) -> DataFrame:
@@ -43,25 +103,6 @@ def global_rollup(decoded: DataFrame) -> DataFrame:
     )
 
 
-def per_sink_metrics(routed: DataFrame) -> DataFrame:
-    """A3: per-route (per-sink) exact counts + size/op mix."""
-    return (
-        routed.groupBy("route")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.sum(F.coalesce(F.col("body_len"), F.lit(0))).alias("total_body_bytes"),
-            F.round(F.avg(F.coalesce(F.col("body_len"), F.lit(0))), 4).alias(
-                "avg_body_bytes"
-            ),
-            F.count(F.when(F.col("error").isNotNull(), 1)).alias("decode_errors"),
-            F.count(F.when(F.col("enrich_error").isNotNull(), 1)).alias(
-                "enrich_errors"
-            ),
-        )
-        .orderBy("route")
-    )
-
-
 def size_histogram(decoded: DataFrame, col: str = "raw_len") -> DataFrame:
     """A4: power-of-two size buckets (reference's row-size distribution)."""
     bucket = F.when(F.col(col) <= 0, F.lit(-1)).otherwise(
@@ -75,34 +116,6 @@ def size_histogram(decoded: DataFrame, col: str = "raw_len") -> DataFrame:
     )
 
 
-def null_stats(decoded: DataFrame, cols: list[str]) -> DataFrame:
-    """A4b: per-column null counts + null fraction, one pass."""
-    aggs = []
-    for c in cols:
-        aggs.append(F.count(F.when(F.col(c).isNull(), 1)).alias(f"nulls_{c}"))
-    aggs.append(F.count("*").alias("n_rows"))
-    return decoded.agg(*aggs)
-
-
-def error_stats(decoded: DataFrame) -> DataFrame:
-    """A6: errors by kind x tld — feeds the decode-error metrics sink."""
-    return (
-        decoded.filter(F.col("error").isNotNull() | (F.col("status") >= 400))
-        .withColumn(
-            "error_kind",
-            F.coalesce(
-                F.col("error"),
-                F.when(F.col("status") >= 500, F.lit("HTTP_5XX")).otherwise(
-                    F.lit("HTTP_4XX")
-                ),
-            ),
-        )
-        .groupBy("error_kind", "tld")
-        .agg(F.count("*").alias("n"))
-        .orderBy("error_kind", "tld")
-    )
-
-
 def charset_stats(decoded: DataFrame) -> DataFrame:
     """A7 analog: charset/source distribution (column-parser type stats)."""
     return (
@@ -111,17 +124,6 @@ def charset_stats(decoded: DataFrame) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .orderBy("charset", "charset_source")
     )
-
-
-def throughput_report(n_rows: int, total_bytes: int, elapsed_s: float) -> dict:
-    """A9: rows/sec + bytes/sec — computed by the bench harness."""
-    return {
-        "rows": n_rows,
-        "bytes": total_bytes,
-        "elapsed_s": round(elapsed_s, 3),
-        "rows_per_s": round(n_rows / elapsed_s, 1) if elapsed_s else None,
-        "mb_per_s": round(total_bytes / 1e6 / elapsed_s, 2) if elapsed_s else None,
-    }
 
 
 def host_stats_salted(decoded: DataFrame, salt_buckets: int = 8) -> DataFrame:

@@ -30,10 +30,11 @@ under-partitioned source, repartition the source stream once at ingest
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from mysql_cdc_rs_spark.operators import stats as S
 from mysql_cdc_rs_spark.operators.decode import decode_pages
 from mysql_cdc_rs_spark.operators.enrich import enrich
 from mysql_cdc_rs_spark.operators.route import route_table
@@ -265,12 +266,14 @@ def start_curation_stream(
     cap = DD.MAX_BUCKET
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        m = catalog.read_manifest(MANIFEST)
-        last = m.get("last_batch_id", -1) if m else -1
+        m = catalog.read_manifest(MANIFEST) or {}
+        last = m.get("last_batch_id", -1)
         if batch_id <= last:
             return  # replayed after restart: this batch is fully applied
+        obs = Observation()  # the batch's decode-level run record
         quality = quality_corpus(
-            decode_pages(_fan_out(batch_df)), min_tokens
+            decode_pages(_fan_out(batch_df)).observe(obs, *S.decode_record()),
+            min_tokens,
         ).persist()
         # Materialize each persisted frame in its OWN job before anything
         # fans out over it.  Without the barrier, the first append's job
@@ -281,7 +284,7 @@ def start_curation_stream(
         # task 11, one in ArrowStreamReader epoll holding the lock, one
         # parked in BlockInfoManager.acquireLock).  Serialized builds keep
         # Python-feeding stages free of cross-stage lock coupling.
-        n_quality = quality.count()
+        n_quality = quality.count()  # also completes ``obs``
         banded = DD.banded_buckets(quality).persist()
         banded.count()
         pos = F.col("p") + F.col("r")
@@ -312,14 +315,16 @@ def start_curation_stream(
         # green (BENCH/SOAK.md).  The running quality-row total makes that
         # auditable downstream: sum(per-batch quality rows) must equal the
         # batch-mode quality count over the same corpus (both sides apply
-        # ``quality_corpus``; ``curation_report``'s ``quality_pass``).
+        # ``quality_corpus``; ``curation_report``'s ``quality_pass``).  The
+        # run record's running totals commit with it, so a skipped replay
+        # adds nothing.
+        prior = m.get("record", {})
         catalog.write_manifest(
             MANIFEST,
             {
                 "last_batch_id": batch_id,
-                "quality_rows_total": (
-                    (m.get("quality_rows_total", 0) if m else 0) + n_quality
-                ),
+                "quality_rows_total": m.get("quality_rows_total", 0) + n_quality,
+                "record": {k: prior.get(k, 0) + v for k, v in obs.get.items()},
             },
         )
         if compact_every and (batch_id + 1) % compact_every == 0:

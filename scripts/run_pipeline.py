@@ -57,6 +57,7 @@ def main() -> int:
                 "route_counts": result.route_counts,
                 "total": sum(result.route_counts.values()),
                 "elapsed_s": round(result.elapsed_s, 2),
+                "record": result.metrics,
             }
         )
     )

@@ -128,6 +128,36 @@ def test_route_override_does_not_leak_into_later_plan(spark):
     assert routes(make_decode_udf()) == {want}
 
 
+def test_write_routes_counts_extension_route(spark, tmp_path):
+    """A row on a registered route falls outside the run record's closed
+    route set (``route.other``); ``write_routes`` still names it."""
+    from mysql_cdc_rs_spark.operators.decode import decode_pages
+    from mysql_cdc_rs_spark.operators.enrich import enrich
+    from mysql_cdc_rs_spark.operators.route import write_routes
+    from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
+    from mysql_cdc_rs_spark.sources.pages import pages_df
+
+    def dec(body, charset):
+        return {"event_type": "json", "text": body.decode("utf-8")}
+
+    reg.register_mime_decoder("application/json")(dec)
+    reg.register_route("json", "content_json")
+    pages = pages_df(spark, 40, seed=42)
+    json_page = spark.createDataFrame(
+        [("https://ex.com/j", None, _raw_json_page(b"{}"), None, "en")],
+        pages.schema,
+    )
+    cat = SinkCatalog(spark, str(tmp_path))
+    counts = write_routes(enrich(decode_pages(pages.union(json_page))), cat)
+    want = {
+        r["route"]: r["count"]
+        for r in cat.read("routed").groupBy("route").count().collect()
+    }
+    assert counts == want and want["content_json"] == 1
+    rec = cat.read_manifest("routes")["record"]
+    assert (rec["route.other"], rec["event.other"], rec["rows"]) == (1, 1, 41)
+
+
 # --- content codecs -------------------------------------------------------------
 
 def _bomb(wbits: int, n: int) -> bytes:

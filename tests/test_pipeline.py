@@ -226,13 +226,53 @@ def test_iceberg_probe_falls_back_without_jar(spark):
 def test_pipeline_resume(spark, pages):
     with tempfile.TemporaryDirectory() as base:
         cat = SinkCatalog(spark, base)
-        r1 = run_pipeline(pages, cat, with_metrics=False)
-        r2 = run_pipeline(pages, cat, with_metrics=False)
-        assert r1.route_counts == r2.route_counts
+        r1 = run_pipeline(pages, cat)
+        r2 = run_pipeline(pages, cat)
+        # resume returns the stored counts and run record
+        assert r2.route_counts == r1.route_counts
+        assert r2.metrics == r1.metrics
         # changed input -> recompute, not stale reuse
         bigger = pages_df(spark, N + 100, seed=42)
-        r3 = run_pipeline(bigger, cat, with_metrics=False)
+        r3 = run_pipeline(bigger, cat)
         assert sum(r3.route_counts.values()) == N + 100
+
+
+def test_run_record_matches_sink(spark, pages):
+    """The run record the routed write observed attests the sink: its
+    route, event-type and error-class counts equal read-back groupBys of
+    ``routed``, nothing falls in an ``other`` bucket, and ``bytes_in`` is
+    the input's html bytes."""
+    from mysql_cdc_rs_spark.kernel.decode import ERROR_CLASSES, EVENT_TYPES
+
+    def observed(rec, prefix, names):
+        return {n: rec[f"{prefix}.{n}"] for n in names if rec[f"{prefix}.{n}"]}
+
+    def read_back(df, key):
+        return {
+            r["k"]: r["n"]
+            for r in df.groupBy(key.alias("k")).agg(F.count("*").alias("n")).collect()
+            if r["k"] is not None
+        }
+
+    with tempfile.TemporaryDirectory() as base:
+        cat = SinkCatalog(spark, base)
+        rec = run_pipeline(pages, cat).metrics
+        routed = cat.read("routed")
+        assert observed(rec, "route", ROUTES) == read_back(routed, F.col("route"))
+        assert observed(rec, "event", EVENT_TYPES) == read_back(
+            routed, F.col("event_type")
+        )
+        assert observed(rec, "error", ERROR_CLASSES) == read_back(
+            routed, F.substring_index("error", ":", 1)
+        )
+        assert rec["route.other"] == rec["event.other"] == rec["error.other"] == 0
+        assert rec["rows"] == N
+        assert rec["bytes_in"] == pages.agg(F.sum(F.length("html"))).first()[0]
+        assert rec["bytes_out"] == routed.agg(F.sum("body_len")).first()[0]
+        body_bytes = routed.groupBy("route").agg(F.sum("body_len").alias("b"))
+        assert observed(rec, "route_bytes", ROUTES) == {
+            r["route"]: r["b"] for r in body_bytes.collect() if r["b"]
+        }
 
 
 def test_stats_consistency(decoded):
@@ -341,6 +381,7 @@ def test_spark_submit_py_files_runs():
         res = json.loads(out.stdout.strip().splitlines()[-1])
         assert res["total"] == 500
         assert sum(res["route_counts"].values()) == 500
+        assert res["record"]["rows"] == 500
 
 
 def test_curate_resumable_skips_and_recomputes(spark, tmp_path):

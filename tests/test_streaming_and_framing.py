@@ -224,59 +224,6 @@ def test_rate_source_stream_matches_batch(spark):
         assert want.exceptAll(got).count() == 0
 
 
-def test_monitoring_metrics_listener_and_run_snapshot(spark):
-    """S10 analog: per-micro-batch progress rows land in the metrics table
-    via StreamingQueryListener; batch runs publish snapshot rows."""
-    import time
-
-    from mysql_cdc_rs_spark.operators.monitoring import (
-        MetricsListener,
-        publish_run_metrics,
-    )
-    from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
-    from mysql_cdc_rs_spark.streaming.stream_pipeline import (
-        start_routing_stream,
-        stream_pages,
-    )
-
-    with tempfile.TemporaryDirectory() as tmp:
-        src = f"{tmp}/pages"
-        pages_df(spark, 200, seed=42, num_partitions=4).write.parquet(src)
-        cat = SinkCatalog(spark, f"{tmp}/mon")
-        listener = MetricsListener(cat)
-        spark.streams.addListener(listener)
-        try:
-            q = start_routing_stream(
-                stream_pages(spark, src), f"{tmp}/sink", f"{tmp}/ckpt"
-            )
-            q.awaitTermination()
-            # listener events are delivered asynchronously
-            deadline = time.time() + 60
-            rows = []
-            while time.time() < deadline:
-                if cat.exists("monitoring_metrics"):
-                    rows = cat.read("monitoring_metrics").collect()
-                    if any(r["metric"] == "batch_input_rows" for r in rows):
-                        break
-                time.sleep(1)
-        finally:
-            spark.streams.removeListener(listener)
-        got = sum(
-            r["value"] for r in rows if r["metric"] == "batch_input_rows"
-        )
-        assert got == 200  # every input row accounted in pushed metrics
-
-        publish_run_metrics(cat, "run-1", {"a": 3, "b": 7}, elapsed_sec=2.0)
-        snap = {
-            r["metric"]: r["value"]
-            for r in cat.read("monitoring_metrics").collect()
-            if r["source"] == "run-1"
-        }
-        assert snap["rows_total"] == 10.0
-        assert snap["route_count.a"] == 3.0
-        assert snap["rows_per_sec"] == 5.0
-
-
 def test_wss_strategy_dispatch(spark):
     """R4: registered action -> handled payload; IGNORE -> dropped payload;
     unknown action -> unknown strategy, all in one column-only pass."""
@@ -305,6 +252,8 @@ def test_streaming_curation_matches_batch_and_resumes(spark):
     micro-batches (with a stream restart between them — the dedup state
     must survive in the table, not the session) yields EXACTLY the batch
     curate() survivor set, and a replayed batch is skipped idempotently."""
+    from mysql_cdc_rs_spark.kernel.decode import EVENT_TYPES
+    from mysql_cdc_rs_spark.operators.decode import decode_pages
     from mysql_cdc_rs_spark.plans.training_pipeline import (
         curate,
         curation_report,
@@ -352,8 +301,20 @@ def test_streaming_curation_matches_batch_and_resumes(spark):
 
         # input-lineage tripwire: the stream's running quality-row total
         # equals batch mode's quality count over the same pages
-        total = cat.read_manifest("stream_curate")["quality_rows_total"]
-        assert total == curation_report(full)["quality_pass"]
+        m = cat.read_manifest("stream_curate")
+        assert m["quality_rows_total"] == curation_report(full)["quality_pass"]
+
+        # the batches' run-record totals count every input row once, with
+        # the event-type mix of a batch decode
+        rec = m["record"]
+        assert rec["rows"] == n
+        want_events = {
+            r["event_type"]: r["count"]
+            for r in decode_pages(full).groupBy("event_type").count().collect()
+        }
+        assert {
+            t: rec[f"event.{t}"] for t in EVENT_TYPES if rec[f"event.{t}"]
+        } == want_events
 
 
 def test_streaming_curation_drops_cross_batch_dups(spark):
@@ -503,40 +464,6 @@ def test_socket_source_live_pages(spark):
     ).select("url", "route", "text")
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
-
-
-def test_metrics_listener_flush_errors_counted(spark):
-    """A failing metrics append must never propagate to (or stall) the
-    listener bus: rows buffer, the flush fails, the error is COUNTED."""
-    from mysql_cdc_rs_spark.operators.monitoring import MetricsListener
-
-    class BadCatalog:
-        def __init__(self, s):
-            self.spark = s
-
-        def append(self, df, table):
-            raise RuntimeError("sink unavailable")
-
-    lst = MetricsListener(BadCatalog(spark))
-
-    class _Progress:
-        name = "q"
-        id = "qid"
-        numInputRows = 3
-        batchId = 1
-        processedRowsPerSecond = 1.5
-        timestamp = "2026-01-01T00:00:00Z"
-
-    class _Event:
-        progress = _Progress()
-
-    lst.onQueryProgress(_Event())  # buffers only — must not raise
-    lst.flush()
-    assert lst.flush_errors == 1
-    # and a second batch keeps flowing into the buffer without issue
-    lst.onQueryProgress(_Event())
-    lst.flush()
-    assert lst.flush_errors == 2
 
 
 def test_compact_seen_buckets_crash_safe(spark):
@@ -862,6 +789,8 @@ def test_streaming_curation_seen_replay_not_double_counted(spark):
             seen.groupBy("band_id", "bucket").count().where("count > 1")
         )
         assert one_bucket.count() > 0  # duplicates really are on disk
+        # ...but the run record counts the replayed batch once
+        assert cat.read_manifest("stream_curate")["record"]["rows"] == MAX_BUCKET - 1
 
         # next two arrivals of the same class: 512 drops (== cap), 513
         # survives (> cap).  Doubled priors would keep BOTH.
@@ -875,6 +804,7 @@ def test_streaming_curation_seen_replay_not_double_counted(spark):
         got = {r["doc_id"] for r in read_curated(cat).select("doc_id").collect()}
         assert 600 not in got  # position 512: still inside the drop window
         assert 601 in got  # position 513: past the cap, survives
+        assert cat.read_manifest("stream_curate")["record"]["rows"] == MAX_BUCKET + 1
 
 
 def test_streaming_curation_out_of_order_arrival(spark):
