@@ -71,6 +71,37 @@ def inflate(data: bytes, wbits: int) -> bytes:
     return out
 
 
+# Compressed bytes fed to the zstd decoder per call.  A zstd block is at
+# most 128 KiB of output from at least 4 bytes of input (an RLE block), so
+# one piece adds at most 8 MiB past MAX_BODY_BYTES before the check stops
+# the read.
+ZSTD_IN_CHUNK = 256
+
+
+def unzstd(data: bytes) -> bytes:
+    """zstd counterpart of ``inflate``: feeds the frame to a
+    ``decompressobj`` ZSTD_IN_CHUNK bytes at a time and raises BodyTooLarge
+    once the output passes MAX_BODY_BYTES (a frame that declares a larger
+    content size is refused before decoding).  Raises
+    ``zstandard.ZstdError`` on a corrupt frame and, through the ``eof``
+    check, on a truncated one, whether or not it declares its size; bytes
+    after the frame are ignored."""
+    import zstandard
+
+    if zstandard.frame_content_size(data) > MAX_BODY_BYTES:
+        raise BodyTooLarge
+    d = zstandard.ZstdDecompressor().decompressobj()
+    out = bytearray()
+    view = memoryview(data)
+    for i in range(0, len(data), ZSTD_IN_CHUNK):
+        out += d.decompress(view[i : i + ZSTD_IN_CHUNK])
+        if len(out) > MAX_BODY_BYTES:
+            raise BodyTooLarge
+        if d.eof:
+            return bytes(out)
+    raise zstandard.ZstdError("incomplete or truncated frame")
+
+
 def decompress(enc: str, body: bytes) -> tuple[bytes | None, str | None]:
     """Apply a Content-Encoding — the compressed-transaction-payload analog.
 
@@ -105,9 +136,9 @@ def decompress(enc: str, body: bytes) -> tuple[bytes | None, str | None]:
         except ImportError:
             return None, ERR_BAD_GZIP
         try:
-            return zstandard.ZstdDecompressor().decompress(
-                body, max_output_size=MAX_BODY_BYTES
-            ), None
+            return unzstd(body), None
         except zstandard.ZstdError:
             pass
+        except BodyTooLarge:
+            return None, ERR_BODY_TOO_LARGE
     return None, ERR_BAD_GZIP

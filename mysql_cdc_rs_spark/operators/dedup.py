@@ -74,6 +74,10 @@ def minhash_signatures(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
     distinct on the exploded shingles: min() is idempotent to duplicates,
     and the distinct would hash-repartition the largest intermediate of the
     whole dedup path (the exploded corpus) for nothing.
+
+    The k aggregates are SQL strings, one ``F.expr`` each: the same plan as
+    the Column-API build, but about one py4j call per aggregate instead of
+    ten, which took the driver seconds per plan at k=64.
     """
     sh = docs.select(
         "doc_id", words_of(F.col("text")).alias("words")
@@ -85,28 +89,27 @@ def minhash_signatures(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
     aggs = []
     for i in range(k):
         a, b = minhash_coeffs(i)
-        aggs.append(
-            F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(MERSENNE_P))
-            .alias(f"mh{i}")
-        )
+        aggs.append(F.expr(f"min(({a} * h + {b}) % {MERSENNE_P}) AS mh{i}"))
     return sh.groupBy("doc_id").agg(*aggs)
 
 
 def banded_buckets(
     docs: DataFrame, k: int = MINHASH_K, bands: int = LSH_BANDS
 ) -> DataFrame:
-    """(doc_id, band_id, bucket) — one row per doc per band."""
+    """(doc_id, band_id, bucket) — one row per doc per band.
+
+    Built as one ``inline`` SQL string over the band structs (see
+    ``minhash_signatures`` for why strings)."""
     rows_per_band = k // bands
-    sig = minhash_signatures(docs, k)
-    band_cols = []
-    for b in range(bands):
-        cols = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band_id"), F.concat_ws("_", *cols).alias("bucket"))
-        )
-    return sig.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("band")
-    ).select("doc_id", "band.band_id", "band.bucket")
+
+    def band(b: int) -> str:
+        mh = ", ".join(f"mh{b * rows_per_band + r}" for r in range(rows_per_band))
+        return f"named_struct('band_id', {b}, 'bucket', concat_ws('_', {mh}))"
+
+    structs = ", ".join(band(b) for b in range(bands))
+    return minhash_signatures(docs, k).selectExpr(
+        "doc_id", f"inline(array({structs}))"
+    )
 
 
 def lsh_candidate_pairs(

@@ -3,6 +3,15 @@
 All entry points (tests, bench, driver contract) build sessions here so the
 whole engine runs under one config story:
 
+- Sized from the box: the default master is ``local[*]`` (or
+  ``local[$SPARK_GRAFT_CPUS]``) and ``spark.sql.shuffle.partitions`` is set
+  to the context's ``defaultParallelism`` once the session exists, so a
+  4-core box runs 4-task shuffle stages and a 32-core box 32-task ones.  A
+  partition count set explicitly, through ``extra_conf`` or
+  ``spark-submit --conf``, always wins.  On a cluster, set it explicitly:
+  with dynamic allocation, ``defaultParallelism`` at session start counts
+  only the executors registered so far, and AQE can merge shuffle
+  partitions but not split them.
 - AQE on (coalesce partitions + skew-join): runtime re-planning replaces the
   reference's hand-tuned ring-buffer/queue sizing
   (/root/reference/binlog/src/relay_log/queue_manager.rs:11).
@@ -19,10 +28,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Shuffle partition count sized for local[32] test runs; on a real cluster
-# this is overridden via spark-submit conf (AQE coalesces down at runtime).
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-
 
 def build_session(
     app_name: str = "mysql_cdc_rs_spark",
@@ -30,7 +35,7 @@ def build_session(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or get) a SparkSession with the engine's standard config."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -41,7 +46,6 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
         # --- vectorized decode path sizing (Arrow batches to pandas UDFs) ---
         # 2000-row batches keep the JVM->Python->JVM pipeline full: with one
         # huge batch per task the stage is latency-bound (measured 2.2x
@@ -90,6 +94,16 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    # Shuffle width = the cores the context got.  Every shuffle stage runs
+    # this many tasks before AQE coalesces, and on small micro-batches the
+    # per-task cost dominates: Spark's default (200), or a count sized for
+    # a wider box, multiplies each batch's task count for no parallelism.
+    # Set after getOrCreate because defaultParallelism is only known then;
+    # an explicit count (extra_conf, or spark-submit --conf, which lands in
+    # the SparkConf) is left alone.
+    sc, key = spark.sparkContext, "spark.sql.shuffle.partitions"
+    if key not in (extra_conf or {}) and not sc.getConf().contains(key):
+        spark.conf.set(key, str(sc.defaultParallelism))
     ship_package(spark)
     return spark
 

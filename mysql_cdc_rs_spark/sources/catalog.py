@@ -124,10 +124,16 @@ class SinkCatalog:
             w = w.partitionBy(*partition_by)
         w.parquet(self._path(table))
 
-    def read(self, table: str):
+    def read(self, table: str, schema: str | None = None):
+        """The table as a DataFrame.  ``schema`` (a DDL string) is the
+        Parquet leg's read schema: given, the read runs no schema-inference
+        job; Iceberg tables carry their own."""
         if self.use_iceberg:
             return self.spark.read.table(self._ident(table))
-        return self.spark.read.parquet(self._path(table))
+        reader = self.spark.read
+        if schema:
+            reader = reader.schema(schema)
+        return reader.parquet(self._path(table))
 
     def exists(self, table: str) -> bool:
         if self.use_iceberg:

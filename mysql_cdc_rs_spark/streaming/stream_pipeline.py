@@ -298,12 +298,7 @@ def start_curation_stream(
         catalog.append(
             survivors.withColumn("batch_id", F.lit(batch_id)), CURATED
         )
-        catalog.append(
-            banded.groupBy("band_id", "bucket")
-            .agg(F.count("*").alias("n_members"))
-            .withColumn("batch_id", F.lit(batch_id)),
-            SEEN,
-        )
+        catalog.append(seen_rows(banded, batch_id), SEEN)
         quality.unpersist()
         banded.unpersist()
         # Input-lineage tripwire (free: n_quality is the persist barrier's
@@ -338,6 +333,32 @@ def start_curation_stream(
     return writer.start()
 
 
+# The seen-bucket state's columns, declared once.  A compacted generation
+# holds SEEN_COLUMNS; the flat per-batch tail adds the batch_id its rows
+# were appended under.  Both readers (the probe and compaction) pass the
+# declaration to the Parquet read, which then runs no schema-inference job;
+# every writer casts to it (``as_declared``), so the files always hold the
+# declared types.
+SEEN_COLUMNS = "band_id INT, bucket STRING, n_members BIGINT"
+SEEN_SCHEMA = f"{SEEN_COLUMNS}, batch_id INT"
+
+
+def as_declared(df: DataFrame, ddl: str = SEEN_SCHEMA) -> DataFrame:
+    """The ``ddl`` columns of ``df``, in the declared order and types."""
+    cols = (field.split() for field in ddl.split(", "))
+    return df.selectExpr(*(f"CAST({c} AS {t}) AS {c}" for c, t in cols))
+
+
+def seen_rows(banded: DataFrame, batch_id: int) -> DataFrame:
+    """One batch's rows of the flat seen state: the member count of each
+    (band_id, bucket) in ``banded``, stamped with ``batch_id``."""
+    return as_declared(
+        banded.groupBy("band_id", "bucket")
+        .agg(F.count("*").alias("n_members"))
+        .withColumn("batch_id", F.lit(batch_id))
+    )
+
+
 def _gen_tables(m: dict | None) -> list[str]:
     """All compacted-generation table names in a ``seen_compact`` manifest:
     the base generation (``table``) followed by the minor deltas
@@ -351,10 +372,10 @@ def _ensure_compact_table(catalog, m: dict, table: str) -> None:
     The table's FILES live under ``catalog.base`` (bucket membership is in
     the file names), but its catalog entry is session-scoped under Spark's
     default in-memory catalog — and the dedup state must outlive any one
-    session.  The ``seen_compact`` manifest carries everything needed to
-    recreate the definition, so a fresh session self-heals with one DDL
-    before the first probe (the Hive-metastore/Iceberg-catalog analog of a
-    persistent table registration).
+    session.  The bucket count rides in the ``seen_compact`` manifest and
+    the columns are ``SEEN_COLUMNS``, so a fresh session self-heals with one
+    DDL before the first probe (the Hive-metastore/Iceberg-catalog analog of
+    a persistent table registration).
     """
     import os
 
@@ -363,7 +384,7 @@ def _ensure_compact_table(catalog, m: dict, table: str) -> None:
         return
     loc = os.path.join(os.path.abspath(catalog.base), table)
     spark.sql(
-        f"CREATE TABLE {table} ({m['columns']}) "
+        f"CREATE TABLE {table} ({SEEN_COLUMNS}) "
         "USING parquet CLUSTERED BY (band_id, bucket) "
         f"SORTED BY (band_id, bucket) INTO {m['n_buckets']} BUCKETS "
         f"LOCATION '{loc}'"
@@ -410,7 +431,7 @@ def _seen_components(catalog, last: int):
     tail = None
     if catalog.exists("dedup_seen_buckets"):
         tail = (
-            catalog.read("dedup_seen_buckets")
+            catalog.read("dedup_seen_buckets", SEEN_SCHEMA)
             .where(
                 (F.col("batch_id") > through) & (F.col("batch_id") <= last)
             )  # exclude compacted-away history AND torn tails
@@ -573,7 +594,8 @@ def compact_seen_buckets(catalog) -> int:
         )
     if catalog.use_iceberg:
         catalog.overwrite(
-            seen.withColumn("batch_id", F.lit(last)), "dedup_seen_buckets"
+            as_declared(seen.withColumn("batch_id", F.lit(last))),
+            "dedup_seen_buckets",
         )
         return catalog.read("dedup_seen_buckets").count()
     import hashlib
@@ -593,20 +615,14 @@ def compact_seen_buckets(catalog) -> int:
     #    so each task owns exactly one bucket -> ONE file per bucket; a
     #    crash here leaves an orphan table the retry overwrites.
     write_bucketed(
-        seen.repartition(n_buckets, "band_id", "bucket"),
+        as_declared(seen, SEEN_COLUMNS).repartition(n_buckets, "band_id", "bucket"),
         table,
         ["band_id", "bucket"],
         n_buckets,
         sort_cols=["band_id", "bucket"],
         path=os.path.join(os.path.abspath(catalog.base), table),
     )
-    # 2. the commit: one atomic manifest replace.  The column DDL rides in
-    #    the manifest so a fresh session re-attaches the table with the
-    #    schema the files were WRITTEN with, not a hardcoded snapshot.
-    columns = ", ".join(
-        f"{f.name} {f.dataType.simpleString().upper()}"
-        for f in seen.schema.fields
-    )
+    # 2. the commit: one atomic manifest replace
     catalog.write_manifest(
         "seen_compact",
         {
@@ -615,7 +631,6 @@ def compact_seen_buckets(catalog) -> int:
             "gen": gen,
             "through": last,
             "n_buckets": n_buckets,
-            "columns": columns,
         },
     )
     # 3. post-commit cleanup — every dropped target is already invisible to

@@ -75,7 +75,7 @@ def main() -> None:
             "cast(id % {b} as int) as band_id".format(b=BANDS),
             "md5(cast(id as string)) as bucket",
             "cast(1 + id % 7 as long) as n_members",
-            "cast(0 as long) as batch_id",
+            "cast(0 as int) as batch_id",
         )
         # one micro-batch's banded rows: each doc gets exactly ONE row per
         # band, and its bucket is constructed to EXIST in the state with a

@@ -45,6 +45,7 @@ def main() -> None:
     from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
     from mysql_cdc_rs_spark.streaming.stream_pipeline import (
         seen_positions,
+        seen_rows,
         start_curation_stream,
         stream_pages,
     )
@@ -144,12 +145,7 @@ def main() -> None:
     stages["write_survivors"] = round(time.monotonic() - t0, 3)
 
     t0 = time.monotonic()
-    cat.append(
-        banded.groupBy("band_id", "bucket")
-        .agg(F.count("*").alias("n_members"))
-        .withColumn("batch_id", F.lit(last + 1)),
-        "dedup_seen_buckets",
-    )
+    cat.append(seen_rows(banded, last + 1), "dedup_seen_buckets")
     stages["write_seen"] = round(time.monotonic() - t0, 3)
     for df in (quality, banded, drops):
         df.unpersist()

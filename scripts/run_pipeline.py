@@ -58,6 +58,9 @@ def main() -> int:
                 "total": sum(result.route_counts.values()),
                 "elapsed_s": round(result.elapsed_s, 2),
                 "record": result.metrics,
+                "shuffle_partitions": int(
+                    spark.conf.get("spark.sql.shuffle.partitions")
+                ),
             }
         )
     )

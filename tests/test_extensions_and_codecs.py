@@ -200,6 +200,91 @@ def test_decompression_bomb_routes_to_errors(enc, wbits):
     assert (d["event_type"], d["body_len"]) == ("binary", MAX_BODY_BYTES)
 
 
+def _stub_zstandard():
+    """A stand-in ``zstandard`` module over a toy frame: magic, the declared
+    content size (-1: none), the real size, one fill byte and an end mark.
+    The frame decompresses to ``real`` fill bytes; like libzstd, the decoder
+    raises when a finished frame's output differs from its declared size,
+    and reports ``eof`` only once the end mark has arrived."""
+    import struct
+    import types
+
+    mod = types.ModuleType("zstandard")
+
+    class ZstdError(Exception):
+        pass
+
+    def header(data: bytes) -> tuple[int, int]:
+        if len(data) < 20 or data[:4] != b"\x28\xb5\x2f\xfd":
+            raise ZstdError("not a frame")
+        return struct.unpack(">qQ", data[4:20])
+
+    class DecompressObj:
+        def __init__(self):
+            self.buf, self.made, self.eof = b"", False, False
+
+        def decompress(self, data) -> bytes:
+            self.buf += bytes(data)
+            out = b""
+            if not self.made and len(self.buf) >= 21:
+                declared, real = header(self.buf)
+                out, self.made = self.buf[20:21] * real, True
+                if declared >= 0 and declared != real:
+                    raise ZstdError("content size mismatch")
+            self.eof = self.buf[21:22] == b"."
+            return out
+
+    class ZstdDecompressor:
+        def decompressobj(self) -> DecompressObj:
+            return DecompressObj()
+
+    mod.ZstdError, mod.ZstdDecompressor = ZstdError, ZstdDecompressor
+    mod.frame_content_size = lambda data: header(data)[0]
+    return mod
+
+
+def test_zstd_bomb_routes_to_errors(monkeypatch):
+    """zstd output is bounded like gzip's: past http.MAX_BODY_BYTES the page
+    takes the error route as BODY_TOO_LARGE, whether or not the frame
+    declares its size (a declared size past the cap is refused whatever
+    the frame holds); a body exactly at the cap decodes; a corrupt frame,
+    one whose output differs from its declared size and a truncated one
+    with or without a declared size are BAD_GZIP."""
+    import struct
+    import sys
+
+    from mysql_cdc_rs_spark.kernel.http import MAX_BODY_BYTES
+
+    monkeypatch.setitem(sys.modules, "zstandard", _stub_zstandard())
+
+    def page(declared: int, real: int, magic=b"\x28\xb5\x2f\xfd",
+             end=b".") -> dict:
+        body = magic + struct.pack(">qQ", declared, real) + b"a" + end
+        return decode_page(
+            b"HTTP/1.1 200 OK\r\nContent-Type: application/octet-stream\r\n"
+            b"Content-Encoding: zstd\r\n\r\n" + body
+        )
+
+    cap = MAX_BODY_BYTES
+    for declared, real in [(cap + 1, cap + 1), (cap + 1, 1), (-1, cap + 1)]:
+        d = page(declared, real)
+        assert (d["event_type"], d["route"], d["error"], d["body_len"]) == (
+            "error_decode", "errors", "BODY_TOO_LARGE", None
+        )
+    for declared in (cap, -1):
+        d = page(declared, cap)
+        assert (d["event_type"], d["error"], d["body_len"]) == (
+            "binary", None, cap
+        )
+    d = page(-1, 5)
+    assert (d["event_type"], d["error"], d["body_len"]) == ("binary", None, 5)
+    for d in (page(10, 10, magic=b"\x00" * 4), page(10, 5),
+              page(10, 10, end=b""), page(-1, 5, end=b"")):
+        assert (d["event_type"], d["route"], d["error"]) == (
+            "error_decode", "errors", "BAD_GZIP"
+        )
+
+
 # --- relay segments -----------------------------------------------------------
 
 def test_segment_roundtrip_and_rollover(spark):

@@ -145,6 +145,31 @@ def test_minhash_detects_near_dup(spark):
     assert jac[(1, 2)] > 0.5
 
 
+def test_banded_buckets_golden(spark):
+    """The LSH band rows of a fixed corpus, pinned by digest: 400 generated
+    pages -> quality docs -> ``banded_buckets``.  The minhash family, which
+    signature rows form which band, the band order and the bucket string
+    (member order, separator) all feed the digest."""
+    import hashlib
+
+    from mysql_cdc_rs_spark.operators import dedup as DD
+    from mysql_cdc_rs_spark.operators.decode import decode_pages
+    from mysql_cdc_rs_spark.plans.training_pipeline import quality_corpus
+    from mysql_cdc_rs_spark.sources.pages import pages_df
+
+    banded = DD.banded_buckets(
+        quality_corpus(decode_pages(pages_df(spark, 400, seed=42)))
+    )
+    rows = sorted(tuple(r) for r in banded.collect())
+    assert banded.schema.simpleString() == (
+        "struct<doc_id:bigint,band_id:int,bucket:string>"
+    )
+    assert len(rows) == 5376
+    assert hashlib.sha256(repr(rows).encode()).hexdigest() == (
+        "2431a1faf420a77c1b885a9da248d2901be8125f692d0fe0e19144b4cd53e585"
+    )
+
+
 def test_short_docs_yield_zero_shingles_not_crash(spark):
     # Docs with < n words must produce ZERO shingles (like the DuckDB twin's
     # range()) — sequence(1, 0) in Spark is DESCENDING and element_at(col, 0)

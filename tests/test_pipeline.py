@@ -344,10 +344,19 @@ def test_curate_release_unpersists_quality(spark):
     release(pages)
 
 
+def test_session_sizes_shuffle_from_cores(spark):
+    """With no explicit count, a session's shuffle width is its cores."""
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == (
+        spark.sparkContext.defaultParallelism
+    )
+
+
 def test_spark_submit_py_files_runs():
     """The north rule's exact invocation shape: spark-submit --py-files
     engine.zip — the package must ship itself correctly when imported FROM
-    the zip (regression: ship_package crashed re-zipping a zip member)."""
+    the zip (regression: ship_package crashed re-zipping a zip member).
+    A shuffle-partition count given with ``--conf`` beats the session's
+    cores default."""
     import json
     import os
     import shutil
@@ -372,6 +381,7 @@ def test_spark_submit_py_files_runs():
             pytest.skip("spark-submit not on PATH")
         out = subprocess.run(
             [spark_submit, "--master", "local[4]", "--py-files", zpath,
+             "--conf", "spark.sql.shuffle.partitions=3",
              f"{repo}/scripts/run_pipeline.py",
              "--pages", f"{tmp}/pages", "--sink", f"{tmp}/sink",
              "--synthesize", "500"],
@@ -382,6 +392,7 @@ def test_spark_submit_py_files_runs():
         assert res["total"] == 500
         assert sum(res["route_counts"].values()) == 500
         assert res["record"]["rows"] == 500
+        assert res["shuffle_partitions"] == 3
 
 
 def test_curate_resumable_skips_and_recomputes(spark, tmp_path):

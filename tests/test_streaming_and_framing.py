@@ -466,6 +466,46 @@ def test_socket_source_live_pages(spark):
     assert want.exceptAll(got).count() == 0
 
 
+def test_seen_probe_plan_runs_no_job(spark, tmp_path):
+    """Building the streaming probe over a flat ``dedup_seen_buckets``
+    table runs no Spark job: the state is read with its declared schema,
+    so Parquet schema inference (one job per read) never starts.  The
+    state is written by ``seen_rows`` from banded rows whose ``band_id`` is
+    a long: the writer casts to the declaration the reader uses."""
+    from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
+    from mysql_cdc_rs_spark.streaming.stream_pipeline import (
+        seen_positions,
+        seen_rows,
+    )
+
+    cat = SinkCatalog(spark, str(tmp_path / "cur"))
+    state = seen_rows(
+        spark.createDataFrame(
+            [(1, 3, "1_2_3_4"), (2, 3, "1_2_3_4")],
+            "doc_id long, band_id long, bucket string",
+        ),
+        0,
+    )
+    assert state.schema.simpleString() == (
+        "struct<band_id:int,bucket:string,n_members:bigint,batch_id:int>"
+    )
+    cat.append(state, "dedup_seen_buckets")
+    banded = spark.createDataFrame(
+        [(7, 3, "1_2_3_4"), (8, 3, "5_6_7_8")],
+        "doc_id long, band_id int, bucket string",
+    )
+    sc, group = spark.sparkContext, "seen-probe-plan"
+    sc.setJobGroup(group, "build the seen probe")
+    try:
+        probe = seen_positions(banded, cat, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    got = sorted(map(tuple, probe.select("doc_id", "r", "p").collect()))
+    assert got == [(7, 1, 2), (8, 1, 0)]
+
+
 def test_compact_seen_buckets_crash_safe(spark):
     """Crash-safety contract of the bucketed compaction: at NO instant is
     the seen state unreadable or wrong.  A generation lands under a fresh
