@@ -1,582 +1,139 @@
-"""Benchmark harness.
+"""Benchmark front end: one JSON line from perfbench's workloads.
 
-Phases:
-  1. materialize a deterministic pages table to parquet, exactly 32 files
-     (UNTIMED — input prep, not pipeline work);
-  2. headline: full pipeline (scan -> decode -> enrich -> route write ->
-     per-sink counts) at local[$SPARK_GRAFT_CPUS]  => pages/sec;
-  3. operator queries at $SPARK_GRAFT_SF_DIR (default sf0.1), per-query sec
-     (noop-write sink: measures compute, not driver collect serialization);
-  4. scaling evidence (north-rule N -> 4N proxy): paired rounds — the
-     decode->enrich->route-aggregate pipeline at 1 core and 4 cores run
-     seconds apart in ONE session over the same memory-cached input;
-     efficiency = ratio of per-leg minima over 4 rounds (noise is additive,
-     so minima are uncontaminated).  Rationale: this is a shared noisy
-     host (neighbor load 3-7 with zero processes of ours); paired ratios
-     cancel slow-varying load, the <=8-thread footprint avoids contention,
-     and the quietest round is the least contaminated estimate.
-     Full-pipeline (uncached, with sink write) numbers at local[8] and
-     local[32] are also reported for transparency.
+Usage, from any directory::
 
-Prints exactly ONE JSON line at the end (driver contract); also refreshes
-BENCH/BASELINE.md.
+    python bench.py
 
-Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_N,
-SPARK_GRAFT_BENCH_SKIP_SCALING=1.
+1. ``perfbench/run.py --workload all`` runs every perfbench workload (route,
+   stream_curate, curate, queries) at ``local[nproc]``, each in its own
+   process that checks its own outputs; each leaves a record in
+   ``.perfbench/results/``.
+2. N -> 4N scaling: perfbench's ``route`` workload in fresh processes pinned
+   with ``sched_setaffinity`` to N = max(1, nproc // 4) CPUs and to 4N CPUs.
+   perfbench sizes its session from the affinity mask, so the legs run at
+   ``local[N]`` and ``local[4N]`` over the same 12k-page input, whose fixed
+   per-operation cost is part of what is measured.  ROUNDS rounds alternate
+   which leg runs first.  A round's efficiency is
+   ``docs_per_s(4N) / (4 * docs_per_s(N))``; every round is reported with
+   each run's single-thread decode canary and CPU steal, because the host's
+   speed moves between runs.  With fewer than 4 CPUs there is no 4N.
+
+The last line of standard output is one JSON object: ``metric``, ``value``
+(route pages/s at ``local[nproc]``), ``unit``, ``queries`` (median seconds
+per query), ``workloads``, ``scaling`` and ``correct``.  The exit status is
+1 when any run failed its own check.  On 4 vCPU it takes about 10 minutes.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
+import statistics
+import subprocess
 import sys
-import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
-if REPO not in sys.path:
-    sys.path.insert(0, REPO)
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-N_PAGES = int(os.environ.get("SPARK_GRAFT_BENCH_N", "200000"))
-SKIP_SCALING = os.environ.get("SPARK_GRAFT_BENCH_SKIP_SCALING") == "1"
-
-WORK = "/tmp/spark_graft_bench"
-PAGES_PARQUET = f"{WORK}/pages_{N_PAGES}_32f"
-# dedicated larger input for the scaling measurement: fixed job overheads
-# (~2-3s at local[8]: shuffle stage setup, broadcast builds, agg collect)
-# must be amortized or they masquerade as poor scaling
-SCALING_N = int(os.environ.get("SPARK_GRAFT_SCALING_N", "400000"))
-SCALING_PARQUET = f"{WORK}/pages_{SCALING_N}_32f"
-# independent-session legs get a LARGER input still: the local[2] leg must
-# run tens of seconds so neighbor-load spikes average out instead of
-# deciding the round (the r3 number flapped 0.86 -> 0.699 on a rerun)
-SESSIONS_N = int(os.environ.get("SPARK_GRAFT_SESSIONS_N", "800000"))
-SESSIONS_PARQUET = f"{WORK}/pages_{SESSIONS_N}_32f"
-
-BENCH_QUERIES = [
-    "q1_pricing_summary",
-    "q3_top_revenue_orders",
-    "q5_nation_revenue",
-    "j1_broadcast_part_join",
-    "a12_event_stats_rollup",
-    "w13_context_chain",
-    "w2_sessionize",
-    "d1_update_diff",
-    "dedup_lsh_pairs",
-    "dedup_simhash",
-    "text_doc_stats",
-    "ann_brute_force_topk",
-    "ann_lsh_topk",
-    "pipeline_event_type_counts",
-    "pipeline_text_md5",
-    "p3_row_decode",
-    "mm_decode_stats",
-    "ivf_kmeans_train",
-    "emb_neardup_pairs",
-    "training_curate_survivors",
-]
+RESULTS = os.path.join(REPO, ".perfbench", "results")
+SEED = 1
+ARGS = ["--seed", str(SEED), "--seconds", "10", "--trace", "0"]
+ROUNDS = 3
 
 
-def build(master: str, extra: dict | None = None):
-    from mysql_cdc_rs_spark.session import build_session
-
-    conf = {"spark.ui.showConsoleProgress": "false"}
-    conf.update(extra or {})
-    # build_session ships the package zip to executors (cwd-independent)
-    s = build_session("bench", master=master, extra_conf=conf)
-    s.sparkContext.setLogLevel("ERROR")
-    return s
-
-
-def materialize_pages(spark) -> None:
-    from mysql_cdc_rs_spark.sources.pages import pages_df
-
-    sizes = [(N_PAGES, PAGES_PARQUET), (SCALING_N, SCALING_PARQUET)]
-    if not SKIP_SCALING:
-        sizes.append((SESSIONS_N, SESSIONS_PARQUET))
-    for n, path in sizes:
-        if not os.path.isdir(path):
-            pages_df(spark, n, seed=42, num_partitions=32).write.mode(
-                "overwrite"
-            ).parquet(path)
-
-
-def full_pipeline_job(spark) -> tuple[float, int]:
-    """Timed: scan -> decode -> enrich -> route write -> per-sink counts."""
-    from mysql_cdc_rs_spark.operators.decode import decode_pages
-    from mysql_cdc_rs_spark.operators.enrich import enrich
-    from mysql_cdc_rs_spark.operators.route import write_routes
-    from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
-
-    sink = f"{WORK}/sink"
-    shutil.rmtree(sink, ignore_errors=True)
-    cat = SinkCatalog(spark, sink)
-    pages = spark.read.parquet(PAGES_PARQUET)
-    t0 = time.monotonic()
-    counts = write_routes(enrich(decode_pages(pages)), cat)
-    return time.monotonic() - t0, sum(counts.values())
-
-
-def compute_pipeline_job(spark, pages) -> tuple[float, int]:
-    """Timed: decode -> enrich -> routed per-sink aggregate (cached input)."""
-    from pyspark.sql import functions as F
-
-    from mysql_cdc_rs_spark.operators.decode import decode_pages
-    from mysql_cdc_rs_spark.operators.enrich import enrich
-
-    t0 = time.monotonic()
-    rows = enrich(decode_pages(pages)).groupBy("route").agg(
-        F.count("*").alias("n"), F.sum("body_len").alias("total_body_bytes")
-    ).collect()
-    return time.monotonic() - t0, sum(r["n"] for r in rows)
-
-
-def main() -> None:
-    os.makedirs(WORK, exist_ok=True)
-    os.makedirs(f"{REPO}/BENCH", exist_ok=True)
-    result: dict = {"sf": SF_DIR, "n_pages": N_PAGES, "cpus": CPUS}
-    # shared-host context: neighbor load at 2-6 costs 15-25% on the
-    # absolute numbers (headline/kernel); the ratio protocols are designed
-    # to survive it.  Recording it makes run-to-run deltas interpretable.
-    result["host_load_at_start"] = [round(x, 2) for x in os.getloadavg()]
-    # single-thread canary: pure-Python decode_batch over 30k generator
-    # records, no Spark.  Two post-barrier retries proved start-load
-    # screening insufficient (windows that started at load1 0.04-0.2
-    # contaminated mid-run); this 1-second measure is an absolute
-    # same-code yardstick for the window — the committed quiet window
-    # reads ~50k pages/s, degraded windows ~34k.  Compare it across runs
-    # before comparing any Spark-side number.
-    from mysql_cdc_rs_spark.kernel.batchdecode import decode_batch
-    from mysql_cdc_rs_spark.sources.pages import make_record
-
-    _recs = [make_record(42, i)[2] for i in range(30_000)]
-    _t0 = time.monotonic()
-    decode_batch(_recs)
-    result["canary_single_thread_pages_per_sec"] = round(
-        30_000 / (time.monotonic() - _t0), 1
+def perfbench(workload: str, cpus: list[int] | None = None) -> dict[str, dict]:
+    """One perfbench run (pinned to ``cpus`` when given); returns the record
+    of each workload it ran, by name."""
+    pin = None if cpus is None else (lambda: os.sched_setaffinity(0, cpus))
+    res = subprocess.run(
+        [sys.executable, os.path.join(REPO, "perfbench", "run.py"),
+         "--workload", workload, *ARGS],
+        cwd=REPO, stdout=subprocess.PIPE, text=True, preexec_fn=pin,
     )
-    del _recs
+    lines = res.stdout.strip().splitlines()
+    for line in lines[:-1]:
+        if line.startswith("[perfbench]"):
+            print(line, flush=True)
+    if res.returncode != 0 or not lines:
+        sys.exit(f"bench: perfbench --workload {workload} exited {res.returncode}")
+    # a run that exits 0 has written the record of every workload it ran
+    names = json.loads(lines[-1]).get("workloads", [workload])
+    records = {}
+    for name in names:
+        with open(os.path.join(RESULTS, f"{name}-seed{SEED}-trace0.json")) as fh:
+            records[name] = json.load(fh)
+    return records
 
-    # --- headline: full pipeline at THREE parallelism levels ------------------
-    # Each pandas-UDF task needs a JVM thread AND a python worker, so
-    # local[16] saturates exactly this 32-thread host while local[32]
-    # oversubscribes it 2x (r2 lesson: its committed local[32] headline
-    # was inverted by its own local[8] leg; r5 probe: 16 > 12 > 24 = 8).
-    # The headline is the BEST level; all are published.
-    full: dict = {}
-    levels = [n for n in (8, 16, CPUS) if n <= CPUS]
-    for n in dict.fromkeys(levels):
-        s = build(f"local[{n}]")
-        materialize_pages(s)
-        full_pipeline_job(s)
-        full_pipeline_job(s)  # warm: codegen JIT + python workers + page cache
-        best = min(full_pipeline_job(s)[0] for _ in range(3))
-        full[f"local[{n}]"] = {
-            "sec": round(best, 3),
-            "pages_per_sec": round(N_PAGES / best, 1),
-        }
-        s.stop()
-    best_level = max(full, key=lambda k: full[k]["pages_per_sec"])
-    result["value"] = full[best_level]["pages_per_sec"]
-    result["metric"] = (
-        f"pages decoded+routed per sec, full pipeline (best level: {best_level};"
-        " all levels disclosed in full_pipeline_levels)"
-    )
-    result["unit"] = "pages/sec"
-    result["pipeline_sec"] = full[best_level]["sec"]
-    result["full_pipeline_levels"] = full
 
-    # --- operator queries at local[CPUS]: warm + min-of-3 ---------------------
-    spark = build(f"local[{CPUS}]")
-    from mysql_cdc_rs_spark.queries import QUERIES
-
-    qsec: dict[str, float] = {}
-    qload: dict[str, float] = {}
-    for name in BENCH_QUERIES:
-        df = QUERIES[name](spark, SF_DIR)
-        df.write.format("noop").mode("overwrite").save()  # warm
-        times = []
-        for _ in range(3):
-            t0 = time.monotonic()
-            df.write.format("noop").mode("overwrite").save()
-            times.append(time.monotonic() - t0)
-        qsec[name] = round(min(times), 3)
-        # per-query 1-min host load at measurement time: sub-second queries
-        # (the TPC-H trio drifted +7-14% between r3/r4 driver runs on
-        # untouched code) are the most load-sensitive — this field makes
-        # future drift attributable to the box, not the plan
-        qload[name] = round(os.getloadavg()[0], 2)
-    result["queries"] = qsec
-    result["queries_host_load1"] = qload
-
-    # --- curation pipeline throughput (the closest proxy of the 100 TB job) --
-    from mysql_cdc_rs_spark.plans.training_pipeline import curate, release
-
-    def _curate_run() -> tuple[float, int]:
-        pages = spark.read.parquet(PAGES_PARQUET)
-        t0 = time.monotonic()
-        surv = curate(pages)
-        n_surv = surv.count()
-        dt = time.monotonic() - t0
-        release(surv)  # drop the cached quality plan between runs
-        return dt, n_surv
-
-    _curate_run()  # warm
-    runs = [_curate_run() for _ in range(2)]
-    cdt, surv = min(runs, key=lambda r: r[0])
-    result["curate"] = {
-        "docs_per_sec": round(N_PAGES / cdt, 1),
-        "survivors": surv,
-        "sec": round(cdt, 3),
-        "input_docs": N_PAGES,
+def _leg(record: dict) -> dict:
+    return {
+        "cpus": record["nproc"],
+        "docs_per_s": record["e2e"]["docs_per_s"],
+        "decode_us_per_page": record["micro"]["kernel.decode_us_per_page"],
+        "steal_s": record["steal_s"],
     }
 
-    # --- resumable curation: the 100 TB resumability claim, with numbers ----
-    # cold = both checkpointed stages computed + written; resume-after-kill
-    # = the survivors manifest is deleted (the job "died" mid-stage-2), so
-    # the rerun SKIPS the decode+quality stage (the expensive one, reading
-    # its parquet back) and recomputes only the LSH dedup + anti-join;
-    # warm resume = nothing lost, both stages skip (lineage checks only).
-    from mysql_cdc_rs_spark.plans.training_pipeline import curate_resumable
-    from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
 
-    ckpt = f"{WORK}/curate_ckpt"
-    shutil.rmtree(ckpt, ignore_errors=True)
-    rcat = SinkCatalog(spark, ckpt)
-    pages_r = spark.read.parquet(PAGES_PARQUET)
-
-    def _resumable_run() -> tuple[float, int]:
-        t0 = time.monotonic()
-        n = curate_resumable(pages_r, rcat).count()
-        return time.monotonic() - t0, n
-
-    cold_sec, cold_n = _resumable_run()
-    os.remove(os.path.join(ckpt, "_manifest_curate_survivors.json"))
-    kill_sec, kill_n = _resumable_run()
-    warm_sec, warm_n = _resumable_run()
-    assert cold_n == kill_n == warm_n, "resume changed the survivor set"
-    result["curate_resume"] = {
-        "input_docs": N_PAGES,
-        "survivors": cold_n,
-        "cold_sec": round(cold_sec, 3),
-        "resume_after_kill_sec": round(kill_sec, 3),
-        "warm_resume_sec": round(warm_sec, 3),
-        "resume_speedup": round(cold_sec / kill_sec, 2),
+def summarize(records: dict[str, dict], rounds: list[dict], nproc: int) -> dict:
+    """The JSON line.  ``records``: workload name -> perfbench record of the
+    ``all`` run; ``rounds``: one ``{"first": "N" or "4N", "N": record,
+    "4N": record}`` per scaling round (none when ``nproc < 4``)."""
+    out = {
+        "metric": f"route pages decoded+routed per s at local[{nproc}] "
+                  f"(perfbench route, seed {SEED})",
+        "value": records["route"]["e2e"]["docs_per_s"],
+        "unit": "pages/s",
+        "queries": records["queries"]["per_query_s"],
+        "workloads": {
+            name: {
+                **{k: v for k, v in r["e2e"].items() if not isinstance(v, list)},
+                **r["micro"],
+                "steal_s": r["steal_s"],
+                "attempted": r["attempted"],
+                "failed": r["failed"],
+            }
+            for name, r in records.items()
+        },
     }
-    spark.stop()
-
-    # --- scaling evidence ----------------------------------------------------
-    if not SKIP_SCALING:
-        # Paired-ratio protocol — see module docstring phase 4.
-        from pyspark.sql import functions as F
-
-        from mysql_cdc_rs_spark.operators.decode import decode_pages
-        from mysql_cdc_rs_spark.operators.enrich import enrich
-
-        s = build("local[8]")
-        pages = s.read.parquet(SCALING_PARQUET).repartition(16).cache()
-        pages.count()
-        total_mb = (
-            pages.agg(F.sum(F.length("html")).alias("b")).first()["b"]
-            / 1_000_000.0
-        )
-        leg_small = pages.coalesce(1)
-        leg_big = pages.coalesce(4)
-
-        def _leg(df) -> float:
-            t0 = time.monotonic()
-            enrich(decode_pages(df)).groupBy("route").agg(
-                F.count("*").alias("n")
-            ).collect()
-            return time.monotonic() - t0
-
-        _leg(leg_big)
-        _leg(leg_small)  # warm both legs
-        # SYMMETRIC draw counts (round-4 advisory): min-of-2 per leg per
-        # round on BOTH legs.  The earlier asymmetry (min-of-2 only on the
-        # cheap 4-core leg) gave t4 twice the quiet-window draws of t1,
-        # a finite-sample bias that flatters efficiency under additive
-        # noise; equal draws remove it at the cost of ~1 min of bench time.
-        rounds = []
-        for _ in range(4):
-            t1 = min(_leg(leg_small), _leg(leg_small))
-            t4 = min(_leg(leg_big), _leg(leg_big))
-            rounds.append(
-                {
-                    "1core_sec": round(t1, 3),
-                    "4core_sec": round(t4, 3),
-                    "efficiency": round((t1 / t4) / 4.0, 3),
-                }
-            )
-        s.stop()
-        # ratio-of-minima estimator (same logic as the independent-session
-        # protocol): neighbor load is strictly additive, so each leg's
-        # minimum over all rounds is its least-contaminated estimate of the
-        # uncontaminated time, and the ratio of minima estimates the
-        # noise-free efficiency.  Per-round ratios stay disclosed.
-        t1_min = min(r["1core_sec"] for r in rounds)
-        t4_min = min(r["4core_sec"] for r in rounds)
-        scaling = {
-            "protocol": f"paired rounds, {SCALING_N} memory-cached pages, "
-            "1 core vs 4 cores (coalesce) in one session; efficiency = "
-            "ratio of per-leg minima over 4 rounds (noise is additive); "
-            "per-round ratios disclosed",
-            "rounds": rounds,
-            "N_cores=1": {
-                "sec": t1_min,
-                "pages_per_sec": round(SCALING_N / t1_min, 1),
-            },
-            "4N_cores=4": {
-                "sec": t4_min,
-                "pages_per_sec": round(SCALING_N / t4_min, 1),
-            },
-            "efficiency_N_to_4N": round((t1_min / t4_min) / 4.0, 3),
+    if nproc < 4:
+        out["scaling"] = None
+        out["scaling_reason"] = f"nproc = {nproc}: N -> 4N needs at least 4 CPUs"
+    else:
+        rows = []
+        for r in rounds:
+            n, big = _leg(r["N"]), _leg(r["4N"])
+            eff = big["docs_per_s"] / (4 * n["docs_per_s"])
+            rows.append({"first": r["first"], "N": n, "4N": big, "efficiency": eff})
+        effs = [row["efficiency"] for row in rows]
+        out["scaling"] = {
+            "protocol": "perfbench route, one fresh process per leg pinned to "
+                        "N and 4N CPUs, leg order alternating by round; "
+                        "efficiency = docs_per_s(4N) / (4 * docs_per_s(N))",
+            "rounds": rows,
+            "median": statistics.median(effs),
+            "min": min(effs),
+            "max": max(effs),
         }
-        # 100 TB cost model: the decode kernel's per-core unit economics
-        # (pages AND bytes, from the quietest 1-core leg over cached input)
-        t1 = t1_min
-        result["kernel_per_core"] = {
-            "pages_per_sec_per_core": round(SCALING_N / t1, 1),
-            "mb_per_sec_per_core": round(total_mb / t1, 2),
-            "input_mb": round(total_mb, 1),
-            "basis": "quietest 1-core leg, decode+enrich+route-aggregate "
-            "over memory-cached pages",
-        }
-
-        # independent-session N -> 4N (the brief's literal shape): the SAME
-        # job (scan -> decode -> enrich -> route aggregate, uncached parquet)
-        # in separate sessions at local[2] and local[8].  2 and 8 threads
-        # (x2 for python workers) stay clear of neighbor load on this
-        # shared 32-core host, unlike 8 vs 32 which oversubscribes.
-        #
-        # Noise discipline (r3's number flapped 0.86 -> 0.699 between runs):
-        # 1. the legs run over SESSIONS_N pages so the slow leg takes tens
-        #    of seconds — load spikes average out instead of deciding a
-        #    round;
-        # 2. legs alternate 2,8 / 8,2 across 4 rounds to decorrelate drift;
-        # 3. the estimator is min-over-ALL-rounds per leg: neighbor load is
-        #    strictly additive, so each leg's minimum is its best estimate
-        #    of the uncontaminated time and the ratio of minima estimates
-        #    the noise-free efficiency.  Per-round ratios are published.
-        from mysql_cdc_rs_spark.operators.decode import decode_pages as _dp
-        from mysql_cdc_rs_spark.operators.enrich import enrich as _en
-
-        def _session_leg(n: int) -> float:
-            s = build(f"local[{n}]")
-            pages = s.read.parquet(SESSIONS_PARQUET)
-
-            def _run() -> float:
-                t0 = time.monotonic()
-                _en(_dp(pages)).groupBy("route").agg(
-                    F.count("*").alias("n")
-                ).collect()
-                return time.monotonic() - t0
-
-            _run()  # warm (codegen + python workers + page cache)
-            best_t = min(_run() for _ in range(2))
-            s.stop()
-            return best_t
-
-        srounds = []
-        for i in range(4):
-            order = (2, 8) if i % 2 == 0 else (8, 2)
-            legs = {n: _session_leg(n) for n in order}
-            srounds.append({
-                "local2_sec": round(legs[2], 3),
-                "local8_sec": round(legs[8], 3),
-                "efficiency": round((legs[2] / legs[8]) / 4.0, 3),
-            })
-        t2_min = min(r["local2_sec"] for r in srounds)
-        t8_min = min(r["local8_sec"] for r in srounds)
-        sess = {
-            "protocol": f"{SESSIONS_N} pages, separate sessions, legs "
-            "alternating across 4 rounds; efficiency = ratio of per-leg "
-            "minima over all rounds (noise is additive, so minima are the "
-            "uncontaminated estimates); per-round ratios disclosed",
-            "rounds": srounds,
-            "local[2]": {
-                "sec": t2_min,
-                "pages_per_sec": round(SESSIONS_N / t2_min, 1),
-            },
-            "local[8]": {
-                "sec": t8_min,
-                "pages_per_sec": round(SESSIONS_N / t8_min, 1),
-            },
-            "efficiency_N_to_4N": round((t2_min / t8_min) / 4.0, 3),
-        }
-        result["scaling_sessions"] = sess
-
-        # secondary: full pipeline (uncached, incl. sink write) 8 vs 32 —
-        # reuses the headline phase's measured levels (min-of-3 each)
-        result["scaling"] = scaling
-        if "local[8]" in full and "local[32]" in full:
-            f8 = full["local[8]"]["pages_per_sec"]
-            f32 = full["local[32]"]["pages_per_sec"]
-            result["scaling_full_pipeline"] = dict(
-                full, efficiency_8_to_32=round((f32 / f8) / 4.0, 3)
-            )
-
-    result["host_load_at_end"] = [round(x, 2) for x in os.getloadavg()]
-    _write_bench_md(result)
-    print(json.dumps(result))
+    runs = [*records.values(), *(r[leg] for r in rounds for leg in ("N", "4N"))]
+    out["correct"] = all(r["failed"] == 0 for r in runs)
+    return out
 
 
-def _write_bench_md(r: dict) -> None:
-    lines = [
-        "# BENCH — measured numbers (latest local run)",
-        "",
-        f"- host 1/5/15-min load at start: {r.get('host_load_at_start', '?')}"
-        f", at end: {r.get('host_load_at_end', '?')} (shared box; neighbor"
-        " load 2-6 costs 15-25% on absolute numbers — the ratio protocols"
-        " below are built to survive it)",
-        f"- input: {r['n_pages']} deterministic synthetic pages (seed=42), 32"
-        " parquet files; operator queries at `" + r["sf"] + "`",
-        f"- headline: **{r['value']} pages decoded+routed/sec** full pipeline "
-        f"(scan -> vectorized decode UDF -> broadcast enrich -> partitioned "
-        f"fan-out write -> per-sink counts), best parallelism level, "
-        f"min-of-3 after warm ({r['pipeline_sec']}s)",
-        "- levels measured: "
-        + ", ".join(
-            f"{k} = {v['pages_per_sec']} pages/s"
-            for k, v in r.get("full_pipeline_levels", {}).items()
-        )
-        + " — local[32] oversubscribes this shared host (each pandas-UDF "
-        "task needs a JVM thread AND a python worker), so the best level "
-        "carries the headline and both are disclosed",
-        "",
-        "## Scaling (north-rule N -> 4N executors, single-host proxy)",
-        "",
-    ]
-    if "scaling" in r:
-        s = r["scaling"]
-        lines += [
-            f"Protocol: {s['protocol']}.",
-            "",
-            "| level | sec | pages/sec |",
-            "|---|---|---|",
-            f"| N = 1 core | {s['N_cores=1']['sec']} | "
-            f"{s['N_cores=1']['pages_per_sec']} |",
-            f"| 4N = 4 cores | {s['4N_cores=4']['sec']} | "
-            f"{s['4N_cores=4']['pages_per_sec']} |",
-            "",
-            f"**Scaling efficiency (N -> 4N) = {s['efficiency_N_to_4N']}** "
-            "(target >= 0.8); per-round: "
-            + ", ".join(str(x["efficiency"]) for x in s["rounds"]) + ".",
-            "",
-            "Why paired rounds: this is a SHARED 32-core host (load average"
-            " 3-7 from neighbors with zero processes of ours); independent"
-            " sessions at two parallelism levels measure 0.59-0.98 purely"
-            " from noise.  Running both legs seconds apart in one session"
-            " cancels slow-varying load in the ratio, and the <=8-thread"
-            " footprint stays clear of neighbor load.  Each pandas-UDF task"
-            " needs a JVM thread AND a Python worker, so local[k] occupies"
-            " ~2k hardware threads — a real 4x executor fleet scales memory"
-            " bandwidth and scan CPU with the fleet, which one box cannot.",
-            "",
-        ]
-        ss = r.get("scaling_sessions")
-        if ss:
-            lines += [
-                "## Independent-session N -> 4N (the brief's literal shape)",
-                "",
-                "Same job (scan -> decode -> enrich -> route aggregate, "
-                "uncached parquet) in SEPARATE sessions. "
-                f"Protocol: {ss.get('protocol', '')}",
-                "",
-                "| level | sec (min over rounds) | pages/sec |",
-                "|---|---|---|",
-                f"| N = local[2] | {ss['local[2]']['sec']} | "
-                f"{ss['local[2]']['pages_per_sec']} |",
-                f"| 4N = local[8] | {ss['local[8]']['sec']} | "
-                f"{ss['local[8]']['pages_per_sec']} |",
-                "",
-                f"**Independent-session efficiency (N -> 4N) = "
-                f"{ss['efficiency_N_to_4N']}** (ratio of per-leg minima "
-                f"over {len(ss.get('rounds', []))} alternating rounds; "
-                "per-round ratios: "
-                + ", ".join(str(x["efficiency"]) for x in ss.get("rounds", []))
-                + ") — 2/8 threads (x2 with python workers) stay clear of "
-                "neighbor load, unlike 8 vs 32 which oversubscribes this "
-                "shared 32-core host.",
-                "",
-            ]
-        kc = r.get("kernel_per_core")
-        if kc:
-            lines += [
-                "## Decode-kernel unit economics (100 TB cost model)",
-                "",
-                f"- **{kc['pages_per_sec_per_core']} pages/s/core**, "
-                f"**{kc['mb_per_sec_per_core']} MB/s/core** raw html bytes "
-                f"({kc['input_mb']} MB input; {kc['basis']})",
-                "- at 100 TB of raw pages, total core-hours ≈ "
-                f"{round(100e6 / max(kc['mb_per_sec_per_core'], 0.01) / 3600, 0)}"
-                " — divide by fleet core count for wall-clock",
-                "",
-            ]
-        f = r.get("scaling_full_pipeline", {})
-        if f:
-            lines += [
-                "| full pipeline (uncached, incl. sink write) | sec | pages/sec |",
-                "|---|---|---|",
-                f"| local[8] | {f['local[8]']['sec']} | {f['local[8]']['pages_per_sec']} |",
-                f"| local[32] | {f['local[32]']['sec']} | {f['local[32]']['pages_per_sec']} |",
-                "",
-                f"full-pipeline efficiency (8 -> 32) = {f['efficiency_8_to_32']}"
-                " — dominated by single-disk sink write + host oversubscription"
-                " (2k threads per local[k]) + neighbor load.",
-                "",
-            ]
-    cu = r.get("curate")
-    if cu:
-        lines += [
-            "## Composed curation pipeline (decode -> quality -> LSH dedup)",
-            "",
-            f"- **{cu['docs_per_sec']} docs/sec** over {cu['input_docs']} pages "
-            f"({cu['sec']}s, min-of-2 after warm), {cu['survivors']} survivors "
-            f"— the closest single number to the 100 TB training-data job",
-            "",
-        ]
-    cr = r.get("curate_resume")
-    if cr:
-        lines += [
-            "## Checkpoint-resumable curation (resume-after-kill vs cold)",
-            "",
-            "| run | sec | what happened |",
-            "|---|---|---|",
-            f"| cold | {cr['cold_sec']} | both stages computed + written |",
-            f"| resume after mid-stage-2 kill | {cr['resume_after_kill_sec']}"
-            " | decode+quality SKIPPED (read back), dedup recomputed |",
-            f"| warm resume | {cr['warm_resume_sec']} | both stages skipped "
-            "(lineage checks only) |",
-            "",
-            f"- resume-after-kill is **{cr['resume_speedup']}x** faster than "
-            f"cold over {cr['input_docs']} pages; identical "
-            f"{cr['survivors']}-doc survivor set on every path — at 100 TB "
-            "a mid-run failure costs the unfinished stage, not the corpus "
-            "decode",
-            "",
-        ]
-    lines += [
-        "## Operator queries (noop sink, min-of-3 after warm, sec)",
-        "",
-        "host load1 at each query's measurement is recorded so sub-second "
-        "drift (the TPC-H trio moved +7-14% between driver runs on "
-        "untouched code) is attributable to the box, not the plan.",
-        "", "| query | sec | load1 at measure |", "|---|---|---|",
-    ]
-    qload = r.get("queries_host_load1", {})
-    for k, v in sorted(r["queries"].items()):
-        lines.append(f"| {k} | {v} | {qload.get(k, '—')} |")
-    lines.append("")
-    # only the STANDARD protocol (200k corpus) may rewrite the committed
-    # baseline record: smoke runs are scheduling-overhead-dominated and a
-    # one-off larger corpus is equally incomparable to the recorded runs
-    if N_PAGES == 200_000:
-        with open(f"{REPO}/BENCH/BASELINE.md", "w") as f:
-            f.write("\n".join(lines))
+def main() -> int:
+    cpus = sorted(os.sched_getaffinity(0))
+    records = perfbench("all")
+    rounds = []
+    if len(cpus) >= 4:
+        n = max(1, len(cpus) // 4)
+        for i in range(ROUNDS):
+            order = ("N", "4N") if i % 2 == 0 else ("4N", "N")
+            legs = {
+                leg: perfbench("route", cpus[: n if leg == "N" else 4 * n])["route"]
+                for leg in order
+            }
+            rounds.append({"first": order[0], **legs})
+    line = summarize(records, rounds, len(cpus))
+    print(json.dumps(line), flush=True)
+    return 0 if line["correct"] else 1
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -1,10 +1,10 @@
 """Pure-Column decoders — everything Catalyst can whole-stage-codegen.
 
 These are the JVM-side (zero-Python) equivalents of the kernel's fixed-width
-scalar decoders (SURVEY §2.4 C6-C11): bit-packed MySQL date/time/datetime
-words decoded with shifts and masks as Column expressions.  Used both by the
-pipeline and by driver-contract queries (each has a DuckDB oracle with the
-same arithmetic).
+scalar decoders (SURVEY §2.4 C6-C9): packed MySQL year/date/time/datetime
+words decoded with shifts, masks and integer division as Column
+expressions.  Used both by the pipeline and by driver-contract queries (each
+has a DuckDB oracle with the same arithmetic).
 """
 
 from __future__ import annotations
@@ -34,14 +34,6 @@ def mysql_time_seconds(col: Column) -> Column:
     return (h * 3600 + m * 60 + s).alias("seconds")
 
 
-def mysql_time2_parts(col: Column) -> tuple[Column, Column, Column]:
-    """TIME2 24-bit BE word -> (hour, minute, second) via shifts (C8)."""
-    hour = F.shiftright(col, 12).bitwiseAND(F.lit(0x3FF))
-    minute = F.shiftright(col, 6).bitwiseAND(F.lit(0x3F))
-    second = col.bitwiseAND(F.lit(0x3F))
-    return hour, minute, second
-
-
 def mysql_datetime(col: Column) -> Column:
     """Legacy DATETIME u64 decimal-packed YYYYMMDDHHMMSS -> timestamp (C9)."""
     d = (col / F.lit(1000000)).cast("long")
@@ -54,31 +46,6 @@ def mysql_datetime(col: Column) -> Column:
         ((t / 100) % 100).cast("int"),
         (t % 100).cast("decimal(8,6)"),
     )
-
-
-def mysql_datetime2(col: Column) -> Column:
-    """DATETIME2 40-bit word (sign cleared) -> timestamp via bit fields (C9)."""
-    v = col.bitwiseAND(F.lit((1 << 39) - 1))
-    ym = F.shiftright(v, 22).bitwiseAND(F.lit(0x1FFFF))
-    return F.make_timestamp(
-        (ym / 13).cast("int"),
-        (ym % 13).cast("int"),
-        F.shiftright(v, 17).bitwiseAND(F.lit(0x1F)).cast("int"),
-        F.shiftright(v, 12).bitwiseAND(F.lit(0x1F)).cast("int"),
-        F.shiftright(v, 6).bitwiseAND(F.lit(0x3F)).cast("int"),
-        v.bitwiseAND(F.lit(0x3F)).cast("decimal(8,6)"),
-    )
-
-
-def mysql_timestamp(col: Column) -> Column:
-    """Epoch-seconds u32 -> TimestampType (C10)."""
-    return F.timestamp_seconds(col)
-
-
-def fractional_micros(col: Column, fsp: int) -> Column:
-    """Stored fractional value -> microseconds: v * 100^(3-bytes) (C11)."""
-    nbytes = (fsp + 1) // 2
-    return (col * F.lit(100 ** (3 - nbytes))).cast("long")
 
 
 def tld_of_url(url: Column) -> Column:
@@ -101,18 +68,6 @@ def url_bucket(url: Column) -> Column:
     """Deterministic url-hash bucket in [0, URL_BUCKETS): the decoded
     table's ``url_bucket`` column and every checkpoint's lineage key."""
     return F.pmod(F.xxhash64(url), F.lit(URL_BUCKETS)).cast("int")
-
-
-def salted_key(key: Column, unique: Column, salt_buckets: int) -> Column:
-    """Skew salt: composite of the hot key and a deterministic per-row bucket.
-
-    ``unique`` must be a (mostly) row-unique column such as url — salting
-    must be deterministic so a resumed stage re-produces the same partitions
-    (checkpoint-resume contract, SURVEY §4 custom-work item 3).
-    """
-    return F.concat_ws(
-        "#", key, F.pmod(F.xxhash64(unique), F.lit(salt_buckets)).cast("string")
-    )
 
 
 def classify_sql_col(sql: Column) -> Column:

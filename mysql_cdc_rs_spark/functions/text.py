@@ -20,12 +20,6 @@ def portable_hash60(col: Column, seed: int | None = None) -> Column:
     return F.conv(F.substring(F.md5(x), 1, 15), 16, 10).cast("long")
 
 
-def portable_hash60_sql(expr: str, seed: int | None = None) -> str:
-    """The DuckDB-side twin of portable_hash60 (same bytes hashed)."""
-    x = f"concat('{seed}:', {expr})" if seed is not None else expr
-    return f"(('0x' || substr(md5({x}), 1, 15))::BIGINT)"
-
-
 MERSENNE_P = (1 << 31) - 1  # 2^31-1, the universal-hash modulus
 
 
@@ -53,9 +47,6 @@ def words_of(col: Column) -> Column:
     return F.split(norm_ws(col), " ")
 
 
-WORDS_SQL = "string_split(trim(regexp_replace({t}, '\\s+', ' ', 'g')), ' ')"
-
-
 def word_shingles(words_col: str, n: int = 3) -> Column:
     """Word n-gram shingles from an array<string> column (by NAME).
 
@@ -72,13 +63,4 @@ def word_shingles(words_col: str, n: int = 3) -> Column:
         f"transform(sequence(1, size({words_col}) - {n - 1}), "
         f"i -> concat_ws(' ', {elems})) "
         f"ELSE CAST(array() AS array<string>) END"
-    )
-
-
-def word_shingles_sql(words_expr: str, n: int = 3) -> str:
-    """DuckDB twin of word_shingles (lists are 1-based in DuckDB)."""
-    elems = " || ' ' || ".join(f"{words_expr}[i + {j}]" for j in range(n))
-    return (
-        f"list_transform(range(1, greatest(len({words_expr}) - {n - 1}, 0) + 1), "
-        f"i -> {elems})"
     )

@@ -61,15 +61,6 @@ def read_len_enc_string(buf: bytes, pos: int = 0) -> tuple[bytes | None, int]:
     return buf[pos : pos + n], pos + n
 
 
-def read_null_terminated(buf: bytes, pos: int = 0) -> tuple[bytes, int]:
-    end = buf.index(0, pos)
-    return buf[pos:end], end + 1
-
-
-def read_fixed_string(buf: bytes, pos: int, n: int) -> tuple[bytes, int]:
-    return buf[pos : pos + n], pos + n
-
-
 def parse_string(buf: bytes, pos: int, max_len_meta: int) -> tuple[bytes, int]:
     """VARCHAR cell: 1-byte length prefix when max length < 256, else 2-byte LE."""
     if max_len_meta < 256:

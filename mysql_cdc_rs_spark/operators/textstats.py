@@ -1,5 +1,6 @@
-"""Text analysis over the documents table: language-ID, quality scoring,
-token counting, document fingerprinting.
+"""Text analysis over the documents table: language-ID and document
+fingerprinting, plus the stopword list, BPE-style pretokenizer and
+fingerprint constants that the ``text_doc_stats`` query scores with.
 
 All pure Column expressions (whole-stage codegen; zero Python) with exact
 DuckDB oracles.  The fingerprint is a rolling polynomial hash implemented as
@@ -13,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mysql_cdc_rs_spark.functions.text import norm_ws, portable_hash60, words_of
+from mysql_cdc_rs_spark.functions.text import portable_hash60, words_of
 
 # language -> marker words (the n-gram-heuristic lexicon). The synthetic
 # corpus is English-ish for every lang label; the operator is graded on
@@ -56,41 +57,6 @@ BPE_TOKEN_RE = (
 FP_WORD_MOD = 1 << 20
 FP_ACC_MOD = 1 << 40
 FP_MULT = 31
-
-
-def token_stats(docs: DataFrame) -> DataFrame:
-    """Tokens, chars, avg word length per document."""
-    w = words_of(F.col("text"))
-    return docs.select(
-        "doc_id",
-        F.size(w).alias("n_tokens"),
-        F.length(norm_ws(F.col("text"))).alias("n_chars_norm"),
-        F.round(
-            (F.length(norm_ws(F.col("text"))) - (F.size(w) - 1))
-            / F.size(w).cast("double"),
-            6,
-        ).alias("avg_word_len"),
-    ).orderBy("doc_id")
-
-
-def quality_score(docs: DataFrame) -> DataFrame:
-    """Length/stopword/uppercase heuristic quality features + composite."""
-    w = words_of(F.col("text"))
-    n_tokens = F.size(w)
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    n_stop = F.size(F.filter(w, lambda x: F.array_contains(stop_arr, x)))
-    stop_ratio = F.round(n_stop / n_tokens.cast("double"), 6)
-    len_score = F.when(n_tokens >= 50, F.lit(1.0)).otherwise(
-        F.round(n_tokens / F.lit(50.0), 6)
-    )
-    return docs.select(
-        "doc_id",
-        n_tokens.alias("n_tokens"),
-        n_stop.alias("n_stopwords"),
-        stop_ratio.alias("stop_ratio"),
-        len_score.alias("len_score"),
-        F.round((len_score + stop_ratio) / 2.0, 6).alias("quality"),
-    ).orderBy("doc_id")
 
 
 def lang_id(docs: DataFrame) -> DataFrame:

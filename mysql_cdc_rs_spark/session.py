@@ -141,8 +141,3 @@ def ship_package(spark: SparkSession) -> None:
         sc.addPyFile(pkg_root)
     # else: installed as a wheel/egg-dir the workers share — nothing to ship
     _SHIPPED.add(sc.applicationId)
-
-
-def get_active_or_build(**kwargs) -> SparkSession:
-    active = SparkSession.getActiveSession()
-    return active if active is not None else build_session(**kwargs)

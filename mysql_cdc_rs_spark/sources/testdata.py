@@ -62,12 +62,3 @@ def spread(df):
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
-
-
-def load_all(spark, sf_dir: str) -> dict:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark, sf_dir: str) -> None:
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -102,20 +102,11 @@ def main() -> None:
     # --- 1. chunked, doc_id-ordered input (UNTIMED prep) -------------------
     # Deterministic per-chunk filenames (chunk_0000.parquet ...) make the
     # prep RESUMABLE: an interrupted run leaves complete chunks behind and
-    # only the missing ones are generated.  Legacy randomly-named part
-    # files (from the pre-resumable prep) are adopted by reading one row's
-    # url tail (https://host/p/seed/<i>) to recover which chunk they hold.
+    # only the missing ones are generated; any other file is removed, so
+    # the stream reads the chunks and nothing else.
     os.makedirs(src, exist_ok=True)
-    for f in list(os.listdir(src)):
-        if f.endswith(".parquet") and not f.startswith("chunk_"):
-            row = (
-                spark.read.parquet(os.path.join(src, f)).select("url").head()
-            )
-            i = int(row["url"].rsplit("/", 1)[1]) // CHUNK
-            os.rename(
-                os.path.join(src, f), os.path.join(src, f"chunk_{i:04d}.parquet")
-            )
-        elif not f.endswith(".parquet"):
+    for f in os.listdir(src):
+        if not (f.startswith("chunk_") and f.endswith(".parquet")):
             os.remove(os.path.join(src, f))
     base_ts = 1_700_000_000  # fixed: mtimes survive resumed preps
     stage = f"{WORK}/stage"
