@@ -6,11 +6,12 @@ Spark DataFrame pipeline over Common-Crawl-style web pages:
 
 - ``kernel/``     pure-Python decode kernel (header grok, charset sniff, text
                   extraction, MySQL-wire scalar decoders).  Imported by BOTH
-                  the vectorized pandas UDFs and the pytest oracle, so
+                  the Arrow UDFs and the pytest oracle, so
                   byte-identical per-url text is guaranteed by construction.
-- ``functions/``  Spark column expressions + Arrow-vectorized pandas UDFs.
+- ``functions/``  Spark column expressions + Arrow UDFs (``arrow_udf``).
 - ``sources/``    deterministic synthetic ``pages`` generator, dimension
-                  tables, Iceberg-or-Parquet catalog shim, testdata loaders.
+                  tables (Arrow local relations), Iceberg-or-Parquet
+                  catalog shim, testdata loaders.
 - ``operators/``  decode, broadcast-enrich, fan-out routing, metric
                   aggregation, before/after diff, dedup, similarity search.
 - ``plans/``      end-to-end pipeline assembly + checkpoint-resume manifest.

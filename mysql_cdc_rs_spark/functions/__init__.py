@@ -1,2 +1,3 @@
-"""Spark-side function library: Arrow-vectorized pandas UDFs wrapping the
-kernel, plus pure-Column expressions for everything Catalyst can codegen."""
+"""Spark-side function library: Arrow UDFs (``arrow_udf``, Arrow arrays in
+and out, no pandas) wrapping the kernel, plus pure-Column expressions for
+everything Catalyst can codegen."""

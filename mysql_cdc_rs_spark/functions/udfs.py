@@ -1,12 +1,14 @@
-"""Arrow-vectorized pandas UDFs wrapping the pure-Python kernel.
+"""Arrow UDFs wrapping the pure-Python kernel.
 
 Hot-path rule (BASELINE.json input_hint): NO per-row Python outside these
-Arrow-batched UDFs.  Each UDF receives a pandas Series per Arrow batch
-(bounded by spark.sql.execution.arrow.maxRecordsPerBatch) and applies the
-kernel per element inside the batch — the Spark-side cost model is identical
-to the reference's per-event decode loop
+Arrow-batched UDFs.  Each UDF receives a ``pyarrow.Array`` per Arrow batch
+(bounded by spark.sql.execution.arrow.maxRecordsPerBatch), applies the
+kernel per element inside the batch and returns an Arrow array built from
+the kernel's column lists — the Spark-side cost model is identical to the
+reference's per-event decode loop
 (/root/reference/binlog/src/decoder/event_decoder.rs:153-360), but batches
-move JVM<->Python as Arrow buffers, not pickled rows.
+move JVM<->Python as Arrow buffers, not pickled rows, with no pandas frame
+on either side.
 
 Errors NEVER raise: they surface in the ``error`` struct field and are
 filtered to the error route (mirrors the reference's skip-don't-crash
@@ -15,9 +17,9 @@ policy, /root/reference/binlog/src/decoder/event_decoder.rs:310-330).
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+import pyarrow as pa
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     IntegerType,
     MapType,
@@ -27,27 +29,15 @@ from pyspark.sql.types import (
 )
 
 from mysql_cdc_rs_spark.kernel import jsonb as _jsonb
-from mysql_cdc_rs_spark.kernel.batchdecode import decode_batch
+from mysql_cdc_rs_spark.kernel.batchdecode import FIELDS, decode_batch
 
-DECODED_FIELDS = [
-    ("status", IntegerType()),
-    ("mime", StringType()),
-    ("charset", StringType()),
-    ("charset_source", StringType()),
-    ("content_encoding", StringType()),
-    ("header_len", IntegerType()),
-    ("body_len", IntegerType()),
-    ("text", StringType()),
-    ("title", StringType()),
-    ("event_type", StringType()),
-    ("route", StringType()),
-    ("error", StringType()),
-    # full header map (status-vars analog, P6); downstream stages that don't
-    # select it get it pruned by Catalyst for free
-    ("headers", MapType(StringType(), StringType())),
-]
-DECODED_SCHEMA = StructType([StructField(n, t, True) for n, t in DECODED_FIELDS])
-_COLS = [n for n, _ in DECODED_FIELDS]
+_SPARK_TYPE = {
+    int: IntegerType(),
+    str: StringType(),
+    dict: MapType(StringType(), StringType()),
+}
+DECODED_SCHEMA = StructType([StructField(n, _SPARK_TYPE[t]) for n, t in FIELDS])
+_DECODED_ARROW = to_arrow_type(DECODED_SCHEMA)
 
 
 def make_decode_udf():
@@ -66,11 +56,15 @@ def make_decode_udf():
 
     extensions = _reg.snapshot()
 
-    @pandas_udf(DECODED_SCHEMA)
-    def _decode(html: pd.Series) -> pd.DataFrame:
-        # fused batch loop (kernel/batchdecode.py): column lists feed
-        # pandas->Arrow without a list-of-dicts detour
-        return pd.DataFrame(decode_batch(html, extensions))
+    @arrow_udf(DECODED_SCHEMA)
+    def _decode(html: pa.Array) -> pa.Array:
+        # fused batch loop (kernel/batchdecode.py): its column lists become
+        # the struct's children directly
+        cols = decode_batch(html.to_pylist(), extensions)
+        return pa.StructArray.from_arrays(
+            [pa.array(cols[f.name], f.type) for f in _DECODED_ARROW],
+            fields=list(_DECODED_ARROW),
+        )
 
     # asNondeterministic stops the optimizer pushing filters on decoded
     # columns BELOW the projection, which duplicated the whole decode as a
@@ -80,47 +74,32 @@ def make_decode_udf():
     return _decode.asNondeterministic()
 
 
-# default instance (built-ins only; rebuilt by with_decoded so extensions
-# registered before plan construction are honored)
-decode_page_udf = make_decode_udf()
-
-
-@pandas_udf(StringType())
-def jsonb_decode_udf(payload: pd.Series) -> pd.Series:
+@arrow_udf(StringType())
+def jsonb_decode_udf(payload: pa.Array) -> pa.Array:
     """MySQL-JSONB binary -> canonical JSON string (kernel C13)."""
     out = []
-    for b in payload:
+    for b in payload.to_pylist():
         if b is None:
             out.append(None)
             continue
         try:
-            out.append(_jsonb.canonical_json(_jsonb.parse_jsonb(bytes(b))))
+            out.append(_jsonb.canonical_json(_jsonb.parse_jsonb(b)))
         except Exception:
             out.append(None)
-    return pd.Series(out, dtype="object")
+    return pa.array(out, pa.string())
 
 
-@pandas_udf(StringType())
-def jsonb_path_udf(payload: pd.Series, path: pd.Series) -> pd.Series:
+@arrow_udf(StringType())
+def jsonb_path_udf(payload: pa.Array, path: pa.Array) -> pa.Array:
     """extract_by_path over JSONB binary (kernel C14)."""
     out = []
-    for b, p in zip(payload, path):
+    for b, p in zip(payload.to_pylist(), path.to_pylist()):
         if b is None or p is None:
             out.append(None)
             continue
         try:
-            v = _jsonb.extract_by_path(_jsonb.parse_jsonb(bytes(b)), str(p))
+            v = _jsonb.extract_by_path(_jsonb.parse_jsonb(b), p)
             out.append(None if v is None else _jsonb.canonical_json(v))
         except Exception:
             out.append(None)
-    return pd.Series(out, dtype="object")
-
-
-def with_decoded(df, html_col: str = "html", out_col: str = "decoded"):
-    """Attach the decoded struct — the pipeline's single wide projection.
-
-    One UDF call per row batch; downstream stages select struct fields so
-    Catalyst prunes what they don't use.  The UDF is built at plan time so
-    extensions registered by then ship with it.
-    """
-    return df.withColumn(out_col, make_decode_udf()(F.col(html_col)))
+    return pa.array(out, pa.string())

@@ -3,8 +3,8 @@
 Every function here is a deterministic ``bytes -> value`` transform with NO
 Spark dependency.  The same module is imported by:
 
-1. the Arrow-vectorized pandas UDFs in ``mysql_cdc_rs_spark.functions.udfs``
-   (applied per numpy/pandas batch on executors), and
+1. the Arrow UDFs in ``mysql_cdc_rs_spark.functions.udfs`` (applied per
+   Arrow batch on executors), and
 2. the pytest golden oracle (applied row-at-a-time on the driver),
 
 which is how the north rule's "byte-identical extracted text per url"

@@ -2,7 +2,7 @@
 
 ``decode_batch`` frames, decompresses, dispatches, decodes text and routes
 a whole Arrow batch in ONE loop that appends straight into 13 column lists
-(the layout pandas -> Arrow wants anyway): no per-row record object, no
+(the children of the UDF's Arrow struct array): no per-row record object, no
 per-row dict, no list-of-dicts -> DataFrame detour.  ``decode.decode_page``
 is row 0 of a one-row batch.
 
@@ -24,22 +24,27 @@ from mysql_cdc_rs_spark.kernel import http as _http
 from mysql_cdc_rs_spark.kernel import textextract as _tx
 from mysql_cdc_rs_spark.kernel.decode import ROUTE_OF_EVENT
 
-#: column order — must match functions.udfs.DECODED_FIELDS
-COLUMNS = [
-    "status",
-    "mime",
-    "charset",
-    "charset_source",
-    "content_encoding",
-    "header_len",
-    "body_len",
-    "text",
-    "title",
-    "event_type",
-    "route",
-    "error",
-    "headers",
+#: the decoded columns in output order, with the Python type of their
+#: non-NULL values: the one declaration of the decoded schema
+#: (``functions.udfs`` derives the Spark and Arrow types from it)
+FIELDS = [
+    ("status", int),
+    ("mime", str),
+    ("charset", str),
+    ("charset_source", str),
+    ("content_encoding", str),
+    ("header_len", int),
+    ("body_len", int),
+    ("text", str),
+    ("title", str),
+    ("event_type", str),
+    ("route", str),
+    ("error", str),
+    # full header map (status-vars analog, P6); downstream stages that don't
+    # select it get it pruned by Catalyst for free
+    ("headers", dict),
 ]
+COLUMNS = [name for name, _ in FIELDS]
 
 _TITLE_RE = re.compile(r"<title[^>]*>(.*?)</title\s*>", re.IGNORECASE | re.DOTALL)
 

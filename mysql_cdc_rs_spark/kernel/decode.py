@@ -71,8 +71,8 @@ ERROR_CLASSES = [
 
 def decode_page(raw: bytes | None) -> dict[str, Any]:
     """Decode one raw page record with the live extension registry: row 0
-    of ``decode_batch([raw])``, as a dict keyed like
-    ``functions.udfs.DECODED_SCHEMA``.  Never raises."""
+    of ``decode_batch([raw])``, as a dict keyed by ``batchdecode.COLUMNS``.
+    Never raises."""
     # imported here: batchdecode imports ROUTE_OF_EVENT from this module
     from mysql_cdc_rs_spark.kernel.batchdecode import decode_batch
 

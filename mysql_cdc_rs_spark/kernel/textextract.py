@@ -1,7 +1,7 @@
 """Deterministic text extraction from (decoded) HTML.
 
 This is the byte-identical hot-path transform: decoded events must yield the
-same text string whether computed by the pandas UDF on an executor or by the
+same text string whether computed by the Arrow UDF on an executor or by the
 pytest oracle on the driver.  Only stdlib ``re`` + explicit entity table —
 no html.parser, no bs4, nothing whose behavior could drift between versions.
 """

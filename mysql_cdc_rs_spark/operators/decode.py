@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mysql_cdc_rs_spark.functions.columns import host_of_url, tld_of_url, url_bucket
-from mysql_cdc_rs_spark.functions.udfs import with_decoded
+from mysql_cdc_rs_spark.functions.udfs import make_decode_udf
 
 
 def decode_pages(pages: DataFrame) -> DataFrame:
@@ -24,7 +24,8 @@ def decode_pages(pages: DataFrame) -> DataFrame:
     (``text`` here is the DECODED text — the input's ``text`` column is kept
      as ``text_expected`` for invariant checks and dropped by the router.)
     """
-    d = with_decoded(pages)
+    # built at plan time: extensions registered by then ship with the UDF
+    d = pages.withColumn("decoded", make_decode_udf()(F.col("html")))
     return d.select(
         "url",
         "warc_ts",

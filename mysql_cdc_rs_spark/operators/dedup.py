@@ -117,7 +117,6 @@ def lsh_candidate_pairs(
     k: int = MINHASH_K,
     bands: int = LSH_BANDS,
     max_bucket: int = MAX_BUCKET,
-    banded: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup candidate pairs: docs sharing any LSH band bucket.
 
@@ -135,10 +134,7 @@ def lsh_candidate_pairs(
     array.  Kept members are the lowest doc_ids (deterministic); use
     ``lsh_bucket_stats`` to monitor how many rows the cap drops.
     """
-    if banded is None:
-        banded = banded_buckets(docs, k, bands)
-    # else: caller passes precomputed (doc_id, band_id, bucket) rows so the
-    # shingle->minhash subtree runs once when buckets feed several consumers
+    banded = banded_buckets(docs, k, bands)
     w = Window.partitionBy("band_id", "bucket").orderBy("doc_id")
     bounded = banded.withColumn("rn", F.row_number().over(w)).where(
         F.col("rn") <= max_bucket

@@ -9,7 +9,9 @@ J1/J3 semantics from the reference:
   instead of dropping or crashing.
 
 Both joins are explicit ``broadcast()`` — dims are O(100) rows; at 10^12
-fact rows these must never shuffle the fact side.
+fact rows these must never shuffle the fact side.  The dims are driver
+literals planned as ``LocalTableScan``, so each broadcast is a JVM-only job
+over the local rows, with no Python task.
 """
 
 from __future__ import annotations
@@ -25,8 +27,8 @@ LANG_MISS = "LANG_DIM_NOT_FOUND"
 TLD_MISS = "TLD_DIM_NOT_FOUND"
 
 
-def enrich(decoded: DataFrame, spark=None) -> DataFrame:
-    spark = spark or decoded.sparkSession
+def enrich(decoded: DataFrame) -> DataFrame:
+    spark = decoded.sparkSession
     lang_dim = lang_region_df(spark)
     tld_dim = tld_category_df(spark)
 

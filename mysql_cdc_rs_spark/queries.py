@@ -33,6 +33,7 @@ from mysql_cdc_rs_spark.operators import similarity as SIM
 from mysql_cdc_rs_spark.operators import textstats as TS
 from mysql_cdc_rs_spark.operators.decode import decode_pages
 from mysql_cdc_rs_spark.operators.enrich import enrich
+from mysql_cdc_rs_spark.sources.dimensions import literal_df
 from mysql_cdc_rs_spark.sources.pages_from_documents import (
     CLS_SQL,
     EVENT_TYPE_SQL,
@@ -1353,7 +1354,8 @@ def _ann_ivf_trained(spark, sf):
     the full train -> assign -> search path in one oracle-checked query."""
     emb = load(spark, sf, "embeddings")
     cents = SIM.kmeans_centroids_int(emb, dim=_EMB_DIM, k=8, rounds=1)
-    cdf = spark.createDataFrame(
+    cdf = literal_df(
+        spark,
         [(cid, [v / 1_000_000.0 for v in c]) for cid, c in cents],
         "vec_id long, embedding array<double>",
     )
@@ -1728,7 +1730,8 @@ def _p8_labels(spark, sf):
     )
 
     # labels dimension deliberately missing ordinal 2 ('error')
-    dim = spark.createDataFrame(
+    dim = literal_df(
+        spark,
         [(i + 1, lbl) for i, lbl in enumerate(_ENUM_LABELS)
          if lbl != "error"],
         "ordinal int, label string",

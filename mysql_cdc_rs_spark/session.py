@@ -46,7 +46,7 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # --- vectorized decode path sizing (Arrow batches to pandas UDFs) ---
+        # --- vectorized decode path sizing (Arrow batches to the Arrow UDFs) ---
         # 2000-row batches keep the JVM->Python->JVM pipeline full: with one
         # huge batch per task the stage is latency-bound (measured 2.2x
         # slower at local[32]); small batches overlap Arrow IO with decode.

@@ -11,6 +11,9 @@ lookup (J1), including the "missing key -> error route" semantics
 
 from __future__ import annotations
 
+import pyarrow as pa
+from pyspark.sql.types import StructType
+
 LANG_REGION = [
     ("en", "americas", "English"),
     ("de", "emea", "German"),
@@ -38,11 +41,25 @@ TLD_CATEGORY = [
 ]
 
 
+def literal_df(spark, rows: list[tuple], ddl: str):
+    """Driver-literal ``rows`` as a DataFrame planned as ``LocalTableScan``.
+
+    ``spark.createDataFrame(list)`` plans a list as a Python RDD (``Scan
+    ExistingRDD``), so every job over it, a broadcast included, starts
+    Python tasks.  An Arrow table becomes a local relation instead: the
+    rows travel inside the plan, a ``collect`` runs no Spark job, and a
+    broadcast runs a JVM-only one.
+    """
+    schema = StructType.fromDDL(ddl)
+    table = pa.table([list(col) for col in zip(*rows)], names=schema.names)
+    return spark.createDataFrame(table, schema)
+
+
 def lang_region_df(spark):
-    return spark.createDataFrame(
-        LANG_REGION, "lang string, region string, lang_name string"
+    return literal_df(
+        spark, LANG_REGION, "lang string, region string, lang_name string"
     )
 
 
 def tld_category_df(spark):
-    return spark.createDataFrame(TLD_CATEGORY, "tld string, category string")
+    return literal_df(spark, TLD_CATEGORY, "tld string, category string")

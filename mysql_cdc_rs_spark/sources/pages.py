@@ -201,29 +201,35 @@ def _encode_record(seed: int, i: int, lang: str, cls: str) -> bytes:
 
 # --- Spark materialization ---------------------------------------------------
 
+#: the one pages schema: the batch, stream and documents-derived sources
+#: all produce it
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
+PAGE_COLUMNS = [f.split()[0] for f in PAGES_SCHEMA.split(", ")]
 
 
-def pages_df(spark, n: int, seed: int = 42, num_partitions: int | None = None):
-    """Distributed deterministic generation: spark.range -> mapInPandas.
-
-    Each executor generates its own rows from (seed, id) — no driver-side
-    materialization, so the same generator scales to arbitrary n.
-    """
+def pages_from_ids(ids, seed: int = 42):
+    """Pages generated on the executors, one per id of the one-column
+    ``ids`` frame: ``make_record(seed, id)`` in a ``mapInPandas``.  Every
+    synthetic pages source (batch, rate stream, soak chunks) generates
+    through here."""
     import pandas as pd
 
     def gen(batches):
         for pdf in batches:
-            rows = [make_record(seed, int(i)) for i in pdf["id"]]
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"]
-            )
+            rows = [make_record(seed, int(i)) for i in pdf.iloc[:, 0]]
+            yield pd.DataFrame(rows, columns=PAGE_COLUMNS)
 
+    return ids.mapInPandas(gen, schema=PAGES_SCHEMA)
+
+
+def pages_df(spark, n: int, seed: int = 42, num_partitions: int | None = None):
+    """Distributed deterministic generation: spark.range -> pages_from_ids.
+
+    Each executor generates its own rows from (seed, id) — no driver-side
+    materialization, so the same generator scales to arbitrary n.
+    """
     nparts = num_partitions or max(1, min(64, n // 2000 or 1))
-    return (
-        spark.range(0, n, numPartitions=nparts)
-        .mapInPandas(gen, schema=PAGES_SCHEMA)
-    )
+    return pages_from_ids(spark.range(0, n, numPartitions=nparts), seed)
 
 
 def pages_rows(n: int, seed: int = 42):

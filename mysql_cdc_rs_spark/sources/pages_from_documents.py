@@ -29,6 +29,8 @@ import gzip
 import hashlib
 from datetime import datetime, timedelta, timezone
 
+from mysql_cdc_rs_spark.sources.pages import PAGE_COLUMNS, PAGES_SCHEMA
+
 TLDS8 = ["com", "org", "net", "io", "de", "fr", "edu", "gov"]
 CHARSETS4 = ["utf-8", "latin1", "gbk", "windows-1252"]
 _CODEC = {
@@ -38,8 +40,6 @@ _CODEC = {
     "windows-1252": "cp1252",
 }
 EPOCH = datetime(2025, 1, 1, tzinfo=timezone.utc)
-
-PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 
 def md5_60(s: str) -> int:
@@ -139,8 +139,6 @@ def pages_from_documents(spark, sf_dir: str):
                 make_page(int(r.doc_id), r.text, r.lang, r.source)
                 for r in pdf.itertuples()
             ]
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"]
-            )
+            yield pd.DataFrame(rows, columns=PAGE_COLUMNS)
 
     return docs.mapInPandas(gen, schema=PAGES_SCHEMA)

@@ -42,16 +42,13 @@ from mysql_cdc_rs_spark.plans.training_pipeline import (
     DEFAULT_MIN_TOKENS,
     quality_corpus,
 )
-
-PAGES_DDL = (
-    "url string, warc_ts timestamp, html binary, text string, lang string"
-)
+from mysql_cdc_rs_spark.sources.pages import PAGES_SCHEMA, pages_from_ids
 
 
 def stream_pages(spark, pages_dir: str, max_files_per_trigger: int = 8) -> DataFrame:
     """File-arrival streaming source over the pages directory."""
     return (
-        spark.readStream.schema(PAGES_DDL)
+        spark.readStream.schema(PAGES_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(pages_dir)
     )
@@ -71,25 +68,13 @@ def stream_pages_rate(
     which is the point: a production message-bus source is the same
     one-line swap.
     """
-    import pandas as pd
-
-    from mysql_cdc_rs_spark.sources.pages import make_record
-
     raw = (
         spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", rows_per_batch)
         .option("startTimestamp", 0)
         .load()
     )
-
-    def gen(batches):
-        for pdf in batches:
-            rows = [make_record(seed, int(v)) for v in pdf["value"]]
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"]
-            )
-
-    return raw.mapInPandas(gen, schema=PAGES_DDL)
+    return pages_from_ids(raw.select("value"), seed)
 
 
 def stream_pages_socket(spark, host: str, port: int) -> DataFrame:
@@ -143,10 +128,14 @@ def start_routing_stream(
     checkpoint_dir: str,
     available_now: bool = True,
 ):
-    """decode -> enrich -> per-route fan-out append, exactly-once via
-    checkpoint.  Returns the StreamingQuery.  ``available_now=True`` drains
-    a bounded source then stops (tests/backfills); pass False for unbounded
-    sources (rate / socket) to run continuously."""
+    """decode -> enrich -> per-route fan-out append.  Returns the
+    StreamingQuery.  ``available_now=True`` drains a bounded source then
+    stops (tests/backfills); pass False for unbounded sources (rate /
+    socket) to run continuously.
+
+    At-least-once: the checkpoint commits a batch only after its append,
+    so a crash between the two replays the batch on restart, and the plain
+    ``append`` writes its rows a second time."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         routed = route_table(enrich(decode_pages(_fan_out(batch_df))))

@@ -44,20 +44,9 @@ COMPACT_EVERY = (
 
 def chunk_df(spark, start: int, end: int, seed: int = 42):
     """pages_df over an id SLICE (the generator is pure in (seed, id))."""
-    import pandas as pd
+    from mysql_cdc_rs_spark.sources.pages import pages_from_ids
 
-    from mysql_cdc_rs_spark.sources.pages import PAGES_SCHEMA, make_record
-
-    def gen(batches):
-        for pdf in batches:
-            rows = [make_record(seed, int(i)) for i in pdf["id"]]
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"]
-            )
-
-    return spark.range(start, end, numPartitions=16).mapInPandas(
-        gen, schema=PAGES_SCHEMA
-    )
+    return pages_from_ids(spark.range(start, end, numPartitions=16), seed)
 
 
 def du_mb(path: str) -> float:

@@ -84,17 +84,40 @@ def test_extension_priority_and_crash_isolation():
 
 
 def test_extension_works_inside_spark_udf(spark):
+    """The Spark decode UDF returns exactly ``decode_batch``'s columns, values,
+    Python types, NULLs and header maps included, over the generator mix
+    (NULL payload too), one row of a registered extension and one
+    decompression bomb."""
     @reg.register_mime_decoder("application/json")
     def dec(body, charset):
         return {"event_type": "json", "text": body.decode("utf-8")}
 
-    from mysql_cdc_rs_spark.functions.udfs import make_decode_udf
+    from test_property_kernel import _generator_mix
 
-    df = spark.createDataFrame([(_raw_json_page(b'{"k":1}'),)], "html binary")
-    row = df.select(make_decode_udf()(F.col("html")).alias("d")).select(
-        "d.event_type", "d.text"
-    ).first()
-    assert (row["event_type"], row["text"]) == ("json", '{"k":1}')
+    from mysql_cdc_rs_spark.functions.udfs import DECODED_SCHEMA, make_decode_udf
+    from mysql_cdc_rs_spark.kernel.batchdecode import COLUMNS, decode_batch
+    from mysql_cdc_rs_spark.kernel.http import MAX_BODY_BYTES
+
+    bomb = (
+        b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
+        b"Content-Encoding: gzip\r\n\r\n" + _bomb(31, MAX_BODY_BYTES + 1)
+    )
+    raws = _generator_mix() + [_raw_json_page(b'{"k":1}'), bomb]
+    df = spark.createDataFrame(list(enumerate(raws)), "i long, html binary")
+    out = df.select("i", make_decode_udf()(F.col("html")).alias("d"))
+    assert out.schema["d"].dataType == DECODED_SCHEMA
+    got = [r["d"].asDict() for r in out.orderBy("i").collect()]
+
+    cols = decode_batch(raws, reg.snapshot())
+    want = [{c: cols[c][i] for c in COLUMNS} for i in range(len(raws))]
+    assert got == want
+
+    def types(rows):
+        return [{c: type(v) for c, v in r.items()} for r in rows]
+
+    assert types(got) == types(want)
+    assert (want[-2]["event_type"], want[-2]["text"]) == ("json", '{"k":1}')
+    assert want[-1]["error"] == "BODY_TOO_LARGE"
 
 
 def test_route_override_does_not_leak_into_later_plan(spark):

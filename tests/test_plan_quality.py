@@ -4,6 +4,8 @@ pushdown).  Formatted explain prints each node twice (tree + details)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 SF = "/root/testdata/sf0.01"
@@ -28,6 +30,28 @@ def pipeline_plan(spark):
 
 def test_decode_udf_evaluated_exactly_once(pipeline_plan):
     assert pipeline_plan.count("ArrowEvalPython") == 2  # 1 node x (tree+detail)
+
+
+#: a node of formatted explain's tree part ("ArrowEvalPython (5)") that runs
+#: Python: eval-Python, *InPandas and *InArrow execs
+_PYTHON_NODE = re.compile(r"\b(\w*(?:Python|Pandas|InArrow)\w*) \((\d+)\)")
+
+
+def test_decode_is_the_only_python_in_a_pipeline_plan(spark, tmp_path):
+    """Over a parquet pages source, the enrich(decode_pages(...)) plan has
+    ONE Python node, the decode, and the dimension frames are local
+    relations: a ``Scan ExistingRDD`` (a Python RDD from
+    ``createDataFrame(list)``) would start Python tasks per broadcast."""
+    from mysql_cdc_rs_spark.operators.decode import decode_pages
+    from mysql_cdc_rs_spark.operators.enrich import enrich
+    from mysql_cdc_rs_spark.sources.pages import pages_df
+
+    path = str(tmp_path / "pages")
+    pages_df(spark, 50).write.parquet(path)
+    plan = _formatted(spark, enrich(decode_pages(spark.read.parquet(path))))
+    assert "ExistingRDD" not in plan
+    assert plan.count("LocalTableScan") == 4  # 2 dims x (tree+detail)
+    assert [n for n, _ in set(_PYTHON_NODE.findall(plan))] == ["ArrowEvalPython"]
 
 
 def test_dim_joins_are_broadcast_no_shuffle(pipeline_plan):
@@ -141,6 +165,7 @@ def test_explain_snapshots_carry_invariants():
 
     pipeline = read("pipeline_decode_enrich.txt")
     assert pipeline.count("ArrowEvalPython") == 2  # ONE node (tree+detail)
+    assert "ExistingRDD" not in pipeline  # literal dims, no Python RDD scan
     assert pipeline.count("BroadcastHashJoin") == 4  # both dim joins
     assert "SortMergeJoin" not in pipeline
 

@@ -54,12 +54,12 @@ def test_frame_blobs_spark(spark):
     assert sorted(good) == [(0, 0), (0, 1), (0, 2), (1, 0)]
     assert errs == {1: "TRUNCATED_TAIL", 2: "NULL_CHUNK"}
     # framed records decode through the normal kernel path
-    from mysql_cdc_rs_spark.functions.udfs import decode_page_udf
+    from mysql_cdc_rs_spark.functions.udfs import make_decode_udf
 
     dec = (
         frame_blobs(df)
         .filter(F.col("frame_error").isNull())
-        .select(decode_page_udf("record").alias("d"))
+        .select(make_decode_udf()("record").alias("d"))
         .select("d.event_type")
         .collect()
     )
