@@ -249,16 +249,6 @@ def _int_embeddings(corpus: DataFrame) -> DataFrame:
     )
 
 
-def _int_dist(ei_col, cent: list[int]):
-    """Exact squared L2 distance to a literal centroid (all BIGINT)."""
-    lit = F.array(*[F.lit(int(c)).cast("long") for c in cent])
-    return F.aggregate(
-        F.zip_with(ei_col, lit, lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
 def kmeans_centroids_int(
     corpus: DataFrame, dim: int, k: int = 8, rounds: int = 1
 ) -> list[tuple[int, list[int]]]:

@@ -5,8 +5,9 @@ The reference counts each event while it decodes it
  binlog/src/row/monitoring.rs:9-180).  Here the run record
 is the same idea: ``decode_record``/``run_record`` are global aggregates
 for ``DataFrame.observe``, so the pass that writes the data counts it, with
-no job of their own.  The per-group breakdowns below are one declarative
-groupBy job each; Catalyst plans partial (map-side) + final aggregation.
+no job of their own.  ``charset_stats`` and the salted two-phase aggregate
+``salted_sums`` are the A7 and skew oracle queries' code;
+``host_stats_salted`` runs the latter over a finished sink.
 """
 
 from __future__ import annotations
@@ -73,88 +74,53 @@ def run_record() -> list[Column]:
     ]
 
 
-def event_type_stats(decoded: DataFrame) -> DataFrame:
-    """A1: per-event-type counters (count, bytes, min/max/avg sizes, errors)."""
-    return (
-        decoded.groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("raw_len").alias("total_bytes"),
-            F.min("raw_len").alias("min_bytes"),
-            F.max("raw_len").alias("max_bytes"),
-            F.round(F.avg("raw_len"), 4).alias("avg_bytes"),
-            F.count(F.when(F.col("error").isNotNull(), 1)).alias("error_count"),
-            F.min("warc_ts").alias("first_seen"),
-            F.max("warc_ts").alias("last_seen"),
-        )
-        .orderBy("event_type")
-    )
-
-
-def global_rollup(decoded: DataFrame) -> DataFrame:
-    """A2: global + per-event-type rollup in one pass (GROUPING SETS)."""
-    return (
-        decoded.rollup("event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("raw_len").alias("total_bytes"),
-        )
-        .orderBy(F.col("event_type").asc_nulls_first())
-    )
-
-
-def size_histogram(decoded: DataFrame, col: str = "raw_len") -> DataFrame:
-    """A4: power-of-two size buckets (reference's row-size distribution)."""
-    bucket = F.when(F.col(col) <= 0, F.lit(-1)).otherwise(
-        F.floor(F.log2(F.col(col)))
-    )
-    return (
-        decoded.withColumn("size_bucket", bucket.cast("int"))
-        .groupBy("size_bucket")
-        .agg(F.count("*").alias("n"))
-        .orderBy("size_bucket")
-    )
-
-
 def charset_stats(decoded: DataFrame) -> DataFrame:
-    """A7 analog: charset/source distribution (column-parser type stats)."""
+    """A7 analog: the charset census of a decode (column-parser type stats),
+    ``(event_type, charset, charset_source) -> n``; a page whose charset was
+    not found is counted under a NULL charset."""
     return (
-        decoded.filter(F.col("charset").isNotNull())
-        .groupBy("charset", "charset_source")
+        decoded.groupBy("event_type", "charset", "charset_source")
         .agg(F.count("*").alias("n"))
-        .orderBy("charset", "charset_source")
+        .orderBy("event_type", "charset")
     )
 
 
-def host_stats_salted(decoded: DataFrame, salt_buckets: int = 8) -> DataFrame:
-    """Per-host stats with two-phase salted aggregation (SURVEY §4 item 2).
+# Reducers per hot key in phase 1 of ``salted_sums``.
+SALT_BUCKETS = 8
 
-    host is the pipeline's genuinely skewed high-cardinality key (~30% of
-    rows land on hot.<tld> hosts by construction): phase 1 aggregates on
-    (host, salt) so a hot host's rows spread over `salt_buckets` reducers,
-    phase 2 merges the partials per host.  Exactly equal to the direct
-    groupBy (verified by skew_salted_agg's oracle pattern) while bounding
-    the largest reduce task at 1/salt_buckets of the hot key.
-    """
-    from pyspark.sql import functions as F
 
-    salted = decoded.select(
+def salted_sums(
+    df: DataFrame, key: str, salt_source: str, sums: dict[str, Column]
+) -> DataFrame:
+    """Skew-safe ``groupBy(key)`` of named sums (SURVEY §4 item 2).
+
+    Phase 1 aggregates on (key, salt), salt = ``pmod(xxhash64(salt_source),
+    SALT_BUCKETS)``, so a hot key's rows spread over ``SALT_BUCKETS``
+    reducers; phase 2 merges the partials per key.  Exactly equal to the
+    direct groupBy, while the largest reduce task holds 1/SALT_BUCKETS of
+    the hot key.  Pass ``F.lit(1)`` as a sum to count rows."""
+    salted = df.select(
+        key,
+        F.pmod(F.xxhash64(salt_source), F.lit(SALT_BUCKETS)).alias("salt"),
+        *[c.alias(name) for name, c in sums.items()],
+    )
+    partial = salted.groupBy(key, "salt").agg(
+        *[F.sum(name).alias(name) for name in sums]
+    )
+    return partial.groupBy(key).agg(*[F.sum(name).alias(name) for name in sums])
+
+
+def host_stats_salted(decoded: DataFrame) -> DataFrame:
+    """Per-host page count, bytes and errors, salted on the url: host is the
+    pipeline's genuinely skewed key (~30% of rows land on hot.<tld> hosts by
+    construction)."""
+    return salted_sums(
+        decoded,
         "host",
-        F.pmod(F.xxhash64("url"), F.lit(salt_buckets)).alias("salt"),
-        F.coalesce(F.col("raw_len"), F.lit(0)).alias("raw_len"),
-        F.when(F.col("error").isNotNull(), 1).otherwise(0).alias("is_err"),
-    )
-    partial = salted.groupBy("host", "salt").agg(
-        F.count("*").alias("pn"),
-        F.sum("raw_len").alias("pb"),
-        F.sum("is_err").alias("pe"),
-    )
-    return (
-        partial.groupBy("host")
-        .agg(
-            F.sum("pn").alias("n_pages"),
-            F.sum("pb").alias("total_bytes"),
-            F.sum("pe").alias("n_errors"),
-        )
-        .orderBy(F.col("n_pages").desc(), F.col("host"))
-    )
+        "url",
+        {
+            "n_pages": F.lit(1),
+            "total_bytes": F.coalesce(F.col("raw_len"), F.lit(0)),
+            "n_errors": F.col("error").isNotNull().cast("int"),
+        },
+    ).orderBy(F.col("n_pages").desc(), F.col("host"))

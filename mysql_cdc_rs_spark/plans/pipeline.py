@@ -34,11 +34,7 @@ def build_enriched(pages: DataFrame) -> DataFrame:
     return enrich(decode_pages(pages))
 
 
-def run_pipeline(
-    pages: DataFrame,
-    catalog: SinkCatalog,
-    resume: bool = True,
-) -> PipelineResult:
+def run_pipeline(pages: DataFrame, catalog: SinkCatalog) -> PipelineResult:
     """Decode, enrich and route ``pages`` into ``catalog``.  ``metrics`` is
     the run record that the routed write observed (``stats.run_record``),
     read from the ``routes`` manifest; a resumed run returns the stored
@@ -48,15 +44,12 @@ def run_pipeline(
     # decode+enrich+route is one checkpointable unit; its input lineage is
     # the pages table's deterministic url-bucket histogram.
     stage = CheckpointedStage(catalog, "routed")
-    input_lineage = (
-        lineage_summary(pages.select(url_bucket(F.col("url")).alias("url_bucket")))
-        if resume
-        else None
+    input_lineage = lineage_summary(
+        pages.select(url_bucket(F.col("url")).alias("url_bucket"))
     )
-    if not (resume and stage.completed_with(input_lineage)):
+    if not stage.completed_with(input_lineage):
         counts = write_routes(build_enriched(pages), catalog)
-        if resume:
-            stage.mark_complete(input_lineage, {"row_count": sum(counts.values())})
+        stage.mark_complete(input_lineage, {"row_count": sum(counts.values())})
     routes = catalog.read_manifest("routes")
     return PipelineResult(
         route_counts=routes["counts"],

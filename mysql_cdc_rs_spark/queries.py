@@ -29,8 +29,11 @@ from pyspark.sql.functions import broadcast
 
 from mysql_cdc_rs_spark.functions.columns import mysql_date, mysql_datetime, mysql_year
 from mysql_cdc_rs_spark.operators import dedup as DD
+from mysql_cdc_rs_spark.operators import diff as DF
 from mysql_cdc_rs_spark.operators import similarity as SIM
+from mysql_cdc_rs_spark.operators import stats as S
 from mysql_cdc_rs_spark.operators import textstats as TS
+from mysql_cdc_rs_spark.operators import window_ops as W
 from mysql_cdc_rs_spark.operators.decode import decode_pages
 from mysql_cdc_rs_spark.operators.enrich import enrich
 from mysql_cdc_rs_spark.sources.dimensions import literal_df
@@ -377,13 +380,10 @@ def _w13(spark, sf):
     the most recent signup value forward (ordered context updates) AND the
     next-position gap chain (stream continuity per user)."""
     ev = load(spark, sf, "events")
-    wcum = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wlead = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    order = ["ts", "event_id"]
     marker = F.when(F.col("event_type") == "signup", e_units(F.col("value"), 2))
+    ev = W.propagate_last_context(ev, "user_id", order, marker, "ctx_value_e2")
+    ev = W.next_position(ev, "user_id", order, "ts")
     # parquet ts is TIMESTAMP_NTZ; cast to LTZ (value-preserving: session=UTC)
     # deliberately NOT ordered(): the output is as wide as the input (one
     # row per event), so materializing it through an extra exchange costs
@@ -393,9 +393,9 @@ def _w13(spark, sf):
     return ev.select(
         "event_id",
         "user_id",
-        F.last(marker, ignorenulls=True).over(wcum).alias("ctx_value_e2"),
+        "ctx_value_e2",
         (
-            F.unix_micros(F.lead("ts").over(wlead).cast("timestamp"))
+            F.unix_micros(F.col("next_pos").cast("timestamp"))
             - F.unix_micros(F.col("ts").cast("timestamp"))
         ).alias("gap_us"),
     ).orderBy("event_id")
@@ -417,22 +417,18 @@ def _w13(spark, sf):
 )
 def _w2(spark, sf):
     """W2: GTID-opens-transaction analog — marker event opens a session."""
-    ev = load(spark, sf, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    ev = W.assign_sessions(
+        load(spark, sf, "events"),
+        "user_id",
+        ["ts", "event_id"],
+        F.col("event_type") == "signup",
     )
-    sess = F.sum(
-        F.when(F.col("event_type") == "signup", 1).otherwise(0)
-    ).over(w)
     # deliberately NOT ordered(): the window's user_id exchange already
     # shields the heavy subtree from the sort sampler, and the A/B at
     # sf1.0 measured the extra materializing exchange as a net loss
     # (1.10s vs 0.93s)
     return (
-        ev.withColumn("session_id", sess)
-        .groupBy("user_id", "session_id")
+        ev.groupBy("user_id", "session_id")
         .agg(
             F.count("*").alias("n_events"),
             F.sum(e_units(F.col("value"), 2)).alias("sum_value_e2"),
@@ -493,7 +489,9 @@ def _d1(spark, sf):
     )
     pct = F.col("changed_fields") * 100.0 / 4
     klass = (
-        F.when(pct < 30, "sparse").when(pct > 75, "full").otherwise("partial")
+        F.when(pct < DF.SPARSE_MAX_PCT, "sparse")
+        .when(pct > DF.FULL_MIN_PCT, "full")
+        .otherwise("partial")
     )
     return (
         ev.withColumn("changed_fields", changed)
@@ -1393,20 +1391,13 @@ def _salted(spark, sf):
     """Skew handling (SURVEY §4 item 2): two-phase salted aggregation over a
     deliberately hot key — partial agg on (key, salt), final agg on key.
     Result must equal the direct single-phase oracle exactly."""
-    ev = load(spark, sf, "events")
-    salted = ev.select(
-        (F.col("user_id") % 10).alias("hot_key"),
-        F.pmod(F.xxhash64("event_id"), F.lit(8)).alias("salt"),
-        e_units(F.col("value"), 2).alias("v_e2"),
-    )
-    partial = salted.groupBy("hot_key", "salt").agg(
-        F.count("*").alias("pn"), F.sum("v_e2").alias("pv")
-    )
-    return (
-        partial.groupBy("hot_key")
-        .agg(F.sum("pn").alias("n"), F.sum("pv").alias("sum_value_e2"))
-        .orderBy("hot_key")
-    )
+    ev = load(spark, sf, "events").withColumn("hot_key", F.col("user_id") % 10)
+    return S.salted_sums(
+        ev,
+        "hot_key",
+        "event_id",
+        {"n": F.lit(1), "sum_value_e2": e_units(F.col("value"), 2)},
+    ).orderBy("hot_key")
 
 
 @q(
@@ -1906,13 +1897,7 @@ def _a7(spark, sf):
     every page and the per-(event_type, charset, source) census must equal
     the generator-formula oracle (charset distribution analog of the
     reference's per-column parser stats, column_parser.rs)."""
-    pages = pages_from_documents(spark, sf)
-    return (
-        decode_pages(pages)
-        .groupBy("event_type", "charset", "charset_source")
-        .agg(F.count("*").alias("n"))
-        .orderBy("event_type", "charset")
-    )
+    return S.charset_stats(decode_pages(pages_from_documents(spark, sf)))
 
 
 @q(
@@ -2020,8 +2005,6 @@ def _d3(spark, sf):
     update image semantics, row/parser.rs before/after images).  Output is
     the map flattened in sorted-key order so the comparison is
     deterministic."""
-    from mysql_cdc_rs_spark.operators.diff import partial_update
-
     ev = load(spark, sf, "events").filter(F.col("event_id") < 5000)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     k = F.regexp_extract("props", r'"k": (\d+)', 1)
@@ -2033,7 +2016,7 @@ def _d3(spark, sf):
     cur = ev.withColumn("after", after).withColumn(
         "before", F.lag("after").over(w)
     ).filter(F.col("before").isNotNull())
-    m = partial_update(
+    m = DF.partial_update(
         F.col("before"), F.col("after"), fields, included=["event_type", "k"]
     )
     keys = F.array_sort(F.map_keys(m))

@@ -21,11 +21,11 @@ Parallelism note: file-arrival sources deliver micro-batches with fewer
 partitions than cores — one arriving file is ONE partition — which
 silently caps every narrow per-batch transformation at that parallelism.
 The foreachBatch sinks here fan the batch out to ``defaultParallelism``
-before decoding (conditional: an already-parallel source is never
-coalesced).  The windowed/stateful aggregation streams shuffle at their
-groupBy anyway; if their upstream decode becomes the bottleneck on an
-under-partitioned source, repartition the source stream once at ingest
-(``stream_df.repartition(n)``) rather than per operator.
+before decoding with ``sources.testdata.spread`` (an already-parallel
+source is never coalesced).  The windowed/stateful aggregation streams
+shuffle at their groupBy anyway; if their upstream decode becomes the
+bottleneck on an under-partitioned source, repartition the source stream
+once at ingest (``stream_df.repartition(n)``) rather than per operator.
 """
 
 from __future__ import annotations
@@ -43,6 +43,7 @@ from mysql_cdc_rs_spark.plans.training_pipeline import (
     quality_corpus,
 )
 from mysql_cdc_rs_spark.sources.pages import PAGES_SCHEMA, pages_from_ids
+from mysql_cdc_rs_spark.sources.testdata import spread
 
 
 def stream_pages(spark, pages_dir: str, max_files_per_trigger: int = 8) -> DataFrame:
@@ -106,22 +107,6 @@ def stream_pages_socket(spark, host: str, port: int) -> DataFrame:
     )
 
 
-def _fan_out(batch_df: DataFrame) -> DataFrame:
-    """Fan a foreachBatch micro-batch out to cluster parallelism.
-
-    A file-arrival source often delivers fewer partitions than cores — one
-    arriving file is ONE partition — which silently caps every narrow
-    per-batch transformation (decode, minhash) at source parallelism;
-    profiled at 3.5x the whole batch's cost.  Conditional: an
-    already-parallel source is never coalesced.  Every foreachBatch sink
-    in this module routes its batch through here first.
-    """
-    n_target = batch_df.sparkSession.sparkContext.defaultParallelism
-    if batch_df.rdd.getNumPartitions() < n_target:
-        return batch_df.repartition(n_target)
-    return batch_df
-
-
 def start_routing_stream(
     stream_df: DataFrame,
     sink_dir: str,
@@ -138,7 +123,7 @@ def start_routing_stream(
     ``append`` writes its rows a second time."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        routed = route_table(enrich(decode_pages(_fan_out(batch_df))))
+        routed = route_table(enrich(decode_pages(spread(batch_df))))
         routed.write.mode("append").partitionBy("route").parquet(
             f"{sink_dir}/routed"
         )
@@ -261,7 +246,7 @@ def start_curation_stream(
             return  # replayed after restart: this batch is fully applied
         obs = Observation()  # the batch's decode-level run record
         quality = quality_corpus(
-            decode_pages(_fan_out(batch_df)).observe(obs, *S.decode_record()),
+            decode_pages(spread(batch_df)).observe(obs, *S.decode_record()),
             min_tokens,
         ).persist()
         # Materialize each persisted frame in its OWN job before anything
@@ -544,7 +529,7 @@ def compact_seen_buckets(catalog) -> int:
       recorded in the manifest and reused after it.  It is the probe
       stage's task count (the batch side repartitions to it so the rank
       window and joins share one exchange), so it must be at least the
-      cluster's cores — the same target ``_fan_out`` uses.
+      cluster's cores — the same target ``spread`` uses.
     - Minor or major: with a base generation, a tail and fewer than
       ``MAX_MINORS`` deltas, the call folds ONLY the tail into a new delta
       generation — O(batches since the last compaction), independent of

@@ -3,7 +3,7 @@
     zip -r /tmp/engine.zip mysql_cdc_rs_spark
     spark-submit --py-files /tmp/engine.zip scripts/run_pipeline.py \
         --pages <pages parquet/iceberg path> --sink <sink base dir> \
-        [--synthesize N] [--no-resume]
+        [--synthesize N]
 
 On a cluster, add --master/--num-executors etc.; the job code is identical —
 partitioning, broadcast joins and AQE do the placement.  With --synthesize N
@@ -24,7 +24,6 @@ def main() -> int:
     ap.add_argument("--synthesize", type=int, default=0,
                     help="generate N deterministic pages into --pages first")
     ap.add_argument("--seed", type=int, default=42)
-    ap.add_argument("--no-resume", action="store_true")
     args = ap.parse_args()
 
     # Under spark-submit the session already exists; standalone it's built.
@@ -48,9 +47,7 @@ def main() -> int:
     from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
 
     pages = spark.read.parquet(args.pages)
-    result = run_pipeline(
-        pages, SinkCatalog(spark, args.sink), resume=not args.no_resume
-    )
+    result = run_pipeline(pages, SinkCatalog(spark, args.sink))
     print(
         json.dumps(
             {

@@ -275,16 +275,6 @@ def test_run_record_matches_sink(spark, pages):
         }
 
 
-def test_stats_consistency(decoded):
-    et = {r["event_type"]: r["n_events"] for r in S.event_type_stats(decoded).collect()}
-    assert sum(et.values()) == N
-    rollup = S.global_rollup(decoded).collect()
-    total_row = [r for r in rollup if r["event_type"] is None][0]
-    assert total_row["n_events"] == N
-    hist = S.size_histogram(decoded).collect()
-    assert sum(r["n"] for r in hist) == N
-
-
 def test_charset_variety(decoded):
     cs = {r["charset"] for r in S.charset_stats(decoded).collect()}
     assert {"utf-8", "latin-1", "gbk"} <= cs

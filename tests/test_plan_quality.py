@@ -75,6 +75,19 @@ def test_lsh_single_documents_scan(spark):
     assert plan.count("documents.parquet") == 1
 
 
+def test_spread_fans_out_to_default_parallelism(spark):
+    """``spread`` repartitions a narrow frame to ``defaultParallelism`` and
+    passes a frame that already has that many partitions through, with no
+    exchange."""
+    from mysql_cdc_rs_spark.sources.testdata import spread
+
+    n = spark.sparkContext.defaultParallelism
+    assert spread(spark.range(0, 100, 1, 1)).rdd.getNumPartitions() == n
+    wide = spark.range(0, 100, 1, n)
+    assert spread(wide) is wide
+    assert "Exchange" not in _formatted(spark, spread(wide))
+
+
 def test_ann_corpus_not_shuffled(spark):
     from mysql_cdc_rs_spark.queries import QUERIES
 
