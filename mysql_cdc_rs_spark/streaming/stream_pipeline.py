@@ -9,35 +9,34 @@ checkpointing.  Spark restatement:
   unbounded ``rate-micro-batch`` generator or a TCP socket (any streaming
   source with the pages schema swaps in — the transformations are shared
   with the batch pipeline verbatim);
-- decode/enrich: the SAME functions as batch (one code path, two runners);
-- sink: ``foreachBatch`` fan-out append per route — micro-batch transactional
-  writes are the relay-log segment append analog (S7);
+- routing: each micro-batch goes through the batch pipeline's own
+  ``decode_pages`` -> ``enrich`` -> ``write_routes``, into its ``batch_id``
+  partition of ``routed``; a batch replayed after a crash rewrites that
+  partition and its run record, so the sink holds every row once;
 - progress: Structured Streaming checkpoint = GTID set (A8);
-- watermark + windowed counts = heartbeat/liveness metrics (A9);
-- custom stateful operator via ``applyInPandasWithState`` = the reference's
-  per-key decoder context (TableMap cache) held in managed state.
+- heartbeat (A9): the per-batch run record in manifest ``routes_<batch_id>``
+  (rows, bytes, first/last ``warc_ts``);
+- curation: decode -> quality gate -> incremental LSH near-dup drop, whose
+  per-bucket state lives in the ``dedup_seen_buckets`` table — the
+  reference's per-key decoder context (TableMap cache) held in a table.
 
 Parallelism note: file-arrival sources deliver micro-batches with fewer
 partitions than cores — one arriving file is ONE partition — which
 silently caps every narrow per-batch transformation at that parallelism.
-The foreachBatch sinks here fan the batch out to ``defaultParallelism``
+Both foreachBatch sinks fan the batch out to ``defaultParallelism``
 before decoding with ``sources.testdata.spread`` (an already-parallel
-source is never coalesced).  The windowed/stateful aggregation streams
-shuffle at their groupBy anyway; if their upstream decode becomes the
-bottleneck on an under-partitioned source, repartition the source stream
-once at ingest (``stream_df.repartition(n)``) rather than per operator.
+source is never coalesced).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from mysql_cdc_rs_spark.operators import stats as S
 from mysql_cdc_rs_spark.operators.decode import decode_pages
 from mysql_cdc_rs_spark.operators.enrich import enrich
-from mysql_cdc_rs_spark.operators.route import route_table
+from mysql_cdc_rs_spark.operators.route import write_routes
 from mysql_cdc_rs_spark.plans.training_pipeline import (
     DEFAULT_MIN_TOKENS,
     quality_corpus,
@@ -109,24 +108,23 @@ def stream_pages_socket(spark, host: str, port: int) -> DataFrame:
 
 def start_routing_stream(
     stream_df: DataFrame,
-    sink_dir: str,
+    catalog,
     checkpoint_dir: str,
     available_now: bool = True,
 ):
-    """decode -> enrich -> per-route fan-out append.  Returns the
+    """decode -> enrich -> ``write_routes`` per micro-batch, into the
+    batch's ``batch_id`` partition of ``catalog``'s ``routed`` table, with
+    the batch's run record in manifest ``routes_<batch_id>``.  Returns the
     StreamingQuery.  ``available_now=True`` drains a bounded source then
     stops (tests/backfills); pass False for unbounded sources (rate /
     socket) to run continuously.
 
-    At-least-once: the checkpoint commits a batch only after its append,
-    so a crash between the two replays the batch on restart, and the plain
-    ``append`` writes its rows a second time."""
+    Exactly-once: the checkpoint commits a batch only after its write, and
+    a batch replayed after a crash between the two rewrites its own
+    partitions and record instead of appending them again."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        routed = route_table(enrich(decode_pages(spread(batch_df))))
-        routed.write.mode("append").partitionBy("route").parquet(
-            f"{sink_dir}/routed"
-        )
+        write_routes(enrich(decode_pages(spread(batch_df))), catalog, batch_id)
 
     writer = stream_df.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_dir
@@ -134,37 +132,6 @@ def start_routing_stream(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def start_windowed_metrics_stream(
-    stream_df: DataFrame,
-    sink_dir: str,
-    checkpoint_dir: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-):
-    """A9/heartbeat analog: watermarked event-time windowed per-type counts."""
-    decoded = decode_pages(stream_df)
-    agg = (
-        decoded.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), F.col("event_type"))
-        .agg(F.count("*").alias("n"), F.sum("raw_len").alias("bytes"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n",
-            "bytes",
-        )
-    )
-    return (
-        agg.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", f"{sink_dir}/windowed_metrics")
-        .start()
-    )
 
 
 def start_curation_stream(
@@ -631,82 +598,4 @@ def read_curated(catalog) -> DataFrame:
         catalog.read("curated")
         .where(F.col("batch_id") <= last)
         .dropDuplicates(["doc_id"])
-    )
-
-
-# --- custom stateful operator (applyInPandasWithState) ----------------------
-
-HOST_STATE_SCHEMA = "n long, bytes long"
-HOST_OUT_SCHEMA = "host string, n_total long, bytes_total long"
-
-
-def _host_stats_fn(key, pdf_iter, state: GroupState):
-    """Running per-host totals carried in managed state — the streaming
-    analog of the reference's per-key decoder context (TableMap cache,
-    /root/reference/binlog/src/row/parser.rs:30-103)."""
-    import pandas as pd
-
-    n, b = state.get if state.exists else (0, 0)
-    for pdf in pdf_iter:
-        n += len(pdf)
-        b += int(pdf["raw_len"].fillna(0).sum())
-    state.update((n, b))
-    yield pd.DataFrame({"host": [key[0]], "n_total": [n], "bytes_total": [b]})
-
-
-def start_host_stats_stream(stream_df: DataFrame, sink_dir: str, checkpoint_dir: str):
-    """Stateful per-host running stats; update-mode memory-friendly output."""
-    decoded = decode_pages(stream_df).select("host", "raw_len")
-    stats = decoded.groupBy("host").applyInPandasWithState(
-        _host_stats_fn,
-        outputStructType=HOST_OUT_SCHEMA,
-        stateStructType=HOST_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return (
-        stats.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(
-            # append update rows; totals are monotone so the latest value per
-            # host is max(n_total) — readers take the max per key
-            lambda df, _id: df.write.mode("append").parquet(
-                f"{sink_dir}/host_stats"
-            )
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def start_session_window_stream(
-    stream_df: DataFrame,
-    sink_dir: str,
-    checkpoint_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-):
-    """W2 streaming analog: session windows per host with an inactivity gap —
-    the GTID-opens/XID-closes transaction bracketing restated as event-time
-    sessionization (SURVEY §2.7 W2 'streaming: session_window')."""
-    decoded = decode_pages(stream_df)
-    agg = (
-        decoded.withWatermark("warc_ts", watermark)
-        .groupBy(F.session_window("warc_ts", gap).alias("sw"), F.col("host"))
-        .agg(F.count("*").alias("n_events"), F.sum("raw_len").alias("bytes"))
-        .select(
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "host",
-            "n_events",
-            "bytes",
-        )
-    )
-    return (
-        agg.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", f"{sink_dir}/host_sessions")
-        .start()
     )

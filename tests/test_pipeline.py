@@ -18,7 +18,7 @@ from mysql_cdc_rs_spark.operators.route import ROUTES, write_routes
 from mysql_cdc_rs_spark.operators import stats as S
 from mysql_cdc_rs_spark.plans.pipeline import run_pipeline
 from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
-from mysql_cdc_rs_spark.sources.pages import pages_df, pages_rows
+from mysql_cdc_rs_spark.sources.pages import PAGES_SCHEMA, pages_df, pages_rows
 
 N = 1500
 
@@ -275,6 +275,80 @@ def test_run_record_matches_sink(spark, pages):
         }
 
 
+def test_hostile_pages_through_the_pipeline(spark):
+    """One record per ``ERROR_CLASSES`` entry, next to well-formed pages,
+    through ``run_pipeline``: every input url lands in the routes, each
+    hostile record carries its class, the record's ``error.<class>``
+    counts equal a read-back ``groupBy`` of the sink, and no error falls
+    outside the listed classes."""
+    import zlib
+
+    from mysql_cdc_rs_spark.kernel import registry as R
+    from mysql_cdc_rs_spark.kernel.decode import ERROR_CLASSES
+    from mysql_cdc_rs_spark.kernel.http import MAX_BODY_BYTES
+
+    def rec(headers, body):
+        return f"HTTP/1.1 200 OK\r\n{headers}\r\n\r\n".encode() + body
+
+    # a gzip body one byte past the cap, compressed without materializing it
+    z = zlib.compressobj(9, zlib.DEFLATED, 31)
+    mib = bytes(1 << 20)
+    bomb = b"".join(
+        [z.compress(mib) for _ in range(MAX_BODY_BYTES >> 20)]
+        + [z.compress(b"\0"), z.flush()]
+    )
+    gz = "Content-Type: text/html\r\nContent-Encoding: gzip"
+    HOSTILE = "https://hostile.test/"
+    hostile = {
+        "NULL_PAYLOAD": None,
+        "NO_MAGIC": b"GARBAGE",
+        "NO_HEADER_END": b"HTTP/1.1 200 OK\r\nX: 1",
+        "BAD_STATUS_LINE": b"HTTP/9.9200\r\n\r\nbody",
+        "BAD_GZIP": rec(gz, b"not a gzip stream"),
+        "BODY_TOO_LARGE": rec(gz, bomb),
+        "UNKNOWN_CHARSET": rec("Content-Type: text/html; charset=klingon-8", b"x"),
+        "EXTENSION_ERROR": rec("Content-Type: application/x-crash", b"x"),
+    }
+    assert sorted(hostile) == sorted(ERROR_CLASSES)
+    pages = spark.createDataFrame(
+        [(f"{HOSTILE}{c}", None, raw, None, "en") for c, raw in hostile.items()],
+        PAGES_SCHEMA,
+    ).unionByName(pages_df(spark, 200, seed=42))
+
+    def boom(body, charset):  # noqa: ANN001
+        raise RuntimeError("crashing extension decoder")
+
+    R.register_mime_decoder("application/x-crash")(boom)
+    try:
+        with tempfile.TemporaryDirectory() as base:
+            cat = SinkCatalog(spark, base)
+            record = run_pipeline(pages, cat).metrics
+            routed = cat.read("routed")
+            assert routed.select("url").exceptAll(pages.select("url")).count() == 0
+            assert pages.select("url").exceptAll(routed.select("url")).count() == 0
+            cls = F.substring_index("error", ":", 1)
+            got = {
+                r["url"].rsplit("/", 1)[1]: r["c"]
+                for r in routed.where(F.col("url").startswith(HOSTILE))
+                .select("url", cls.alias("c"))
+                .collect()
+            }
+            assert got == {c: c for c in hostile}
+            read_back = {
+                r["c"]: r["count"]
+                for r in routed.where(F.col("error").isNotNull())
+                .groupBy(cls.alias("c"))
+                .count()
+                .collect()
+            }
+            assert {
+                c: record[f"error.{c}"] for c in ERROR_CLASSES if record[f"error.{c}"]
+            } == read_back
+            assert record["error.other"] == 0
+    finally:
+        R.clear_extensions()
+
+
 def test_charset_variety(decoded):
     cs = {r["charset"] for r in S.charset_stats(decoded).collect()}
     assert {"utf-8", "latin-1", "gbk"} <= cs
@@ -513,8 +587,9 @@ def test_curate_verify_jaccard_rescues_lsh_false_positive(spark):
         ).encode() + body
         return (f"https://ex.com/d/{i}", None, raw, None, "en")
 
-    ddl = "url string, warc_ts timestamp, html binary, text string, lang string"
-    pages = spark.createDataFrame([page(i, t) for i, t in texts.items()], ddl)
+    pages = spark.createDataFrame(
+        [page(i, t) for i, t in texts.items()], PAGES_SCHEMA
+    )
 
     # default (candidacy-only): the false positive is over-dropped
     s0 = curate(pages)

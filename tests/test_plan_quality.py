@@ -57,7 +57,13 @@ def test_decode_is_the_only_python_in_a_pipeline_plan(spark, tmp_path):
 def test_dim_joins_are_broadcast_no_shuffle(pipeline_plan):
     assert pipeline_plan.count("BroadcastHashJoin") == 4  # 2 nodes
     assert "SortMergeJoin" not in pipeline_plan
-    assert "ShuffleExchange" not in pipeline_plan
+    # the one exchange on the fact side is spread's round-robin fan-out; a
+    # shuffle join or a keyed repartition plans a hashpartitioning exchange
+    assert "hashpartitioning" not in pipeline_plan
+    exchanges = re.findall(
+        r"^\(\d+\) Exchange\n(?:Input .*\n)?Arguments: (\w+)", pipeline_plan, re.M
+    )
+    assert exchanges == ["RoundRobinPartitioning"]
 
 
 def test_q1_scan_pushdown_and_pruning(spark):

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mysql_cdc_rs_spark.sources.framing import frame_blobs, pack_records, split_records
-from mysql_cdc_rs_spark.sources.pages import make_record, pages_df
+from mysql_cdc_rs_spark.sources.pages import PAGES_SCHEMA, pages_df
 
 
 def _http(body: bytes, i: int) -> bytes:
@@ -68,116 +68,104 @@ def test_frame_blobs_spark(spark):
 
 # --- streaming ----------------------------------------------------------------
 
-@pytest.mark.parametrize("n_first,n_second", [(600, 400)])
-def test_streaming_matches_batch_and_resumes(spark, n_first, n_second):
+def _html_page(i: int, text: str) -> tuple:
+    """A ``PAGES_SCHEMA`` row: a 200 text/html record with ``text`` as its
+    body, at url ``https://ex.com/d/<i>`` (doc_id ``i``)."""
+    body = f"<html><body>{text}</body></html>".encode()
+    raw = (
+        f"HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n"
+        f"Content-Length: {len(body)}\r\n\r\n"
+    ).encode() + body
+    return (f"https://ex.com/d/{i}", None, raw, None, "en")
+
+
+def _write_chunk(df, src: str, i: int) -> None:
+    """Write ``df`` as the ONE file ``<src>/chunk_<i>.parquet`` with its
+    mtime pinned to ``i``: a file stream under ``maxFilesPerTrigger=1``
+    reads the chunks in index order, one micro-batch each."""
+    stage = f"{src}_stage"
+    df.coalesce(1).write.mode("overwrite").parquet(stage)
+    part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
+    os.makedirs(src, exist_ok=True)
+    target = os.path.join(src, f"chunk_{i:04d}.parquet")
+    os.rename(os.path.join(stage, part), target)
+    os.utime(target, (1_700_000_000 + i, 1_700_000_000 + i))
+
+
+def test_streaming_matches_batch_and_resumes(spark):
+    """The routing stream writes each micro-batch through ``write_routes``
+    into its ``batch_id`` partition.  A batch that crashes after its data
+    write and before its record's commit replays on restart and REWRITES
+    its partition: the routed rows equal ``run_pipeline``'s sink row for
+    row, the per-batch records sum to ``run_pipeline``'s record, and a
+    further restart changes nothing."""
+    from mysql_cdc_rs_spark.operators.route import SINK_COLUMNS
+    from mysql_cdc_rs_spark.plans.pipeline import run_pipeline
+    from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
     from mysql_cdc_rs_spark.streaming.stream_pipeline import (
         start_routing_stream,
-        start_windowed_metrics_stream,
         stream_pages,
     )
 
+    n_batches, per_batch = 3, 400
+    full = pages_df(spark, n_batches * per_batch, seed=42)
+    docid = F.regexp_extract("url", r"/(\d+)$", 1).cast("long")
     with tempfile.TemporaryDirectory() as tmp:
-        src = f"{tmp}/pages"
-        sink = f"{tmp}/sink"
-        ckpt = f"{tmp}/ckpt"
+        src, ckpt = f"{tmp}/pages", f"{tmp}/ckpt"
+        cat = SinkCatalog(spark, f"{tmp}/sink")
+        for i in range(n_batches):
+            _write_chunk(
+                full.filter((docid >= i * per_batch) & (docid < (i + 1) * per_batch)),
+                src,
+                i,
+            )
 
-        # chunk 1 arrives
-        pages_df(spark, n_first, seed=42, num_partitions=4).write.mode(
-            "append"
-        ).parquet(src)
-        q = start_routing_stream(stream_pages(spark, src), sink, f"{ckpt}/route")
-        q.awaitTermination()
-        routed = spark.read.parquet(f"{sink}/routed")
-        assert routed.count() == n_first
+        def drain():
+            start_routing_stream(
+                stream_pages(spark, src, max_files_per_trigger=1), cat, ckpt
+            ).awaitTermination()
 
-        # chunk 2 arrives; restart from checkpoint -> only new files processed
-        pages_df(spark, n_second, seed=99, num_partitions=4).write.mode(
-            "append"
-        ).parquet(src)
-        q2 = start_routing_stream(stream_pages(spark, src), sink, f"{ckpt}/route")
-        q2.awaitTermination()
-        routed = spark.read.parquet(f"{sink}/routed")
-        assert routed.count() == n_first + n_second  # exactly-once, no replay
+        # batch 1 crashes between its data write and its record's commit
+        real_write = cat.write_manifest
 
-        # streaming totals == batch pipeline totals over the same input
-        from mysql_cdc_rs_spark.operators.decode import decode_pages
-        from mysql_cdc_rs_spark.operators.enrich import enrich
+        def crashing_write(name, payload):
+            if name == "routes_1":
+                raise RuntimeError("simulated crash before the batch commit")
+            real_write(name, payload)
 
-        batch_counts = {
-            r["route"]: r["n"]
-            for r in enrich(decode_pages(spark.read.parquet(src)))
-            .groupBy("route")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        stream_counts = {
-            r["route"]: r["n"]
-            for r in routed.groupBy("route").agg(F.count("*").alias("n")).collect()
-        }
-        assert stream_counts == batch_counts
+        cat.write_manifest = crashing_write
+        with pytest.raises(Exception):
+            drain()
+        cat.write_manifest = real_write
+        assert cat.read_manifest("routes_0") is not None
+        assert cat.read_manifest("routes_1") is None
+        assert cat.read("routed").where("batch_id = 1").count() > 0
 
-        # watermarked windowed metrics stream runs and lands rows
-        qm = start_windowed_metrics_stream(
-            stream_pages(spark, src), sink, f"{ckpt}/metrics"
-        )
-        qm.awaitTermination()
-        # append-mode watermark emits only closed windows; with availableNow
-        # over bounded input the final window may be withheld — just assert
-        # the sink materialized with the right schema
-        mdir = f"{sink}/windowed_metrics"
-        assert os.path.isdir(mdir)
+        # restart: batch 1 replays, batch 2 runs
+        drain()
+        batch = SinkCatalog(spark, f"{tmp}/batch")
+        want_record = run_pipeline(spark.read.parquet(src), batch).metrics
+        want = batch.read("routed").select(*SINK_COLUMNS)
 
+        def check():
+            got = cat.read("routed").select(*SINK_COLUMNS)
+            assert got.exceptAll(want).count() == 0
+            assert want.exceptAll(got).count() == 0
+            records = [
+                cat.read_manifest(f"routes_{b}")["record"] for b in range(n_batches)
+            ]
+            assert cat.read_manifest(f"routes_{n_batches}") is None
+            fold = {"first_seen": min, "last_seen": max}
+            summed = {
+                k: fold.get(k, sum)(r[k] for r in records) for k in want_record
+            }
+            assert summed == want_record
+            return records
 
-def test_streaming_stateful_host_stats(spark):
-    from mysql_cdc_rs_spark.streaming.stream_pipeline import (
-        start_host_stats_stream,
-        stream_pages,
-    )
-
-    with tempfile.TemporaryDirectory() as tmp:
-        src = f"{tmp}/pages"
-        sink = f"{tmp}/sink"
-        pages_df(spark, 500, seed=42, num_partitions=8).write.parquet(src)
-        q = start_host_stats_stream(
-            stream_pages(spark, src, max_files_per_trigger=3),
-            sink,
-            f"{tmp}/ckpt",
-        )
-        q.awaitTermination()
-        stats = spark.read.parquet(f"{sink}/host_stats")
-        # latest value per host (totals are monotone across updates)
-        final = (
-            stats.groupBy("host").agg(F.max("n_total").alias("n")).collect()
-        )
-        got_total = sum(r["n"] for r in final)
-        assert got_total == 500
-
-
-def test_streaming_session_windows(spark):
-    from mysql_cdc_rs_spark.streaming.stream_pipeline import (
-        start_session_window_stream,
-        stream_pages,
-    )
-
-    with tempfile.TemporaryDirectory() as tmp:
-        src = f"{tmp}/pages"
-        sink = f"{tmp}/sink"
-        pages_df(spark, 400, seed=42, num_partitions=4).write.parquet(src)
-        q = start_session_window_stream(
-            stream_pages(spark, src), sink, f"{tmp}/ckpt", gap="6 hours",
-            watermark="0 seconds",
-        )
-        q.awaitTermination()
-        sessions = spark.read.parquet(f"{sink}/host_sessions")
-        rows = sessions.collect()
-        assert len(rows) > 0
-        assert all(r["session_end"] >= r["session_start"] for r in rows)
-        # append mode emits only watermark-CLOSED sessions; the handful of
-        # sessions still open at end-of-stream are withheld (correct
-        # watermark semantics), so emitted counts sum to <= input and must
-        # cover nearly all of it with a 6h gap over a 30-day span
-        total = sum(r["n_events"] for r in rows)
-        assert 380 <= total <= 400
+        records = check()
+        # a second restart finds no new input and changes nothing
+        drain()
+        assert check() == records
 
 
 def test_rate_source_stream_matches_batch(spark):
@@ -189,28 +177,29 @@ def test_rate_source_stream_matches_batch(spark):
     from mysql_cdc_rs_spark.operators.decode import decode_pages
     from mysql_cdc_rs_spark.operators.enrich import enrich
     from mysql_cdc_rs_spark.operators.route import route_table
+    from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
     from mysql_cdc_rs_spark.streaming.stream_pipeline import (
         start_routing_stream,
         stream_pages_rate,
     )
 
     with tempfile.TemporaryDirectory() as tmp:
-        sink = f"{tmp}/sink"
+        cat = SinkCatalog(spark, f"{tmp}/sink")
         st = stream_pages_rate(spark, rows_per_batch=120, seed=7)
-        q = start_routing_stream(st, sink, f"{tmp}/ckpt", available_now=False)
+        q = start_routing_stream(st, cat, f"{tmp}/ckpt", available_now=False)
         try:
             deadline = time.time() + 120
             n = 0
             while time.time() < deadline and n < 120:
                 try:
-                    n = spark.read.parquet(f"{sink}/routed").count()
+                    n = cat.read("routed").count()
                 except Exception:
                     n = 0
                 time.sleep(1)
         finally:
             q.stop()
         assert n >= 120  # at least the first micro-batch committed
-        routed = spark.read.parquet(f"{sink}/routed")
+        routed = cat.read("routed")
         # rate values are contiguous from 0 -> the first 120 pages must be
         # row-identical to the batch pipeline over the same (seed, i) range
         batch = route_table(enrich(decode_pages(pages_df(spark, 120, seed=7))))
@@ -336,22 +325,13 @@ def test_streaming_curation_drops_cross_batch_dups(spark):
         "rivers mountains valleys glaciers meadows forests deserts " * 2
     )
 
-    def page(i, text):
-        body = f"<html><body>{text}</body></html>".encode()
-        raw = (
-            f"HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n"
-            f"Content-Length: {len(body)}\r\n\r\n"
-        ).encode() + body
-        return (f"https://ex.com/d/{i}", None, raw, None, "en")
-
-    ddl = "url string, warc_ts timestamp, html binary, text string, lang string"
     with tempfile.TemporaryDirectory() as tmp:
         src = f"{tmp}/pages"
         cat = SinkCatalog(spark, f"{tmp}/cur")
         # batch 1: the original + one unrelated doc
-        spark.createDataFrame([page(1, base), page(2, uniq)], ddl).coalesce(
-            1
-        ).write.mode("append").parquet(src)
+        spark.createDataFrame(
+            [_html_page(1, base), _html_page(2, uniq)], PAGES_SCHEMA
+        ).coalesce(1).write.mode("append").parquet(src)
         q = start_curation_stream(
             stream_pages(spark, src), cat, f"{tmp}/ckpt", min_tokens=10
         )
@@ -362,7 +342,8 @@ def test_streaming_curation_drops_cross_batch_dups(spark):
             "gravity spectra redshift parallax photometry occultation " * 2
         )
         spark.createDataFrame(
-            [page(100, base + " tiny tail"), page(101, fresh)], ddl
+            [_html_page(100, base + " tiny tail"), _html_page(101, fresh)],
+            PAGES_SCHEMA,
         ).coalesce(1).write.mode("append").parquet(src)
         q2 = start_curation_stream(
             stream_pages(spark, src), cat, f"{tmp}/ckpt", min_tokens=10
@@ -387,9 +368,9 @@ def test_streaming_curation_drops_cross_batch_dups(spark):
         gen = spark.table(cat.read_manifest("seen_compact")["table"])
         distinct = gen.select("band_id", "bucket").distinct().count()
         assert after == gen.count() == distinct <= before
-        spark.createDataFrame([page(200, uniq + " late copy")], ddl).coalesce(
-            1
-        ).write.mode("append").parquet(src)
+        spark.createDataFrame(
+            [_html_page(200, uniq + " late copy")], PAGES_SCHEMA
+        ).coalesce(1).write.mode("append").parquet(src)
         q3 = start_curation_stream(
             stream_pages(spark, src), cat, f"{tmp}/ckpt", min_tokens=10
         )
@@ -534,14 +515,6 @@ def test_compact_seen_buckets_crash_safe(spark):
         stream_pages,
     )
 
-    def page(i, text):
-        body = f"<html><body>{text}</body></html>".encode()
-        raw = (
-            f"HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n"
-            f"Content-Length: {len(body)}\r\n\r\n"
-        ).encode() + body
-        return (f"https://ex.com/d/{i}", None, raw, None, "en")
-
     t1 = (
         "the quick brown fox jumps over the lazy dog again and again "
         "while seven wizards mix tricky potions for the annual fair " * 2
@@ -550,7 +523,6 @@ def test_compact_seen_buckets_crash_safe(spark):
         "completely different vocabulary nothing shared at all here "
         "rivers mountains valleys glaciers meadows forests deserts " * 2
     )
-    ddl = "url string, warc_ts timestamp, html binary, text string, lang string"
     with tempfile.TemporaryDirectory() as tmp:
         src = f"{tmp}/pages"
         cat = SinkCatalog(spark, f"{tmp}/cur")
@@ -558,7 +530,7 @@ def test_compact_seen_buckets_crash_safe(spark):
         def feed(*batches, compact_every=None):
             # one source file per batch, one micro-batch per file
             for rows in batches:
-                spark.createDataFrame(rows, ddl).coalesce(1).write.mode(
+                spark.createDataFrame(rows, PAGES_SCHEMA).coalesce(1).write.mode(
                     "append"
                 ).parquet(src)
             q = start_curation_stream(
@@ -570,8 +542,8 @@ def test_compact_seen_buckets_crash_safe(spark):
             )
             q.awaitTermination()
 
-        feed([page(1, t1), page(2, t2)], compact_every=1)  # major: the base
-        feed([page(3, t1 + " x"), page(4, t2 + " y")])  # batch 1: the tail
+        feed([_html_page(1, t1), _html_page(2, t2)], compact_every=1)  # major: the base
+        feed([_html_page(3, t1 + " x"), _html_page(4, t2 + " y")])  # batch 1: the tail
         base = cat.read_manifest("seen_compact")
         assert base["gen"] == 1 and base["minors"] == []
 
@@ -579,7 +551,8 @@ def test_compact_seen_buckets_crash_safe(spark):
             quality_corpus(
                 decode_pages(
                     spark.createDataFrame(
-                        [page(60, t1 + " z"), page(61, t2 + " w")], ddl
+                        [_html_page(60, t1 + " z"), _html_page(61, t2 + " w")],
+                        PAGES_SCHEMA,
                     )
                 ),
                 10,
@@ -628,11 +601,11 @@ def test_compact_seen_buckets_crash_safe(spark):
 
         # stack deltas up to the cap, then leave one batch in the tail
         feed(
-            *([page(10 + i, t2 + f" extra{i}")] for i in range(MAX_MINORS - 1)),
+            *([_html_page(10 + i, t2 + f" extra{i}")] for i in range(MAX_MINORS - 1)),
             compact_every=1,
         )
         assert len(cat.read_manifest("seen_compact")["minors"]) == MAX_MINORS
-        feed([page(20, t2 + " more")])
+        feed([_html_page(20, t2 + " more")])
         merged = _gen_tables(cat.read_manifest("seen_compact"))
 
         # (b) crash in the cleanup after the promoted MAJOR's commit
@@ -655,8 +628,8 @@ def test_compact_seen_buckets_crash_safe(spark):
         # a late near-dup of doc 1 still drops, fresh content survives
         feed(
             [
-                page(50, t1 + " tail"),
-                page(
+                _html_page(50, t1 + " tail"),
+                _html_page(
                     51,
                     "planets comets meteors asteroids moons rings orbits "
                     "eccentricity inclination perihelion aphelion "
@@ -784,15 +757,6 @@ def test_streaming_curation_seen_replay_not_double_counted(spark):
         "torn batch so all of them share one bucket per band " * 3
     )
 
-    def page(i):
-        body = f"<html><body>{text}</body></html>".encode()
-        raw = (
-            f"HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n"
-            f"Content-Length: {len(body)}\r\n\r\n"
-        ).encode() + body
-        return (f"https://ex.com/d/{i}", None, raw, None, "en")
-
-    ddl = "url string, warc_ts timestamp, html binary, text string, lang string"
     with tempfile.TemporaryDirectory() as tmp:
         src = f"{tmp}/pages"
         ckpt = f"{tmp}/ckpt"
@@ -800,7 +764,7 @@ def test_streaming_curation_seen_replay_not_double_counted(spark):
 
         # torn batch: 511 members of one near-dup class (positions 1..511)
         spark.createDataFrame(
-            [page(i) for i in range(MAX_BUCKET - 1)], ddl
+            [_html_page(i, text) for i in range(MAX_BUCKET - 1)], PAGES_SCHEMA
         ).coalesce(1).write.mode("append").parquet(src)
 
         real_write = cat.write_manifest
@@ -835,7 +799,7 @@ def test_streaming_curation_seen_replay_not_double_counted(spark):
         # next two arrivals of the same class: 512 drops (== cap), 513
         # survives (> cap).  Doubled priors would keep BOTH.
         spark.createDataFrame(
-            [page(600), page(601)], ddl
+            [_html_page(600, text), _html_page(601, text)], PAGES_SCHEMA
         ).coalesce(1).write.mode("append").parquet(src)
         q = start_curation_stream(
             stream_pages(spark, src), cat, ckpt, min_tokens=10
@@ -875,24 +839,15 @@ def test_streaming_curation_out_of_order_arrival(spark):
         "gravity spectra redshift parallax photometry occultation " * 2
     )
 
-    def page(i, text):
-        body = f"<html><body>{text}</body></html>".encode()
-        raw = (
-            f"HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n"
-            f"Content-Length: {len(body)}\r\n\r\n"
-        ).encode() + body
-        return (f"https://ex.com/d/{i}", None, raw, None, "en")
-
     # doc 10 and doc 5 are near-dups of each other; 10 ARRIVES first
     # (batch 1) even though 5 has the lower doc_id (batch 2)
-    rows_b1 = [page(10, shared), page(2, uniq_a)]
-    rows_b2 = [page(5, shared + " tiny tail"), page(7, uniq_b)]
-    ddl = "url string, warc_ts timestamp, html binary, text string, lang string"
+    rows_b1 = [_html_page(10, shared), _html_page(2, uniq_a)]
+    rows_b2 = [_html_page(5, shared + " tiny tail"), _html_page(7, uniq_b)]
     with tempfile.TemporaryDirectory() as tmp:
         src = f"{tmp}/pages"
         cat = SinkCatalog(spark, f"{tmp}/cur")
         for rows in (rows_b1, rows_b2):
-            spark.createDataFrame(rows, ddl).coalesce(1).write.mode(
+            spark.createDataFrame(rows, PAGES_SCHEMA).coalesce(1).write.mode(
                 "append"
             ).parquet(src)
             q = start_curation_stream(
@@ -903,7 +858,7 @@ def test_streaming_curation_out_of_order_arrival(spark):
             r["doc_id"] for r in read_curated(cat).select("doc_id").collect()
         }
 
-        full = spark.createDataFrame(rows_b1 + rows_b2, ddl)
+        full = spark.createDataFrame(rows_b1 + rows_b2, PAGES_SCHEMA)
         surv = curate(full, min_tokens=10)
         batch_set = {r["doc_id"] for r in surv.select("doc_id").collect()}
         release(surv)
@@ -940,23 +895,14 @@ def test_streaming_curation_degenerate_bucket_cap_matches_batch(spark):
     n = MAX_BUCKET + 8  # 520
     boiler = "lorem ipsum dolor sit amet consectetur adipiscing elit sed do"
 
-    def page(i):
-        body = f"<html><body>{boiler}</body></html>".encode()
-        raw = (
-            f"HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n"
-            f"Content-Length: {len(body)}\r\n\r\n"
-        ).encode() + body
-        return (f"https://ex.com/d/{i}", None, raw, None, "en")
-
-    ddl = "url string, warc_ts timestamp, html binary, text string, lang string"
-    rows = [page(i) for i in range(1, n + 1)]
+    rows = [_html_page(i, boiler) for i in range(1, n + 1)]
     with tempfile.TemporaryDirectory() as tmp:
         src = f"{tmp}/pages"
         cat = SinkCatalog(spark, f"{tmp}/cur")
         # two ordered micro-batches: ids 1..300, then 301..520 (the cap
         # boundary falls inside batch 2 — prior count + in-batch rank)
         for chunk in (rows[:300], rows[300:]):
-            spark.createDataFrame(chunk, ddl).coalesce(1).write.mode(
+            spark.createDataFrame(chunk, PAGES_SCHEMA).coalesce(1).write.mode(
                 "append"
             ).parquet(src)
             q = start_curation_stream(
@@ -967,7 +913,7 @@ def test_streaming_curation_degenerate_bucket_cap_matches_batch(spark):
             r["doc_id"] for r in read_curated(cat).select("doc_id").collect()
         }
 
-        surv = curate(spark.createDataFrame(rows, ddl), min_tokens=5)
+        surv = curate(spark.createDataFrame(rows, PAGES_SCHEMA), min_tokens=5)
         batch_set = {r["doc_id"] for r in surv.select("doc_id").collect()}
         release(surv)
 
@@ -999,20 +945,12 @@ def test_streaming_curation_compaction_cadence(spark):
         src = f"{tmp}/pages"
         ckpt = f"{tmp}/ckpt"
         cat = SinkCatalog(spark, f"{tmp}/cur")
-        os.makedirs(src)
         # 4 doc_id-ordered chunk files with pinned mtimes -> 4 ordered
         # micro-batches under maxFilesPerTrigger=1 in ONE drain
         for i in range(4):
-            stage = f"{tmp}/stage"
-            full.filter(
-                (docid >= i * 400) & (docid < (i + 1) * 400)
-            ).coalesce(1).write.mode("overwrite").parquet(stage)
-            part = next(
-                f for f in os.listdir(stage) if f.endswith(".parquet")
+            _write_chunk(
+                full.filter((docid >= i * 400) & (docid < (i + 1) * 400)), src, i
             )
-            target = os.path.join(src, f"chunk_{i:04d}.parquet")
-            os.rename(os.path.join(stage, part), target)
-            os.utime(target, (1_700_000_000 + i, 1_700_000_000 + i))
 
         q = start_curation_stream(
             stream_pages(spark, src, max_files_per_trigger=1),
@@ -1087,19 +1025,11 @@ def test_streaming_curation_minor_compaction_lsm(spark):
         src = f"{tmp}/pages"
         ckpt = f"{tmp}/ckpt"
         cat = SinkCatalog(spark, f"{tmp}/cur")
-        os.makedirs(src)
 
         def add_chunk(i: int) -> None:
-            stage = f"{tmp}/stage"
-            full.filter(
-                (docid >= i * 400) & (docid < (i + 1) * 400)
-            ).coalesce(1).write.mode("overwrite").parquet(stage)
-            part = next(
-                f for f in os.listdir(stage) if f.endswith(".parquet")
+            _write_chunk(
+                full.filter((docid >= i * 400) & (docid < (i + 1) * 400)), src, i
             )
-            target = os.path.join(src, f"chunk_{i:04d}.parquet")
-            os.rename(os.path.join(stage, part), target)
-            os.utime(target, (1_700_000_000 + i, 1_700_000_000 + i))
 
         def drain() -> None:
             q = start_curation_stream(
