@@ -1,4 +1,4 @@
-"""Arrow UDFs wrapping the pure-Python kernel.
+"""Arrow UDFs wrapping the pure-Python kernel, and the one row map.
 
 Hot-path rule (BASELINE.json input_hint): NO per-row Python outside these
 Arrow-batched UDFs.  Each UDF receives a ``pyarrow.Array`` per Arrow batch
@@ -10,6 +10,10 @@ reference's per-event decode loop
 move JVM<->Python as Arrow buffers, not pickled rows, with no pandas frame
 on either side.
 
+Every other executor-side Python step is a row map through ``map_rows``:
+one ``mapInArrow`` idiom, Arrow in and Arrow out, with the output schema
+declared once as a DDL string.
+
 Errors NEVER raise: they surface in the ``error`` struct field and are
 filtered to the error route (mirrors the reference's skip-don't-crash
 policy, /root/reference/binlog/src/decoder/event_decoder.rs:310-330).
@@ -19,7 +23,7 @@ from __future__ import annotations
 
 import pyarrow as pa
 from pyspark.sql.functions import arrow_udf
-from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 from pyspark.sql.types import (
     IntegerType,
     MapType,
@@ -103,3 +107,27 @@ def jsonb_path_udf(payload: pa.Array, path: pa.Array) -> pa.Array:
         except Exception:
             out.append(None)
     return pa.array(out, pa.string())
+
+
+def map_rows(df, fn, ddl: str):
+    """``df`` -> DataFrame[``ddl``]: ``fn(*row)`` per input row, in ``df``'s
+    column order, returns an iterable of output tuples in ``ddl``'s column
+    order — none, one or many per input row.
+
+    A ``mapInArrow``: each Arrow batch's columns arrive as Python values
+    (``to_pylist``: ints, bytes, datetimes, None) and the batch's
+    output rows leave as one ``RecordBatch`` of ``ddl``'s Arrow schema,
+    empty when ``fn`` emitted nothing.
+    """
+    schema = to_arrow_schema(StructType.fromDDL(ddl))
+
+    def run(batches):
+        for batch in batches:
+            rows = zip(*(col.to_pylist() for col in batch.columns))
+            out = [r for row in rows for r in fn(*row)]
+            cols = list(zip(*out)) or [()] * len(schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
+            )
+
+    return df.mapInArrow(run, ddl)

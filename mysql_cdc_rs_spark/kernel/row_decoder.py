@@ -7,7 +7,7 @@ fixture semantics /root/reference/tests/src/binlog/test_8_0.rs:72-135).
 Re-implemented from the public MySQL row-based-replication format.
 
 Used for binlog-style payloads (golden tests mirror the reference fixtures)
-and exposed to Spark as a mapInPandas decoder; the web-pipeline hot path
+and run in Spark through ``functions.udfs.map_rows``; the web-pipeline hot path
 doesn't need it, but reference users decoding actual row events do.
 """
 

@@ -14,10 +14,9 @@ libraries):
   plumbing (schema, Arrow batch shape, partitioning) is identical, so a
   future ffmpeg-style decoder swaps in without touching the plan.
 
-Scale design: feature extraction is mapInPandas over the binary column —
-embarrassingly parallel, no shuffle; the output schema carries the feature
-as array<float> ready for the similarity operators.  Inside each Arrow
-batch, rows iterate via zip over column arrays (never pdf.iterrows()).
+Scale design: feature extraction is a ``functions.udfs.map_rows`` over the
+binary column — embarrassingly parallel, no shuffle; the output schema
+carries the feature as array<float> ready for the similarity operators.
 """
 
 from __future__ import annotations
@@ -25,6 +24,8 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
+
+from mysql_cdc_rs_spark.functions.udfs import map_rows
 
 FEATURE_DIM = 8
 
@@ -361,22 +362,9 @@ def extract_features(
     id_col: str = "id",
 ):
     """binary column -> (id, mime, n_bytes, decode_status, feature)."""
-    import pandas as pd
+    def features(rid, blob, mime):
+        blob = blob if blob is not None else b""
+        status, _, feat = decode_blob(blob, mime)
+        return [(rid, mime, len(blob), status, feat)]
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for rid, blob, mime in zip(
-                pdf[id_col], pdf[blob_col], pdf[mime_col]
-            ):
-                blob = bytes(blob) if blob is not None else b""
-                status, _, feat = decode_blob(blob, mime)
-                rows.append((int(rid), mime, len(blob), status, feat))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "mime", "n_bytes", "decode_status", "feature"],
-            )
-
-    return df.select(id_col, blob_col, mime_col).mapInPandas(
-        gen, schema=OUT_SCHEMA
-    )
+    return map_rows(df.select(id_col, blob_col, mime_col), features, OUT_SCHEMA)

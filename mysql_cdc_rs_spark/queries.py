@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from mysql_cdc_rs_spark.functions.columns import mysql_date, mysql_datetime, mysql_year
+from mysql_cdc_rs_spark.functions.udfs import map_rows
 from mysql_cdc_rs_spark.operators import dedup as DD
 from mysql_cdc_rs_spark.operators import diff as DF
 from mysql_cdc_rs_spark.operators import similarity as SIM
@@ -1420,8 +1421,6 @@ def _c12(spark, sf):
     9-digits-per-4-bytes wire format, decoded back by the same code the
     decode UDFs use, and compared against an integer-constructed oracle
     (parity: /root/reference/binlog/src/row/decimal.rs:10-106)."""
-    import pandas as pd
-
     from mysql_cdc_rs_spark.kernel.mysql_decimal import (
         encode_decimal,
         parse_decimal,
@@ -1431,19 +1430,14 @@ def _c12(spark, sf):
         "o_orderkey", e_units(F.col("o_totalprice"), 2).alias("e2")
     )
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for k, e2 in zip(pdf["o_orderkey"], pdf["e2"]):
-                s = f"{int(e2) // 100}.{int(e2) % 100:02d}"
-                wire = encode_decimal(s, 18, 2)  # -> binary wire format
-                decoded, _ = parse_decimal(wire, 0, 18, 2)  # <- and back
-                out.append((int(k), decoded))
-            yield pd.DataFrame(out, columns=["o_orderkey", "decimal_str"])
+    def rt(k, e2):
+        wire = encode_decimal(f"{e2 // 100}.{e2 % 100:02d}", 18, 2)  # -> wire
+        decoded, _ = parse_decimal(wire, 0, 18, 2)  # <- and back
+        return [(k, decoded)]
 
-    return orders.mapInPandas(
-        gen, schema="o_orderkey long, decimal_str string"
-    ).orderBy("o_orderkey")
+    return map_rows(orders, rt, "o_orderkey long, decimal_str string").orderBy(
+        "o_orderkey"
+    )
 
 
 @q(
@@ -1465,8 +1459,6 @@ def _c1314(spark, sf):
     /root/reference/binlog/src/column/decoders/json.rs:229-305)."""
     import json
 
-    import pandas as pd
-
     from mysql_cdc_rs_spark.functions.udfs import jsonb_decode_udf
     from mysql_cdc_rs_spark.kernel.jsonb import encode_jsonb
 
@@ -1474,15 +1466,11 @@ def _c1314(spark, sf):
         "event_id", "props"
     )
 
-    def to_wire(batches):
-        for pdf in batches:
-            out = [
-                (int(i), encode_jsonb(json.loads(p)))
-                for i, p in zip(pdf["event_id"], pdf["props"])
-            ]
-            yield pd.DataFrame(out, columns=["event_id", "jsonb"])
-
-    wire = ev.mapInPandas(to_wire, schema="event_id long, jsonb binary")
+    wire = map_rows(
+        ev,
+        lambda i, p: [(i, encode_jsonb(json.loads(p)))],
+        "event_id long, jsonb binary",
+    )
     decoded = wire.select(
         "event_id", jsonb_decode_udf("jsonb").alias("canonical_json")
     )
@@ -1512,8 +1500,6 @@ def _c810(spark, sf):
     /root/reference/binlog/src/utils.rs:351-399,450-470).  fsp=2 keeps 10ms
     units, so the oracle truncates epoch micros the same way the encoder
     does."""
-    import pandas as pd
-
     from mysql_cdc_rs_spark.kernel.row_decoder import (
         T_TIME2,
         T_TIMESTAMP2,
@@ -1530,31 +1516,19 @@ def _c810(spark, sf):
         )
     )
 
-    def rt(batches):
-        for pdf in batches:
-            out = []
-            for eid, us in zip(pdf["event_id"], pdf["us"]):
-                eid, us = int(eid), int(us)
-                # TIME2 fsp=4 -> 2 frac bytes, 100us units
-                tcell = (eid % 24, (eid * 7) % 60, (eid * 13) % 60,
-                         (eid % 10000) * 100)
-                fsp = 2 if eid % 2 == 0 else 6
-                cells, _ = decode_row(
-                    encode_row([tcell, us], [T_TIME2, T_TIMESTAMP2], [4, fsp]),
-                    [T_TIME2, T_TIMESTAMP2], [4, fsp],
-                )
-                h, m, s, frac = cells[0]
-                out.append((
-                    eid,
-                    (h * 3600 + m * 60 + s) * 1_000_000 + frac,
-                    cells[1],
-                ))
-            yield pd.DataFrame(
-                out, columns=["event_id", "time_micros", "epoch_micros_rt"]
-            )
+    def rt(eid, us):
+        # TIME2 fsp=4 -> 2 frac bytes, 100us units
+        tcell = (eid % 24, (eid * 7) % 60, (eid * 13) % 60, (eid % 10000) * 100)
+        fsp = 2 if eid % 2 == 0 else 6
+        cells, _ = decode_row(
+            encode_row([tcell, us], [T_TIME2, T_TIMESTAMP2], [4, fsp]),
+            [T_TIME2, T_TIMESTAMP2], [4, fsp],
+        )
+        h, m, s, frac = cells[0]
+        return [(eid, (h * 3600 + m * 60 + s) * 1_000_000 + frac, cells[1])]
 
-    return ev.mapInPandas(
-        rt, schema="event_id long, time_micros long, epoch_micros_rt long"
+    return map_rows(
+        ev, rt, "event_id long, time_micros long, epoch_micros_rt long"
     ).orderBy("event_id")
 
 
@@ -1600,8 +1574,6 @@ def _p3(spark, sf):
     every 11th row probes the F5 skip-don't-crash policy: a legacy
     Decimal=0 cell must come back as a counted UNSUPPORTED_TYPE_0 error
     row via decode_row_safe, never an exception."""
-    import pandas as pd
-
     from mysql_cdc_rs_spark.kernel import row_decoder as RD
 
     types = [RD.T_LONGLONG, RD.T_STRING, RD.T_NEWDECIMAL, RD.T_DATE,
@@ -1615,49 +1587,35 @@ def _p3(spark, sf):
         )
     )
 
-    def rt(batches):
-        for pdf in batches:
-            out = []
-            for eid, et, val, ts, props in zip(
-                pdf["event_id"], pdf["event_type"], pdf["value"],
-                pdf["ts"], pdf["props"],
-            ):
-                eid = int(eid)
-                e2 = int(val * 100 + 0.5)
-                ordv = (None if eid % 7 == 0
-                        else _ENUM_LABELS.index(et) + 1)
-                cells_in = [
-                    eid, ordv, f"{e2 // 100}.{e2 % 100:02d}",
-                    (ts.year, ts.month, ts.day), ts.year, eid % 8, props,
-                    (ts.year, ts.month, ts.day),
-                    [eid % 100, (eid * 3) % 100],
-                ]
-                cells, _ = RD.decode_row(
-                    RD.encode_row(cells_in, types, meta), types, meta
-                )
-                y, mo, d = cells[3]
-                ny, nmo, nd = cells[7]
-                err = None
-                if eid % 11 == 0:
-                    # garbage probe: legacy Decimal=0 cell -> error ROW
-                    _, err = RD.decode_row_safe(b"\x00\x01", [RD.T_DECIMAL], [0])
-                out.append((
-                    cells[0], cells[1], cells[2],
-                    f"{y:04d}-{mo:02d}-{d:02d}", cells[4], cells[5],
-                    cells[6], f"{ny:04d}-{nmo:02d}-{nd:02d}",
-                    sum(cells[8]), err,
-                ))
-            yield pd.DataFrame(out, columns=[
-                "event_id", "etype_ord", "value_str", "d", "yr",
-                "set_mask", "props_rt", "nd", "arr_sum", "decode_err",
-            ])
+    def rt(eid, et, val, ts, props):
+        e2 = int(val * 100 + 0.5)
+        ordv = None if eid % 7 == 0 else _ENUM_LABELS.index(et) + 1
+        cells_in = [
+            eid, ordv, f"{e2 // 100}.{e2 % 100:02d}",
+            (ts.year, ts.month, ts.day), ts.year, eid % 8, props,
+            (ts.year, ts.month, ts.day),
+            [eid % 100, (eid * 3) % 100],
+        ]
+        cells, _ = RD.decode_row(RD.encode_row(cells_in, types, meta), types, meta)
+        y, mo, d = cells[3]
+        ny, nmo, nd = cells[7]
+        err = None
+        if eid % 11 == 0:
+            # garbage probe: legacy Decimal=0 cell -> error ROW
+            _, err = RD.decode_row_safe(b"\x00\x01", [RD.T_DECIMAL], [0])
+        return [(
+            cells[0], cells[1], cells[2],
+            f"{y:04d}-{mo:02d}-{d:02d}", cells[4], cells[5],
+            cells[6], f"{ny:04d}-{nmo:02d}-{nd:02d}",
+            sum(cells[8]), err,
+        )]
 
     return ordered(
-        ev.mapInPandas(
-            rt,
-            schema="event_id long, etype_ord int, value_str string, d string, "
-                   "yr int, set_mask int, props_rt string, nd string, "
-                   "arr_sum int, decode_err string",
+        map_rows(
+            ev, rt,
+            "event_id long, etype_ord int, value_str string, d string, "
+            "yr int, set_mask int, props_rt string, nd string, "
+            "arr_sum int, decode_err string",
         ),
         "event_id",
     )
@@ -1691,8 +1649,6 @@ def _p8_labels(spark, sf):
     label ('error' absent from the dim) takes the error route instead of
     dropping the row (J1 semantics); SET masks expand to comma-joined
     labels in bit order."""
-    import pandas as pd
-
     from mysql_cdc_rs_spark.kernel import row_decoder as RD
 
     types = [RD.T_LONGLONG, RD.T_STRING, RD.T_STRING]
@@ -1702,23 +1658,12 @@ def _p8_labels(spark, sf):
         "event_id", "event_type"
     )
 
-    def rt(batches):
-        for pdf in batches:
-            out = []
-            for eid, et in zip(pdf["event_id"], pdf["event_type"]):
-                eid = int(eid)
-                cells_in = [eid, _ENUM_LABELS.index(et) + 1, eid % 8]
-                cells, _ = RD.decode_row(
-                    RD.encode_row(cells_in, types, meta), types, meta
-                )
-                out.append((cells[0], cells[1], cells[2]))
-            yield pd.DataFrame(
-                out, columns=["event_id", "ordinal", "set_mask"]
-            )
+    def rt(eid, et):
+        cells_in = [eid, _ENUM_LABELS.index(et) + 1, eid % 8]
+        cells, _ = RD.decode_row(RD.encode_row(cells_in, types, meta), types, meta)
+        return [tuple(cells)]
 
-    decoded = ev.mapInPandas(
-        rt, schema="event_id long, ordinal int, set_mask int"
-    )
+    decoded = map_rows(ev, rt, "event_id long, ordinal int, set_mask int")
 
     # labels dimension deliberately missing ordinal 2 ('error')
     dim = literal_df(
@@ -1765,45 +1710,30 @@ def _c1(spark, sf):
     string, big-endian BIT cell, length-prefixed BLOB — written and read
     back by the kernel codecs on executors (parity:
     /root/reference/binlog/src/utils.rs read_len_enc_num & friends)."""
-    import pandas as pd
-
     from mysql_cdc_rs_spark.kernel import varint as V
 
     ev = load(spark, sf, "events").filter(F.col("event_id") < 5000).select(
         "event_id", "user_id", "props"
     )
 
-    def rt(batches):
-        for pdf in batches:
-            out = []
-            for eid, uid, props in zip(
-                pdf["event_id"], pdf["user_id"], pdf["props"]
-            ):
-                eid, uid = int(eid), int(uid)
-                blob = f"B{uid}".encode()
-                buf = (
-                    V.write_len_enc_num(eid)
-                    + V.write_len_enc_string(props.encode())
-                    + (eid % 256).to_bytes(1, "big")           # BIT(8)
-                    + len(blob).to_bytes(2, "little") + blob   # BLOB w=2
-                )
-                id_rt, pos = V.read_len_enc_num(buf, 0)
-                s_rt, pos = V.read_len_enc_string(buf, pos)
-                bits, pos = V.parse_bit(buf, pos, 8)
-                blob_rt, pos = V.parse_blob(buf, pos, 2)
-                assert pos == len(buf)
-                out.append((
-                    eid, id_rt, s_rt.decode(), sum(bits),
-                    blob_rt.decode(),
-                ))
-            yield pd.DataFrame(out, columns=[
-                "event_id", "id_rt", "props_rt", "bit_ones", "blob_rt",
-            ])
+    def rt(eid, uid, props):
+        blob = f"B{uid}".encode()
+        buf = (
+            V.write_len_enc_num(eid)
+            + V.write_len_enc_string(props.encode())
+            + (eid % 256).to_bytes(1, "big")           # BIT(8)
+            + len(blob).to_bytes(2, "little") + blob   # BLOB w=2
+        )
+        id_rt, pos = V.read_len_enc_num(buf, 0)
+        s_rt, pos = V.read_len_enc_string(buf, pos)
+        bits, pos = V.parse_bit(buf, pos, 8)
+        blob_rt, pos = V.parse_blob(buf, pos, 2)
+        assert pos == len(buf)
+        return [(eid, id_rt, s_rt.decode(), sum(bits), blob_rt.decode())]
 
-    return ev.mapInPandas(
-        rt,
-        schema="event_id long, id_rt long, props_rt string, bit_ones int, "
-               "blob_rt string",
+    return map_rows(
+        ev, rt,
+        "event_id long, id_rt long, props_rt string, bit_ones int, blob_rt string",
     ).orderBy("event_id")
 
 
@@ -1832,8 +1762,6 @@ def _s7(spark, sf):
     checksum verify)."""
     import hashlib
 
-    import pandas as pd
-
     from mysql_cdc_rs_spark.sources.relay_segments import (
         decode_records,
         encode_record,
@@ -1843,37 +1771,24 @@ def _s7(spark, sf):
         "doc_id"
     )
 
-    def rt(batches):
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                recs = [encode_record(f"p{did}:{i}".encode())
-                        for i in range(3)]
-                if did % 9 == 0:
-                    # corrupt record 1's payload (CRC must catch it)
-                    r = bytearray(recs[1])
-                    r[-1] ^= 0xFF
-                    recs[1] = bytes(r)
-                buf = b"".join(recs)
-                good, errs = [], 0
-                for payload, err in decode_records(buf):
-                    if err is not None:
-                        errs += 1
-                    else:
-                        good.append(payload)
-                out.append((
-                    did, len(good), errs,
-                    hashlib.md5(b"".join(good)).hexdigest(),
-                ))
-            yield pd.DataFrame(out, columns=[
-                "chunk_id", "n_good", "n_crc_errors", "payload_md5",
-            ])
+    def rt(did):
+        recs = [encode_record(f"p{did}:{i}".encode()) for i in range(3)]
+        if did % 9 == 0:
+            # corrupt record 1's payload (CRC must catch it)
+            r = bytearray(recs[1])
+            r[-1] ^= 0xFF
+            recs[1] = bytes(r)
+        good, errs = [], 0
+        for payload, err in decode_records(b"".join(recs)):
+            if err is not None:
+                errs += 1
+            else:
+                good.append(payload)
+        return [(did, len(good), errs, hashlib.md5(b"".join(good)).hexdigest())]
 
-    return docs.mapInPandas(
-        rt,
-        schema="chunk_id long, n_good int, n_crc_errors int, "
-               "payload_md5 string",
+    return map_rows(
+        docs, rt,
+        "chunk_id long, n_good int, n_crc_errors int, payload_md5 string",
     ).orderBy("chunk_id")
 
 
@@ -1926,8 +1841,6 @@ def _f7(spark, sf):
     extracted (schema, table, columns, varchar arg, pk, add/drop ops) must
     equal the arithmetic oracle.  Non-DDL statements are prefiltered
     without parsing (the reference's cost dodge)."""
-    import pandas as pd
-
     from mysql_cdc_rs_spark.kernel.ddl import (
         parse_alter_table,
         parse_create_table,
@@ -1937,43 +1850,34 @@ def _f7(spark, sf):
         (F.col("event_type") == "signup") & (F.col("event_id") < 6000)
     ).select("event_id", "user_id")
 
-    def rt(batches):
-        for pdf in batches:
-            out = []
-            for eid, uid in zip(pdf["event_id"], pdf["user_id"]):
-                eid, uid = int(eid), int(uid)
-                stmt = (
-                    f"CREATE TABLE db{uid % 5}.t_{uid} ("
-                    f"id INT NOT NULL, "
-                    f"name VARCHAR({10 + eid % 90}), "
-                    f"val DECIMAL(12,2), "
-                    f"PRIMARY KEY (id))"
-                )
-                info = parse_create_table(stmt)
-                assert parse_create_table("SELECT 1") is None  # prefilter
-                name_col = next(c for c in info.columns if c.name == "name")
-                alter = parse_alter_table(
-                    f"ALTER TABLE db{uid % 5}.t_{uid} "
-                    f"ADD COLUMN `extra_{eid % 7}` BIGINT NOT NULL, "
-                    f"DROP COLUMN old_{eid % 3}"
-                )
-                assert parse_alter_table("SELECT 1") is None  # prefilter
-                add = alter.add_columns[0]
-                out.append((
-                    eid, info.schema, info.table, len(info.columns),
-                    name_col.type_args[0], ",".join(info.primary_key),
-                    f"{add.name}:{add.type_name}", alter.drop_columns[0],
-                ))
-            yield pd.DataFrame(out, columns=[
-                "event_id", "schema_name", "table_name", "n_cols",
-                "name_len", "pk", "alter_add", "alter_drop",
-            ])
+    def rt(eid, uid):
+        stmt = (
+            f"CREATE TABLE db{uid % 5}.t_{uid} ("
+            f"id INT NOT NULL, "
+            f"name VARCHAR({10 + eid % 90}), "
+            f"val DECIMAL(12,2), "
+            f"PRIMARY KEY (id))"
+        )
+        info = parse_create_table(stmt)
+        assert parse_create_table("SELECT 1") is None  # prefilter
+        name_col = next(c for c in info.columns if c.name == "name")
+        alter = parse_alter_table(
+            f"ALTER TABLE db{uid % 5}.t_{uid} "
+            f"ADD COLUMN `extra_{eid % 7}` BIGINT NOT NULL, "
+            f"DROP COLUMN old_{eid % 3}"
+        )
+        assert parse_alter_table("SELECT 1") is None  # prefilter
+        add = alter.add_columns[0]
+        return [(
+            eid, info.schema, info.table, len(info.columns),
+            name_col.type_args[0], ",".join(info.primary_key),
+            f"{add.name}:{add.type_name}", alter.drop_columns[0],
+        )]
 
-    return ev.mapInPandas(
-        rt,
-        schema="event_id long, schema_name string, table_name string, "
-               "n_cols int, name_len int, pk string, alter_add string, "
-               "alter_drop string",
+    return map_rows(
+        ev, rt,
+        "event_id long, schema_name string, table_name string, n_cols int, "
+        "name_len int, pk string, alter_add string, alter_drop string",
     ).orderBy("event_id")
 
 
@@ -2054,47 +1958,32 @@ def _s4(spark, sf):
     bytes_binlog_reader.rs UnexpectedEof handling)."""
     import hashlib
 
-    import pandas as pd
-
     from mysql_cdc_rs_spark.sources.framing import pack_records, split_records
 
     docs = load(spark, sf, "documents").filter(F.col("doc_id") < 200).select(
         "doc_id"
     )
 
-    def rt(batches):
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                recs = []
-                for i in range(5):
-                    body = f"c{did}r{i}".encode()
-                    head = (
-                        "HTTP/1.1 200 OK\r\n"
-                        "Content-Type: text/plain; charset=utf-8\r\n"
-                        f"Content-Length: {len(body)}\r\n\r\n"
-                    ).encode()
-                    recs.append(head + body)
-                blob = pack_records(recs)
-                if did % 7 == 0:
-                    blob = blob[:-3]  # cut into the last record's body
-                good, err = split_records(blob)
-                bodies = b"".join(
-                    r.split(b"\r\n\r\n", 1)[1] for r in good
-                )
-                out.append((
-                    did, len(good), err,
-                    hashlib.md5(bodies).hexdigest(),
-                ))
-            yield pd.DataFrame(out, columns=[
-                "chunk_id", "n_records", "frame_error", "bodies_md5",
-            ])
+    def rt(did):
+        recs = []
+        for i in range(5):
+            body = f"c{did}r{i}".encode()
+            head = (
+                "HTTP/1.1 200 OK\r\n"
+                "Content-Type: text/plain; charset=utf-8\r\n"
+                f"Content-Length: {len(body)}\r\n\r\n"
+            ).encode()
+            recs.append(head + body)
+        blob = pack_records(recs)
+        if did % 7 == 0:
+            blob = blob[:-3]  # cut into the last record's body
+        good, err = split_records(blob)
+        bodies = b"".join(r.split(b"\r\n\r\n", 1)[1] for r in good)
+        return [(did, len(good), err, hashlib.md5(bodies).hexdigest())]
 
-    return docs.mapInPandas(
-        rt,
-        schema="chunk_id long, n_records int, frame_error string, "
-               "bodies_md5 string",
+    return map_rows(
+        docs, rt,
+        "chunk_id long, n_records int, frame_error string, bodies_md5 string",
     ).orderBy("chunk_id")
 
 
@@ -2169,40 +2058,30 @@ def _p4_deflate(spark, sf):
     import hashlib
     import zlib
 
-    import pandas as pd
-
     from mysql_cdc_rs_spark.kernel.decode import decode_page
 
     docs = load(spark, sf, "documents").filter(F.col("doc_id") < 400).select(
         "doc_id", "text"
     )
 
-    def rt(batches):
-        for pdf in batches:
-            out = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                did = int(did)
-                norm = " ".join(text.split())
-                body = zlib.compress(norm.encode("utf-8"))
-                if did % 2 == 1:  # raw deflate stream (no zlib header)
-                    body = body[2:-4]
-                head = (
-                    "HTTP/1.1 200 OK\r\n"
-                    "Content-Type: text/plain; charset=utf-8\r\n"
-                    "Content-Encoding: deflate\r\n"
-                    f"Content-Length: {len(body)}\r\n\r\n"
-                ).encode("ascii")
-                d = decode_page(head + body)
-                out.append((
-                    did,
-                    hashlib.md5((d["text"] or "").encode("utf-8")).hexdigest(),
-                    d["route"],
-                ))
-            yield pd.DataFrame(out, columns=["doc_id", "text_md5", "route"])
+    def rt(did, text):
+        norm = " ".join(text.split())
+        body = zlib.compress(norm.encode("utf-8"))
+        if did % 2 == 1:  # raw deflate stream (no zlib header)
+            body = body[2:-4]
+        head = (
+            "HTTP/1.1 200 OK\r\n"
+            "Content-Type: text/plain; charset=utf-8\r\n"
+            "Content-Encoding: deflate\r\n"
+            f"Content-Length: {len(body)}\r\n\r\n"
+        ).encode("ascii")
+        d = decode_page(head + body)
+        text_md5 = hashlib.md5((d["text"] or "").encode("utf-8")).hexdigest()
+        return [(did, text_md5, d["route"])]
 
-    return docs.mapInPandas(
-        rt, schema="doc_id long, text_md5 string, route string"
-    ).orderBy("doc_id")
+    return map_rows(docs, rt, "doc_id long, text_md5 string, route string").orderBy(
+        "doc_id"
+    )
 
 
 def _mm_oracle() -> str:
@@ -2287,9 +2166,7 @@ def _mm(spark, sf):
     byte-built on executors, decoded back by the parsers, and every exact
     pixel/amplitude sum (full and transformed) is checked against a
     closed-form SQL oracle.  Binary plumbing per SURVEY §2 multimodal
-    plan: mapInPandas over the blob column, no shuffle."""
-    import pandas as pd
-
+    plan: ``map_rows`` over the blob column, no shuffle."""
     from mysql_cdc_rs_spark.operators import multimodal as MM
 
     docs = spread(
@@ -2298,75 +2175,59 @@ def _mm(spark, sf):
         )
     )
 
-    def rt(batches):
-        for pdf in batches:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                mode = did % 3
-                if mode == 0:
-                    w, h = 2 + did % 6, 2 + did % 4
-                    pixels = bytes(
-                        (did * 31 + x * 7 + y * 13 + c * 97) % 256
-                        for y in range(h) for x in range(w) for c in range(3)
-                    )
-                    blob = MM.encode_png(w, h, pixels)
-                    status, st, _ = MM.decode_blob(blob, "image/png")
-                    # transform path: decode -> resize -> feature (sum)
-                    resized = MM.resize_nearest(w, h, 3, pixels, 2, 2)
-                    out.append((did, "image/png", st["width"], st["height"],
-                                st["channels"], None, None, st["pixel_sum"],
-                                sum(resized), None, None, None, status))
-                elif mode == 1:
-                    n = 16 + did % 32
-                    rate = 8000 + (did % 3) * 4000
-                    samples = [((did * 7919 + i * 104729) % 65536) - 32768
-                               for i in range(n)]
-                    blob = MM.encode_wav(samples, sample_rate=rate)
-                    status, st, _ = MM.decode_blob(blob, "audio/wav")
-                    sampled = MM.sample_pcm(samples, 3)
-                    out.append((did, "audio/wav", None, None,
-                                st["channels"], st["n_samples"],
-                                st["sample_rate"], st["abs_sum"], None,
-                                len(sampled), sum(abs(s) for s in sampled),
-                                None, status))
-                else:
-                    w, h = 2 + did % 3, 2
-                    frames = []
-                    for f in range(3):
-                        px = bytes(
-                            (did * 31 + f * 17 + x * 7 + y * 13 + c * 97) % 256
-                            for y in range(h) for x in range(w)
-                            for c in range(3)
-                        )
-                        frames.append(MM.encode_png(w, h, px))
-                    blob = MM.encode_video(frames)
-                    status, st, _ = MM.decode_blob(blob, "video/x-frames")
-                    full = sum(
-                        MM.decode_png(fr)["pixel_sum"]
-                        for fr in MM.decode_video(blob)
-                    )
-                    sampled_frames = MM.sample_frames(blob, 2)
-                    samp = sum(
-                        MM.decode_png(fr)["pixel_sum"] for fr in sampled_frames
-                    )
-                    out.append((did, "video/x-frames", st["width"],
-                                st["height"], st["channels"], None, None,
-                                full, None, len(sampled_frames), samp,
-                                st["n_frames"], status))
-            yield pd.DataFrame(out, columns=[
-                "doc_id", "mime", "width", "height", "channels",
-                "n_samples", "sample_rate", "payload_sum", "resized_sum",
-                "n_sampled", "sampled_sum", "n_frames", "decode_status",
-            ])
+    def rt(did):
+        mode = did % 3
+        if mode == 0:
+            w, h = 2 + did % 6, 2 + did % 4
+            pixels = bytes(
+                (did * 31 + x * 7 + y * 13 + c * 97) % 256
+                for y in range(h) for x in range(w) for c in range(3)
+            )
+            blob = MM.encode_png(w, h, pixels)
+            status, st, _ = MM.decode_blob(blob, "image/png")
+            # transform path: decode -> resize -> feature (sum)
+            resized = MM.resize_nearest(w, h, 3, pixels, 2, 2)
+            return [(did, "image/png", st["width"], st["height"],
+                     st["channels"], None, None, st["pixel_sum"],
+                     sum(resized), None, None, None, status)]
+        if mode == 1:
+            n = 16 + did % 32
+            rate = 8000 + (did % 3) * 4000
+            samples = [((did * 7919 + i * 104729) % 65536) - 32768
+                       for i in range(n)]
+            blob = MM.encode_wav(samples, sample_rate=rate)
+            status, st, _ = MM.decode_blob(blob, "audio/wav")
+            sampled = MM.sample_pcm(samples, 3)
+            return [(did, "audio/wav", None, None,
+                     st["channels"], st["n_samples"],
+                     st["sample_rate"], st["abs_sum"], None,
+                     len(sampled), sum(abs(s) for s in sampled),
+                     None, status)]
+        w, h = 2 + did % 3, 2
+        frames = []
+        for f in range(3):
+            px = bytes(
+                (did * 31 + f * 17 + x * 7 + y * 13 + c * 97) % 256
+                for y in range(h) for x in range(w) for c in range(3)
+            )
+            frames.append(MM.encode_png(w, h, px))
+        blob = MM.encode_video(frames)
+        status, st, _ = MM.decode_blob(blob, "video/x-frames")
+        full = sum(MM.decode_png(fr)["pixel_sum"] for fr in MM.decode_video(blob))
+        sampled_frames = MM.sample_frames(blob, 2)
+        samp = sum(MM.decode_png(fr)["pixel_sum"] for fr in sampled_frames)
+        return [(did, "video/x-frames", st["width"],
+                 st["height"], st["channels"], None, None,
+                 full, None, len(sampled_frames), samp,
+                 st["n_frames"], status)]
 
     return ordered(
-        docs.mapInPandas(
-            rt,
-            schema="doc_id long, mime string, width int, height int, "
-                   "channels int, n_samples int, sample_rate int, "
-                   "payload_sum long, resized_sum long, n_sampled int, "
-                   "sampled_sum long, n_frames int, decode_status string",
+        map_rows(
+            docs, rt,
+            "doc_id long, mime string, width int, height int, "
+            "channels int, n_samples int, sample_rate int, "
+            "payload_sum long, resized_sum long, n_sampled int, "
+            "sampled_sum long, n_frames int, decode_status string",
         ),
         "doc_id",
     )
@@ -2413,8 +2274,6 @@ def _c15(spark, sf):
     from integer coordinates, encoded to wire bytes on executors, decoded
     by the kernel, and emitted as canonical JSON (parity:
     /root/reference/binlog/src/column/decoders/geometry.rs:18-160)."""
-    import pandas as pd
-
     from mysql_cdc_rs_spark.kernel.geometry import (
         encode_geometry,
         parse_mysql_geometry,
@@ -2423,37 +2282,29 @@ def _c15(spark, sf):
 
     na = load(spark, sf, "nation").select("n_nationkey", "n_regionkey")
 
-    def rt(batches):
-        for pdf in batches:
-            out = []
-            for k, r in zip(pdf["n_nationkey"], pdf["n_regionkey"]):
-                x, y = float(k), float(r)
-                kind = int(k) % 5
-                if kind == 0:
-                    g = {"type": "Point", "coordinates": [x, y]}
-                elif kind == 1:
-                    g = {"type": "LineString",
-                         "coordinates": [[x, y], [x + 1, y + 2]]}
-                elif kind == 2:
-                    g = {"type": "Polygon", "coordinates":
-                         [[[x, y], [x + 3, y], [x + 3, y + 3], [x, y]]]}
-                elif kind == 3:
-                    g = {"type": "MultiPoint",
-                         "coordinates": [[x, y], [y, x]]}
-                else:
-                    g = {"type": "GeometryCollection", "geometries": [
-                        {"type": "Point", "coordinates": [x, y]},
-                        {"type": "LineString",
-                         "coordinates": [[x, y], [x + 1, y + 1]]},
-                    ]}
-                g["srid"] = 4326
-                decoded = parse_mysql_geometry(encode_geometry(g))
-                out.append((int(k), canonical_json(decoded)))
-            yield pd.DataFrame(out, columns=["n_nationkey", "geo_json"])
+    def rt(k, r):
+        x, y = float(k), float(r)
+        kind = k % 5
+        if kind == 0:
+            g = {"type": "Point", "coordinates": [x, y]}
+        elif kind == 1:
+            g = {"type": "LineString", "coordinates": [[x, y], [x + 1, y + 2]]}
+        elif kind == 2:
+            g = {"type": "Polygon", "coordinates":
+                 [[[x, y], [x + 3, y], [x + 3, y + 3], [x, y]]]}
+        elif kind == 3:
+            g = {"type": "MultiPoint", "coordinates": [[x, y], [y, x]]}
+        else:
+            g = {"type": "GeometryCollection", "geometries": [
+                {"type": "Point", "coordinates": [x, y]},
+                {"type": "LineString", "coordinates": [[x, y], [x + 1, y + 1]]},
+            ]}
+        g["srid"] = 4326
+        return [(k, canonical_json(parse_mysql_geometry(encode_geometry(g))))]
 
-    return na.mapInPandas(
-        rt, schema="n_nationkey int, geo_json string"
-    ).orderBy("n_nationkey")
+    return map_rows(na, rt, "n_nationkey int, geo_json string").orderBy(
+        "n_nationkey"
+    )
 
 
 @q(

@@ -15,8 +15,9 @@ whole engine runs under one config story:
 - AQE on (coalesce partitions + skew-join): runtime re-planning replaces the
   reference's hand-tuned ring-buffer/queue sizing
   (/root/reference/binlog/src/relay_log/queue_manager.rs:11).
-- Arrow execution on, bounded batch size: replaces the reference's payload
-  buffer reuse + object pools
+- Bounded Arrow batch size for every Python step (the decode UDF and the
+  ``map_rows`` row maps): replaces the reference's payload buffer reuse +
+  object pools
   (/root/reference/binlog/src/decoder/file_binlog_reader.rs:122-137).
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle bit-for-bit.
@@ -41,7 +42,6 @@ def build_session(
         .master(master or f"local[{cpus}]")
         # --- correctness-critical ---
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # --- adaptive execution: runtime re-plan at any scale ---
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

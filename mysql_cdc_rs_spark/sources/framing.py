@@ -8,10 +8,11 @@ incomplete tail over to the next chunk
 
 Spark restatement: blobs arrive as rows of a binary column (one blob = one
 "chunk", e.g. a WARC segment holding many HTTP records).  Framing runs
-inside ``mapInPandas`` — embarrassingly parallel, no shuffle.  Because each
-blob is self-contained in the table there is no cross-row remainder; WITHIN
-a blob, a truncated trailing record is surfaced as a ``truncated_tail``
-error row (the reference's UnexpectedEof skip), never an exception.
+inside ``functions.udfs.map_rows`` — embarrassingly parallel, no shuffle.
+Because each blob is self-contained in the table there is no cross-row
+remainder; WITHIN a blob, a truncated trailing record is surfaced as a
+``truncated_tail`` error row (the reference's UnexpectedEof skip), never an
+exception.
 
 Record layout uses HTTP framing with an explicit Content-Length, so the
 splitter is: parse header block -> body = Content-Length bytes -> next
@@ -21,6 +22,8 @@ record starts immediately after.
 from __future__ import annotations
 
 import re
+
+from mysql_cdc_rs_spark.functions.udfs import map_rows
 
 # no ^ anchor: .match(blob, pos) anchors at pos, but ^ would still demand
 # position 0 and break every record after the first
@@ -59,25 +62,18 @@ def frame_blobs(df, blob_col: str = "blob", id_col: str = "chunk_id"):
     One output row per framed record; a chunk with a framing error emits its
     good prefix records plus one error row (frame_error set, record NULL).
     """
-    import pandas as pd
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for cid, blob in zip(pdf[id_col], pdf[blob_col]):
-                if blob is None:
-                    out.append((int(cid), -1, None, "NULL_CHUNK"))
-                    continue
-                records, err = split_records(bytes(blob))
-                for i, rec in enumerate(records):
-                    out.append((int(cid), i, rec, None))
-                if err is not None:
-                    out.append((int(cid), len(records), None, err))
-            yield pd.DataFrame(
-                out, columns=["chunk_id", "record_idx", "record", "frame_error"]
-            )
+    def frame(cid, blob):
+        if blob is None:
+            yield cid, -1, None, "NULL_CHUNK"
+            return
+        records, err = split_records(blob)
+        for i, rec in enumerate(records):
+            yield cid, i, rec, None
+        if err is not None:
+            yield cid, len(records), None, err
 
-    return df.select(id_col, blob_col).mapInPandas(gen, schema=FRAMED_SCHEMA)
+    return map_rows(df.select(id_col, blob_col), frame, FRAMED_SCHEMA)
 
 
 def pack_records(records: list[bytes]) -> bytes:

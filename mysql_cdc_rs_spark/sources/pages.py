@@ -23,6 +23,7 @@ import gzip
 import hashlib
 from datetime import datetime, timedelta, timezone
 
+from mysql_cdc_rs_spark.functions.udfs import map_rows
 from mysql_cdc_rs_spark.kernel.decode import decode_page
 
 # --- deterministic PRNG -----------------------------------------------------
@@ -204,22 +205,14 @@ def _encode_record(seed: int, i: int, lang: str, cls: str) -> bytes:
 #: the one pages schema: the batch, stream and documents-derived sources
 #: all produce it
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
-PAGE_COLUMNS = [f.split()[0] for f in PAGES_SCHEMA.split(", ")]
 
 
 def pages_from_ids(ids, seed: int = 42):
     """Pages generated on the executors, one per id of the one-column
-    ``ids`` frame: ``make_record(seed, id)`` in a ``mapInPandas``.  Every
+    ``ids`` frame: ``make_record(seed, id)`` in a ``map_rows``.  Every
     synthetic pages source (batch, rate stream, soak chunks) generates
     through here."""
-    import pandas as pd
-
-    def gen(batches):
-        for pdf in batches:
-            rows = [make_record(seed, int(i)) for i in pdf.iloc[:, 0]]
-            yield pd.DataFrame(rows, columns=PAGE_COLUMNS)
-
-    return ids.mapInPandas(gen, schema=PAGES_SCHEMA)
+    return map_rows(ids, lambda i: [make_record(seed, i)], PAGES_SCHEMA)
 
 
 def pages_df(spark, n: int, seed: int = 42, num_partitions: int | None = None):

@@ -29,7 +29,8 @@ import gzip
 import hashlib
 from datetime import datetime, timedelta, timezone
 
-from mysql_cdc_rs_spark.sources.pages import PAGE_COLUMNS, PAGES_SCHEMA
+from mysql_cdc_rs_spark.functions.udfs import map_rows
+from mysql_cdc_rs_spark.sources.pages import PAGES_SCHEMA
 
 TLDS8 = ["com", "org", "net", "io", "de", "fr", "edu", "gov"]
 CHARSETS4 = ["utf-8", "latin1", "gbk", "windows-1252"]
@@ -120,8 +121,6 @@ def make_page(doc_id: int, text: str, lang: str, source: str):
 
 def pages_from_documents(spark, sf_dir: str):
     """documents parquet -> pages DataFrame, generated on executors."""
-    import pandas as pd
-
     from mysql_cdc_rs_spark.sources.testdata import spread
 
     # spread(): the single-row-group documents file gives the scan ONE
@@ -133,12 +132,4 @@ def pages_from_documents(spark, sf_dir: str):
         )
     )
 
-    def gen(batches):
-        for pdf in batches:
-            rows = [
-                make_page(int(r.doc_id), r.text, r.lang, r.source)
-                for r in pdf.itertuples()
-            ]
-            yield pd.DataFrame(rows, columns=PAGE_COLUMNS)
-
-    return docs.mapInPandas(gen, schema=PAGES_SCHEMA)
+    return map_rows(docs, lambda *doc: [make_page(*doc)], PAGES_SCHEMA)

@@ -12,7 +12,7 @@ append subsumes segment+CRC).  This module exists for (a) capability parity —
 a user of the reference's relay log can round-trip the same byte format, and
 (b) as an export/import side-channel (e.g. shipping decoded events to a
 non-Spark consumer).  Reading segments back into Spark is a binaryFile scan
-+ the framing mapInPandas pattern.
++ the framing ``map_rows`` pattern.
 
 Segment layout:
     magic  4B  b"RLSG"
@@ -28,6 +28,8 @@ import io
 import os
 import zlib
 from dataclasses import dataclass
+
+from mysql_cdc_rs_spark.functions.udfs import map_rows
 
 MAGIC = b"RLSG"
 VERSION = 1
@@ -119,26 +121,17 @@ def read_segment(path: str):
 def segments_to_df(spark, base_dir: str):
     """Segments -> DataFrame[segment, record_idx, payload, error] via a
     binaryFile scan + per-partition decode (no driver-side reads)."""
-    import pandas as pd
-
     files = spark.read.format("binaryFile").load(
         os.path.join(base_dir, "*.rlsg")
     ).select("path", "content")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                blob = bytes(content)
-                if blob[:4] != MAGIC or blob[4] != VERSION:
-                    rows.append((path, -1, None, "BAD_MAGIC"))
-                    continue
-                for i, (payload, err) in enumerate(decode_records(blob[5:])):
-                    rows.append((path, i, payload, err))
-            yield pd.DataFrame(
-                rows, columns=["segment", "record_idx", "payload", "error"]
-            )
+    def records(path, blob):
+        if blob[:4] != MAGIC or blob[4] != VERSION:
+            yield path, -1, None, "BAD_MAGIC"
+            return
+        for i, (payload, err) in enumerate(decode_records(blob[5:])):
+            yield path, i, payload, err
 
-    return files.mapInPandas(
-        gen, schema="segment string, record_idx int, payload binary, error string"
+    return map_rows(
+        files, records, "segment string, record_idx int, payload binary, error string"
     )

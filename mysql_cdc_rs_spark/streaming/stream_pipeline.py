@@ -599,3 +599,14 @@ def read_curated(catalog) -> DataFrame:
         .where(F.col("batch_id") <= last)
         .dropDuplicates(["doc_id"])
     )
+
+
+def read_routed(catalog) -> DataFrame:
+    """Committed routed rows of the routing stream: only batches whose run
+    record (manifest ``routes_<batch_id>``) exists.  A batch that crashed
+    between its data write and its record stays hidden until its replay
+    commits it."""
+    routed = catalog.read("routed")
+    ids = [r.batch_id for r in routed.select("batch_id").distinct().collect()]
+    committed = [b for b in ids if catalog.read_manifest(f"routes_{b}")]
+    return routed.where(F.col("batch_id").isin(committed))

@@ -380,7 +380,7 @@ def test_multimodal_real_codecs_kernel():
 
 
 def test_multimodal_spark_plumbing(spark):
-    """Real decode through mapInPandas: PNG + WAV blobs decode, garbage
+    """Real decode through map_rows: PNG + WAV blobs decode, garbage
     falls to decode_error, unknown mime to fallback_hash — no crashes."""
     from mysql_cdc_rs_spark.operators import multimodal as MM
 

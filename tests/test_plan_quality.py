@@ -136,7 +136,7 @@ def test_bucketed_join_no_shuffle(spark, tmp_path_factory):
 
 
 def test_row_decode_queries_single_python_node(spark):
-    """p3/p8/c8/c10/mm/p4: exactly one Python (mapInPandas) node each and
+    """p3/p8/c8/c10/mm/p4: exactly one Python (map_rows) node each and
     the event_id prefilter reaches the parquet scan as a pushed filter."""
     from mysql_cdc_rs_spark.queries import QUERIES
 
@@ -148,7 +148,7 @@ def test_row_decode_queries_single_python_node(spark):
         ("mm_decode_stats", "LessThan(doc_id,300)"),
     ]:
         plan = _formatted(spark, QUERIES[name](spark, SF))
-        assert plan.count("MapInPandas") == 2, f"{name}: != 1 python node"
+        assert plan.count("MapInArrow") == 2, f"{name}: != 1 python node"
         assert pushed.replace(" ", "") in plan.replace(" ", ""), (
             f"{name}: filter not pushed"
         )
@@ -194,7 +194,7 @@ def test_explain_snapshots_carry_invariants():
 
     assert read("dedup_lsh_pairs.txt").count("documents.parquet") == 1
     assert read("emb_neardup_pairs.txt").count("embeddings.parquet") == 1
-    assert read("p3_row_decode.txt").count("MapInPandas") == 2
+    assert read("p3_row_decode.txt").count("MapInArrow") == 2
     # curate: the quality corpus is PERSISTED — both consumers (LSH drops +
     # survivors anti-join) read InMemoryTableScan instead of re-running the
     # decode subtree (the text occurrence count of ArrowEvalPython is

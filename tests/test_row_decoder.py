@@ -5,7 +5,6 @@ Int(1111), BigInt(11111), TinyInt(1)])."""
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
 
 from mysql_cdc_rs_spark.kernel import row_decoder as R
@@ -83,7 +82,9 @@ def test_unsigned_split_matters():
 
 
 def test_row_decode_via_spark(spark):
-    """Rows decoded distributed via mapInPandas — the write_rows event path."""
+    """Rows decoded distributed via ``map_rows`` — the write_rows event path."""
+    from mysql_cdc_rs_spark.functions.udfs import map_rows
+
     payloads = [
         R.encode_row([i, i * 11, i * 111, i * 1111, i * 11111, i % 2],
                      FIXTURE_TYPES, FIXTURE_META)
@@ -92,19 +93,10 @@ def test_row_decode_via_spark(spark):
     df = spark.createDataFrame([(i, p) for i, p in enumerate(payloads)],
                                "row_id long, payload binary")
 
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for rid, p in zip(pdf["row_id"], pdf["payload"]):
-                cells, _ = R.decode_row(bytes(p), FIXTURE_TYPES, FIXTURE_META)
-                out.append((int(rid), *cells))
-            yield pd.DataFrame(
-                out, columns=["row_id", "c0", "c1", "c2", "c3", "c4", "c5"]
-            )
-
-    dec = df.mapInPandas(
-        gen,
-        schema="row_id long, c0 int, c1 int, c2 int, c3 long, c4 long, c5 int",
+    dec = map_rows(
+        df,
+        lambda rid, p: [(rid, *R.decode_row(p, FIXTURE_TYPES, FIXTURE_META)[0])],
+        "row_id long, c0 int, c1 int, c2 int, c3 long, c4 long, c5 int",
     )
     got = {r["row_id"]: (r["c0"], r["c4"]) for r in dec.collect()}
     assert got[0] == (1, 11111)

@@ -7,8 +7,14 @@ import tempfile
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from mysql_cdc_rs_spark.sources.framing import frame_blobs, pack_records, split_records
+from mysql_cdc_rs_spark.sources.framing import (
+    FRAMED_SCHEMA,
+    frame_blobs,
+    pack_records,
+    split_records,
+)
 from mysql_cdc_rs_spark.sources.pages import PAGES_SCHEMA, pages_df
 
 
@@ -53,6 +59,12 @@ def test_frame_blobs_spark(spark):
     errs = {r["chunk_id"]: r["frame_error"] for r in out if r["frame_error"]}
     assert sorted(good) == [(0, 0), (0, 1), (0, 2), (1, 0)]
     assert errs == {1: "TRUNCATED_TAIL", 2: "NULL_CHUNK"}
+    # an empty blob frames to no records and no error: its Arrow batch comes
+    # back with zero rows, and still carries the declared schema
+    assert split_records(b"") == ([], None)
+    empty = frame_blobs(spark.createDataFrame([(3, b"")], "chunk_id long, blob binary"))
+    assert empty.collect() == []
+    assert empty.schema == StructType.fromDDL(FRAMED_SCHEMA)
     # framed records decode through the normal kernel path
     from mysql_cdc_rs_spark.functions.udfs import make_decode_udf
 
@@ -95,14 +107,15 @@ def _write_chunk(df, src: str, i: int) -> None:
 def test_streaming_matches_batch_and_resumes(spark):
     """The routing stream writes each micro-batch through ``write_routes``
     into its ``batch_id`` partition.  A batch that crashes after its data
-    write and before its record's commit replays on restart and REWRITES
-    its partition: the routed rows equal ``run_pipeline``'s sink row for
-    row, the per-batch records sum to ``run_pipeline``'s record, and a
-    further restart changes nothing."""
+    write and before its record's commit is hidden from ``read_routed``
+    and replays on restart, REWRITING its partition: the routed rows equal
+    ``run_pipeline``'s sink row for row, the per-batch records sum to
+    ``run_pipeline``'s record, and a further restart changes nothing."""
     from mysql_cdc_rs_spark.operators.route import SINK_COLUMNS
     from mysql_cdc_rs_spark.plans.pipeline import run_pipeline
     from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
     from mysql_cdc_rs_spark.streaming.stream_pipeline import (
+        read_routed,
         start_routing_stream,
         stream_pages,
     )
@@ -140,6 +153,11 @@ def test_streaming_matches_batch_and_resumes(spark):
         assert cat.read_manifest("routes_0") is not None
         assert cat.read_manifest("routes_1") is None
         assert cat.read("routed").where("batch_id = 1").count() > 0
+        # the committed-only reader leaves the uncommitted batch out
+        committed = read_routed(cat)
+        batch_0 = cat.read("routed").where("batch_id = 0")
+        assert committed.where("batch_id <> 0").count() == 0
+        assert committed.count() == batch_0.count() > 0
 
         # restart: batch 1 replays, batch 2 runs
         drain()
@@ -148,9 +166,10 @@ def test_streaming_matches_batch_and_resumes(spark):
         want = batch.read("routed").select(*SINK_COLUMNS)
 
         def check():
-            got = cat.read("routed").select(*SINK_COLUMNS)
-            assert got.exceptAll(want).count() == 0
-            assert want.exceptAll(got).count() == 0
+            for sink in (cat.read("routed"), read_routed(cat)):
+                got = sink.select(*SINK_COLUMNS)
+                assert got.exceptAll(want).count() == 0
+                assert want.exceptAll(got).count() == 0
             records = [
                 cat.read_manifest(f"routes_{b}")["record"] for b in range(n_batches)
             ]
