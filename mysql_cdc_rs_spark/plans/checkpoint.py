@@ -1,42 +1,48 @@
-"""Checkpoint-resumable stages with per-partition lineage (SURVEY §4 item 3).
+"""Checkpoint-resumable stages with input lineage (SURVEY §4 item 3).
 
-The reference tracks progress as (binlog file, log_pos, GTID set)
-(/root/reference/binlog/src/metadata/gtid_manager.rs:8-138) so a restarted
-reader resumes instead of replaying.  Batch restatement: each pipeline stage
-writes its output plus a manifest recording
+The reference records its position (binlog file, log_pos, GTID set) while
+it reads (binlog/src/metadata/gtid_manager.rs:8-138), so a
+restarted reader resumes instead of replaying.  Batch restatement: each
+stage writes its output plus a manifest
 
-    {stage, input lineage (min/max url_bucket, bucket row counts),
-     row_count, error_count}
+    {status, stage, input_lineage: {rows, min_bucket, max_bucket, fingerprint}}
 
-A rerun checks the manifest: if the stage already completed over the same
-input lineage, it SKIPS the stage and reuses the persisted output.  Lineage
-is keyed on deterministic url-hash buckets, so it is stable across runs and
-across parallelism levels.
+where the lineage is ``lineage_record``'s aggregates over deterministic
+url-hash buckets: stable across runs and parallelism levels, and cheap
+enough for a write to observe on its own input.  A rerun computes the
+input's lineage only when a complete manifest and its table exist; when
+the two agree it SKIPS the stage and reuses the persisted output.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import cache
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
 
 
+def lineage_record(bucket_col: str = "url_bucket") -> list[Column]:
+    """A lineage's aggregate columns: ``rows``, ``min_bucket``,
+    ``max_bucket`` and ``fingerprint``, an order-independent hash of the
+    bucket histogram, ``sum(pmod(xxhash64(bucket), 2^20))``.  Each term is
+    below 2^20, so the sum stays a valid ``bigint`` under ANSI up to 2^43
+    (~8.8 * 10^12) rows."""
+    b = F.col(bucket_col)
+    return [
+        F.count("*").alias("rows"),
+        F.min(b).alias("min_bucket"),
+        F.max(b).alias("max_bucket"),
+        F.sum(F.pmod(F.xxhash64(b), F.lit(1 << 20))).alias("fingerprint"),
+    ]
+
+
 def lineage_summary(df: DataFrame, bucket_col: str = "url_bucket") -> dict:
-    """Per-partition lineage: bucket range + per-bucket counts (W3/A8)."""
-    rows = (
-        df.groupBy(bucket_col)
-        .agg(F.count("*").alias("n"))
-        .orderBy(bucket_col)
-        .collect()
-    )
-    buckets = {str(r[bucket_col]): r["n"] for r in rows}
-    return {
-        "min_bucket": min((int(b) for b in buckets), default=None),
-        "max_bucket": max((int(b) for b in buckets), default=None),
-        "bucket_counts": buckets,
-        "row_count": sum(buckets.values()),
-    }
+    """``df``'s lineage (W3/A8): one global aggregate of ``lineage_record``."""
+    return df.agg(*lineage_record(bucket_col)).first().asDict()
 
 
 class CheckpointedStage:
@@ -46,39 +52,31 @@ class CheckpointedStage:
         self.catalog = catalog
         self.name = stage_name
 
-    def completed_with(self, input_lineage: dict) -> bool:
+    def completed_with(self, input_lineage: Callable[[], dict]) -> bool:
+        """True when the stage completed over the input whose lineage
+        ``input_lineage()`` computes; it is called only when a complete
+        manifest and its table exist."""
         m = self.catalog.read_manifest(self.name)
         return (
             m is not None
             and m.get("status") == "complete"
-            and m.get("input_lineage") == input_lineage
             and self.catalog.exists(self.name)
+            and m.get("input_lineage") == input_lineage()
         )
 
     def run(self, input_df: DataFrame, fn, bucket_col: str = "url_bucket") -> DataFrame:
-        """fn(input_df) -> output_df; skipped when already complete."""
-        input_lineage = lineage_summary(input_df, bucket_col)
-        if self.completed_with(input_lineage):
-            return self.catalog.read(self.name)
-        out = fn(input_df)
-        self.catalog.overwrite(out, self.name)
-        persisted = self.catalog.read(self.name)
-        out_lineage = (
-            lineage_summary(persisted, bucket_col)
-            if bucket_col in persisted.columns
-            else {"row_count": persisted.count()}
-        )
-        self.mark_complete(input_lineage, out_lineage)
-        return persisted
+        """fn(input_df) -> output_df; skipped when already complete.  The
+        input's lineage is computed once, for the check or the manifest."""
+        input_lineage = cache(lambda: lineage_summary(input_df, bucket_col))
+        if not self.completed_with(input_lineage):
+            lineage = input_lineage()
+            self.catalog.overwrite(fn(input_df), self.name)
+            self.mark_complete(lineage)
+        return self.catalog.read(self.name)
 
-    def mark_complete(self, input_lineage: dict, output_lineage: dict) -> None:
+    def mark_complete(self, input_lineage: dict) -> None:
         """Record the stage's output as complete over ``input_lineage``."""
         self.catalog.write_manifest(
             self.name,
-            {
-                "status": "complete",
-                "stage": self.name,
-                "input_lineage": input_lineage,
-                "output_lineage": output_lineage,
-            },
+            {"status": "complete", "stage": self.name, "input_lineage": input_lineage},
         )

@@ -1,9 +1,10 @@
 """End-to-end pipeline: pages -> decode -> enrich -> route -> aggregate.
 
 Mirrors the reference lifecycle (SURVEY §3.1) as four declarative stages.
-The hot path is exactly one vectorized UDF projection + two broadcast joins
-+ one partitioned write, which also computes the run record — no per-row
-Python, no driver loops, no collect() of fact data.
+The hot path is exactly one vectorized UDF projection + two map-literal
+dimension lookups + one partitioned write, which also observes the run
+record and the input lineage: a run over a fresh sink is one Spark job —
+no per-row Python, no driver loops, no collect() of fact data.
 """
 
 from __future__ import annotations
@@ -11,14 +12,14 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from mysql_cdc_rs_spark.functions.columns import url_bucket
 from mysql_cdc_rs_spark.operators.decode import decode_pages
 from mysql_cdc_rs_spark.operators.enrich import enrich
 from mysql_cdc_rs_spark.operators.route import write_routes
-from mysql_cdc_rs_spark.plans.checkpoint import CheckpointedStage, lineage_summary
+from mysql_cdc_rs_spark.plans import checkpoint as C
 from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
 
 
@@ -29,11 +30,6 @@ class PipelineResult:
     elapsed_s: float = 0.0
 
 
-def build_enriched(pages: DataFrame) -> DataFrame:
-    """Lazy plan for decode+enrich (no action)."""
-    return enrich(decode_pages(pages))
-
-
 def run_pipeline(pages: DataFrame, catalog: SinkCatalog) -> PipelineResult:
     """Decode, enrich and route ``pages`` into ``catalog``.  ``metrics`` is
     the run record that the routed write observed (``stats.run_record``),
@@ -41,15 +37,16 @@ def run_pipeline(pages: DataFrame, catalog: SinkCatalog) -> PipelineResult:
     record without recomputing it."""
     t0 = time.monotonic()
 
-    # decode+enrich+route is one checkpointable unit; its input lineage is
-    # the pages table's deterministic url-bucket histogram.
-    stage = CheckpointedStage(catalog, "routed")
-    input_lineage = lineage_summary(
-        pages.select(url_bucket(F.col("url")).alias("url_bucket"))
-    )
-    if not stage.completed_with(input_lineage):
-        counts = write_routes(build_enriched(pages), catalog)
-        stage.mark_complete(input_lineage, {"row_count": sum(counts.values())})
+    # decode+enrich+route is one checkpointable unit.  The pages' lineage
+    # is scanned only to check a completed run; otherwise the write observes
+    # it (decode and enrich are 1:1, so the rows carry the pages' buckets).
+    stage = C.CheckpointedStage(catalog, "routed")
+    buckets = pages.select(url_bucket(F.col("url")).alias("url_bucket"))
+    if not stage.completed_with(lambda: C.lineage_summary(buckets)):
+        obs = Observation()
+        enriched = enrich(decode_pages(pages)).observe(obs, *C.lineage_record())
+        write_routes(enriched, catalog)
+        stage.mark_complete(obs.get)
     routes = catalog.read_manifest("routes")
     return PipelineResult(
         route_counts=routes["counts"],

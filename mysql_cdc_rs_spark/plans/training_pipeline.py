@@ -162,10 +162,11 @@ def curate_resumable(
     resuming the reference's reader from a GTID checkpoint, and how the
     100 TB job survives a mid-run failure without re-decoding the corpus.
 
-    Stage lineage is keyed on deterministic url-hash buckets, so it is
-    stable across runs AND across parallelism levels; any change to the
-    input (rows added/removed) changes the bucket histogram and forces a
-    recompute of the affected stage and everything after it.
+    Stage lineage (``checkpoint.lineage_record``) is stable across runs
+    AND parallelism levels; a change to the input changes it and forces a
+    recompute of that stage and everything after it.  It is one aggregate
+    job per stage: the survivors stage reads its input twice in one plan,
+    so one ``Observation`` on a write cannot carry it.
     """
     from mysql_cdc_rs_spark.plans.checkpoint import CheckpointedStage
 

@@ -62,8 +62,8 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2000")
         # --- scan sizing: keep partitions executor-memory-friendly at scale ---
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # broadcast threshold: dimension tables (lang->region, tld->category)
-        # are tiny; we also hint broadcast() explicitly at every dim join.
+        # broadcast threshold: the oracle queries' small join sides; enrich's
+        # dimensions are map literals and join nothing.
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

@@ -1,11 +1,11 @@
-"""Dimension tables for broadcast-hash enrichment (SURVEY §2.5 J1/J3).
+"""Dimension tables for enrichment (SURVEY §2.5 J1/J3).
 
 The reference's schema catalog declares per-table HASH vs BROADCAST
 distribution (/root/reference/common/src/schema/schema.rs:92-97); these dims
-are the BROADCAST case — tiny, immutable per batch, joined with an explicit
-``broadcast()`` hint.  ``lang -> region`` mirrors the charset-id -> encoding
-lookup (J3); ``tld -> category`` mirrors the table-id -> TableMap metadata
-lookup (J1), including the "missing key -> error route" semantics
+are the BROADCAST case — tiny and immutable, so ``operators.enrich`` ships
+them in the plan as map literals.  ``lang -> region`` mirrors the charset-id
+-> encoding lookup (J3); ``tld -> category`` mirrors the table-id -> TableMap
+metadata lookup (J1), including the "missing key -> error route" semantics
 (TABLE_MAP_NOT_FOUND, /root/reference/binlog/src/row/parser.rs:24-26).
 """
 
@@ -54,12 +54,3 @@ def literal_df(spark, rows: list[tuple], ddl: str):
     table = pa.table([list(col) for col in zip(*rows)], names=schema.names)
     return spark.createDataFrame(table, schema)
 
-
-def lang_region_df(spark):
-    return literal_df(
-        spark, LANG_REGION, "lang string, region string, lang_name string"
-    )
-
-
-def tld_category_df(spark):
-    return literal_df(spark, TLD_CATEGORY, "tld string, category string")

@@ -105,31 +105,39 @@ class SegmentWriter:
             self._cur = None
 
 
+def _header_error(head: bytes) -> str | None:
+    """A segment header's error, None when valid; a torn one is BAD_MAGIC."""
+    if len(head) < HEADER_LEN or head[:4] != MAGIC:
+        return "BAD_MAGIC"
+    if head[4] != VERSION:
+        return "BAD_VERSION"
+    return None
+
+
 def read_segment(path: str):
     """Yield (payload|None, error|None) from one segment file."""
     with open(path, "rb") as f:
-        head = f.read(HEADER_LEN)
-        if head[:4] != MAGIC:
-            yield None, "BAD_MAGIC"
-            return
-        if head[4] != VERSION:
-            yield None, "BAD_VERSION"
+        err = _header_error(f.read(HEADER_LEN))
+        if err:
+            yield None, err
             return
         yield from decode_records(f.read())
 
 
 def segments_to_df(spark, base_dir: str):
     """Segments -> DataFrame[segment, record_idx, payload, error] via a
-    binaryFile scan + per-partition decode (no driver-side reads)."""
+    binaryFile scan + per-partition decode (no driver-side reads); a bad
+    header is one row with ``record_idx`` -1, and an empty file no row."""
     files = spark.read.format("binaryFile").load(
         os.path.join(base_dir, "*.rlsg")
     ).select("path", "content")
 
     def records(path, blob):
-        if blob[:4] != MAGIC or blob[4] != VERSION:
-            yield path, -1, None, "BAD_MAGIC"
+        err = _header_error(blob[:HEADER_LEN])
+        if err:
+            yield path, -1, None, err
             return
-        for i, (payload, err) in enumerate(decode_records(blob[5:])):
+        for i, (payload, err) in enumerate(decode_records(blob[HEADER_LEN:])):
             yield path, i, payload, err
 
     return map_rows(

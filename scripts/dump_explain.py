@@ -1,10 +1,10 @@
 """Commit formatted-explain snapshots for the most expensive queries.
 
 Writes BENCH/explain/<name>.txt so plan regressions are diffable review
-artifacts; tests/test_plan_quality.py::test_explain_snapshots_invariants
+artifacts; tests/test_plan_quality.py::test_explain_snapshots_carry_invariants
 asserts the committed snapshots still carry the invariants the engine is
-designed around (single Python node, broadcast-only dim joins, pushed
-filters).  Re-run after intentional plan changes:
+designed around (single Python node, dimension lookups that join nothing,
+pushed filters).  Re-run after intentional plan changes:
 
     python scripts/dump_explain.py
 """

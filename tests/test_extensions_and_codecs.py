@@ -350,6 +350,45 @@ def test_segment_crc_detects_corruption():
         assert out[1] == (None, "CRC_MISMATCH")
 
 
+def test_segment_torn_header_is_an_error_entry(spark):
+    """A file shorter than the segment header (empty, or a write torn after
+    the 4-byte magic) is one ``BAD_MAGIC`` entry and a wrong version one
+    ``BAD_VERSION`` entry, in both readers; a good segment next to them
+    still reads all its records.  Spark's file scan skips a zero-length
+    file, so in ``segments_to_df`` the empty one has no row at all."""
+    import os
+
+    with tempfile.TemporaryDirectory() as base:
+        w = RS.SegmentWriter(base)
+        payloads = [b"a", b"bb", b"ccc"]
+        for p in payloads:
+            w.append(p)
+        w.close()
+        bad = {
+            "empty": (b"", "BAD_MAGIC"),
+            "magic_only": (RS.MAGIC, "BAD_MAGIC"),
+            "next_version": (RS.MAGIC + bytes([RS.VERSION + 1]), "BAD_VERSION"),
+        }
+        for name, (blob, _) in bad.items():
+            with open(f"{base}/{name}.rlsg", "wb") as f:
+                f.write(blob)
+
+        for name, (_, err) in bad.items():
+            assert list(RS.read_segment(f"{base}/{name}.rlsg")) == [(None, err)]
+        good = f"{base}/segment_000000.rlsg"
+        assert list(RS.read_segment(good)) == [(p, None) for p in payloads]
+
+        rows = RS.segments_to_df(spark, base).collect()
+        by_file: dict[str, list] = {}
+        for r in sorted(rows, key=lambda r: r["record_idx"]):
+            name = os.path.basename(r["segment"]).rsplit(".", 1)[0]
+            by_file.setdefault(name, []).append((r["payload"], r["error"]))
+        assert by_file == {
+            "segment_000000": [(p, None) for p in payloads],
+            **{n: [(None, err)] for n, (_, err) in bad.items() if n != "empty"},
+        }
+
+
 # --- DDL parse ----------------------------------------------------------------
 
 def test_classify_sql():

@@ -223,18 +223,123 @@ def test_iceberg_probe_falls_back_without_jar(spark):
         assert not cat.use_iceberg
 
 
-def test_pipeline_resume(spark, pages):
+def test_pipeline_resume(spark, pages, monkeypatch):
+    """A rerun over the same input reuses the routed sink without writing
+    it; an input with more rows, or as many rows with other urls, writes
+    it again."""
+    from mysql_cdc_rs_spark.plans import pipeline as P
+
+    writes = []
+
+    def spy(enriched, catalog):
+        writes.append(catalog.base)
+        return write_routes(enriched, catalog)
+
+    monkeypatch.setattr(P, "write_routes", spy)
     with tempfile.TemporaryDirectory() as base:
         cat = SinkCatalog(spark, base)
         r1 = run_pipeline(pages, cat)
         r2 = run_pipeline(pages, cat)
-        # resume returns the stored counts and run record
+        # resume returns the stored counts and run record, and skips the write
+        assert len(writes) == 1
         assert r2.route_counts == r1.route_counts
         assert r2.metrics == r1.metrics
         # changed input -> recompute, not stale reuse
         bigger = pages_df(spark, N + 100, seed=42)
         r3 = run_pipeline(bigger, cat)
+        assert len(writes) == 2
         assert sum(r3.route_counts.values()) == N + 100
+        run_pipeline(bigger, cat)
+        assert len(writes) == 2
+        # same row count, other urls -> recompute
+        moved = bigger.withColumn("url", F.concat("url", F.lit("?v=2")))
+        r4 = run_pipeline(moved, cat)
+        assert len(writes) == 3
+        assert sum(r4.route_counts.values()) == N + 100
+        routed = cat.read("routed").select("url")
+        assert routed.exceptAll(moved.select("url")).count() == 0
+
+
+def _jobs_of(spark, group: str, action) -> int:
+    """The number of Spark jobs ``action()`` runs, counted through a job
+    group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fresh_run_is_one_spark_job(spark, tmp_path):
+    """Over a fresh sink, ``run_pipeline`` runs one Spark job, the routed
+    write: the lineage and the run record are observed on it and the
+    dimension lookups need no broadcast.  A rerun runs the input's lineage
+    aggregate and nothing else."""
+    from mysql_cdc_rs_spark.functions.columns import url_bucket
+    from mysql_cdc_rs_spark.plans.checkpoint import lineage_summary
+
+    path = str(tmp_path / "pages")
+    pages_df(spark, 300, seed=42).write.parquet(path)
+    pages = spark.read.parquet(path)
+    cat = SinkCatalog(spark, str(tmp_path / "sink"))
+    assert _jobs_of(spark, "fresh", lambda: run_pipeline(pages, cat)) == 1
+    rerun = _jobs_of(spark, "rerun", lambda: run_pipeline(pages, cat))
+    buckets = pages.select(url_bucket(F.col("url")).alias("url_bucket"))
+    assert rerun == _jobs_of(spark, "lineage", lambda: lineage_summary(buckets))
+
+
+def test_enrich_map_lookup_equals_left_join(spark):
+    """``enrich``'s map lookups give what left joins over the dimension
+    frames give, for a missing lang (it), a missing tld (gov), a null lang
+    and a null tld (a url with no host)."""
+    from mysql_cdc_rs_spark.operators.enrich import LANG_MISS, TLD_MISS
+    from mysql_cdc_rs_spark.sources.dimensions import (
+        LANG_REGION,
+        TLD_CATEGORY,
+        literal_df,
+    )
+
+    raw = b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n<p>x</p>"
+    rows = [
+        ("https://a.com/1", "en"),
+        ("https://a.gov/2", "en"),
+        ("https://a.de/3", "it"),
+        ("https://a.org/4", None),
+        ("urn:no-host:5", "fr"),
+        ("https://a.gov/6", "it"),
+    ]
+    decoded = decode_pages(
+        spark.createDataFrame(
+            [(u, None, raw, None, lang) for u, lang in rows], PAGES_SCHEMA
+        )
+    )
+    cols = ["url", "region", "lang_name", "category", "enrich_error", "route"]
+    got = enrich(decoded).select(*cols)
+
+    lang = literal_df(spark, LANG_REGION, "lang string, region string, lang_name string")
+    tld = literal_df(spark, TLD_CATEGORY, "tld string, category string")
+    err = (
+        F.when(F.col("region").isNull(), LANG_MISS)
+        .when(F.col("category").isNull(), TLD_MISS)
+    )
+    want = (
+        decoded.join(lang, "lang", "left")
+        .join(tld, "tld", "left")
+        .withColumn("enrich_error", err)
+        .withColumn(
+            "route", F.when(err.isNotNull(), "errors").otherwise(F.col("route"))
+        )
+        .select(*cols)
+    )
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    by_url = {r["url"]: r for r in want.collect()}
+    assert len(by_url) == len(rows)
+    assert by_url["urn:no-host:5"]["category"] is None
+    assert by_url["https://a.org/4"]["region"] is None
+    assert {r["enrich_error"] for r in by_url.values()} == {None, LANG_MISS, TLD_MISS}
 
 
 def test_run_record_matches_sink(spark, pages):

@@ -35,13 +35,29 @@ def test_decode_udf_evaluated_exactly_once(pipeline_plan):
 #: a node of formatted explain's tree part ("ArrowEvalPython (5)") that runs
 #: Python: eval-Python, *InPandas and *InArrow execs
 _PYTHON_NODE = re.compile(r"\b(\w*(?:Python|Pandas|InArrow)\w*) \((\d+)\)")
+#: the partitioning of each Exchange node in formatted explain's details
+_EXCHANGE = re.compile(r"^\(\d+\) Exchange\n(?:Input .*\n)?Arguments: (\w+)", re.M)
+
+
+def _assert_enrich_shape(plan: str, source_python: set[str], exchanges: list[str]):
+    """The shape of an ``enrich(decode_pages(...))`` plan: the dimension
+    lookups are map literals (no join, no broadcast, no local relation),
+    the decode's ``ArrowEvalPython`` is the only Python node above the
+    pages source (whose own are ``source_python``), and the plan's
+    exchanges are exactly ``exchanges``."""
+    assert "Join" not in plan and "BroadcastExchange" not in plan
+    assert "LocalTableScan" not in plan and "ExistingRDD" not in plan
+    assert plan.count("ArrowEvalPython") == 2  # 1 node x (tree+detail)
+    python = {n for n, _ in _PYTHON_NODE.findall(plan)}
+    assert python == {"ArrowEvalPython"} | source_python
+    assert _EXCHANGE.findall(plan) == exchanges
+    assert plan.count("Exchange") == 2 * len(exchanges)  # tree + detail
 
 
 def test_decode_is_the_only_python_in_a_pipeline_plan(spark, tmp_path):
     """Over a parquet pages source, the enrich(decode_pages(...)) plan has
-    ONE Python node, the decode, and the dimension frames are local
-    relations: a ``Scan ExistingRDD`` (a Python RDD from
-    ``createDataFrame(list)``) would start Python tasks per broadcast."""
+    ONE Python node, the decode, no exchange, and no dimension relation:
+    the lookups are map literals in the projection."""
     from mysql_cdc_rs_spark.operators.decode import decode_pages
     from mysql_cdc_rs_spark.operators.enrich import enrich
     from mysql_cdc_rs_spark.sources.pages import pages_df
@@ -49,21 +65,15 @@ def test_decode_is_the_only_python_in_a_pipeline_plan(spark, tmp_path):
     path = str(tmp_path / "pages")
     pages_df(spark, 50).write.parquet(path)
     plan = _formatted(spark, enrich(decode_pages(spark.read.parquet(path))))
-    assert "ExistingRDD" not in plan
-    assert plan.count("LocalTableScan") == 4  # 2 dims x (tree+detail)
-    assert [n for n, _ in set(_PYTHON_NODE.findall(plan))] == ["ArrowEvalPython"]
+    _assert_enrich_shape(plan, set(), [])
 
 
-def test_dim_joins_are_broadcast_no_shuffle(pipeline_plan):
-    assert pipeline_plan.count("BroadcastHashJoin") == 4  # 2 nodes
-    assert "SortMergeJoin" not in pipeline_plan
-    # the one exchange on the fact side is spread's round-robin fan-out; a
-    # shuffle join or a keyed repartition plans a hashpartitioning exchange
+def test_dim_lookups_join_nothing_no_shuffle(pipeline_plan):
+    """Over generated pages, the one exchange is spread's round-robin
+    fan-out below page generation (a ``MapInArrow``); a dimension join, a
+    broadcast or a keyed repartition of the fact side would add a node."""
+    _assert_enrich_shape(pipeline_plan, {"MapInArrow"}, ["RoundRobinPartitioning"])
     assert "hashpartitioning" not in pipeline_plan
-    exchanges = re.findall(
-        r"^\(\d+\) Exchange\n(?:Input .*\n)?Arguments: (\w+)", pipeline_plan, re.M
-    )
-    assert exchanges == ["RoundRobinPartitioning"]
 
 
 def test_q1_scan_pushdown_and_pruning(spark):
@@ -182,11 +192,11 @@ def test_explain_snapshots_carry_invariants():
         with open(os.path.join(d, name)) as f:
             return f.read()
 
+    # map-literal dims: no join, no broadcast, one Python node over the
+    # generated pages, spread's round-robin the only exchange
     pipeline = read("pipeline_decode_enrich.txt")
-    assert pipeline.count("ArrowEvalPython") == 2  # ONE node (tree+detail)
-    assert "ExistingRDD" not in pipeline  # literal dims, no Python RDD scan
-    assert pipeline.count("BroadcastHashJoin") == 4  # both dim joins
-    assert "SortMergeJoin" not in pipeline
+    _assert_enrich_shape(pipeline, {"MapInArrow"}, ["RoundRobinPartitioning"])
+    assert "hashpartitioning" not in pipeline
 
     q1 = read("q1_pricing_summary.txt")
     assert "LessThanOrEqual(l_shipdate" in q1  # PushedFilters
