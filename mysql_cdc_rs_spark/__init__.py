@@ -24,4 +24,50 @@ broadcast hash joins, AQE).  The only custom work is the vectorized decode
 kernel, explicit skew salting, and checkpoint-manifest resume.
 """
 
+import os
+import sys
+import zipimport
+
 __version__ = "0.1.0"
+
+if sys.version_info < (3, 12):
+    _stock_invalidate = zipimport.zipimporter.invalidate_caches
+    _read_at: dict[str, tuple[int, int, int]] = {}
+
+    def _invalidate_unless_unchanged(self):
+        """Re-read a zip's directory only when the archive changed.
+
+        Spark's Python worker calls ``importlib.invalidate_caches()`` at the
+        start of every task (``pyspark.worker_util.setup_spark_files``).
+        Before CPython 3.12 each cached zipimporter then re-reads its whole
+        archive directory, eagerly: 17 importers over ``pyspark.zip``, the
+        py4j zip, this package's zip and the ``spark-core`` jar cost
+        0.11-0.22 CPU-s a task on a 4-vCPU VM (CPython 3.11), whatever the
+        UDF does.  CPython 3.12 re-reads lazily (gh-103200).  Here an archive is re-read only when its
+        ``(st_mtime_ns, st_size, st_ino)`` differs from the one stat'ed
+        before its last re-read through this method; otherwise the importer
+        takes the directory already cached for that archive.  A failed
+        ``stat`` falls back to the stock method.
+
+        Workers install this when they import the package, i.e. while a
+        fresh worker's first task unpickles its function, after that
+        task's own invalidation.  So each archive is still read in full by
+        the first task, and once more by the next task to learn its
+        signature; every later task in the same worker reads none.
+        """
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            return _stock_invalidate(self)
+        sig = (st.st_mtime_ns, st.st_size, st.st_ino)
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if files is not None and _read_at.get(self.archive) == sig:
+            self._files = files
+            return
+        # stat'ed before the read: a write racing the read changes the
+        # signature again, so the next call re-reads rather than trusting
+        # a directory older than its signature
+        _stock_invalidate(self)
+        _read_at[self.archive] = sig
+
+    zipimport.zipimporter.invalidate_caches = _invalidate_unless_unchanged

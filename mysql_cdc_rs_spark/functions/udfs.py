@@ -122,12 +122,19 @@ def map_rows(df, fn, ddl: str):
     schema = to_arrow_schema(StructType.fromDDL(ddl))
 
     def run(batches):
+        # ``_map_batch`` pickles by reference, so a worker unpickling ``run``
+        # imports this package, and with it the zip-cache hook of
+        # ``mysql_cdc_rs_spark/__init__.py``, whatever module ``fn`` is from
         for batch in batches:
-            rows = zip(*(col.to_pylist() for col in batch.columns))
-            out = [r for row in rows for r in fn(*row)]
-            cols = list(zip(*out)) or [()] * len(schema)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
-            )
+            yield _map_batch(fn, schema, batch)
 
     return df.mapInArrow(run, ddl)
+
+
+def _map_batch(fn, schema: pa.Schema, batch: pa.RecordBatch) -> pa.RecordBatch:
+    rows = zip(*(col.to_pylist() for col in batch.columns))
+    out = [r for row in rows for r in fn(*row)]
+    cols = list(zip(*out)) or [()] * len(schema)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
+    )

@@ -11,7 +11,10 @@ where the lineage is ``lineage_record``'s aggregates over deterministic
 url-hash buckets: stable across runs and parallelism levels, and cheap
 enough for a write to observe on its own input.  A rerun computes the
 input's lineage only when a complete manifest and its table exist; when
-the two agree it SKIPS the stage and reuses the persisted output.
+the two agree it SKIPS the stage and reuses the persisted output.  The
+status reads ``running`` from before a write until its manifest commits, so
+a crash in between never leaves the previous input's ``complete`` manifest
+beside the new rows.
 """
 
 from __future__ import annotations
@@ -70,9 +73,16 @@ class CheckpointedStage:
         input_lineage = cache(lambda: lineage_summary(input_df, bucket_col))
         if not self.completed_with(input_lineage):
             lineage = input_lineage()
+            self.mark_incomplete()
             self.catalog.overwrite(fn(input_df), self.name)
             self.mark_complete(lineage)
         return self.catalog.read(self.name)
+
+    def mark_incomplete(self) -> None:
+        """Record that the stage's table is being rewritten.  Called before
+        the write, so a crash between the write and ``mark_complete`` leaves
+        no complete manifest of the previous input beside the new rows."""
+        self.catalog.write_manifest(self.name, {"status": "running", "stage": self.name})
 
     def mark_complete(self, input_lineage: dict) -> None:
         """Record the stage's output as complete over ``input_lineage``."""

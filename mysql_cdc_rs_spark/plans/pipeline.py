@@ -45,6 +45,7 @@ def run_pipeline(pages: DataFrame, catalog: SinkCatalog) -> PipelineResult:
     if not stage.completed_with(lambda: C.lineage_summary(buckets)):
         obs = Observation()
         enriched = enrich(decode_pages(pages)).observe(obs, *C.lineage_record())
+        stage.mark_incomplete()
         write_routes(enriched, catalog)
         stage.mark_complete(obs.get)
     routes = catalog.read_manifest("routes")

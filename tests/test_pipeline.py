@@ -260,6 +260,40 @@ def test_pipeline_resume(spark, pages, monkeypatch):
         assert routed.exceptAll(moved.select("url")).count() == 0
 
 
+def test_crash_before_manifest_commit_is_not_resumed(spark, tmp_path, monkeypatch):
+    """A run that writes its table and dies before ``mark_complete`` must
+    not leave the previous input's complete manifest beside its rows: a
+    rerun over that previous input rewrites the table, for ``run_pipeline``
+    and for a generic ``CheckpointedStage``."""
+    from mysql_cdc_rs_spark.functions.columns import url_bucket
+    from mysql_cdc_rs_spark.plans.checkpoint import CheckpointedStage
+
+    small, big = pages_df(spark, 300, seed=42), pages_df(spark, 400, seed=42)
+    cat = SinkCatalog(spark, str(tmp_path / "sink"))
+    stage = CheckpointedStage(cat, "probe_stage")
+
+    def stage_run(pages):
+        buckets = pages.select("url", url_bucket(F.col("url")).alias("url_bucket"))
+        return stage.run(buckets, lambda df: df.select("url"))
+
+    def crash(self, lineage):
+        raise RuntimeError("crash before the manifest commit")
+
+    run_pipeline(small, cat)
+    stage_run(small)
+    with monkeypatch.context() as m:
+        m.setattr(CheckpointedStage, "mark_complete", crash)
+        for run in (run_pipeline, lambda pages, _: stage_run(pages)):
+            with pytest.raises(RuntimeError, match="manifest commit"):
+                run(big, cat)
+    assert cat.read("routed").count() == cat.read("probe_stage").count() == 400
+
+    r = run_pipeline(small, cat)
+    assert sum(r.route_counts.values()) == r.metrics["rows"] == 300
+    assert cat.read("routed").count() == 300
+    assert stage_run(small).count() == 300
+
+
 def _jobs_of(spark, group: str, action) -> int:
     """The number of Spark jobs ``action()`` runs, counted through a job
     group."""
