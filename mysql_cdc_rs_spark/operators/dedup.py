@@ -20,7 +20,7 @@ doc_id (uniform), so no hot keys.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from mysql_cdc_rs_spark.functions.text import (
@@ -30,6 +30,7 @@ from mysql_cdc_rs_spark.functions.text import (
     word_shingles,
     words_of,
 )
+from mysql_cdc_rs_spark.operators import stats as S
 
 MINHASH_K = 64   # hash family size (production-grade; r=4 rows/band)
 LSH_BANDS = 16   # bands of MINHASH_K / LSH_BANDS rows each
@@ -117,6 +118,7 @@ def lsh_candidate_pairs(
     k: int = MINHASH_K,
     bands: int = LSH_BANDS,
     max_bucket: int = MAX_BUCKET,
+    obs: Observation | None = None,
 ) -> DataFrame:
     """Near-dup candidate pairs: docs sharing any LSH band bucket.
 
@@ -131,14 +133,17 @@ def lsh_candidate_pairs(
     collect_list, via a row_number window over the same key — the window
     and the groupBy share partitioning, so the cap costs a sort, not an
     extra shuffle, and no executor ever materializes an unbounded member
-    array.  Kept members are the lowest doc_ids (deterministic); use
-    ``lsh_bucket_stats`` to monitor how many rows the cap drops.
+    array.  Kept members are the lowest doc_ids (deterministic).
+
+    ``obs`` observes the cap census (``stats.cap_record``) on the window,
+    in whatever action runs the pairs; the pairs do not change.
     """
     banded = banded_buckets(docs, k, bands)
     w = Window.partitionBy("band_id", "bucket").orderBy("doc_id")
-    bounded = banded.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") <= max_bucket
-    )
+    ranked = banded.withColumn("rn", F.row_number().over(w))
+    if obs is not None:
+        ranked = ranked.observe(obs, *S.cap_record("rn", max_bucket))
+    bounded = ranked.where(F.col("rn") <= max_bucket)
     return (
         bounded.groupBy("band_id", "bucket")
         .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
@@ -146,32 +151,6 @@ def lsh_candidate_pairs(
         .select(F.explode(_pairs_expr("ids")).alias("p"))
         .select(F.col("p.doc_a"), F.col("p.doc_b"))
         .distinct()
-    )
-
-
-def lsh_bucket_stats(
-    docs: DataFrame,
-    k: int = MINHASH_K,
-    bands: int = LSH_BANDS,
-    max_bucket: int = MAX_BUCKET,
-) -> DataFrame:
-    """Monitoring companion to lsh_candidate_pairs: bucket-occupancy census
-    and how many (doc, band) rows the degenerate-bucket cap drops."""
-    sizes = banded_buckets(docs, k, bands).groupBy("band_id", "bucket").agg(
-        F.count("*").alias("n_members")
-    )
-    return sizes.agg(
-        F.count("*").alias("n_buckets"),
-        F.max("n_members").alias("max_bucket_size"),
-        F.sum(F.when(F.col("n_members") > max_bucket, 1).otherwise(0)).alias(
-            "n_oversize_buckets"
-        ),
-        F.sum(
-            F.when(
-                F.col("n_members") > max_bucket,
-                F.col("n_members") - max_bucket,
-            ).otherwise(0)
-        ).alias("n_rows_dropped_by_cap"),
     )
 
 

@@ -3,16 +3,18 @@
 The reference counts each event while it decodes it
 (binlog/src/decoder/event_statistics.rs:8-200,
  binlog/src/row/monitoring.rs:9-180).  Here the run record
-is the same idea: ``decode_record``/``run_record`` are global aggregates
-for ``DataFrame.observe``, so the pass that writes the data counts it, with
-no job of their own.  ``charset_stats`` and the salted two-phase aggregate
-``salted_sums`` are the A7 and skew oracle queries' code;
-``host_stats_salted`` runs the latter over a finished sink.
+is the same idea: ``decode_record``/``run_record``/``cap_record`` are
+global aggregates for ``DataFrame.observe``, so the pass that writes the
+data counts it, with no job of their own.  ``charset_stats`` and the
+salted two-phase aggregate ``salted_sums`` are the A7 and skew oracle
+queries' code; ``host_stats_salted`` runs the latter over a finished sink.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import time
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from mysql_cdc_rs_spark.kernel.decode import ERROR_CLASSES, EVENT_TYPES, ROUTES
@@ -72,6 +74,32 @@ def run_record() -> list[Column]:
             "string(max(warc_ts)) AS last_seen",
         ]
     ]
+
+
+NO_CAP = {"lsh.cap_shed": 0, "lsh.cap_buckets": 0}
+
+
+def cap_record(pos: str, cap: int) -> list[Column]:
+    """Curation's LSH cap census (``NO_CAP`` when nothing is capped) on a
+    bucket window whose ``pos`` runs 1..size: the rows past ``cap``, and
+    the buckets that reach ``cap + 1``."""
+    return [
+        F.expr(f"count_if({pos} > {cap}) AS `lsh.cap_shed`"),
+        F.expr(f"count_if({pos} = {cap + 1}) AS `lsh.cap_buckets`"),
+    ]
+
+
+def observed(obs: Observation) -> dict:
+    """``obs.get``, or {} when ``obs`` has no metrics: no action completed
+    it within 10 s (actions hand them over through the listener bus, ms
+    later; ``obs.get`` waits forever on one no action ran), or its subtree
+    was pruned from the plan and Spark completed it with an empty row."""
+    done, end = obs._jo.future(), time.monotonic() + 10.0
+    while not done.isCompleted():
+        if time.monotonic() > end:
+            return {}
+        time.sleep(0.01)
+    return obs.get if obs._jo.getRow().length() else {}
 
 
 def charset_stats(decoded: DataFrame) -> DataFrame:

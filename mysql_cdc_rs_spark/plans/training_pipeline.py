@@ -26,26 +26,16 @@ join on the uniform doc_id key otherwise.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from mysql_cdc_rs_spark.functions.columns import url_bucket
 from mysql_cdc_rs_spark.functions.text import words_of
 from mysql_cdc_rs_spark.operators import dedup as DD
+from mysql_cdc_rs_spark.operators import stats as S
 from mysql_cdc_rs_spark.operators.decode import decode_pages
 
 DEFAULT_MIN_TOKENS = 20
-
-
-def text_bearing(decoded: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
-    """Decoded pages -> (doc_id, text, *keep) of the html/plain docs.
-
-    doc_id is the trailing integer of the url, which both page generators
-    emit."""
-    doc_id = F.regexp_extract("url", r"/(\d+)$", 1).cast("long")
-    return decoded.filter(F.col("event_type").isin("html", "plain")).select(
-        doc_id.alias("doc_id"), "text", *keep
-    )
 
 
 def quality_corpus(
@@ -54,9 +44,17 @@ def quality_corpus(
     keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """The curation input shared by batch, resumable and streaming curation:
-    text-bearing docs with at least ``min_tokens`` words (JVM-side gate)."""
-    return text_bearing(decoded, keep).filter(
-        F.size(words_of(F.col("text"))) >= min_tokens
+    (doc_id, text, *keep) of the html/plain docs with at least
+    ``min_tokens`` words (JVM-side gate).  doc_id is the url's trailing
+    integer, which both page generators emit.  ``min_tokens`` is at least
+    3, the shingle length, so every quality doc has band buckets."""
+    if min_tokens < 3:
+        raise ValueError(f"min_tokens must be at least 3, got {min_tokens}")
+    doc_id = F.regexp_extract("url", r"/(\d+)$", 1).cast("long")
+    return (
+        decoded.filter(F.col("event_type").isin("html", "plain"))
+        .select(doc_id.alias("doc_id"), "text", *keep)
+        .filter(F.size(words_of(F.col("text"))) >= min_tokens)
     )
 
 
@@ -115,10 +113,14 @@ def curate(
     # block write lock the winner holds while feeding a Python decode
     # worker — the runner stall captured in BENCH/hang/ (and the likely
     # shape of the round-4 12.8M hang).  One extra count() job per
-    # curate() call; the decode work itself was owed either way.
-    quality.count()
+    # curate() call, which is the record's ``quality``; the decode work
+    # itself was owed either way.
+    n_quality = quality.count()
 
-    pairs = DD.lsh_candidate_pairs(quality)
+    # the cap census is observed ABOVE the persist: inside it, every
+    # call's cached plan (and cache entry) would be a new one
+    lsh = Observation()
+    pairs = DD.lsh_candidate_pairs(quality, obs=lsh)
     if verify_jaccard is not None:
         from pyspark.sql import Window
 
@@ -132,22 +134,30 @@ def curate(
             quality, min_jaccard=verify_jaccard, candidates=bounded
         )
     survivors = keep_first(quality, pairs)
-    # hand the persist lifecycle to the caller: release(survivors) after
-    # the consuming action, or the cached quality plan outlives the run
+    # hand the persist lifecycle and the record to the caller:
+    # release(survivors) after the consuming action
     survivors._curate_persisted = quality
+    survivors._curate_observed = (n_quality, lsh)
     return survivors
 
 
-def release(survivors: DataFrame) -> None:
-    """Unpersist the intermediate quality corpus cached by ``curate``.
+def release(survivors: DataFrame) -> dict | None:
+    """Unpersist the quality corpus cached by ``curate`` and return its
+    record (None for a frame ``curate`` did not return): ``quality``, the
+    persist barrier's count, and the cap census (``stats.cap_record``) that
+    the survivors' first action observed, 0 when no doc passed the gate and
+    left out when no action ran.
 
     ``curate`` must persist lazily (its result is consumed by callers it
     does not control), so it cannot unpersist itself; call this after the
     consuming action or a long-lived session (bench loop, notebook)
     accumulates one cached plan per invocation."""
     q = getattr(survivors, "_curate_persisted", None)
-    if q is not None:
-        q.unpersist()
+    if q is None:
+        return None
+    q.unpersist()
+    n_quality, lsh = survivors._curate_observed
+    return {"quality": n_quality, **(S.observed(lsh) if n_quality else S.NO_CAP)}
 
 
 def curate_resumable(
@@ -186,20 +196,3 @@ def curate_resumable(
     return CheckpointedStage(catalog, "curate_survivors").run(
         quality, survivors_fn
     )
-
-
-def curation_report(pages: DataFrame, min_tokens: int = DEFAULT_MIN_TOKENS) -> dict:
-    """Stage-by-stage exact counts (the per-sink metrics analog)."""
-    decoded = decode_pages(pages).cache()
-    textful = text_bearing(decoded)
-    quality = quality_corpus(decoded, min_tokens)
-    survivors = curate(pages, min_tokens=min_tokens)
-    out = {
-        "input": decoded.count(),
-        "text_bearing": textful.count(),
-        "quality_pass": quality.count(),
-        "survivors": survivors.count(),
-    }
-    decoded.unpersist()
-    release(survivors)
-    return out

@@ -46,6 +46,13 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # off: AQE's swap of a stage that came out empty (and the stages
+        # under it) for an empty relation, which leaves the observations in
+        # them, such as curation's cap census, with no metrics
+        .config(
+            "spark.sql.adaptive.optimizer.excludedRules",
+            "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation",
+        )
         # --- vectorized decode path sizing (Arrow batches to the Arrow UDFs) ---
         # 2000-row batches keep the JVM->Python->JVM pipeline full: with one
         # huge batch per task the stage is latency-bound (measured 2.2x

@@ -200,6 +200,12 @@ def start_curation_stream(
     point, with the tail at most 2K batches deep in the interim.  Layout,
     bucket count and minor/major choice are ``compact_seen_buckets``' one
     policy; the cadence is the only compaction option.
+
+    Each batch adds ``stats.decode_record``, ``quality`` (the barrier's
+    count) and the cap census (``stats.cap_record`` on ``seen_positions``)
+    to the running ``record`` of manifest ``stream_curate``.  A bucket's
+    positions are 1..size in any arrival order, so the totals equal batch
+    ``curate``'s record (``release``) over the same pages.
     """
     from mysql_cdc_rs_spark.operators import dedup as DD
 
@@ -228,9 +234,11 @@ def start_curation_stream(
         n_quality = quality.count()  # also completes ``obs``
         banded = DD.banded_buckets(quality).persist()
         banded.count()
+        lsh = Observation()  # the cap census, as batch curate's
         pos = F.col("p") + F.col("r")
         drops = (
             seen_positions(banded, catalog, last)
+            .observe(lsh, *S.cap_record("p + r", cap))
             .where((pos >= 2) & (pos <= cap))
             .select("doc_id")
             .distinct()
@@ -242,25 +250,15 @@ def start_curation_stream(
         catalog.append(seen_rows(banded, batch_id), SEEN)
         quality.unpersist()
         banded.unpersist()
-        # Input-lineage tripwire (free: n_quality is the persist barrier's
-        # return).  A checkpointed source can silently feed an EMPTY batch
-        # and never re-offer its data — seen for real when a soak's
-        # resume protocol moved a source file a PENDING batch referenced:
-        # the re-executed batch read zero rows, committed honestly, and
-        # 400k docs vanished from the corpus with every sink invariant
-        # green (BENCH/SOAK.md).  The running quality-row total makes that
-        # auditable downstream: sum(per-batch quality rows) must equal the
-        # batch-mode quality count over the same corpus (both sides apply
-        # ``quality_corpus``; ``curation_report``'s ``quality_pass``).  The
-        # run record's running totals commit with it, so a skipped replay
-        # adds nothing.
+        # committed with last_batch_id, so a skipped replay adds nothing
+        cap_census = S.observed(lsh) if n_quality else S.NO_CAP
+        record = {**obs.get, "quality": n_quality, **cap_census}
         prior = m.get("record", {})
         catalog.write_manifest(
             MANIFEST,
             {
                 "last_batch_id": batch_id,
-                "quality_rows_total": m.get("quality_rows_total", 0) + n_quality,
-                "record": {k: prior.get(k, 0) + v for k, v in obs.get.items()},
+                "record": {k: prior.get(k, 0) + v for k, v in record.items()},
             },
         )
         if compact_every and (batch_id + 1) % compact_every == 0:

@@ -134,7 +134,7 @@ def main() -> None:
     # against its logged file list, and if that file is gone the batch
     # reads ZERO rows, commits, and the source never re-offers the file —
     # 400k docs silently vanished from a 12.8M run this way (the
-    # quality_rows_total manifest tripwire now catches it).  On resume the
+    # stream record's "quality" total now catches it).  On resume the
     # crash itself was the phase boundary, so drain everything in place.
     half = sorted(
         (f for f in os.listdir(src) if f.endswith(".parquet")),
@@ -200,18 +200,12 @@ def main() -> None:
     surv = curate(pages_all)
     batch_ids = {r["doc_id"] for r in surv.select("doc_id").collect()}
     batch_sec = time.monotonic() - t0
-    release(surv)
-    # input-lineage tripwire: the stream's cumulative quality-row count
-    # (written per batch into the stream_curate manifest) must equal the
-    # batch-mode quality count — catches silent source-layer input loss
-    # (an empty re-executed batch) that every sink invariant misses
-    from mysql_cdc_rs_spark.operators.decode import decode_pages
-    from mysql_cdc_rs_spark.plans.training_pipeline import quality_corpus
-
-    batch_quality = quality_corpus(decode_pages(pages_all)).count()
-    stream_quality = cat.read_manifest("stream_curate").get(
-        "quality_rows_total", -1
-    )
+    batch_record = release(surv)
+    # input-lineage tripwire: the stream's running record (manifest
+    # stream_curate) must equal the batch record; a quality total short of
+    # batch mode's is source-layer input loss (an empty re-executed batch)
+    # that every sink invariant misses
+    stream_record = cat.read_manifest("stream_curate")["record"]
     out["batch_compare"] = {
         "batch_sec": round(batch_sec, 3),
         "batch_docs_per_sec": round(N_TOTAL / batch_sec, 1),
@@ -220,9 +214,12 @@ def main() -> None:
         "identical": stream_ids == batch_ids,
         "only_stream": len(stream_ids - batch_ids),
         "only_batch": len(batch_ids - stream_ids),
-        "stream_quality_rows": stream_quality,
-        "batch_quality_rows": batch_quality,
-        "quality_rows_match": stream_quality == batch_quality,
+        "stream_quality_rows": stream_record["quality"],
+        "batch_quality_rows": batch_record["quality"],
+        "quality_rows_match": stream_record["quality"] == batch_record["quality"],
+        "records_match": all(
+            stream_record[k] == v for k, v in batch_record.items()
+        ),
     }
     out["host_load_at_end"] = [round(x, 2) for x in os.getloadavg()]
     spark.stop()

@@ -195,21 +195,33 @@ def test_short_docs_yield_zero_shingles_not_crash(spark):
 
 def test_lsh_degenerate_bucket_is_capped(spark):
     """100 identical docs share every band bucket; with max_bucket=10 the
-    pair count is bounded at C(10,2) per the cap, not C(100,2) — and
-    lsh_bucket_stats reports exactly what the cap drops."""
+    pair count is bounded at C(10,2) per the cap, not C(100,2) — and the
+    observed cap census counts exactly what a groupBy of the bucket sizes
+    says the cap drops, without changing the pairs."""
+    from pyspark.sql import Observation
+
     from mysql_cdc_rs_spark.operators import dedup as DD
 
     text = "the exact same boilerplate text repeated across many documents"
     docs = spark.createDataFrame(
         [(i, text) for i in range(100)], "doc_id long, text string"
     )
-    pairs = DD.lsh_candidate_pairs(docs, max_bucket=10).collect()
+    obs = Observation()
+    pairs = DD.lsh_candidate_pairs(docs, max_bucket=10, obs=obs).collect()
     assert len(pairs) == 45  # C(10,2), lowest doc_ids kept
     assert {r["doc_a"] for r in pairs} | {r["doc_b"] for r in pairs} == set(range(10))
-    stats = DD.lsh_bucket_stats(docs, max_bucket=10).first()
-    assert stats["max_bucket_size"] == 100
-    assert stats["n_oversize_buckets"] == DD.LSH_BANDS  # every band's bucket
-    assert stats["n_rows_dropped_by_cap"] == DD.LSH_BANDS * 90
+    assert sorted(pairs) == sorted(DD.lsh_candidate_pairs(docs, max_bucket=10).collect())
+    sizes = [
+        r["n"]
+        for r in DD.banded_buckets(docs)
+        .groupBy("band_id", "bucket")
+        .agg(F.count("*").alias("n"))
+        .collect()
+    ]
+    assert obs.get == {
+        "lsh.cap_shed": sum(n - 10 for n in sizes if n > 10),
+        "lsh.cap_buckets": sum(n > 10 for n in sizes),
+    } == {"lsh.cap_shed": DD.LSH_BANDS * 90, "lsh.cap_buckets": DD.LSH_BANDS}
 
 
 def test_ngram_jaccard_degenerate_shingle_is_capped(spark):

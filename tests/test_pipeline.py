@@ -515,17 +515,33 @@ def test_salted_host_stats_equal_direct(decoded):
 
 
 def test_training_curation_stages(spark):
-    """Composed curation pipeline: stage counts are monotone and exact."""
-    from mysql_cdc_rs_spark.plans.training_pipeline import curate, curation_report
+    """Composed curation pipeline: ``release()`` returns curate's record,
+    whose ``quality`` is batch ``quality_corpus``'s count; the input rows,
+    the text-bearing rows (html + plain, from a decode groupBy), the
+    quality docs and the unique survivors are monotone."""
+    from mysql_cdc_rs_spark.plans.training_pipeline import (
+        curate,
+        quality_corpus,
+        release,
+    )
     from mysql_cdc_rs_spark.sources.pages_from_documents import pages_from_documents
 
     pages = pages_from_documents(spark, "/root/testdata/sf0.001")
-    rep = curation_report(pages, min_tokens=20)
-    assert rep["input"] >= rep["text_bearing"] >= rep["quality_pass"] >= rep["survivors"]
-    assert rep["survivors"] > 0
-    # survivors are unique docs and all meet the quality bar
     surv = curate(pages, min_tokens=20)
-    assert surv.count() == surv.select("doc_id").distinct().count() == rep["survivors"]
+    n_surv = surv.count()
+    assert surv.select("doc_id").distinct().count() == n_surv
+    rec = release(surv)
+    decoded = decode_pages(pages)
+    assert rec["quality"] == quality_corpus(decoded, min_tokens=20).count()
+    assert set(rec) == {"quality", *S.NO_CAP}
+    events = {
+        r["event_type"]: r["count"]
+        for r in decoded.groupBy("event_type").count().collect()
+    }
+    textful = events.get("html", 0) + events.get("plain", 0)
+    assert sum(events.values()) >= textful >= rec["quality"] >= n_surv > 0
+    with pytest.raises(ValueError, match="at least 3"):
+        quality_corpus(decoded, min_tokens=2)
 
 
 def test_curate_release_unpersists_quality(spark):
@@ -545,6 +561,40 @@ def test_curate_release_unpersists_quality(spark):
     assert not (sl.useMemory or sl.useDisk)  # cache dropped
     release(surv)  # idempotent, and safe on frames without the handle
     release(pages)
+
+
+def test_curate_calls_share_one_cache_entry(spark):
+    """Two un-released curate() calls over the same pages add ONE cached
+    quality corpus: the record is observed above the persist, so every
+    call persists the same plan."""
+    from mysql_cdc_rs_spark.plans.training_pipeline import curate, release
+
+    jsc = spark.sparkContext._jsc
+    pages = pages_df(spark, 300, seed=19)
+    before = len(jsc.getPersistentRDDs())
+    s1, s2 = curate(pages), curate(pages)
+    assert len(jsc.getPersistentRDDs()) == before + 1
+    assert s1.count() == s2.count()
+    assert release(s1) == release(s2)
+
+
+def test_curate_record_adds_no_job(spark, tmp_path):
+    """curate() + count() runs 9 Spark jobs, as it did before curate kept
+    a record: ``quality`` is the persist barrier's count and the cap census
+    is observed by the count's own pass."""
+    from mysql_cdc_rs_spark.plans.training_pipeline import curate, release
+
+    path = str(tmp_path / "pages")
+    pages_df(spark, 400, seed=17).write.parquet(path)
+    pages = spark.read.parquet(path)
+    held = []
+
+    def run():
+        held.append(curate(pages, min_tokens=20))
+        held[0].count()
+
+    assert _jobs_of(spark, "curate_record", run) == 9
+    assert release(held[0])["quality"] > 0
 
 
 def test_session_sizes_shuffle_from_cores(spark):

@@ -215,6 +215,8 @@ def test_explain_snapshots_carry_invariants():
     # the survivors anti-join exists and is planner-chosen (the live test
     # test_curate_anti_join_not_forced_broadcast pins hint-freeness)
     assert "LeftAnti" in curate
+    # the record's cap census is observed in the plan, not by a job
+    assert "CollectMetrics" in curate
 
     # IVF assignment: shuffle-free argmax fold (formatted explain prints
     # the tree + details, so node counts are x2 vs the simple plan)

@@ -262,11 +262,7 @@ def test_streaming_curation_matches_batch_and_resumes(spark):
     curate() survivor set, and a replayed batch is skipped idempotently."""
     from mysql_cdc_rs_spark.kernel.decode import EVENT_TYPES
     from mysql_cdc_rs_spark.operators.decode import decode_pages
-    from mysql_cdc_rs_spark.plans.training_pipeline import (
-        curate,
-        curation_report,
-        release,
-    )
+    from mysql_cdc_rs_spark.plans.training_pipeline import curate, release
     from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
     from mysql_cdc_rs_spark.streaming.stream_pipeline import (
         read_curated,
@@ -298,7 +294,7 @@ def test_streaming_curation_matches_batch_and_resumes(spark):
         got = {r["doc_id"] for r in read_curated(cat).select("doc_id").collect()}
         surv = curate(full)
         want = {r["doc_id"] for r in surv.select("doc_id").collect()}
-        release(surv)
+        batch_rec = release(surv)
         assert got == want
 
         # replaying the last batch (manifest says complete) is a no-op
@@ -307,10 +303,11 @@ def test_streaming_curation_matches_batch_and_resumes(spark):
         again = {r["doc_id"] for r in read_curated(cat).select("doc_id").collect()}
         assert again == want
 
-        # input-lineage tripwire: the stream's running quality-row total
-        # equals batch mode's quality count over the same pages
+        # the stream's running record equals the batch record over the
+        # same pages: quality (the input-lineage tripwire) and the cap
+        # census
         m = cat.read_manifest("stream_curate")
-        assert m["quality_rows_total"] == curation_report(full)["quality_pass"]
+        assert {k: m["record"][k] for k in batch_rec} == batch_rec
 
         # the batches' run-record totals count every input row once, with
         # the event-type mix of a batch decode
@@ -934,11 +931,114 @@ def test_streaming_curation_degenerate_bucket_cap_matches_batch(spark):
 
         surv = curate(spark.createDataFrame(rows, PAGES_SCHEMA), min_tokens=5)
         batch_set = {r["doc_id"] for r in surv.select("doc_id").collect()}
-        release(surv)
+        batch_rec = release(surv)
 
         want = {1} | set(range(MAX_BUCKET + 1, n + 1))  # 1 and 513..520
         assert batch_set == want
         assert stream_set == want
+        # both records count the 8 shed rows of each band's one bucket
+        stream_rec = cat.read_manifest("stream_curate")["record"]
+        assert {k: stream_rec[k] for k in batch_rec} == batch_rec == {
+            "quality": n,
+            "lsh.cap_shed": 128,
+            "lsh.cap_buckets": 16,
+        }
+
+        # a third batch lies wholly past the cap: it drops nothing, and its
+        # census still counts (AQE must not prune the observed stage)
+        more = [_html_page(i, boiler) for i in range(n + 1, n + 101)]
+        spark.createDataFrame(more, PAGES_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+        q = start_curation_stream(
+            stream_pages(spark, src), cat, f"{tmp}/ckpt", min_tokens=5
+        )
+        q.awaitTermination()
+        stream_rec = cat.read_manifest("stream_curate")["record"]
+        assert stream_rec["lsh.cap_shed"] == 16 * (n + 100 - MAX_BUCKET)
+        assert stream_rec["lsh.cap_buckets"] == 16
+
+
+def _binary_page(i: int) -> tuple:
+    """A ``PAGES_SCHEMA`` row that decodes as ``binary``: no text."""
+    body = bytes(range(256))
+    raw = (
+        f"HTTP/1.1 200 OK\r\nContent-Type: application/octet-stream\r\n"
+        f"Content-Length: {len(body)}\r\n\r\n"
+    ).encode() + body
+    return (f"https://ex.com/d/{i}", None, raw, None, "en")
+
+
+def test_curation_record_without_quality_docs(spark):
+    """With no quality doc there is no LSH window row to observe.  Batch
+    curate and a stream batch over only non-text pages must still finish,
+    with ``quality`` 0 and a cap census of 0; the waits are bounded so that
+    a wait on an observation fails instead of stalling the suite."""
+    import threading
+
+    from mysql_cdc_rs_spark.operators.stats import NO_CAP
+    from mysql_cdc_rs_spark.plans.training_pipeline import curate, release
+    from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
+    from mysql_cdc_rs_spark.streaming.stream_pipeline import (
+        start_curation_stream,
+        stream_pages,
+    )
+
+    rows = [_binary_page(i) for i in range(1, 21)]
+    out = {}
+
+    def batch():
+        surv = curate(spark.createDataFrame(rows, PAGES_SCHEMA), min_tokens=5)
+        out["survivors"] = surv.count()
+        out["record"] = release(surv)
+
+    t = threading.Thread(target=batch, daemon=True)
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), "batch curate waited on an observation"
+    assert out == {"survivors": 0, "record": {"quality": 0, **NO_CAP}}
+
+    with tempfile.TemporaryDirectory() as tmp:
+        src = f"{tmp}/pages"
+        spark.createDataFrame(rows, PAGES_SCHEMA).coalesce(1).write.parquet(src)
+        cat = SinkCatalog(spark, f"{tmp}/cur")
+        q = start_curation_stream(
+            stream_pages(spark, src), cat, f"{tmp}/ckpt", min_tokens=5
+        )
+        finished = q.awaitTermination(120)
+        if not finished:
+            q.stop()
+        assert finished, "the stream batch waited on an observation"
+        assert q.exception() is None
+        rec = cat.read_manifest("stream_curate")["record"]
+        assert rec["rows"] == rec["event.binary"] == len(rows)
+        assert {k: rec[k] for k in ("quality", *NO_CAP)} == {"quality": 0, **NO_CAP}
+
+
+def test_streaming_curation_record_adds_no_job(spark):
+    """The curation stream runs as many Spark jobs per batch as it did
+    before the cap census joined its record: 14 for the first batch and
+    16 for the second, whose probe also reads the seen state.  A query's
+    jobs run in job group ``str(q.runId)``; each drain here is one batch."""
+    from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
+    from mysql_cdc_rs_spark.streaming.stream_pipeline import (
+        start_curation_stream,
+        stream_pages,
+    )
+
+    full = pages_df(spark, 400, seed=23)
+    docid = F.regexp_extract("url", r"/(\d+)$", 1).cast("long")
+    tracker = spark.sparkContext.statusTracker()
+    jobs = []
+    with tempfile.TemporaryDirectory() as tmp:
+        src = f"{tmp}/pages"
+        cat = SinkCatalog(spark, f"{tmp}/cur")
+        for chunk in (docid < 200, docid >= 200):
+            full.filter(chunk).coalesce(1).write.mode("append").parquet(src)
+            q = start_curation_stream(stream_pages(spark, src), cat, f"{tmp}/ckpt")
+            q.awaitTermination()
+            jobs.append(len(tracker.getJobIdsForGroup(str(q.runId))))
+    assert jobs == [14, 16]
 
 
 def test_streaming_curation_compaction_cadence(spark):
