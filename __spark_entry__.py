@@ -25,10 +25,19 @@ _SHIPPED: set[str] = set()
 def _ensure_shipped(spark: SparkSession) -> None:
     """Ship the package to executors (the harness may pass a session built
     without our build_session and from any cwd; verified: without this,
-    queries fail with ModuleNotFoundError whenever cwd != repo root)."""
-    from mysql_cdc_rs_spark.session import ship_package
+    queries fail with ModuleNotFoundError whenever cwd != repo root), and
+    exclude the AQE rule that ``curate`` requires excluded."""
+    from mysql_cdc_rs_spark.session import (
+        EMPTY_RELATION_RULE,
+        EXCLUDED_RULES,
+        ship_package,
+    )
 
     ship_package(spark)
+    rules = spark.conf.get(EXCLUDED_RULES, "")
+    if EMPTY_RELATION_RULE not in rules:
+        rules = f"{rules},{EMPTY_RELATION_RULE}" if rules else EMPTY_RELATION_RULE
+        spark.conf.set(EXCLUDED_RULES, rules)
 
 
 def entry(spark: SparkSession) -> DataFrame:

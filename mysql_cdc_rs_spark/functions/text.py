@@ -14,10 +14,9 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def portable_hash60(col: Column, seed: int | None = None) -> Column:
-    """60-bit md5-derived hash, optionally seeded (for minhash families)."""
-    x = F.concat(F.lit(f"{seed}:"), col) if seed is not None else col
-    return F.conv(F.substring(F.md5(x), 1, 15), 16, 10).cast("long")
+def portable_hash60(col: Column) -> Column:
+    """60-bit md5-derived hash."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 MERSENNE_P = (1 << 31) - 1  # 2^31-1, the universal-hash modulus
@@ -38,6 +37,11 @@ def minhash_coeffs(i: int) -> tuple[int, int]:
     return ha % (MERSENNE_P - 1) + 1, hb % MERSENNE_P
 
 
+#: words per shingle: every dedup operator, the quality gate's floor and
+#: the DuckDB twins in ``queries`` use this one length
+SHINGLE_WORDS = 3
+
+
 def norm_ws(col: Column) -> Column:
     """Whitespace-canonicalized text (matches kernel textextract collapse)."""
     return F.trim(F.regexp_replace(col, r"\s+", " "))
@@ -47,12 +51,14 @@ def words_of(col: Column) -> Column:
     return F.split(norm_ws(col), " ")
 
 
-def word_shingles(words_col: str, n: int = 3) -> Column:
-    """Word n-gram shingles from an array<string> column (by NAME).
+def word_shingles(words_col: str) -> Column:
+    """Word ``SHINGLE_WORDS``-gram shingles from an array<string> column (by
+    NAME).
 
     1-based element_at keeps the Spark expression textually parallel to the
     DuckDB oracle's 1-based list indexing.
     """
+    n = SHINGLE_WORDS
     elems = ", ".join(f"element_at({words_col}, i + {j})" for j in range(n))
     # Guard the upper bound: for docs with < n words Spark's
     # sequence(1, 0) yields DESCENDING [1, 0] and element_at(col, 0)

@@ -41,20 +41,12 @@ def write_bucketed(
 
 
 def colocated_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    on: list[str],
-    how: str = "inner",
-    force_merge: bool = True,
+    spark: SparkSession, left_table: str, right_table: str, on: list[str]
 ) -> DataFrame:
-    """Join two same-bucketed tables — planner elides both exchanges.
+    """Inner-join two same-bucketed tables — planner elides both exchanges.
 
-    force_merge hints sort-merge so the bucket distribution is actually
-    used; without it the optimizer may (correctly) broadcast a small side,
-    which is fine too but doesn't exercise co-location.
+    The sort-merge hint makes the bucket distribution actually used;
+    without it the optimizer may (correctly) broadcast a small side, which
+    is fine too but doesn't exercise co-location.
     """
-    left = spark.table(left_table)
-    if force_merge:
-        left = left.hint("merge")
-    return left.join(spark.table(right_table), on, how)
+    return spark.table(left_table).hint("merge").join(spark.table(right_table), on)

@@ -33,7 +33,8 @@ from mysql_cdc_rs_spark.functions.text import (
 from mysql_cdc_rs_spark.operators import stats as S
 
 MINHASH_K = 64   # hash family size (production-grade; r=4 rows/band)
-LSH_BANDS = 16   # bands of MINHASH_K / LSH_BANDS rows each
+LSH_BANDS = 16   # bands of ROWS_PER_BAND minhash values each
+ROWS_PER_BAND = MINHASH_K // LSH_BANDS
 SIMHASH_BITS = 32
 MAX_BUCKET = 512  # degenerate-bucket cap: max members considered per bucket
 
@@ -56,19 +57,19 @@ def exact_dedup_keep_first(docs: DataFrame) -> DataFrame:
     )
 
 
-def shingled(docs: DataFrame, n: int = 3) -> DataFrame:
+def shingled(docs: DataFrame) -> DataFrame:
     """(doc_id, shingle) exploded rows — distinct per doc."""
     return (
         docs.select("doc_id", words_of(F.col("text")).alias("words"))
-        .select("doc_id", F.explode(word_shingles("words", n)).alias("shingle"))
+        .select("doc_id", F.explode(word_shingles("words")).alias("shingle"))
         .distinct()
     )
 
 
-def minhash_signatures(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    """doc_id -> k minhash values (universal-hash family).
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """doc_id -> MINHASH_K minhash values (universal-hash family).
 
-    ONE md5 base hash per shingle, then k integer (a*h + b) % p
+    ONE md5 base hash per shingle, then k = MINHASH_K integer (a*h + b) % p
     derivations — k=64 costs 1 hash + 64 multiply-adds per shingle, not 64
     hashes.  Min-aggregations over the exploded shingles: ONE shuffle on
     doc_id, map-side partial mins, no per-row Python.  Deliberately NO
@@ -83,40 +84,35 @@ def minhash_signatures(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
     sh = docs.select(
         "doc_id", words_of(F.col("text")).alias("words")
     ).select(
-        "doc_id", F.explode(word_shingles("words", 3)).alias("shingle")
+        "doc_id", F.explode(word_shingles("words")).alias("shingle")
     ).withColumn(
         "h", portable_hash60(F.col("shingle")) % F.lit(MERSENNE_P)
     )
     aggs = []
-    for i in range(k):
+    for i in range(MINHASH_K):
         a, b = minhash_coeffs(i)
         aggs.append(F.expr(f"min(({a} * h + {b}) % {MERSENNE_P}) AS mh{i}"))
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def banded_buckets(
-    docs: DataFrame, k: int = MINHASH_K, bands: int = LSH_BANDS
-) -> DataFrame:
+def banded_buckets(docs: DataFrame) -> DataFrame:
     """(doc_id, band_id, bucket) — one row per doc per band.
 
     Built as one ``inline`` SQL string over the band structs (see
     ``minhash_signatures`` for why strings)."""
-    rows_per_band = k // bands
 
     def band(b: int) -> str:
-        mh = ", ".join(f"mh{b * rows_per_band + r}" for r in range(rows_per_band))
+        mh = ", ".join(f"mh{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND))
         return f"named_struct('band_id', {b}, 'bucket', concat_ws('_', {mh}))"
 
-    structs = ", ".join(band(b) for b in range(bands))
-    return minhash_signatures(docs, k).selectExpr(
+    structs = ", ".join(band(b) for b in range(LSH_BANDS))
+    return minhash_signatures(docs).selectExpr(
         "doc_id", f"inline(array({structs}))"
     )
 
 
 def lsh_candidate_pairs(
     docs: DataFrame,
-    k: int = MINHASH_K,
-    bands: int = LSH_BANDS,
     max_bucket: int = MAX_BUCKET,
     obs: Observation | None = None,
 ) -> DataFrame:
@@ -138,7 +134,7 @@ def lsh_candidate_pairs(
     ``obs`` observes the cap census (``stats.cap_record``) on the window,
     in whatever action runs the pairs; the pairs do not change.
     """
-    banded = banded_buckets(docs, k, bands)
+    banded = banded_buckets(docs)
     w = Window.partitionBy("band_id", "bucket").orderBy("doc_id")
     ranked = banded.withColumn("rn", F.row_number().over(w))
     if obs is not None:
@@ -260,10 +256,11 @@ def ngram_jaccard_pairs(
     return out
 
 
-def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
-    """32-bit simhash per doc from word hashes (sign-of-sum per bit).
+def simhash(docs: DataFrame) -> DataFrame:
+    """SIMHASH_BITS-bit simhash per doc from word hashes (sign-of-sum per
+    bit).
 
-    One explode + one groupBy(doc_id) with `bits` conditional sums — all
+    One explode + one groupBy(doc_id) with one conditional sum per bit — all
     JVM-side; the bit assembly is a single sum of powers of two.
     """
     w = docs.select(
@@ -275,11 +272,11 @@ def simhash(docs: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
                 -1
             )
         ).alias(f"s{i}")
-        for i in range(bits)
+        for i in range(SIMHASH_BITS)
     ]
     per_doc = w.groupBy("doc_id").agg(*bit_sums)
     sim = None
-    for i in range(bits):
+    for i in range(SIMHASH_BITS):
         term = F.when(F.col(f"s{i}") > 0, F.lit(1 << i).cast("long")).otherwise(
             F.lit(0).cast("long")
         )

@@ -33,11 +33,7 @@ def field_changes(before: Column, after: Column, fields: list[str]) -> Column:
 
 
 def with_diff(
-    df: DataFrame,
-    before_col: str,
-    after_col: str,
-    fields: list[str],
-    prefix: str = "",
+    df: DataFrame, before_col: str, after_col: str, fields: list[str]
 ) -> DataFrame:
     """Attach change list, changed-count, change % and update class."""
     changes = field_changes(F.col(before_col), F.col(after_col), fields)
@@ -49,10 +45,10 @@ def with_diff(
         .otherwise("partial")
     )
     return (
-        df.withColumn(f"{prefix}changes", changes)
-        .withColumn(f"{prefix}changed_fields", changed_n)
-        .withColumn(f"{prefix}change_pct", pct)
-        .withColumn(f"{prefix}update_class", klass)
+        df.withColumn("changes", changes)
+        .withColumn("changed_fields", changed_n)
+        .withColumn("change_pct", pct)
+        .withColumn("update_class", klass)
     )
 
 

@@ -172,14 +172,10 @@ def _unfilter(raw: bytes, width: int, height: int, bpp: int) -> bytes:
 # WAV (RIFF, 16-bit PCM)
 # --------------------------------------------------------------------------
 
-def encode_wav(samples: list[int], sample_rate: int = 16000,
-               channels: int = 1) -> bytes:
-    """Minimal RIFF/WAVE writer, 16-bit PCM little-endian."""
+def encode_wav(samples: list[int], sample_rate: int = 16000) -> bytes:
+    """Minimal RIFF/WAVE writer, mono 16-bit PCM little-endian."""
     data = struct.pack(f"<{len(samples)}h", *samples)
-    fmt = struct.pack(
-        "<HHIIHH", 1, channels, sample_rate,
-        sample_rate * channels * 2, channels * 2, 16,
-    )
+    fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16)
     body = (
         b"WAVE"
         + b"fmt " + len(fmt).to_bytes(4, "little") + fmt
@@ -355,16 +351,11 @@ def decode_blob(blob: bytes, mime: str) -> tuple[str, dict | None, list]:
     return "fallback_hash", None, _fallback_feature(blob)
 
 
-def extract_features(
-    df,
-    blob_col: str = "blob",
-    mime_col: str = "mime",
-    id_col: str = "id",
-):
-    """binary column -> (id, mime, n_bytes, decode_status, feature)."""
+def extract_features(df):
+    """(id, blob, mime) -> (id, mime, n_bytes, decode_status, feature)."""
     def features(rid, blob, mime):
         blob = blob if blob is not None else b""
         status, _, feat = decode_blob(blob, mime)
         return [(rid, mime, len(blob), status, feat)]
 
-    return map_rows(df.select(id_col, blob_col, mime_col), features, OUT_SCHEMA)
+    return map_rows(df.select("id", "blob", "mime"), features, OUT_SCHEMA)

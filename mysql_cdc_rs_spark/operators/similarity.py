@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from mysql_cdc_rs_spark.operators.dedup import MAX_BUCKET
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -90,7 +92,7 @@ def plane_weight(plane: int, dim: int) -> int:
     return 1 if h % 2 == 0 else -1
 
 
-def lsh_bucket(emb, dim: int, n_planes: int = N_PLANES):
+def lsh_bucket(emb, dim: int):
     """Sign-sketch bucket id: bit p = sign(sum_d w(p,d) * emb[d]).
 
     The projection is ONE aggregate(zip_with(emb, weights, *)) fold per
@@ -101,7 +103,7 @@ def lsh_bucket(emb, dim: int, n_planes: int = N_PLANES):
     because 0.0 + x == x for every product the fold sees.
     """
     bucket = F.lit(0).cast("long")
-    for p in range(n_planes):
+    for p in range(N_PLANES):
         weights = F.array(
             *[F.lit(float(plane_weight(p, d))) for d in range(dim)]
         )
@@ -116,10 +118,10 @@ def lsh_bucket(emb, dim: int, n_planes: int = N_PLANES):
     return bucket
 
 
-def lsh_bucket_sql(emb_expr: str, dim: int, n_planes: int = N_PLANES) -> str:
+def lsh_bucket_sql(emb_expr: str, dim: int) -> str:
     """DuckDB twin of lsh_bucket (1-based list indexing)."""
     parts = []
-    for p in range(n_planes):
+    for p in range(N_PLANES):
         terms = " + ".join(
             f"{emb_expr}[{d + 1}]::DOUBLE * ({float(plane_weight(p, d))})"
             for d in range(dim)
@@ -165,7 +167,7 @@ def lsh_topk(
 
 
 def neardup_pairs(
-    corpus: DataFrame, dim: int, min_cos: float, max_bucket: int = 512
+    corpus: DataFrame, dim: int, min_cos: float, max_bucket: int = MAX_BUCKET
 ) -> DataFrame:
     """Embedding near-duplicate pairs within LSH buckets (cos >= threshold).
 

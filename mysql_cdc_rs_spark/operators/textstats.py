@@ -1,6 +1,6 @@
-"""Text analysis over the documents table: language-ID and document
-fingerprinting, plus the stopword list, BPE-style pretokenizer and
-fingerprint constants that the ``text_doc_stats`` query scores with.
+"""Text analysis over the documents table: language-ID and the document
+fingerprint column, plus the stopword list and BPE-style pretokenizer that
+the ``text_doc_stats`` query scores with.
 
 All pure Column expressions (whole-stage codegen; zero Python) with exact
 DuckDB oracles.  The fingerprint is a rolling polynomial hash implemented as
@@ -84,18 +84,17 @@ def lang_id(docs: DataFrame) -> DataFrame:
     return docs.select(*sel).orderBy("doc_id")
 
 
-def fingerprint(docs: DataFrame) -> DataFrame:
-    """Rolling polynomial hash over word hashes (order-sensitive).
+def fingerprint(words: Column) -> Column:
+    """Rolling polynomial hash over the word hashes of the array<string>
+    ``words`` (order-sensitive).
 
     fp = fold(words, 0, (acc, w) -> (acc*31 + h20(w)) mod 2^40)
     with h20 = portable_hash60 mod 2^20.  Max intermediate value:
     (2^40)*31 + 2^20 < 2^45 — overflow-free in both engines.
     """
-    w = words_of(F.col("text"))
-    hashes = F.transform(w, lambda x: portable_hash60(x) % FP_WORD_MOD)
-    fp = F.aggregate(
+    hashes = F.transform(words, lambda x: portable_hash60(x) % FP_WORD_MOD)
+    return F.aggregate(
         hashes,
         F.lit(0).cast("long"),
         lambda acc, h: (acc * FP_MULT + h) % FP_ACC_MOD,
     )
-    return docs.select("doc_id", fp.alias("fingerprint")).orderBy("doc_id")

@@ -41,19 +41,19 @@ def assign_sessions(
     partition_col: str,
     order_cols: list[str],
     opens_session: F.Column,
-    out_col: str = "session_id",
 ) -> DataFrame:
     """W2: transaction/session grouping — a marker row opens a new group.
 
-    Analog of GTID-opens / XID-closes transaction bracketing; session id is
-    the running count of open-markers, so rows before the first marker get 0.
+    Analog of GTID-opens / XID-closes transaction bracketing; ``session_id``
+    is the running count of open-markers, so rows before the first marker
+    get 0.
     """
     w = (
         stream_window(partition_col, order_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return df.withColumn(
-        out_col, F.sum(F.when(opens_session, 1).otherwise(0)).over(w)
+        "session_id", F.sum(F.when(opens_session, 1).otherwise(0)).over(w)
     )
 
 

@@ -28,13 +28,13 @@ from pyspark.sql import functions as F
 from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
 
 
-def lineage_record(bucket_col: str = "url_bucket") -> list[Column]:
-    """A lineage's aggregate columns: ``rows``, ``min_bucket``,
-    ``max_bucket`` and ``fingerprint``, an order-independent hash of the
-    bucket histogram, ``sum(pmod(xxhash64(bucket), 2^20))``.  Each term is
-    below 2^20, so the sum stays a valid ``bigint`` under ANSI up to 2^43
-    (~8.8 * 10^12) rows."""
-    b = F.col(bucket_col)
+def lineage_record() -> list[Column]:
+    """A lineage's aggregate columns over ``url_bucket``: ``rows``,
+    ``min_bucket``, ``max_bucket`` and ``fingerprint``, an order-independent
+    hash of the bucket histogram, ``sum(pmod(xxhash64(bucket), 2^20))``.
+    Each term is below 2^20, so the sum stays a valid ``bigint`` under ANSI
+    up to 2^43 (~8.8 * 10^12) rows."""
+    b = F.col("url_bucket")
     return [
         F.count("*").alias("rows"),
         F.min(b).alias("min_bucket"),
@@ -43,9 +43,9 @@ def lineage_record(bucket_col: str = "url_bucket") -> list[Column]:
     ]
 
 
-def lineage_summary(df: DataFrame, bucket_col: str = "url_bucket") -> dict:
+def lineage_summary(df: DataFrame) -> dict:
     """``df``'s lineage (W3/A8): one global aggregate of ``lineage_record``."""
-    return df.agg(*lineage_record(bucket_col)).first().asDict()
+    return df.agg(*lineage_record()).first().asDict()
 
 
 class CheckpointedStage:
@@ -67,10 +67,10 @@ class CheckpointedStage:
             and m.get("input_lineage") == input_lineage()
         )
 
-    def run(self, input_df: DataFrame, fn, bucket_col: str = "url_bucket") -> DataFrame:
+    def run(self, input_df: DataFrame, fn) -> DataFrame:
         """fn(input_df) -> output_df; skipped when already complete.  The
         input's lineage is computed once, for the check or the manifest."""
-        input_lineage = cache(lambda: lineage_summary(input_df, bucket_col))
+        input_lineage = cache(lambda: lineage_summary(input_df))
         if not self.completed_with(input_lineage):
             lineage = input_lineage()
             self.mark_incomplete()

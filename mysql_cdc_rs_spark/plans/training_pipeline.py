@@ -30,12 +30,25 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from mysql_cdc_rs_spark.functions.columns import url_bucket
-from mysql_cdc_rs_spark.functions.text import words_of
+from mysql_cdc_rs_spark.functions.text import SHINGLE_WORDS, words_of
 from mysql_cdc_rs_spark.operators import dedup as DD
 from mysql_cdc_rs_spark.operators import stats as S
 from mysql_cdc_rs_spark.operators.decode import decode_pages
+from mysql_cdc_rs_spark.session import require_census_conf
 
 DEFAULT_MIN_TOKENS = 20
+# With ``verify_jaccard`` set, only each doc_b's VERIFY_MAX_PAIRS
+# lowest-doc_a candidate pairs are verified (a partitioned row_number, no
+# global sort).  This is scale-critical, not cosmetic: on a high-dup-mass
+# corpus candidacy is quadratic-ish inside the capped buckets — the 200k
+# generator corpus yields 12.77M candidate pairs for 151k candidate drops
+# (84 pairs/doc_b), and verifying ALL of them is O(|pairs| x shingles/doc)
+# ≈ 4B join rows, which OOM'd a 32-core local run and would dominate a
+# fleet job for no recall gain.  The lowest-id partners are the near-dup
+# cluster's core members, so a real duplicate verifies against them; a
+# doc_b whose only high-J partner falls outside the window survives
+# (documented under-drop risk, favoring keeping data over dropping it).
+VERIFY_MAX_PAIRS = 4
 
 
 def quality_corpus(
@@ -47,9 +60,12 @@ def quality_corpus(
     (doc_id, text, *keep) of the html/plain docs with at least
     ``min_tokens`` words (JVM-side gate).  doc_id is the url's trailing
     integer, which both page generators emit.  ``min_tokens`` is at least
-    3, the shingle length, so every quality doc has band buckets."""
-    if min_tokens < 3:
-        raise ValueError(f"min_tokens must be at least 3, got {min_tokens}")
+    ``SHINGLE_WORDS``, the shingle length, so every quality doc has band
+    buckets."""
+    if min_tokens < SHINGLE_WORDS:
+        raise ValueError(
+            f"min_tokens must be at least {SHINGLE_WORDS}, got {min_tokens}"
+        )
     doc_id = F.regexp_extract("url", r"/(\d+)$", 1).cast("long")
     return (
         decoded.filter(F.col("event_type").isin("html", "plain"))
@@ -71,31 +87,22 @@ def curate(
     pages: DataFrame,
     min_tokens: int = DEFAULT_MIN_TOKENS,
     verify_jaccard: float | None = None,
-    verify_max_pairs: int = 4,
 ) -> DataFrame:
     """pages -> surviving (doc_id, text) corpus.
 
     verify_jaccard: opt-in exact-verification stage.  By default survivors
     drop on LSH candidacy alone, which over-drops on band collisions
     (bucket agreement without real similarity).  With a threshold set, the
-    exact word-3-gram Jaccard is computed for candidate pairs
+    exact word-3-gram Jaccard is computed for each doc_b's
+    ``VERIFY_MAX_PAIRS`` lowest-doc_a candidate pairs
     (``ngram_jaccard_pairs(candidates=...)``) and only pairs at or above
     the threshold drop their doc_b.  Off (None) leaves the plan
     byte-identical to round 4's.
 
-    verify_max_pairs BOUNDS the verification work: only each doc_b's
-    ``verify_max_pairs`` lowest-doc_a candidate pairs are verified (a
-    partitioned row_number, no global sort).  This is scale-critical, not
-    cosmetic: on a high-dup-mass corpus candidacy is quadratic-ish inside
-    the capped buckets — the 200k generator corpus yields 12.77M candidate
-    pairs for 151k candidate drops (84 pairs/doc_b), and verifying ALL of
-    them is O(|pairs| x shingles/doc) ≈ 4B join rows, which OOM'd a 32-core
-    local run and would dominate a fleet job for no recall gain.  The k
-    lowest-id partners are the near-dup cluster's core members, so a real
-    duplicate verifies against them; a doc_b whose only high-J partner
-    falls outside its k window survives (documented under-drop risk,
-    favoring keeping data over dropping it).
+    The session must exclude AQE's empty-relation rule
+    (``session.require_census_conf``), as ``build_session``'s does.
     """
+    require_census_conf(pages.sparkSession)
     # The quality corpus feeds TWO branches (the LSH drops set and the
     # survivors anti-join); without a persist Spark re-executes the whole
     # decode subtree for each — at 100 TB that doubles the most expensive
@@ -127,7 +134,7 @@ def curate(
         w = Window.partitionBy("doc_b").orderBy("doc_a")
         bounded = (
             pairs.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= verify_max_pairs)
+            .where(F.col("_rn") <= VERIFY_MAX_PAIRS)
             .drop("_rn")
         )
         pairs = DD.ngram_jaccard_pairs(
@@ -160,11 +167,7 @@ def release(survivors: DataFrame) -> dict | None:
     return {"quality": n_quality, **(S.observed(lsh) if n_quality else S.NO_CAP)}
 
 
-def curate_resumable(
-    pages: DataFrame,
-    catalog,
-    min_tokens: int = DEFAULT_MIN_TOKENS,
-) -> DataFrame:
+def curate_resumable(pages: DataFrame, catalog) -> DataFrame:
     """Checkpoint-resumable curation: the same decode -> quality gate ->
     LSH near-dup drop as curate(), split into two CheckpointedStage units
     ('curate_quality', 'curate_survivors') whose parquet outputs + lineage
@@ -184,7 +187,7 @@ def curate_resumable(
 
     def quality_fn(df: DataFrame) -> DataFrame:
         decoded = decode_pages(df.drop("url_bucket"))
-        return quality_corpus(decoded, min_tokens, keep=("url_bucket",))
+        return quality_corpus(decoded, keep=("url_bucket",))
 
     quality = CheckpointedStage(catalog, "curate_quality").run(
         pages_b, quality_fn

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from mysql_cdc_rs_spark.functions.columns import mysql_date, mysql_datetime, mysql_year
+from mysql_cdc_rs_spark.functions.text import SHINGLE_WORDS
 from mysql_cdc_rs_spark.functions.udfs import map_rows
 from mysql_cdc_rs_spark.operators import dedup as DD
 from mysql_cdc_rs_spark.operators import diff as DF
@@ -611,9 +612,14 @@ def _c679(spark, sf):
 # =========================================================================
 
 _WORDS = "string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')"
+# DuckDB twin of text.word_shingles over the list column ``words``
 _SHINGLES = (
-    "list_transform(range(1, greatest(len(words) - 2, 0) + 1), "
-    "i -> words[i] || ' ' || words[i + 1] || ' ' || words[i + 2])"
+    f"list_transform(range(1, greatest(len(words) - {SHINGLE_WORDS - 1}, 0) + 1), "
+    "i -> "
+    + " || ' ' || ".join(
+        f"words[i + {j}]" if j else "words[i]" for j in range(SHINGLE_WORDS)
+    )
+    + ")"
 )
 _SH_CTE = f"""
 WITH w AS (SELECT doc_id, {_WORDS} AS words FROM documents),
@@ -647,12 +653,22 @@ def _dx(spark, sf):
     return DD.exact_dedup_stats(spread(load(spark, sf, "documents")))
 
 
+_MH_COLS = ", ".join(f"{_mh_sql(i)} AS mh{i}" for i in range(DD.MINHASH_K))
+# one SELECT per band over ``sig``, the signatures
+_BANDS_UNION = " UNION ALL ".join(
+    f"SELECT doc_id, {b} AS band_id, "
+    + " || '_' || ".join(
+        f"CAST(mh{b * DD.ROWS_PER_BAND + r} AS VARCHAR)"
+        for r in range(DD.ROWS_PER_BAND)
+    )
+    + " AS bucket FROM sig"
+    for b in range(DD.LSH_BANDS)
+)
+
+
 @q(
     "dedup_minhash_signatures",
-    _SH_CTE
-    + "SELECT doc_id, "
-    + ", ".join(f"{_mh_sql(i)} AS mh{i}" for i in range(DD.MINHASH_K))
-    + " FROM sh GROUP BY doc_id ORDER BY doc_id",
+    _SH_CTE + f"SELECT doc_id, {_MH_COLS} FROM sh GROUP BY doc_id ORDER BY doc_id",
 )
 def _dmh(spark, sf):
     return DD.minhash_signatures(spread(load(spark, sf, "documents"))).orderBy(
@@ -662,19 +678,8 @@ def _dmh(spark, sf):
 
 _BANDS_SQL = (
     _SH_CTE
-    + ", sig AS (SELECT doc_id, "
-    + ", ".join(f"{_mh_sql(i)} AS mh{i}" for i in range(DD.MINHASH_K))
-    + " FROM sh GROUP BY doc_id), banded AS ("
-    + " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band_id, "
-        + " || '_' || ".join(
-            f"CAST(mh{b * (DD.MINHASH_K // DD.LSH_BANDS) + r} AS VARCHAR)"
-            for r in range(DD.MINHASH_K // DD.LSH_BANDS)
-        )
-        + " AS bucket FROM sig"
-        for b in range(DD.LSH_BANDS)
-    )
-    + ")"
+    + f", sig AS (SELECT doc_id, {_MH_COLS} FROM sh GROUP BY doc_id), "
+    + f"banded AS ({_BANDS_UNION})"
 )
 
 
@@ -706,12 +711,12 @@ def _dlsh(spark, sf):
 @q(
     "dedup_ngram_jaccard",
     _SH_CTE
-    + """
+    + f"""
     , sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    -- capped shared-shingle groups: 512 LOWEST doc_ids per shingle, the
+    -- capped shared-shingle groups: {DD.MAX_BUCKET} LOWEST doc_ids per shingle, the
     -- exact rule of dedup.shared_shingle_inter (and dedup_lsh_pairs)
     capped AS (
-      SELECT list_sort(list(doc_id))[1:512] AS ids
+      SELECT list_sort(list(doc_id))[1:{DD.MAX_BUCKET}] AS ids
       FROM sh GROUP BY shingle HAVING count(*) >= 2
     ),
     inter AS (
@@ -733,25 +738,17 @@ def _dlsh(spark, sf):
     """,
 )
 def _djac(spark, sf):
-    docs = spread(load(spark, sf, "documents"))
-    sh = DD.shingled(docs)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    # the CAPPED shared-shingle feed (dedup.shared_shingle_inter): parity
-    # holds because the oracle applies the identical 512-lowest-ids cap
-    inter = DD.shared_shingle_inter(docs).filter(F.col("n_inter") >= 3)
-    sa = sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n_sh", "n_a")
-    sb = sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n_sh", "n_b")
-    jac = F.col("n_inter").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    )
+    # standalone mode, the CAPPED shared-shingle feed
+    # (dedup.shared_shingle_inter): parity holds because the oracle applies
+    # the identical MAX_BUCKET-lowest-ids cap
+    pairs = DD.ngram_jaccard_pairs(spread(load(spark, sf, "documents")))
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        pairs.filter(F.col("n_inter") >= 3)
         .select(
             "doc_a",
             "doc_b",
             "n_inter",
-            e_units(jac, 6).alias("jaccard_e6"),
+            e_units(F.col("jaccard"), 6).alias("jaccard_e6"),
         )
         .orderBy("doc_a", "doc_b")
     )
@@ -792,7 +789,7 @@ def _dsim(spark, sf):
 _STOP_SQL = "['the','a','and','of','to']"
 _FP_HASHES = (
     "list_transform(words, x -> "
-    "(('0x' || substr(md5(x), 1, 15))::BIGINT) % 1048576)"
+    f"(('0x' || substr(md5(x), 1, 15))::BIGINT) % {TS.FP_WORD_MOD})"
 )
 # SQL literal of the BPE pretokenizer (apostrophes doubled); applied to the
 # whitespace-NORMALIZED text so the only whitespace either engine sees is
@@ -821,7 +818,7 @@ _BPE_SQL = TS.BPE_TOKEN_RE.replace("'", "''")
                 ELSE CAST(floor(len(words)::DOUBLE / 50.0 * 1000000 + 0.5)
                           AS BIGINT) END AS len_score_e6,
            list_reduce(list_prepend(0::BIGINT, {_FP_HASHES}),
-                       (acc, h) -> (acc * 31 + h) % 1099511627776) AS fingerprint,
+                       (acc, h) -> (acc * {TS.FP_MULT} + h) % {TS.FP_ACC_MOD}) AS fingerprint,
            CAST(len(regexp_extract_all(norm_txt, '{_BPE_SQL}')) AS INT)
              AS n_bpe_tokens
     FROM w ORDER BY doc_id
@@ -833,17 +830,7 @@ def _text_stats(spark, sf):
     counting, stopword/length quality ratios, order-sensitive polynomial
     fingerprint, GPT-2-shaped subword-boundary token count — all JVM-side
     expressions)."""
-    from mysql_cdc_rs_spark.functions.text import (
-        norm_ws,
-        portable_hash60,
-        words_of,
-    )
-    from mysql_cdc_rs_spark.operators.textstats import (
-        FP_ACC_MOD,
-        FP_MULT,
-        FP_WORD_MOD,
-        STOPWORDS,
-    )
+    from mysql_cdc_rs_spark.functions.text import norm_ws
 
     docs = spread(load(spark, sf, "documents"))
     # Staged projections so each heavyweight expression evaluates ONCE:
@@ -854,8 +841,7 @@ def _text_stats(spark, sf):
     # spirit: hand each stage whole values, not re-derivations).
     nt = docs.select("doc_id", norm_ws(F.col("text")).alias("nt"))
     ww = nt.select("doc_id", "nt", F.split(F.col("nt"), " ").alias("w"))
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    hashes = F.transform(F.col("w"), lambda x: portable_hash60(x) % FP_WORD_MOD)
+    stop_arr = F.array(*[F.lit(s) for s in TS.STOPWORDS])
     counted = ww.select(
         "doc_id",
         F.size("w").alias("n_tokens"),
@@ -863,11 +849,7 @@ def _text_stats(spark, sf):
         F.size(
             F.filter(F.col("w"), lambda x: F.array_contains(stop_arr, x))
         ).alias("n_stopwords"),
-        F.aggregate(
-            hashes,
-            F.lit(0).cast("long"),
-            lambda acc, h: (acc * FP_MULT + h) % FP_ACC_MOD,
-        ).alias("fingerprint"),
+        TS.fingerprint(F.col("w")).alias("fingerprint"),
         # regexp_count == size(regexp_extract_all(.., 0)): both count the
         # same Java-regex find() loop, without materializing the matches
         F.regexp_count(F.col("nt"), F.lit(TS.BPE_TOKEN_RE))
@@ -1167,10 +1149,10 @@ def _a8(spark, sf):
       FROM embeddings
     ),
     capped AS (
-      -- mirrors neardup_pairs' degenerate-bucket cap: keep the 512 lowest
+      -- mirrors neardup_pairs' degenerate-bucket cap: keep the {DD.MAX_BUCKET} lowest
       -- vec_ids per bucket before pairing (same rule as dedup_lsh_pairs),
       -- so parity holds even on adversarially skewed corpora
-      SELECT list_sort(list(vec_id))[1:512] AS ids
+      SELECT list_sort(list(vec_id))[1:{DD.MAX_BUCKET}] AS ids
       FROM bkt GROUP BY bucket HAVING count(*) >= 2
     ),
     pairs AS (
@@ -1232,16 +1214,21 @@ def _ann_ivf(spark, sf):
     return SIM.ivf_topk(emb, queries, centroids, k=5)
 
 
-def _kmeans_oracle(k: int = 8, iters: int = 2, dim: int = 64) -> str:
+# the trained-quantizer queries (ivf_kmeans_train, ann_ivf_trained_topk):
+# k-means cells, assignment rounds (the oracle spells out a1 and a2, so the
+# codebook search trains _KMEANS_ITERS - 1 update rounds) and neighbors
+_IVF_CELLS = 8
+_KMEANS_ITERS = 2
+_IVF_TOPK = 5
+# integer squared-L2 between an e6 vector ``e.ei`` and a centroid ``c.c``
+_E6_DIST = (
+    f"CAST(list_sum(list_transform(range(1, {_EMB_DIM + 1}), i -> "
+    "(e.ei[i] - c.c[i]) * (e.ei[i] - c.c[i]))) AS BIGINT)"
+)
+
+
+def _kmeans_oracle() -> str:
     """DuckDB twin of kmeans_train_int: same exact-integer Lloyd's rounds."""
-    dist = (
-        "CAST(list_sum(list_transform(range(1, {n}), i -> "
-        "({a}[i] - {b}[i]) * ({a}[i] - {b}[i]))) AS BIGINT)"
-    )
-
-    def D(a, b):
-        return dist.format(a=a, b=b, n=dim + 1)
-
     assign = """
     {out} AS (
       SELECT vec_id, ei, cent_id, dist FROM (
@@ -1261,32 +1248,27 @@ def _kmeans_oracle(k: int = 8, iters: int = 2, dim: int = 64) -> str:
       -- same init rule as kmeans_centroids_int by construction: the k
       -- LOWEST vec_ids (not 'vec_id < k', which assumes contiguity from 0)
       SELECT vec_id AS cent_id, ei AS c FROM e6
-      QUALIFY row_number() OVER (ORDER BY vec_id) <= {k}
+      QUALIFY row_number() OVER (ORDER BY vec_id) <= {_IVF_CELLS}
     ),
-    dims AS (SELECT unnest(range(1, {dim + 1})) AS d),
-    {assign.format(out='a1', cent='c0', d=D('e.ei', 'c.c'))},
+    dims AS (SELECT unnest(range(1, {_EMB_DIM + 1})) AS d),
+    {assign.format(out='a1', cent='c0', d=_E6_DIST)},
     s1 AS (
       SELECT cent_id, d,
              CAST(floor(sum(ei[d])::DOUBLE / count(*)) AS BIGINT) AS m
       FROM a1 CROSS JOIN dims GROUP BY cent_id, d
     ),
     c1 AS (SELECT cent_id, list(m ORDER BY d) AS c FROM s1 GROUP BY cent_id),
-    {assign.format(out='a2', cent='c1', d=D('e.ei', 'c.c'))}
+    {assign.format(out='a2', cent='c1', d=_E6_DIST)}
     SELECT vec_id, CAST(cent_id AS BIGINT) AS cent_id, dist
-    FROM a{iters} ORDER BY vec_id
+    FROM a{_KMEANS_ITERS} ORDER BY vec_id
     """
     return sql
 
 
-def _ivf_trained_oracle(k: int = 8, dim: int = 64, topk: int = 5) -> str:
+def _ivf_trained_oracle() -> str:
     """Trained-quantizer IVF search: the kmeans CTEs produce the codebook
     (1 integer Lloyd's round), converted to doubles; cells assign by max
     cosine and queries probe their own cell (nprobe=1)."""
-    dist = (
-        "CAST(list_sum(list_transform(range(1, {n}), i -> "
-        "({a}[i] - {b}[i]) * ({a}[i] - {b}[i]))) AS BIGINT)"
-    )
-    d0 = dist.format(a="e.ei", b="c.c", n=dim + 1)
     return f"""
     WITH e6 AS (
       SELECT vec_id, list_transform(embedding, x ->
@@ -1296,14 +1278,14 @@ def _ivf_trained_oracle(k: int = 8, dim: int = 64, topk: int = 5) -> str:
     c0 AS (
       -- k LOWEST vec_ids, identical to kmeans_centroids_int's init rule
       SELECT vec_id AS cent_id, ei AS c FROM e6
-      QUALIFY row_number() OVER (ORDER BY vec_id) <= {k}
+      QUALIFY row_number() OVER (ORDER BY vec_id) <= {_IVF_CELLS}
     ),
-    dims AS (SELECT unnest(range(1, {dim + 1})) AS d),
+    dims AS (SELECT unnest(range(1, {_EMB_DIM + 1})) AS d),
     a1 AS (
       SELECT vec_id, ei, cent_id FROM (
         SELECT e.vec_id, e.ei, c.cent_id,
                row_number() OVER (PARTITION BY e.vec_id
-                                  ORDER BY {d0} ASC, c.cent_id ASC) AS r
+                                  ORDER BY {_E6_DIST} ASC, c.cent_id ASC) AS r
         FROM e6 e CROSS JOIN c0 c
       ) WHERE r = 1
     ),
@@ -1322,7 +1304,7 @@ def _ivf_trained_oracle(k: int = 8, dim: int = 64, topk: int = 5) -> str:
         SELECT e.vec_id, e.embedding, c.cent_id,
                row_number() OVER (
                  PARTITION BY e.vec_id
-                 ORDER BY {_cos_sql('e.embedding', 'c.cemb', dim)} DESC,
+                 ORDER BY {_cos_sql('e.embedding', 'c.cemb', _EMB_DIM)} DESC,
                           c.cent_id ASC) AS r
         FROM embeddings e CROSS JOIN cf c
       ) WHERE r = 1
@@ -1331,7 +1313,7 @@ def _ivf_trained_oracle(k: int = 8, dim: int = 64, topk: int = 5) -> str:
           FROM assigned WHERE vec_id < 10),
     scored AS (
       SELECT q.query_id, a.vec_id,
-             {_cos_sql('q.q_emb', 'a.embedding', dim)} AS sim
+             {_cos_sql('q.q_emb', 'a.embedding', _EMB_DIM)} AS sim
       FROM assigned a JOIN q ON a.cent_id = q.cent_id
       WHERE a.vec_id <> q.query_id
     ),
@@ -1342,7 +1324,7 @@ def _ivf_trained_oracle(k: int = 8, dim: int = 64, topk: int = 5) -> str:
       FROM scored
     )
     SELECT query_id, rank, vec_id AS neighbor_id
-    FROM ranked WHERE rank <= {topk} ORDER BY query_id, rank
+    FROM ranked WHERE rank <= {_IVF_TOPK} ORDER BY query_id, rank
     """
 
 
@@ -1352,14 +1334,16 @@ def _ann_ivf_trained(spark, sf):
     integer Lloyd's) produces the codebook, ivf_assign/ivf_topk probe it —
     the full train -> assign -> search path in one oracle-checked query."""
     emb = load(spark, sf, "embeddings")
-    cents = SIM.kmeans_centroids_int(emb, dim=_EMB_DIM, k=8, rounds=1)
+    cents = SIM.kmeans_centroids_int(
+        emb, dim=_EMB_DIM, k=_IVF_CELLS, rounds=_KMEANS_ITERS - 1
+    )
     cdf = literal_df(
         spark,
         [(cid, [v / 1_000_000.0 for v in c]) for cid, c in cents],
         "vec_id long, embedding array<double>",
     )
     queries = emb.filter(F.col("vec_id") < 10)
-    return SIM.ivf_topk(emb, queries, cdf, k=5)
+    return SIM.ivf_topk(emb, queries, cdf, k=_IVF_TOPK)
 
 
 @q("ivf_kmeans_train", _kmeans_oracle())
@@ -1369,7 +1353,7 @@ def _ivf_train(spark, sf):
     update) so the trained assignment is bit-identical to the SQL oracle.
     Completes the IVF path: kmeans_train_int -> ivf_assign -> ivf_topk."""
     emb = spread(load(spark, sf, "embeddings"))
-    out = SIM.kmeans_train_int(emb, dim=64, k=8, iters=2)
+    out = SIM.kmeans_train_int(emb, dim=_EMB_DIM, k=_IVF_CELLS, iters=_KMEANS_ITERS)
     # ordered(): the final assignment is a map-only interpreted argmin fold
     # over the corpus — materialize it before the sort samples it
     return ordered(
@@ -2409,19 +2393,6 @@ _CUR_TEXT = (
     f"ELSE {NORM_TEXT_SQL} END"
 )
 _CUR_WORDS = "string_split(txt, ' ')"
-_CUR_SHINGLES = (
-    "list_transform(range(1, greatest(len(words) - 2, 0) + 1), "
-    "i -> words[i] || ' ' || words[i + 1] || ' ' || words[i + 2])"
-)
-_CUR_BANDS = " UNION ALL ".join(
-    f"SELECT doc_id, {b} AS band_id, "
-    + " || '_' || ".join(
-        f"CAST(mh{b * (DD.MINHASH_K // DD.LSH_BANDS) + r} AS VARCHAR)"
-        for r in range(DD.MINHASH_K // DD.LSH_BANDS)
-    )
-    + " AS bucket FROM sig"
-    for b in range(DD.LSH_BANDS)
-)
 
 
 @q(
@@ -2436,13 +2407,13 @@ _CUR_BANDS = " UNION ALL ".join(
     ),
     sh AS (
       SELECT DISTINCT doc_id, s.shingle
-      FROM quality, unnest({_CUR_SHINGLES}) AS s(shingle)
+      FROM quality, unnest({_SHINGLES}) AS s(shingle)
     ),
     sig AS (
-      SELECT doc_id, {', '.join(_mh_sql(i) + f' AS mh{i}' for i in range(DD.MINHASH_K))}
+      SELECT doc_id, {_MH_COLS}
       FROM sh GROUP BY doc_id
     ),
-    banded AS ({_CUR_BANDS}),
+    banded AS ({_BANDS_UNION}),
     capped AS (
       -- mirrors lsh_candidate_pairs' MAX_BUCKET cap: only the
       -- {DD.MAX_BUCKET} lowest doc_ids per bucket generate pairs, so a

@@ -29,6 +29,12 @@ import os
 
 from pyspark.sql import SparkSession
 
+# AQE's swap of a stage that came out empty (and the stages under it) for an
+# empty relation leaves the observations in them, such as curation's cap
+# census, with no metrics: every engine session excludes the rule
+EXCLUDED_RULES = "spark.sql.adaptive.optimizer.excludedRules"
+EMPTY_RELATION_RULE = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+
 
 def build_session(
     app_name: str = "mysql_cdc_rs_spark",
@@ -46,13 +52,7 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # off: AQE's swap of a stage that came out empty (and the stages
-        # under it) for an empty relation, which leaves the observations in
-        # them, such as curation's cap census, with no metrics
-        .config(
-            "spark.sql.adaptive.optimizer.excludedRules",
-            "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation",
-        )
+        .config(EXCLUDED_RULES, EMPTY_RELATION_RULE)
         # --- vectorized decode path sizing (Arrow batches to the Arrow UDFs) ---
         # 2000-row batches keep the JVM->Python->JVM pipeline full: with one
         # huge batch per task the stage is latency-bound (measured 2.2x
@@ -113,6 +113,20 @@ def build_session(
         spark.conf.set(key, str(sc.defaultParallelism))
     ship_package(spark)
     return spark
+
+
+def require_census_conf(spark: SparkSession) -> None:
+    """Raise ``ValueError`` unless ``spark`` excludes ``EMPTY_RELATION_RULE``
+    as ``build_session`` does.  Without it a curation stage that comes out
+    empty, such as a stream batch that drops nothing, loses its cap census
+    without an error."""
+    rules = spark.conf.get(EXCLUDED_RULES, "").split(",")
+    if EMPTY_RELATION_RULE not in (r.strip() for r in rules):
+        raise ValueError(
+            f"{EXCLUDED_RULES} does not list {EMPTY_RELATION_RULE}, so "
+            "curation's cap census would be lost on an empty stage; build "
+            "the session with mysql_cdc_rs_spark.session.build_session"
+        )
 
 
 _SHIPPED: set[str] = set()

@@ -56,8 +56,8 @@ def split_records(blob: bytes) -> tuple[list[bytes], str | None]:
     return records, None
 
 
-def frame_blobs(df, blob_col: str = "blob", id_col: str = "chunk_id"):
-    """DataFrame[id, blob] -> DataFrame[chunk_id, record_idx, record, err].
+def frame_blobs(df):
+    """DataFrame[chunk_id, blob] -> DataFrame[chunk_id, record_idx, record, err].
 
     One output row per framed record; a chunk with a framing error emits its
     good prefix records plus one error row (frame_error set, record NULL).
@@ -73,7 +73,7 @@ def frame_blobs(df, blob_col: str = "blob", id_col: str = "chunk_id"):
         if err is not None:
             yield cid, len(records), None, err
 
-    return map_rows(df.select(id_col, blob_col), frame, FRAMED_SCHEMA)
+    return map_rows(df.select("chunk_id", "blob"), frame, FRAMED_SCHEMA)
 
 
 def pack_records(records: list[bytes]) -> bytes:

@@ -215,13 +215,13 @@ def pages_from_ids(ids, seed: int = 42):
     return map_rows(ids, lambda i: [make_record(seed, i)], PAGES_SCHEMA)
 
 
-def pages_df(spark, n: int, seed: int = 42, num_partitions: int | None = None):
+def pages_df(spark, n: int, seed: int = 42):
     """Distributed deterministic generation: spark.range -> pages_from_ids.
 
     Each executor generates its own rows from (seed, id) — no driver-side
     materialization, so the same generator scales to arbitrary n.
     """
-    nparts = num_partitions or max(1, min(64, n // 2000 or 1))
+    nparts = max(1, min(64, n // 2000 or 1))
     return pages_from_ids(spark.range(0, n, numPartitions=nparts), seed)
 
 

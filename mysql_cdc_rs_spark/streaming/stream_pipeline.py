@@ -41,6 +41,7 @@ from mysql_cdc_rs_spark.plans.training_pipeline import (
     DEFAULT_MIN_TOKENS,
     quality_corpus,
 )
+from mysql_cdc_rs_spark.session import require_census_conf
 from mysql_cdc_rs_spark.sources.pages import PAGES_SCHEMA, pages_from_ids
 from mysql_cdc_rs_spark.sources.testdata import spread
 
@@ -205,9 +206,12 @@ def start_curation_stream(
     count) and the cap census (``stats.cap_record`` on ``seen_positions``)
     to the running ``record`` of manifest ``stream_curate``.  A bucket's
     positions are 1..size in any arrival order, so the totals equal batch
-    ``curate``'s record (``release``) over the same pages.
+    ``curate``'s record (``release``) over the same pages, in a session
+    that excludes AQE's empty-relation rule (``require_census_conf``).
     """
     from mysql_cdc_rs_spark.operators import dedup as DD
+
+    require_census_conf(stream_df.sparkSession)
 
     SEEN, CURATED, MANIFEST = "dedup_seen_buckets", "curated", "stream_curate"
     cap = DD.MAX_BUCKET

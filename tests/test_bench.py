@@ -65,3 +65,27 @@ def test_no_scaling_below_four_cpus():
     assert line["scaling"] is None
     assert "4 CPUs" in line["scaling_reason"]
     assert line["correct"] is True
+
+
+def test_perfbench_layer_calls_resolve(monkeypatch):
+    """perfbench's ``Tracer`` patches the engine's entry points by name, so
+    a renamed or removed one fails here instead of in a traced run."""
+    import importlib
+    import importlib.util
+    import sys
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parents[1] / "perfbench" / "tracing.py"
+    spec = importlib.util.spec_from_file_location("perfbench_tracing", path)
+    tracing = importlib.util.module_from_spec(spec)
+    # registered first: its dataclasses resolve annotations through it
+    monkeypatch.setitem(sys.modules, spec.name, tracing)
+    spec.loader.exec_module(tracing)
+    for mod_name, attr in tracing.LAYER_CALLS + tracing.ACTIONS:
+        if not mod_name.startswith("pyspark"):
+            mod_name = f"{tracing.PKG}.{mod_name}"
+        owner = importlib.import_module(mod_name)
+        for part in attr.split("."):
+            assert hasattr(owner, part), f"{mod_name}.{attr}"
+            owner = getattr(owner, part)
+        assert callable(owner), f"{mod_name}.{attr}"

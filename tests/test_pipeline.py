@@ -597,6 +597,33 @@ def test_curate_record_adds_no_job(spark, tmp_path):
     assert release(held[0])["quality"] > 0
 
 
+def test_curation_requires_the_aqe_exclusion(spark, tmp_path):
+    """A session that keeps AQE's AQEPropagateEmptyRelation (one built
+    without ``build_session``) loses the cap census of a stage that comes
+    out empty, so batch and stream curation refuse it before any work."""
+    from mysql_cdc_rs_spark.plans.training_pipeline import curate
+    from mysql_cdc_rs_spark.session import EXCLUDED_RULES
+    from mysql_cdc_rs_spark.streaming.stream_pipeline import (
+        start_curation_stream,
+        stream_pages_rate,
+    )
+
+    pages = pages_df(spark, 40, seed=42)
+    stream = stream_pages_rate(spark)
+    cat = SinkCatalog(spark, str(tmp_path / "sinks"))
+    rules = spark.conf.get(EXCLUDED_RULES)
+    try:
+        spark.conf.unset(EXCLUDED_RULES)
+        match = "AQEPropagateEmptyRelation.*session.build_session"
+        with pytest.raises(ValueError, match=match):
+            curate(pages)
+        with pytest.raises(ValueError, match=match):
+            start_curation_stream(stream, cat, str(tmp_path / "ckpt"))
+    finally:
+        spark.conf.set(EXCLUDED_RULES, rules)
+    assert not spark.streams.active
+
+
 def test_session_sizes_shuffle_from_cores(spark):
     """With no explicit count, a session's shuffle width is its cores."""
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) == (

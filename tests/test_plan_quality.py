@@ -236,15 +236,18 @@ def test_curate_anti_join_not_forced_broadcast(spark):
     drop set and shuffle-join a large one.  Proven two ways: no ResolvedHint
     in the analyzed plan, and with auto-broadcast disabled (the 100 TB
     stats regime, where the pairs subtree estimate is huge) the planner
-    freely picks a shuffled SortMergeJoin for the LeftAnti."""
-    from mysql_cdc_rs_spark.plans.training_pipeline import curate, release
+    freely picks a shuffled SortMergeJoin for the LeftAnti.  No action
+    runs the survivors, so the cached quality corpus is unpersisted
+    directly: ``release`` would wait out its bound for a census that never
+    comes."""
+    from mysql_cdc_rs_spark.plans.training_pipeline import curate
     from mysql_cdc_rs_spark.sources.pages_from_documents import pages_from_documents
 
     pages = pages_from_documents(spark, SF)
     surv = curate(pages)
     analyzed = surv._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" not in analyzed and "UnresolvedHint" not in analyzed
-    release(surv)
+    surv._curate_persisted.unpersist()
 
     thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
@@ -259,7 +262,7 @@ def test_curate_anti_join_not_forced_broadcast(spark):
         assert anti_lines, "curate lost its anti-join"
         assert all("SortMergeJoin" in ln for ln in anti_lines)
         assert not any("Broadcast" in ln for ln in anti_lines)
-        release(surv2)
+        surv2._curate_persisted.unpersist()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
 

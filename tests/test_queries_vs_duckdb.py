@@ -45,7 +45,9 @@ def test_oracle_queries_call_their_operators(spark, monkeypatch):
     """The oracle gate verifies the operator COVERAGE names, not a copy of
     it: each query builds its frame through the operator's module attribute
     (the frame is only built, no action runs)."""
+    from mysql_cdc_rs_spark.operators import dedup as DD
     from mysql_cdc_rs_spark.operators import stats as S
+    from mysql_cdc_rs_spark.operators import textstats as TS
     from mysql_cdc_rs_spark.operators import window_ops as W
 
     wiring = {
@@ -53,6 +55,8 @@ def test_oracle_queries_call_their_operators(spark, monkeypatch):
         "w2_sessionize": [(W, "assign_sessions")],
         "a7_charset_stats": [(S, "charset_stats")],
         "skew_salted_agg": [(S, "salted_sums")],
+        "text_doc_stats": [(TS, "fingerprint")],
+        "dedup_ngram_jaccard": [(DD, "ngram_jaccard_pairs")],
     }
     for name, ops in wiring.items():
         called = []
