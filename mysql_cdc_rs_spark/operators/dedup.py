@@ -111,6 +111,65 @@ def banded_buckets(docs: DataFrame) -> DataFrame:
     )
 
 
+def doc_rank(rows: DataFrame, name: str, *keys: str) -> DataFrame:
+    """``rows`` plus column ``name``: each row's 1-based position in its
+    ``keys`` group, ordered by doc_id — the bucket position that both the
+    member cap and keep-first read."""
+    w = Window.partitionBy(*keys).orderBy("doc_id")
+    return rows.withColumn(name, F.row_number().over(w))
+
+
+def ranked_buckets(docs: DataFrame) -> DataFrame:
+    """``banded_buckets(docs)`` ranked within each band bucket (``rn``)."""
+    return doc_rank(banded_buckets(docs), "rn", "band_id", "bucket")
+
+
+def keep_first_drops(
+    ranked: DataFrame, pos: str, obs: Observation | None
+) -> DataFrame:
+    """Keep-first's drop set: the distinct doc_ids of ``ranked`` that sit
+    at bucket position 2 to ``MAX_BUCKET`` of some bucket.  Position 1 is
+    the bucket's keeper, and members past the cap are never compared, so
+    they survive.  ``pos`` is the SQL expression of the position (``rn``
+    in batch, prior members + arrival rank in the stream); ``obs``, when
+    given, observes the cap census (``stats.cap_record``) on it.
+
+    Over ``ranked_buckets`` this is exactly the distinct ``doc_b`` of
+    ``lsh_candidate_pairs``, without building a pair: no member arrays,
+    no explode."""
+    if obs is not None:
+        ranked = ranked.observe(obs, *S.cap_record(pos, MAX_BUCKET))
+    return (
+        ranked.where(F.expr(pos).between(2, MAX_BUCKET))
+        .select("doc_id")
+        .distinct()
+    )
+
+
+def _capped_pairs(ranked: DataFrame, max_bucket: int, *keys: str) -> DataFrame:
+    """(doc_a, doc_b), doc_a < doc_b, for every pair of the ``max_bucket``
+    lowest-ranked (``rn``) members of each ``keys`` group of ``ranked``:
+    the i < j pairs of the group's sorted member array.
+
+    The cap is applied BEFORE the collect_list, on a window over the same
+    key as the groupBy: they share partitioning, so the cap costs a sort,
+    not an extra shuffle, and no executor ever materializes an unbounded
+    member array."""
+    pairs = F.expr(
+        "flatten(transform(sequence(1, size(ids) - 1), "
+        "i -> transform(slice(ids, i + 1, size(ids) - i), "
+        "y -> struct(element_at(ids, i) AS doc_a, y AS doc_b))))"
+    )
+    return (
+        ranked.where(F.col("rn") <= max_bucket)
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
+        .where(F.size("ids") >= 2)
+        .select(F.explode(pairs).alias("p"))
+        .select(F.col("p.doc_a"), F.col("p.doc_b"))
+    )
+
+
 def lsh_candidate_pairs(
     docs: DataFrame,
     max_bucket: int = MAX_BUCKET,
@@ -125,38 +184,18 @@ def lsh_candidate_pairs(
     arrays stay tiny; work is one shuffle on the bucket key.
 
     Degenerate buckets (e.g. boilerplate/empty-ish docs sharing a
-    signature) are HARD-CAPPED at ``max_bucket`` members BEFORE the
-    collect_list, via a row_number window over the same key — the window
-    and the groupBy share partitioning, so the cap costs a sort, not an
-    extra shuffle, and no executor ever materializes an unbounded member
-    array.  Kept members are the lowest doc_ids (deterministic).
+    signature) are HARD-CAPPED at ``max_bucket`` members, the lowest
+    doc_ids (deterministic; see ``_capped_pairs``).  Curation needs only
+    the distinct ``doc_b`` and takes it from ``keep_first_drops``; the
+    pairs are for consumers of the partners (the Jaccard verifier).
 
     ``obs`` observes the cap census (``stats.cap_record``) on the window,
     in whatever action runs the pairs; the pairs do not change.
     """
-    banded = banded_buckets(docs)
-    w = Window.partitionBy("band_id", "bucket").orderBy("doc_id")
-    ranked = banded.withColumn("rn", F.row_number().over(w))
+    ranked = ranked_buckets(docs)
     if obs is not None:
         ranked = ranked.observe(obs, *S.cap_record("rn", max_bucket))
-    bounded = ranked.where(F.col("rn") <= max_bucket)
-    return (
-        bounded.groupBy("band_id", "bucket")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .where(F.size("ids") >= 2)
-        .select(F.explode(_pairs_expr("ids")).alias("p"))
-        .select(F.col("p.doc_a"), F.col("p.doc_b"))
-        .distinct()
-    )
-
-
-def _pairs_expr(ids_col: str):
-    """array<long> (sorted) -> array<struct<doc_a,doc_b>> of all i<j pairs."""
-    return F.expr(
-        f"flatten(transform(sequence(1, size({ids_col}) - 1), "
-        f"i -> transform(slice({ids_col}, i + 1, size({ids_col}) - i), "
-        f"y -> struct(element_at({ids_col}, i) AS doc_a, y AS doc_b))))"
-    )
+    return _capped_pairs(ranked, max_bucket, "band_id", "bucket").distinct()
 
 
 def shared_shingle_inter(
@@ -168,23 +207,15 @@ def shared_shingle_inter(
     Same degenerate-group discipline as lsh_candidate_pairs: a stop-word
     3-gram shared by millions of docs would otherwise explode O(n^2) pairs
     in one group, so membership is HARD-CAPPED at ``max_bucket`` lowest
-    doc_ids per shingle (row_number sharing the groupBy partitioning — the
-    cap costs a sort, not a shuffle).  For pairs whose docs both survive
-    every cap the count is exact; docs shed by a cap contribute nothing for
-    that shingle — bounded work is the contract, exactness holds whenever
-    no group exceeds the cap.
+    doc_ids per shingle.  For pairs whose docs both survive every cap the
+    count is exact; docs shed by a cap contribute nothing for that shingle
+    — bounded work is the contract, exactness holds whenever no group
+    exceeds the cap.
     """
-    sh = shingled(docs)
-    w = Window.partitionBy("shingle").orderBy("doc_id")
-    bounded = sh.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") <= max_bucket
-    )
+    ranked = doc_rank(shingled(docs), "rn", "shingle")
     return (
-        bounded.groupBy("shingle")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .where(F.size("ids") >= 2)
-        .select(F.explode(_pairs_expr("ids")).alias("p"))
-        .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
+        _capped_pairs(ranked, max_bucket, "shingle")
+        .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("n_inter"))
     )
 

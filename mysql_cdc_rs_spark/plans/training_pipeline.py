@@ -7,21 +7,18 @@ materialization:
 
     pages (binary html)
       -> decode_pages            (vectorized UDF, one pass)
-      -> keep text-bearing docs  (event_type html/plain)
+      -> keep text-bearing docs  (event_type html/plain with a url doc_id)
       -> quality gate            (token count >= min_tokens, JVM-side)
-      -> LSH near-dup pairs      (shingle -> minhash -> band bucket join)
-      -> drop the higher doc of every candidate pair (keep-first)
+      -> LSH band buckets        (shingle -> minhash -> band bucket, ranked
+                                  by doc_id within each bucket)
+      -> drop every doc at bucket position 2..MAX_BUCKET of some bucket
+         (keep-first, ``dedup.keep_first_drops``)
       -> survivors
 
-Scale shape: the only shuffles are the dedup groupBys (doc_id, bucket) —
-the quality gate and decode are shuffle-free; candidate-pair generation is
-bucket-local (no O(n^2)); the drop set is applied with a plain hash
-left-anti join on doc_id.  The drop set is NOT broadcast: its size is
-proportional to the corpus's near-dup mass (20-40%+ on web corpora), so a
-forced broadcast would OOM the driver exactly when dedup matters most.
-Declaring the join and letting AQE pick the strategy gives the best of
-both — a runtime broadcast when drops genuinely is small, a shuffled hash
-join on the uniform doc_id key otherwise.
+Scale shape: the only shuffles are the dedup groupBys and windows
+(doc_id, bucket) — the quality gate and decode are shuffle-free; the drop
+rule reads one bucket-local rank (no pairs, no O(n^2)); the drop set is
+applied with a left-anti join on doc_id (see ``curate``).
 """
 
 from __future__ import annotations
@@ -59,28 +56,30 @@ def quality_corpus(
     """The curation input shared by batch, resumable and streaming curation:
     (doc_id, text, *keep) of the html/plain docs with at least
     ``min_tokens`` words (JVM-side gate).  doc_id is the url's trailing
-    integer, which both page generators emit.  ``min_tokens`` is at least
-    ``SHINGLE_WORDS``, the shingle length, so every quality doc has band
-    buckets."""
+    integer, which both page generators emit; a page whose url has none,
+    or one past the long range, is left out, because keep-first orders
+    each bucket by doc_id.  ``min_tokens`` is at least ``SHINGLE_WORDS``,
+    the shingle length, so every quality doc has band buckets."""
     if min_tokens < SHINGLE_WORDS:
         raise ValueError(
             f"min_tokens must be at least {SHINGLE_WORDS}, got {min_tokens}"
         )
-    doc_id = F.regexp_extract("url", r"/(\d+)$", 1).cast("long")
+    doc_id = F.regexp_extract("url", r"/(\d+)$", 1).try_cast("long")
     return (
         decoded.filter(F.col("event_type").isin("html", "plain"))
         .select(doc_id.alias("doc_id"), "text", *keep)
-        .filter(F.size(words_of(F.col("text"))) >= min_tokens)
+        .filter(
+            F.col("doc_id").isNotNull()
+            & (F.size(words_of(F.col("text"))) >= min_tokens)
+        )
     )
 
 
-def keep_first(quality: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Keep-first policy: any doc that is the HIGHER member of a candidate
-    pair is a near-duplicate of an earlier doc -> dropped.  No broadcast
-    hint: the drop set scales with the corpus's dup mass (see module
-    docstring)."""
-    drops = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-    return quality.join(drops, "doc_id", "left_anti")
+def curation_record(n_quality: int, lsh: Observation) -> dict:
+    """Curation's record: ``quality``, the quality docs, and the cap census
+    that ``lsh`` observed (``stats.NO_CAP`` when no doc passed the gate,
+    since the census stage then has no rows to observe)."""
+    return {"quality": n_quality, **(S.observed(lsh) if n_quality else S.NO_CAP)}
 
 
 def curate(
@@ -91,13 +90,12 @@ def curate(
     """pages -> surviving (doc_id, text) corpus.
 
     verify_jaccard: opt-in exact-verification stage.  By default survivors
-    drop on LSH candidacy alone, which over-drops on band collisions
-    (bucket agreement without real similarity).  With a threshold set, the
-    exact word-3-gram Jaccard is computed for each doc_b's
-    ``VERIFY_MAX_PAIRS`` lowest-doc_a candidate pairs
-    (``ngram_jaccard_pairs(candidates=...)``) and only pairs at or above
-    the threshold drop their doc_b.  Off (None) leaves the plan
-    byte-identical to round 4's.
+    drop on LSH candidacy alone (``dedup.keep_first_drops``, no pairs),
+    which over-drops on band collisions (bucket agreement without real
+    similarity).  With a threshold set, the exact word-3-gram Jaccard is
+    computed for each doc_b's ``VERIFY_MAX_PAIRS`` lowest-doc_a candidate
+    pairs (``ngram_jaccard_pairs(candidates=...)``) and only pairs at or
+    above the threshold drop their doc_b.
 
     The session must exclude AQE's empty-relation rule
     (``session.require_census_conf``), as ``build_session``'s does.
@@ -127,20 +125,30 @@ def curate(
     # the cap census is observed ABOVE the persist: inside it, every
     # call's cached plan (and cache entry) would be a new one
     lsh = Observation()
-    pairs = DD.lsh_candidate_pairs(quality, obs=lsh)
-    if verify_jaccard is not None:
+    if verify_jaccard is None:
+        drops = DD.keep_first_drops(DD.ranked_buckets(quality), "rn", lsh)
+    else:
         from pyspark.sql import Window
 
+        # verification needs each doc_b's partners, so this branch keeps
+        # the pairs
+        pairs = DD.lsh_candidate_pairs(quality, obs=lsh)
         w = Window.partitionBy("doc_b").orderBy("doc_a")
         bounded = (
             pairs.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") <= VERIFY_MAX_PAIRS)
             .drop("_rn")
         )
-        pairs = DD.ngram_jaccard_pairs(
+        verified = DD.ngram_jaccard_pairs(
             quality, min_jaccard=verify_jaccard, candidates=bounded
         )
-    survivors = keep_first(quality, pairs)
+        drops = verified.select(F.col("doc_b").alias("doc_id")).distinct()
+    # No broadcast hint: the drop set is proportional to the corpus's
+    # near-dup mass (20-40%+ on web corpora), so a forced broadcast would
+    # OOM the driver exactly when dedup matters most.  Left to the planner,
+    # AQE broadcasts a drop set that is genuinely small at runtime and
+    # shuffle-joins on the uniform doc_id key otherwise.
+    survivors = quality.join(drops, "doc_id", "left_anti")
     # hand the persist lifecycle and the record to the caller:
     # release(survivors) after the consuming action
     survivors._curate_persisted = quality
@@ -163,8 +171,7 @@ def release(survivors: DataFrame) -> dict | None:
     if q is None:
         return None
     q.unpersist()
-    n_quality, lsh = survivors._curate_observed
-    return {"quality": n_quality, **(S.observed(lsh) if n_quality else S.NO_CAP)}
+    return curation_record(*survivors._curate_observed)
 
 
 def curate_resumable(pages: DataFrame, catalog) -> DataFrame:
@@ -194,7 +201,8 @@ def curate_resumable(pages: DataFrame, catalog) -> DataFrame:
     )
 
     def survivors_fn(qdf: DataFrame) -> DataFrame:
-        return keep_first(qdf, DD.lsh_candidate_pairs(qdf.select("doc_id", "text")))
+        drops = DD.keep_first_drops(DD.ranked_buckets(qdf), "rn", None)
+        return qdf.join(drops, "doc_id", "left_anti")
 
     return CheckpointedStage(catalog, "curate_survivors").run(
         quality, survivors_fn

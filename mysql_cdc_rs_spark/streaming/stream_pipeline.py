@@ -33,12 +33,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from mysql_cdc_rs_spark.operators import dedup as DD
 from mysql_cdc_rs_spark.operators import stats as S
 from mysql_cdc_rs_spark.operators.decode import decode_pages
 from mysql_cdc_rs_spark.operators.enrich import enrich
 from mysql_cdc_rs_spark.operators.route import write_routes
 from mysql_cdc_rs_spark.plans.training_pipeline import (
     DEFAULT_MIN_TOKENS,
+    curation_record,
     quality_corpus,
 )
 from mysql_cdc_rs_spark.session import require_census_conf
@@ -157,18 +159,15 @@ def start_curation_stream(
     Per batch, ONE positional rule replaces both the within-batch pair
     explosion and the uncapped membership probe (the round-5 fix — at 1.6M
     the old uncapped probe over-dropped 65 docs living past position
-    ``max_bucket`` of boilerplate buckets):
-
-      a doc DROPS iff, in some band bucket, its global arrival position
-      p = (prior batches' member count) + (rank within this batch)
-      satisfies 2 <= p <= max_bucket.
-
-    Position 1 is the bucket's keeper; positions above the cap survive —
-    exactly ``lsh_candidate_pairs``'s capped doc_b drop set when the feed
-    arrives in doc_id order, so the stream reproduces batch ``curate()``
-    bit-for-bit in that regime (pinned at 1.6M scale in BENCH/SOAK.md).
-    And it is CHEAPER than pair generation: a row_number window + one
-    aggregate-join on the bucket key, no member arrays, no pair explode.
+    ``MAX_BUCKET`` of boilerplate buckets): a doc drops iff, in some band
+    bucket, its global arrival position p + r (``seen_positions``: prior
+    batches' member count plus rank within this batch) is one that
+    ``dedup.keep_first_drops`` drops.  That is the function batch
+    ``curate()`` drops by, on the bucket rank alone, so the stream
+    reproduces batch curation bit-for-bit when the feed arrives in doc_id
+    order (pinned at 1.6M scale in BENCH/SOAK.md).  The per-batch cost is
+    a row_number window + one aggregate-join on the bucket key: no member
+    arrays, no pair explode.
 
     Scale shape: state lives in a table, not on the driver or in executor
     memory; the cross-batch probe is one equi-join on (band_id, bucket) —
@@ -209,12 +208,9 @@ def start_curation_stream(
     ``curate``'s record (``release``) over the same pages, in a session
     that excludes AQE's empty-relation rule (``require_census_conf``).
     """
-    from mysql_cdc_rs_spark.operators import dedup as DD
-
     require_census_conf(stream_df.sparkSession)
 
     SEEN, CURATED, MANIFEST = "dedup_seen_buckets", "curated", "stream_curate"
-    cap = DD.MAX_BUCKET
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         m = catalog.read_manifest(MANIFEST) or {}
@@ -239,13 +235,8 @@ def start_curation_stream(
         banded = DD.banded_buckets(quality).persist()
         banded.count()
         lsh = Observation()  # the cap census, as batch curate's
-        pos = F.col("p") + F.col("r")
-        drops = (
-            seen_positions(banded, catalog, last)
-            .observe(lsh, *S.cap_record("p + r", cap))
-            .where((pos >= 2) & (pos <= cap))
-            .select("doc_id")
-            .distinct()
+        drops = DD.keep_first_drops(
+            seen_positions(banded, catalog, last), "p + r", lsh
         )
         survivors = quality.join(drops, "doc_id", "left_anti")
         catalog.append(
@@ -255,8 +246,7 @@ def start_curation_stream(
         quality.unpersist()
         banded.unpersist()
         # committed with last_batch_id, so a skipped replay adds nothing
-        cap_census = S.observed(lsh) if n_quality else S.NO_CAP
-        record = {**obs.get, "quality": n_quality, **cap_census}
+        record = {**obs.get, **curation_record(n_quality, lsh)}
         prior = m.get("record", {})
         catalog.write_manifest(
             MANIFEST,
@@ -403,8 +393,8 @@ def seen_positions(banded: DataFrame, catalog, last: int) -> DataFrame:
     """Rank ``banded`` (doc_id, band_id, bucket) rows by GLOBAL bucket
     position: prior members across all completed batches + arrival rank
     within this batch — the one positional quantity the streaming dedup
-    rule consumes (drop iff 2 <= pos <= cap; column ``p`` is the prior
-    count, ``r`` the within-batch rank, pos = p + r).
+    rule consumes (``dedup.keep_first_drops`` on pos = p + r; column ``p``
+    is the prior count, ``r`` the within-batch rank).
 
     Scale shape (the round-5 follow-through on "bucket is the table's
     physical partition key"): the prior arrives in per-piece joins instead
@@ -429,8 +419,6 @@ def seen_positions(banded: DataFrame, catalog, last: int) -> DataFrame:
     cheap at bucket-count parallelism, while the two batch-key broadcasts
     (build + ship ~1.6M string keys per join) dominate.
     """
-    from pyspark.sql import Window
-
     comps, tail, m = _seen_components(catalog, last)
     if comps:
         # pre-partition the batch side to the state's bucket count so the
@@ -441,8 +429,7 @@ def seen_positions(banded: DataFrame, catalog, last: int) -> DataFrame:
         # n_buckets the probe stage's task count, which is why
         # compact_seen_buckets sizes it to the cluster's parallelism.
         banded = banded.repartition(m["n_buckets"], "band_id", "bucket")
-    w = Window.partitionBy("band_id", "bucket").orderBy("doc_id")
-    ranked = banded.withColumn("r", F.row_number().over(w))
+    ranked = DD.doc_rank(banded, "r", "band_id", "bucket")
     zero = F.lit(0).cast("long")
     parts = []
     for i, comp in enumerate(comps):

@@ -40,8 +40,6 @@ WORK = "/tmp/spark_graft_seen_probe"
 
 
 def main() -> None:
-    from pyspark.sql import functions as F
-
     from mysql_cdc_rs_spark.operators import dedup as DD
     from mysql_cdc_rs_spark.session import build_session
     from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
@@ -63,9 +61,6 @@ def main() -> None:
         "host_load_at_start": [round(x, 2) for x in os.getloadavg()],
         "sizes": {},
     }
-
-    cap = DD.MAX_BUCKET
-    pos = F.col("p") + F.col("r")
 
     for S in SIZES:
         shutil.rmtree(WORK, ignore_errors=True)
@@ -101,13 +96,9 @@ def main() -> None:
             times = []
             for _ in range(3):
                 t0 = time.monotonic()
-                n_drops = (
-                    seen_positions(batch, cat, 0)
-                    .where((pos >= 2) & (pos <= cap))
-                    .select("doc_id")
-                    .distinct()
-                    .count()
-                )
+                n_drops = DD.keep_first_drops(
+                    seen_positions(batch, cat, 0), "p + r", None
+                ).count()
                 times.append(time.monotonic() - t0)
             res[f"{layout}_sec"] = round(min(times), 3)
             res[f"{layout}_drops"] = n_drops

@@ -89,3 +89,56 @@ def test_perfbench_layer_calls_resolve(monkeypatch):
             assert hasattr(owner, part), f"{mod_name}.{attr}"
             owner = getattr(owner, part)
         assert callable(owner), f"{mod_name}.{attr}"
+
+
+def test_scripts_engine_names_resolve():
+    """The scripts and ``bench.py`` import engine names inside functions,
+    so a renamed or removed one would fail only when the script runs.
+    Every ``mysql_cdc_rs_spark`` name they import, and every ``ALIAS.attr``
+    they read off an imported engine module, must resolve."""
+    import ast
+    import importlib
+    import types
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    pkg = "mysql_cdc_rs_spark"
+
+    def member(where: str, module: str, name: str):
+        owner = importlib.import_module(module)
+        if not hasattr(owner, name):  # maybe a submodule not imported yet
+            try:
+                importlib.import_module(f"{module}.{name}")
+            except ImportError:
+                pass
+        assert hasattr(owner, name), f"{where}: {module}.{name}"
+        return getattr(owner, name)
+
+    checked = set()
+    for path in [repo / "bench.py", *sorted((repo / "scripts").glob("*.py"))]:
+        tree = ast.parse(path.read_text(), str(path))
+        modules = {}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name.split(".")[0] == pkg and a.asname:
+                        modules[a.asname] = importlib.import_module(a.name)
+            elif isinstance(node, ast.ImportFrom) and (
+                (node.module or "").split(".")[0] == pkg
+            ):
+                for a in node.names:
+                    value = member(path.name, node.module, a.name)
+                    checked.add((path.name, f"{node.module}.{a.name}"))
+                    if isinstance(value, types.ModuleType):
+                        modules[a.asname or a.name] = value
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and node.value.id in modules
+            ):
+                ref = f"{node.value.id}.{node.attr}"
+                assert hasattr(modules[node.value.id], node.attr), f"{path.name}: {ref}"
+                checked.add((path.name, ref))
+    assert ("bench_seen_probe.py", "DD.keep_first_drops") in checked
+    assert ("soak_stream_curation.py", "mysql_cdc_rs_spark.plans.training_pipeline.curate") in checked

@@ -153,6 +153,7 @@ def test_banded_buckets_golden(spark):
     import hashlib
 
     from mysql_cdc_rs_spark.operators import dedup as DD
+    from mysql_cdc_rs_spark.operators import stats as S
     from mysql_cdc_rs_spark.operators.decode import decode_pages
     from mysql_cdc_rs_spark.plans.training_pipeline import quality_corpus
     from mysql_cdc_rs_spark.sources.pages import pages_df
@@ -195,33 +196,64 @@ def test_short_docs_yield_zero_shingles_not_crash(spark):
 
 def test_lsh_degenerate_bucket_is_capped(spark):
     """100 identical docs share every band bucket; with max_bucket=10 the
-    pair count is bounded at C(10,2) per the cap, not C(100,2) — and the
-    observed cap census counts exactly what a groupBy of the bucket sizes
-    says the cap drops, without changing the pairs."""
+    pair count is bounded at C(10,2) per the cap, not C(100,2).
+
+    Keep-first's positional drop set (``keep_first_drops``, capped at
+    ``MAX_BUCKET``) is the distinct ``doc_b`` of the capped pairs, and
+    both observe the same cap census, which counts exactly what a groupBy
+    of the bucket sizes says the cap sheds: on more than ``MAX_BUCKET``
+    identical docs and on the quality docs of 400 generated pages."""
     from pyspark.sql import Observation
 
     from mysql_cdc_rs_spark.operators import dedup as DD
+    from mysql_cdc_rs_spark.operators import stats as S
+    from mysql_cdc_rs_spark.operators.decode import decode_pages
+    from mysql_cdc_rs_spark.plans.training_pipeline import quality_corpus
+    from mysql_cdc_rs_spark.sources.pages import pages_df
 
     text = "the exact same boilerplate text repeated across many documents"
     docs = spark.createDataFrame(
         [(i, text) for i in range(100)], "doc_id long, text string"
     )
-    obs = Observation()
-    pairs = DD.lsh_candidate_pairs(docs, max_bucket=10, obs=obs).collect()
+    pairs = DD.lsh_candidate_pairs(docs, max_bucket=10, obs=Observation()).collect()
     assert len(pairs) == 45  # C(10,2), lowest doc_ids kept
     assert {r["doc_a"] for r in pairs} | {r["doc_b"] for r in pairs} == set(range(10))
     assert sorted(pairs) == sorted(DD.lsh_candidate_pairs(docs, max_bucket=10).collect())
-    sizes = [
-        r["n"]
-        for r in DD.banded_buckets(docs)
-        .groupBy("band_id", "bucket")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    ]
-    assert obs.get == {
-        "lsh.cap_shed": sum(n - 10 for n in sizes if n > 10),
-        "lsh.cap_buckets": sum(n > 10 for n in sizes),
-    } == {"lsh.cap_shed": DD.LSH_BANDS * 90, "lsh.cap_buckets": DD.LSH_BANDS}
+
+    cap = DD.MAX_BUCKET
+    same = spark.createDataFrame(
+        [(i, text) for i in range(cap + 88)], "doc_id long, text string"
+    )
+    generated = quality_corpus(decode_pages(pages_df(spark, 400, seed=42)))
+    capped = {"lsh.cap_shed": DD.LSH_BANDS * 88, "lsh.cap_buckets": DD.LSH_BANDS}
+    for docs, expected in ((same, capped), (generated, S.NO_CAP)):
+        by_pairs, by_pos = Observation(), Observation()
+        want = {
+            r["doc_b"]
+            for r in DD.lsh_candidate_pairs(docs, obs=by_pairs)
+            .select("doc_b")
+            .distinct()
+            .collect()
+        }
+        got = {
+            r["doc_id"]
+            for r in DD.keep_first_drops(
+                DD.ranked_buckets(docs), "rn", by_pos
+            ).collect()
+        }
+        assert got == want and len(got) > 0
+        sizes = [
+            r["n"]
+            for r in DD.banded_buckets(docs)
+            .groupBy("band_id", "bucket")
+            .agg(F.count("*").alias("n"))
+            .collect()
+        ]
+        census = {
+            "lsh.cap_shed": sum(n - cap for n in sizes if n > cap),
+            "lsh.cap_buckets": sum(n > cap for n in sizes),
+        }
+        assert by_pos.get == by_pairs.get == census == expected
 
 
 def test_ngram_jaccard_degenerate_shingle_is_capped(spark):

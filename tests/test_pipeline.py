@@ -675,6 +675,88 @@ def test_spark_submit_py_files_runs():
         assert res["shuffle_partitions"] == 3
 
 
+_RETRY_SCRIPT = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from pyspark import TaskContext
+from mysql_cdc_rs_spark.plans.pipeline import run_pipeline
+from mysql_cdc_rs_spark.plans.training_pipeline import curate, release
+from mysql_cdc_rs_spark.session import build_session
+from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
+from mysql_cdc_rs_spark.sources.pages import pages_df
+
+tmp = sys.argv[2]
+spark = build_session(
+    "retries", master="local[4,2]",
+    extra_conf={"spark.ui.showConsoleProgress": "false"},
+)
+spark.sparkContext.setLogLevel("OFF")
+pages_df(spark, 800, seed=31).repartition(4).write.parquet(f"{tmp}/pages")
+pages = spark.read.parquet(f"{tmp}/pages")
+
+
+def fail_first(batches):
+    ctx = TaskContext.get()
+    if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+        raise RuntimeError("first attempt of partition 0")
+    yield from batches
+
+
+flaky = pages.mapInArrow(fail_first, pages.schema)
+sc = spark.sparkContext
+tracker = sc.statusTracker()
+out = {}
+for name, df in (("clean", pages), ("retried", flaky)):
+    sc.setJobGroup(name, name)
+    cat = SinkCatalog(spark, f"{tmp}/{name}")
+    res = run_pipeline(df, cat)
+    surv = curate(df)
+    ids = sorted(r["doc_id"] for r in surv.select("doc_id").collect())
+    out[name] = {
+        "record": res.metrics,
+        "route_counts": res.route_counts,
+        "routed": cat.read("routed").count(),
+        "survivors": ids,
+        "curation_record": release(surv),
+        "failed_tasks": sum(
+            info.numFailedTasks
+            for j in tracker.getJobIdsForGroup(name)
+            for s in tracker.getJobInfo(j).stageIds
+            if (info := tracker.getStageInfo(s)) is not None
+        ),
+    }
+spark.stop()
+print(json.dumps(out, default=str))
+"""
+
+
+def test_task_retries_count_once(tmp_path):
+    """Under task retries (``local[4,2]``: a failed task runs once more) a
+    pass-through ``mapInArrow`` over the pages fails the first attempt of
+    partition 0 in every stage that reads them.  ``run_pipeline``'s record
+    and routed count and ``curate``'s survivors and record equal a clean
+    run in the same session; the run record is observed in the failing
+    stage, so a retried task counted twice would show here."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT, repo, str(tmp_path)],
+        cwd=str(tmp_path), capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stdout[-2000:] + out.stderr[-2000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    clean, retried = got["clean"], got["retried"]
+    assert clean.pop("failed_tasks") == 0
+    assert retried.pop("failed_tasks") > 0
+    assert retried == clean
+    assert clean["routed"] == clean["record"]["rows"] == 800
+    assert clean["curation_record"]["quality"] >= len(clean["survivors"]) > 0
+
+
 def test_curate_resumable_skips_and_recomputes(spark, tmp_path):
     """Checkpoint-resume for the composed curation pipeline: identical input
     lineage -> both stages SKIP (fn never called again); changed input ->

@@ -217,6 +217,8 @@ def test_explain_snapshots_carry_invariants():
     assert "LeftAnti" in curate
     # the record's cap census is observed in the plan, not by a job
     assert "CollectMetrics" in curate
+    # keep-first drops by bucket position: no member arrays, no pairs
+    assert "collect_list" not in curate and "doc_b" not in curate
 
     # IVF assignment: shuffle-free argmax fold (formatted explain prints
     # the tree + details, so node counts are x2 vs the simple plan)

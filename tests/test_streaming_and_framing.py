@@ -1015,6 +1015,45 @@ def test_curation_record_without_quality_docs(spark):
         assert {k: rec[k] for k in ("quality", *NO_CAP)} == {"quality": 0, **NO_CAP}
 
 
+def test_curation_leaves_out_pages_without_a_doc_id(spark):
+    """A text page whose url has no trailing number, and one whose number
+    does not fit a long, have no doc_id to keep-first by: batch curate and
+    a stream batch leave them out of the curation input and finish, with
+    the survivors and the record of a run without those two pages."""
+    from mysql_cdc_rs_spark.plans.training_pipeline import curate, release
+    from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
+    from mysql_cdc_rs_spark.streaming.stream_pipeline import (
+        read_curated,
+        start_curation_stream,
+        stream_pages,
+    )
+
+    page = _html_page(0, " ".join(f"word{i}" for i in range(40)))
+    odd = [
+        (url, *page[1:])
+        for url in ("https://ex.com/about", "https://ex.com/d/12345678901234567890")
+    ]
+    clean = pages_df(spark, 300, seed=29)
+    pages = clean.unionByName(spark.createDataFrame(odd, PAGES_SCHEMA))
+
+    def survivors(surv):
+        return {r["doc_id"] for r in surv.select("doc_id").collect()}, release(surv)
+
+    want, want_rec = survivors(curate(clean))
+    assert survivors(curate(pages)) == (want, want_rec)
+    with tempfile.TemporaryDirectory() as tmp:
+        src = f"{tmp}/pages"
+        pages.coalesce(1).write.parquet(src)
+        cat = SinkCatalog(spark, f"{tmp}/cur")
+        q = start_curation_stream(stream_pages(spark, src), cat, f"{tmp}/ckpt")
+        q.awaitTermination()
+        assert q.exception() is None
+        got = {r["doc_id"] for r in read_curated(cat).select("doc_id").collect()}
+        rec = cat.read_manifest("stream_curate")["record"]
+    assert got == want
+    assert {k: rec[k] for k in want_rec} == want_rec
+
+
 def test_streaming_curation_record_adds_no_job(spark):
     """The curation stream runs as many Spark jobs per batch as it did
     before the cap census joined its record: 14 for the first batch and
