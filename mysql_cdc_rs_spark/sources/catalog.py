@@ -136,11 +136,14 @@ class SinkCatalog:
         return reader.parquet(self._path(table))
 
     def exists(self, table: str) -> bool:
+        """A root ``_SUCCESS`` or Parquet file, or a ``key=value`` partition
+        directory: ``overwrite_partitions`` leaves only the latter."""
         if self.use_iceberg:
             return self.spark.catalog.tableExists(self._ident(table))
         p = self._path(table)
         return os.path.isdir(p) and any(
-            f.endswith(".parquet") or f == "_SUCCESS" for f in os.listdir(p)
+            f.endswith(".parquet") or f == "_SUCCESS" or ("=" in f and f[0] not in "._")
+            for f in os.listdir(p)
         )
 
     # --- manifest: atomic JSON sidecar (checkpoint-resume support) ---------

@@ -11,14 +11,20 @@ checkpointing.  Spark restatement:
   with the batch pipeline verbatim);
 - routing: each micro-batch goes through the batch pipeline's own
   ``decode_pages`` -> ``enrich`` -> ``write_routes``, into its ``batch_id``
-  partition of ``routed``; a batch replayed after a crash rewrites that
-  partition and its run record, so the sink holds every row once;
+  partition of ``routed``;
 - progress: Structured Streaming checkpoint = GTID set (A8);
 - heartbeat (A9): the per-batch run record in manifest ``routes_<batch_id>``
   (rows, bytes, first/last ``warc_ts``);
 - curation: decode -> quality gate -> incremental LSH near-dup drop, whose
   per-bucket state lives in the ``dedup_seen_buckets`` table — the
   reference's per-key decoder context (TableMap cache) held in a table.
+
+Exactly-once is one rule for both streams: a batch writes each sink
+(``routed``; ``curated`` and ``dedup_seen_buckets``) into its own
+``batch_id`` partitions with ``SinkCatalog.overwrite_partitions``, then a
+manifest commits it.  A replay after a crash between the two replaces its
+partitions, so no reader or probe de-duplicates (the reference resumes
+from its GTID set and truncates a torn relay-log tail, segment.rs:137-140).
 
 Parallelism note: file-arrival sources deliver micro-batches with fewer
 partitions than cores — one arriving file is ONE partition — which
@@ -109,6 +115,16 @@ def stream_pages_socket(spark, host: str, port: int) -> DataFrame:
     )
 
 
+def _drive(stream_df: DataFrame, write_batch, checkpoint_dir: str, available_now: bool):
+    """Start ``foreachBatch(write_batch)``; ``available_now`` drains, then stops."""
+    writer = stream_df.writeStream.foreachBatch(write_batch).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def start_routing_stream(
     stream_df: DataFrame,
     catalog,
@@ -122,19 +138,13 @@ def start_routing_stream(
     stops (tests/backfills); pass False for unbounded sources (rate /
     socket) to run continuously.
 
-    Exactly-once: the checkpoint commits a batch only after its write, and
-    a batch replayed after a crash between the two rewrites its own
-    partitions and record instead of appending them again."""
+    Exactly-once by the module's rule: a replayed batch rewrites its own
+    partitions and record."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         write_routes(enrich(decode_pages(spread(batch_df))), catalog, batch_id)
 
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drive(stream_df, write_batch, checkpoint_dir, available_now)
 
 
 def start_curation_stream(
@@ -150,7 +160,7 @@ def start_curation_stream(
     ``plans.training_pipeline.curate`` (keep-first by ARRIVAL instead of by
     doc_id).
 
-    Dedup state is an append-only ``dedup_seen_buckets`` table holding, for
+    Dedup state is the ``dedup_seen_buckets`` table holding, for
     every QUALITY doc seen so far (not just survivors'), the per-bucket
     MEMBER COUNT per batch: batch keep-first drops a doc that collides with
     ANY earlier quality doc, dropped or not, and the counts let the stream
@@ -177,12 +187,12 @@ def start_curation_stream(
     tiny (broadcast is right), mature state is proportional to distinct
     buckets (SMJ is right), and unlike the verify stage's pair x shingle
     intermediates the input here is a real table with real stats, so the
-    estimate AQE re-plans on is trustworthy.  Restart safety: each batch's appends
-    carry batch_id and a manifest records the last COMPLETED batch, so a
-    replayed batch (restart between sink append and checkpoint commit) is
-    skipped; a crash inside a batch can leave a partial append, which
-    readers drop by filtering batch_id > last-completed (the relay-log
-    torn-tail rule, segment.rs:137-140, restated for micro-batches).
+    estimate AQE re-plans on is trustworthy.  Restart safety is the
+    module's one rule: ``curated`` and ``dedup_seen_buckets`` take the
+    batch's ``batch_id`` partitions and manifest ``stream_curate`` commits
+    it, so a replay before the commit replaces its rows, one after it is
+    skipped (the running ``record`` adds each batch once), and readers and
+    the probe take ``batch_id <= last`` only.
 
     ``compact_every=K`` runs ``compact_seen_buckets`` after every K
     completed batches, INSIDE the stream's serial foreachBatch thread — the
@@ -223,7 +233,7 @@ def start_curation_stream(
             min_tokens,
         ).persist()
         # Materialize each persisted frame in its OWN job before anything
-        # fans out over it.  Without the barrier, the first append's job
+        # fans out over it.  Without the barrier, the first write's job
         # carries sibling stages that race to build the same cached
         # partition; the loser parks on the block write lock that the
         # winner holds WHILE feeding a Python worker — the exact stall
@@ -239,10 +249,11 @@ def start_curation_stream(
             seen_positions(banded, catalog, last), "p + r", lsh
         )
         survivors = quality.join(drops, "doc_id", "left_anti")
-        catalog.append(
-            survivors.withColumn("batch_id", F.lit(batch_id)), CURATED
+        by_batch = ["batch_id"]
+        catalog.overwrite_partitions(
+            survivors.withColumn("batch_id", F.lit(batch_id)), CURATED, by_batch
         )
-        catalog.append(seen_rows(banded, batch_id), SEEN)
+        catalog.overwrite_partitions(seen_rows(banded, batch_id), SEEN, by_batch)
         quality.unpersist()
         banded.unpersist()
         # committed with last_batch_id, so a skipped replay adds nothing
@@ -258,20 +269,15 @@ def start_curation_stream(
         if compact_every and (batch_id + 1) % compact_every == 0:
             compact_seen_buckets(catalog)
 
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drive(stream_df, write_batch, checkpoint_dir, available_now)
 
 
 # The seen-bucket state's columns, declared once.  A compacted generation
-# holds SEEN_COLUMNS; the flat per-batch tail adds the batch_id its rows
-# were appended under.  Both readers (the probe and compaction) pass the
-# declaration to the Parquet read, which then runs no schema-inference job;
-# every writer casts to it (``as_declared``), so the files always hold the
-# declared types.
+# holds SEEN_COLUMNS; the flat per-batch tail adds the batch_id partition
+# its rows were written to.  Both readers (the probe and compaction) pass
+# the declaration to the Parquet read, which then runs no schema-inference
+# job; every writer casts to it (``as_declared``), so the files always hold
+# the declared types.
 SEEN_COLUMNS = "band_id INT, bucket STRING, n_members BIGINT"
 SEEN_SCHEMA = f"{SEEN_COLUMNS}, batch_id INT"
 
@@ -340,11 +346,12 @@ def _seen_components(catalog, last: int):
     unbounded — sides.  Generations cover DISJOINT batch ranges, so summing
     per bucket across them is exact.
 
-    ``tail`` — the flat append-only rows from batches in ``(through,
-    last]``, aggregated to (band_id, bucket, n_members), or None when the
-    flat table is absent.  Parquet min/max stats on batch_id skip the pre-``through``
-    files wholesale (each micro-batch appended its own files), so the tail
-    scan is proportional to data since the last compaction, not to history.
+    ``tail`` — the flat rows from batches in ``(through, last]``, summed
+    to (band_id, bucket, n_members), or None when the flat table is
+    absent.  Each batch owns its ``batch_id`` partition (a replay replaced
+    it, so nothing is counted twice), and the batch_id filter prunes
+    partition directories: the tail scan reads only batches since the last
+    compaction, and never an uncommitted batch.
 
     All pieces carry the same schema, and summing them per bucket is
     exactly the probe's prior count — the invariant every consumer
@@ -365,26 +372,9 @@ def _seen_components(catalog, last: int):
     if catalog.exists("dedup_seen_buckets"):
         tail = (
             catalog.read("dedup_seen_buckets", SEEN_SCHEMA)
-            .where(
-                (F.col("batch_id") > through) & (F.col("batch_id") <= last)
-            )  # exclude compacted-away history AND torn tails
-            # replay safety: a crash between a batch's SEEN append and its
-            # manifest commit makes the deterministic replay append the
-            # SAME (band_id, bucket, n_members, batch_id) rows again.
-            # collect_set collapses the identical copies (same batch ->
-            # identical struct; different batches -> distinct batch_id), a
-            # fold sums the survivors — one aggregate, one exchange, no
-            # double-count lifting later members past the drop window (the
-            # read_curated dropDuplicates rule, applied to the state
-            # table).  Set size is bounded by batches since compaction.
+            .where((F.col("batch_id") > through) & (F.col("batch_id") <= last))
             .groupBy("band_id", "bucket")
-            .agg(
-                F.aggregate(
-                    F.collect_set(F.struct("batch_id", "n_members")),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x["n_members"],
-                ).alias("n_members")
-            )
+            .agg(F.sum("n_members").alias("n_members"))
         )
     return comps, tail, m
 
@@ -463,15 +453,15 @@ def compact_seen_buckets(catalog) -> int:
     """Fold the flat ``dedup_seen_buckets`` tail into a bucketed generation
     of one summed row per (band_id, bucket).
 
-    The stream appends one file-set per micro-batch and never merges the
-    bucket rows across batches; over a long run the table accumulates both
-    small files and repeated buckets.  Compaction collapses them with
-    ``n_members`` summed (sum is exactly what the probe aggregates at read
-    time, so probe results are unchanged) up to the last COMPLETED batch
-    (torn tails from a mid-batch crash are dropped by the same batch_id
-    filter the probe uses).  Run it BETWEEN batches — the stream's
-    ``compact_every`` cadence or between availableNow drains — never
-    concurrently with a probe.
+    The stream writes one ``batch_id`` partition per micro-batch and never
+    merges the bucket rows across batches; over a long run the table
+    accumulates both small files and repeated buckets.  Compaction
+    collapses them with ``n_members`` summed (sum is exactly what the probe
+    aggregates at read time, so probe results are unchanged) up to the last
+    COMPLETED batch (an uncommitted batch's partition is left out by the
+    same batch_id filter the probe uses).  Run it BETWEEN batches — the
+    stream's ``compact_every`` cadence or between availableNow drains —
+    never concurrently with a probe.
 
     One policy, the one BENCH/SOAK.md measured fastest at every size:
 
@@ -502,10 +492,12 @@ def compact_seen_buckets(catalog) -> int:
     manifest unlists the merged generations).
 
     On the Iceberg leg the state stays one table rewritten by
-    ``overwrite``, which commits one atomic snapshot swap.
+    ``overwrite``, which commits one atomic snapshot swap.  The rewrite
+    keeps the ``batch_id`` partitioning, so the next batch's
+    ``overwrite_partitions`` replaces only its own partition.
 
     Returns the distinct bucket count of the written generation (0 when
-    nothing was appended since the last compaction).
+    nothing was written since the last compaction).
     """
     m = catalog.read_manifest("stream_curate")
     last = m.get("last_batch_id", -1) if m else -1
@@ -526,6 +518,7 @@ def compact_seen_buckets(catalog) -> int:
         catalog.overwrite(
             as_declared(seen.withColumn("batch_id", F.lit(last))),
             "dedup_seen_buckets",
+            partition_by=["batch_id"],
         )
         return catalog.read("dedup_seen_buckets").count()
     import hashlib
@@ -575,19 +568,13 @@ def compact_seen_buckets(catalog) -> int:
 
 
 def read_curated(catalog) -> DataFrame:
-    """Committed curated corpus: completed batches only (torn-tail rule).
-
-    dropDuplicates(doc_id) makes reads immune to the one remaining replay
-    window (crash after the curated append but before the manifest write:
-    the deterministic replay appends identical rows under the same
-    batch_id)."""
+    """Committed curated corpus: the ``batch_id`` partitions of completed
+    batches only.  A replayed batch replaced its partition, so each doc_id
+    is there once; an uncommitted batch's partition stays hidden until its
+    replay commits it (the relay log's torn-tail rule)."""
     m = catalog.read_manifest("stream_curate")
     last = m.get("last_batch_id", -1) if m else -1
-    return (
-        catalog.read("curated")
-        .where(F.col("batch_id") <= last)
-        .dropDuplicates(["doc_id"])
-    )
+    return catalog.read("curated").where(F.col("batch_id") <= last)
 
 
 def read_routed(catalog) -> DataFrame:

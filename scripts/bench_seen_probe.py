@@ -87,7 +87,8 @@ def main() -> None:
         res: dict = {}
         for layout in ("flat", "bucketed"):
             cat = SinkCatalog(spark, os.path.join(WORK, layout))
-            cat.append(state, "dedup_seen_buckets")
+            # the stream's layout: one batch_id partition per batch
+            cat.overwrite_partitions(state, "dedup_seen_buckets", ["batch_id"])
             cat.write_manifest("stream_curate", {"last_batch_id": 0})
             if layout == "bucketed":
                 t0 = time.monotonic()

@@ -4,9 +4,11 @@ Writes BENCH/explain/<name>.txt so plan regressions are diffable review
 artifacts; tests/test_plan_quality.py::test_explain_snapshots_carry_invariants
 asserts the committed snapshots still carry the invariants the engine is
 designed around (single Python node, dimension lookups that join nothing,
-pushed filters).  Re-run after intentional plan changes:
+pushed filters).  Re-run after intentional plan changes, naming the
+snapshots the change moved (every snapshot embeds expression ids, so
+rewriting an unchanged plan only churns its ids):
 
-    python scripts/dump_explain.py
+    python scripts/dump_explain.py [name ...]    # default: all of them
 """
 
 from __future__ import annotations
@@ -47,43 +49,51 @@ def formatted(spark, df) -> str:
     )
 
 
-def main() -> None:
+def snapshots() -> dict:
+    """Snapshot name -> function of the session building its frame."""
+    from pyspark.sql import functions as F
+
     from mysql_cdc_rs_spark.operators.decode import decode_pages
     from mysql_cdc_rs_spark.operators.enrich import enrich
+    from mysql_cdc_rs_spark.operators.similarity import ivf_assign
     from mysql_cdc_rs_spark.queries import QUERIES
-    from mysql_cdc_rs_spark.session import build_session
     from mysql_cdc_rs_spark.sources.pages_from_documents import (
         pages_from_documents,
     )
+    from mysql_cdc_rs_spark.sources.testdata import load
 
+    def ivf(spark):
+        # not a registry query, but THE shape the 100x verdicts hinged on:
+        # IVF assignment as a shuffle-free argmax fold over one broadcast
+        # codebook row (no Window, no corpus Exchange, corpus norm folded
+        # once per row below the join)
+        emb = load(spark, SF, "embeddings")
+        return ivf_assign(emb, emb.filter(F.col("vec_id") % 50 == 0))
+
+    return {
+        "pipeline_decode_enrich": lambda spark: enrich(
+            decode_pages(pages_from_documents(spark, SF))
+        ),
+        **{name: lambda spark, q=QUERIES[name]: q(spark, SF) for name in SNAPSHOT_QUERIES},
+        "ivf_assign": ivf,
+    }
+
+
+def main(names: list[str]) -> None:
+    from mysql_cdc_rs_spark.session import build_session
+
+    builders = snapshots()
+    unknown = sorted(set(names) - set(builders))
+    if unknown:
+        sys.exit(f"unknown snapshot(s) {unknown}; known: {sorted(builders)}")
     os.makedirs(OUT, exist_ok=True)
     spark = build_session(
         "explain", master="local[8]",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    plans = {"pipeline_decode_enrich": formatted(
-        spark, enrich(decode_pages(pages_from_documents(spark, SF)))
-    )}
-    for name in SNAPSHOT_QUERIES:
-        plans[name] = formatted(spark, QUERIES[name](spark, SF))
-
-    # not a registry query, but THE shape the 100x verdicts hinged on:
-    # IVF assignment as a shuffle-free argmax fold over one broadcast
-    # codebook row (no Window, no corpus Exchange, corpus norm folded
-    # once per row below the join)
-    from pyspark.sql import functions as F
-
-    from mysql_cdc_rs_spark.operators.similarity import ivf_assign
-    from mysql_cdc_rs_spark.sources.testdata import load
-
-    emb = load(spark, SF, "embeddings")
-    plans["ivf_assign"] = formatted(
-        spark, ivf_assign(emb, emb.filter(F.col("vec_id") % 50 == 0))
-    )
-
-    for name, plan in plans.items():
+    for name in names or builders:
+        plan = formatted(spark, builders[name](spark))
         with open(f"{OUT}/{name}.txt", "w") as f:
             f.write(plan)
         print(f"wrote BENCH/explain/{name}.txt ({len(plan)} bytes)")
@@ -91,4 +101,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

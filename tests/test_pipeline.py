@@ -679,11 +679,17 @@ _RETRY_SCRIPT = """
 import json, sys
 sys.path.insert(0, sys.argv[1])
 from pyspark import TaskContext
+from pyspark.sql import functions as F
 from mysql_cdc_rs_spark.plans.pipeline import run_pipeline
 from mysql_cdc_rs_spark.plans.training_pipeline import curate, release
 from mysql_cdc_rs_spark.session import build_session
 from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
 from mysql_cdc_rs_spark.sources.pages import pages_df
+from mysql_cdc_rs_spark.streaming.stream_pipeline import (
+    read_curated,
+    start_curation_stream,
+    stream_pages,
+)
 
 tmp = sys.argv[2]
 spark = build_session(
@@ -693,6 +699,10 @@ spark = build_session(
 spark.sparkContext.setLogLevel("OFF")
 pages_df(spark, 800, seed=31).repartition(4).write.parquet(f"{tmp}/pages")
 pages = spark.read.parquet(f"{tmp}/pages")
+# two page files for the curation stream, one micro-batch each
+doc_id = F.substring_index("url", "/", -1).cast("long")
+for half in (doc_id < 400, doc_id >= 400):
+    pages.where(half).coalesce(1).write.mode("append").parquet(f"{tmp}/stream")
 
 
 def fail_first(batches):
@@ -702,12 +712,24 @@ def fail_first(batches):
     yield from batches
 
 
-flaky = pages.mapInArrow(fail_first, pages.schema)
+def failed_tasks(group):
+    return sum(
+        info.numFailedTasks
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+        if (info := tracker.getStageInfo(s)) is not None
+    )
+
+
 sc = spark.sparkContext
 tracker = sc.statusTracker()
 out = {}
-for name, df in (("clean", pages), ("retried", flaky)):
+for name, wrap in (
+    ("clean", lambda df: df),
+    ("retried", lambda df: df.mapInArrow(fail_first, df.schema)),
+):
     sc.setJobGroup(name, name)
+    df = wrap(pages)
     cat = SinkCatalog(spark, f"{tmp}/{name}")
     res = run_pipeline(df, cat)
     surv = curate(df)
@@ -718,13 +740,24 @@ for name, df in (("clean", pages), ("retried", flaky)):
         "routed": cat.read("routed").count(),
         "survivors": ids,
         "curation_record": release(surv),
-        "failed_tasks": sum(
-            info.numFailedTasks
-            for j in tracker.getJobIdsForGroup(name)
-            for s in tracker.getJobInfo(j).stageIds
-            if (info := tracker.getStageInfo(s)) is not None
-        ),
+        "failed_tasks": failed_tasks(name),
     }
+    # one curation-stream drain; a stream's jobs run in group str(runId)
+    stream_cat = SinkCatalog(spark, f"{tmp}/{name}_stream")
+    q = start_curation_stream(
+        wrap(stream_pages(spark, f"{tmp}/stream", max_files_per_trigger=1)),
+        stream_cat,
+        f"{tmp}/{name}_ckpt",
+    )
+    q.awaitTermination()
+    out[name]["stream"] = {
+        "batches": len(q.recentProgress),
+        "survivors": sorted(
+            r["doc_id"] for r in read_curated(stream_cat).select("doc_id").collect()
+        ),
+        "manifest": stream_cat.read_manifest("stream_curate"),
+    }
+    out[name]["stream_failed_tasks"] = failed_tasks(str(q.runId))
 spark.stop()
 print(json.dumps(out, default=str))
 """
@@ -736,7 +769,13 @@ def test_task_retries_count_once(tmp_path):
     partition 0 in every stage that reads them.  ``run_pipeline``'s record
     and routed count and ``curate``'s survivors and record equal a clean
     run in the same session; the run record is observed in the failing
-    stage, so a retried task counted twice would show here."""
+    stage, so a retried task counted twice would show here.  The same
+    failing pass-through on a curation stream over two page files (one
+    micro-batch each) retries the scan that feeds ``spread`` in both
+    batches, and the second batch probes state the first wrote under
+    retries: ``read_curated`` and the ``stream_curate`` manifest equal a
+    clean drain's, and with doc_id-ordered files the stream keeps what
+    ``curate`` keeps."""
     import json
     import os
     import subprocess
@@ -750,9 +789,14 @@ def test_task_retries_count_once(tmp_path):
     assert out.returncode == 0, out.stdout[-2000:] + out.stderr[-2000:]
     got = json.loads(out.stdout.strip().splitlines()[-1])
     clean, retried = got["clean"], got["retried"]
-    assert clean.pop("failed_tasks") == 0
-    assert retried.pop("failed_tasks") > 0
+    for key in ("failed_tasks", "stream_failed_tasks"):
+        assert clean.pop(key) == 0
+        assert retried.pop(key) > 0
     assert retried == clean
+    stream = clean["stream"]
+    assert stream["batches"] == 2 and stream["manifest"]["last_batch_id"] == 1
+    assert stream["manifest"]["record"]["rows"] == 800
+    assert stream["survivors"] == clean["survivors"]  # doc_id-ordered files
     assert clean["routed"] == clean["record"]["rows"] == 800
     assert clean["curation_record"]["quality"] >= len(clean["survivors"]) > 0
 

@@ -161,6 +161,7 @@ def test_streaming_matches_batch_and_resumes(spark):
 
         # restart: batch 1 replays, batch 2 runs
         drain()
+        assert cat.exists("routed")  # partition directories only, no root file
         batch = SinkCatalog(spark, f"{tmp}/batch")
         want_record = run_pipeline(spark.read.parquet(src), batch).metrics
         want = batch.read("routed").select(*SINK_COLUMNS)
@@ -466,9 +467,11 @@ def test_socket_source_live_pages(spark):
 def test_seen_probe_plan_runs_no_job(spark, tmp_path):
     """Building the streaming probe over a flat ``dedup_seen_buckets``
     table runs no Spark job: the state is read with its declared schema,
-    so Parquet schema inference (one job per read) never starts.  The
-    state is written by ``seen_rows`` from banded rows whose ``band_id`` is
-    a long: the writer casts to the declaration the reader uses."""
+    so Parquet schema inference (one job per read) never starts, and its
+    ``batch_id`` partition directories are discovered on the driver.  The
+    state is written as the stream writes it, by ``seen_rows`` into a
+    ``batch_id`` partition, from banded rows whose ``band_id`` is a long:
+    the writer casts to the declaration the reader uses."""
     from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
     from mysql_cdc_rs_spark.streaming.stream_pipeline import (
         seen_positions,
@@ -486,7 +489,7 @@ def test_seen_probe_plan_runs_no_job(spark, tmp_path):
     assert state.schema.simpleString() == (
         "struct<band_id:int,bucket:string,n_members:bigint,batch_id:int>"
     )
-    cat.append(state, "dedup_seen_buckets")
+    cat.overwrite_partitions(state, "dedup_seen_buckets", partition_by=["batch_id"])
     banded = spark.createDataFrame(
         [(7, 3, "1_2_3_4"), (8, 3, "5_6_7_8")],
         "doc_id long, band_id int, bucket string",
@@ -752,14 +755,15 @@ def test_streaming_curation_bucketed_state_matches_batch(spark):
 
 
 def test_streaming_curation_seen_replay_not_double_counted(spark):
-    """Crash between a batch's SEEN append and its manifest commit: the
-    restarted stream REPLAYS the batch and appends identical state rows a
-    second time.  The probe must collapse the duplicates (per-batch max
-    before the cross-batch sum) — otherwise every bucket of the torn batch
-    double-counts and later members are wrongly lifted past the drop
-    window.  Detection uses the cap boundary: 511 identical docs in the
-    torn batch put the next two arrivals at positions 512 (drop, == cap)
-    and 513 (keep, > cap); a double-counted prior (1022) would KEEP both."""
+    """Crash between a batch's writes and its manifest commit: the
+    restarted stream REPLAYS the batch, which REPLACES its own
+    ``batch_id`` partitions of ``curated`` and ``dedup_seen_buckets``
+    instead of adding its rows a second time — so neither table holds a
+    duplicate and the probe sums the state as stored.  A doubled state
+    would lift later members past the drop window.  Detection uses the
+    cap boundary: 511 identical docs in the torn batch put the next two
+    arrivals at positions 512 (drop, == cap) and 513 (keep, > cap); a
+    double-counted prior (1022) would KEEP both."""
     from mysql_cdc_rs_spark.operators.dedup import MAX_BUCKET
     from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
     from mysql_cdc_rs_spark.streaming.stream_pipeline import (
@@ -798,8 +802,8 @@ def test_streaming_curation_seen_replay_not_double_counted(spark):
             q.awaitTermination()
         cat.write_manifest = real_write
         assert cat.read_manifest("stream_curate") is None  # commit torn
-        # the SEEN append landed, the manifest did not: restart replays the
-        # batch and appends the SAME state rows again
+        # the writes landed, the manifest did not: restart replays the
+        # batch, which rewrites its partitions
         q = start_curation_stream(
             stream_pages(spark, src), cat, ckpt, min_tokens=10
         )
@@ -808,8 +812,10 @@ def test_streaming_curation_seen_replay_not_double_counted(spark):
         one_bucket = (
             seen.groupBy("band_id", "bucket").count().where("count > 1")
         )
-        assert one_bucket.count() > 0  # duplicates really are on disk
-        # ...but the run record counts the replayed batch once
+        assert one_bucket.count() == 0  # no duplicate state row on disk
+        curated = cat.read("curated")
+        assert curated.count() == curated.select("doc_id").distinct().count() > 0
+        # and the run record counts the replayed batch once
         assert cat.read_manifest("stream_curate")["record"]["rows"] == MAX_BUCKET - 1
 
         # next two arrivals of the same class: 512 drops (== cap), 513
