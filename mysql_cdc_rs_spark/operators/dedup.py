@@ -50,10 +50,8 @@ def exact_dedup_stats(docs: DataFrame) -> DataFrame:
 
 def exact_dedup_keep_first(docs: DataFrame) -> DataFrame:
     """Exact dedup keeping the lowest doc_id per text hash."""
-    return (
-        docs.groupBy(F.md5("text").alias("text_hash"))
-        .agg(F.min("doc_id").alias("keeper_id"), F.count("*").alias("n_copies"))
-        .orderBy("text_hash")
+    return docs.groupBy(F.md5("text").alias("text_hash")).agg(
+        F.min("doc_id").alias("keeper_id"), F.count("*").alias("n_copies")
     )
 
 
@@ -312,4 +310,4 @@ def simhash(docs: DataFrame) -> DataFrame:
             F.lit(0).cast("long")
         )
         sim = term if sim is None else sim + term
-    return per_doc.select("doc_id", sim.alias("simhash")).orderBy("doc_id")
+    return per_doc.select("doc_id", sim.alias("simhash"))

@@ -34,6 +34,19 @@ def cosine(a, b):
     return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, rank, neighbor_id): each query's ``k`` highest-``sim``
+    candidates, ties to the lower vec_id."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col("vec_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "rank", F.col("vec_id").alias("neighbor_id"))
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame, queries: DataFrame, k: int = 10
 ) -> DataFrame:
@@ -63,15 +76,7 @@ def brute_force_topk(
             / (F.col("_nq") * F.col("_ne")),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", F.col("vec_id").alias("neighbor_id"))
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(scored, k)
 
 
 # --- LSH (random hyperplane) path -------------------------------------------
@@ -155,15 +160,7 @@ def lsh_topk(
         .where(F.col("vec_id") != F.col("query_id"))
         .withColumn("sim", cosine(F.col("q_emb"), F.col("embedding")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", F.col("vec_id").alias("neighbor_id"))
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def neardup_pairs(
@@ -231,7 +228,6 @@ def neardup_pairs(
             F.col("p.b.vec_id").alias("vec_b"),
         )
         .distinct()
-        .orderBy("vec_a", "vec_b")
     )
 
 
@@ -442,15 +438,7 @@ def ivf_topk_nprobe(
         .where(F.col("vec_id") != F.col("query_id"))
         .withColumn("sim", cosine(F.col("q_emb"), F.col("embedding")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", F.col("vec_id").alias("neighbor_id"))
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def ivf_topk(
@@ -468,12 +456,4 @@ def ivf_topk(
         .where(F.col("vec_id") != F.col("query_id"))
         .withColumn("sim", cosine(F.col("q_emb"), F.col("embedding")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", F.col("vec_id").alias("neighbor_id"))
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(scored, k)

@@ -106,10 +106,8 @@ def charset_stats(decoded: DataFrame) -> DataFrame:
     """A7 analog: the charset census of a decode (column-parser type stats),
     ``(event_type, charset, charset_source) -> n``; a page whose charset was
     not found is counted under a NULL charset."""
-    return (
-        decoded.groupBy("event_type", "charset", "charset_source")
-        .agg(F.count("*").alias("n"))
-        .orderBy("event_type", "charset")
+    return decoded.groupBy("event_type", "charset", "charset_source").agg(
+        F.count("*").alias("n")
     )
 
 
@@ -151,4 +149,4 @@ def host_stats_salted(decoded: DataFrame) -> DataFrame:
             "total_bytes": F.coalesce(F.col("raw_len"), F.lit(0)),
             "n_errors": F.col("error").isNotNull().cast("int"),
         },
-    ).orderBy(F.col("n_pages").desc(), F.col("host"))
+    )

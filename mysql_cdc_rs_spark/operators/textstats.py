@@ -81,7 +81,7 @@ def lang_id(docs: DataFrame) -> DataFrame:
         best_n = F.when(take, c).otherwise(best_n)
     sel = [docs["doc_id"], best.alias("pred_lang")]
     sel += [counts[lang].alias(f"hits_{lang}") for lang in sorted(counts)]
-    return docs.select(*sel).orderBy("doc_id")
+    return docs.select(*sel)
 
 
 def fingerprint(words: Column) -> Column:

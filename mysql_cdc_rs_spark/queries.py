@@ -14,9 +14,10 @@ match bit-for-bit):
    engines, and compared outputs carry ranks/ids, not floats.
 4. Timestamps compared raw (session TZ pinned UTC); differences are computed
    in integer microseconds (unix_micros vs epoch_us).
-5. Every computed column aliased identically on both sides; deterministic
-   ORDER BY is the driver's job (it hashes order-insensitively) but ties in
-   window/rank functions are always broken by a unique column.
+5. Every computed column aliased identically on both sides.  A query
+   returns a row set: the driver compares it order-insensitively, so its
+   only sort is one a ``limit`` reads (q3).  Ties in window/rank functions
+   are always broken by a unique column.
 """
 
 from __future__ import annotations
@@ -87,6 +88,10 @@ def ordered(df: DataFrame, *keys: str) -> DataFrame:
     added exchange carries only the query's output columns, and the
     trailing orderBy is unchanged, so results (rows AND order) are
     identical at any scale.
+
+    No engine code calls it: queries return row sets and sort only under a
+    ``limit``.  It stays only because perfbench's ``LAYER_CALLS`` names it,
+    and goes with that entry in the next benchmark change.
     """
     return df.repartition(*[F.col(k) for k in keys]).orderBy(*keys)
 
@@ -111,7 +116,6 @@ def _q1(spark, sf):
                 F.sum(e_units(F.col("l_quantity"), 2)) / F.count("*")
             ).alias("avg_qty_e2"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
     )
 
 
@@ -201,7 +205,6 @@ def _q5(spark, sf):
         .join(broadcast(nation), supp.s_nationkey == nation.n_nationkey)
         .groupBy("n_name")
         .agg(F.sum(rev).alias("revenue_e4"), F.count("*").alias("n_items"))
-        .orderBy("n_name")
     )
 
 
@@ -230,7 +233,6 @@ def _j1b(spark, sf):
             F.sum(e_units(F.col("l_quantity"), 2)).alias("sum_qty_e2"),
             F.sum(rev).alias("revenue_e4"),
         )
-        .orderBy("p_brand")
     )
 
 
@@ -257,7 +259,6 @@ def _j1a(spark, sf):
         )
         .groupBy("o_orderpriority")
         .agg(F.count("*").alias("n_unmatched"))
-        .orderBy("o_orderpriority")
     )
 
 
@@ -281,7 +282,6 @@ def _s6(spark, sf):
             F.min("ts").alias("first_ts"),
             F.max("ts").alias("last_ts"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -321,7 +321,6 @@ def _a12(spark, sf):
             F.min("ts").alias("first_seen"),
             F.max("ts").alias("last_seen"),
         )
-        .orderBy(F.col("event_type").asc_nulls_first())
     )
 
 
@@ -338,7 +337,6 @@ def _a4(spark, sf):
         ev.withColumn("bucket", F.floor(F.col("value") / 50.0).cast("long"))
         .groupBy("bucket")
         .agg(F.count("*").alias("n"))
-        .orderBy("bucket")
     )
 
 
@@ -358,7 +356,6 @@ def _a6(spark, sf):
         ev.withColumn("k_mod", k)
         .groupBy("k_mod")
         .agg(F.count("*").alias("n_errors"))
-        .orderBy("k_mod")
     )
 
 
@@ -387,11 +384,6 @@ def _w13(spark, sf):
     ev = W.propagate_last_context(ev, "user_id", order, marker, "ctx_value_e2")
     ev = W.next_position(ev, "user_id", order, "ts")
     # parquet ts is TIMESTAMP_NTZ; cast to LTZ (value-preserving: session=UTC)
-    # deliberately NOT ordered(): the output is as wide as the input (one
-    # row per event), so materializing it through an extra exchange costs
-    # more than the window re-run the sort sampling causes (A/B measured
-    # 1.11s vs 0.87s at sf1.0) — the opposite trade from w2, whose output
-    # collapses to one row per session
     return ev.select(
         "event_id",
         "user_id",
@@ -400,7 +392,7 @@ def _w13(spark, sf):
             F.unix_micros(F.col("next_pos").cast("timestamp"))
             - F.unix_micros(F.col("ts").cast("timestamp"))
         ).alias("gap_us"),
-    ).orderBy("event_id")
+    )
 
 
 @q(
@@ -425,17 +417,12 @@ def _w2(spark, sf):
         ["ts", "event_id"],
         F.col("event_type") == "signup",
     )
-    # deliberately NOT ordered(): the window's user_id exchange already
-    # shields the heavy subtree from the sort sampler, and the A/B at
-    # sf1.0 measured the extra materializing exchange as a net loss
-    # (1.10s vs 0.93s)
     return (
         ev.groupBy("user_id", "session_id")
         .agg(
             F.count("*").alias("n_events"),
             F.sum(e_units(F.col("value"), 2)).alias("sum_value_e2"),
         )
-        .orderBy("user_id", "session_id")
     )
 
 
@@ -503,7 +490,6 @@ def _d1(spark, sf):
         .agg(F.count("*").alias("n"))
         .withColumn("update_class", klass)
         .select("changed_fields", "update_class", "n")
-        .orderBy("changed_fields")
     )
 
 
@@ -671,9 +657,7 @@ _BANDS_UNION = " UNION ALL ".join(
     _SH_CTE + f"SELECT doc_id, {_MH_COLS} FROM sh GROUP BY doc_id ORDER BY doc_id",
 )
 def _dmh(spark, sf):
-    return DD.minhash_signatures(spread(load(spark, sf, "documents"))).orderBy(
-        "doc_id"
-    )
+    return DD.minhash_signatures(spread(load(spark, sf, "documents")))
 
 
 _BANDS_SQL = (
@@ -703,9 +687,7 @@ _BANDS_SQL = (
     """,
 )
 def _dlsh(spark, sf):
-    return DD.lsh_candidate_pairs(spread(load(spark, sf, "documents"))).orderBy(
-        "doc_a", "doc_b"
-    )
+    return DD.lsh_candidate_pairs(spread(load(spark, sf, "documents")))
 
 
 @q(
@@ -750,7 +732,6 @@ def _djac(spark, sf):
             "n_inter",
             e_units(F.col("jaccard"), 6).alias("jaccard_e6"),
         )
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -857,27 +838,24 @@ def _text_stats(spark, sf):
         .alias("n_bpe_tokens"),
     )
     n_tokens = F.col("n_tokens")
-    return ordered(
-        counted.select(
-            "doc_id",
-            "n_tokens",
-            "n_chars_norm",
-            e_units(
-                (F.col("n_chars_norm") - (n_tokens - 1)).cast("double")
-                / n_tokens,
-                6,
-            ).alias("avg_word_len_e6"),
-            "n_stopwords",
-            e_units(F.col("n_stopwords").cast("double") / n_tokens, 6).alias(
-                "stop_ratio_e6"
-            ),
-            F.when(n_tokens >= 50, F.lit(1000000).cast("long"))
-            .otherwise(e_units(n_tokens.cast("double") / 50.0, 6))
-            .alias("len_score_e6"),
-            "fingerprint",
-            "n_bpe_tokens",
-        ),
+    return counted.select(
         "doc_id",
+        "n_tokens",
+        "n_chars_norm",
+        e_units(
+            (F.col("n_chars_norm") - (n_tokens - 1)).cast("double")
+            / n_tokens,
+            6,
+        ).alias("avg_word_len_e6"),
+        "n_stopwords",
+        e_units(F.col("n_stopwords").cast("double") / n_tokens, 6).alias(
+            "stop_ratio_e6"
+        ),
+        F.when(n_tokens >= 50, F.lit(1000000).cast("long"))
+        .otherwise(e_units(n_tokens.cast("double") / 50.0, 6))
+        .alias("len_score_e6"),
+        "fingerprint",
+        "n_bpe_tokens",
     )
 
 
@@ -1012,7 +990,6 @@ def _p_counts(spark, sf):
         decode_pages(pages)
         .groupBy("event_type")
         .agg(F.count("*").alias("n"))
-        .orderBy("event_type")
     )
 
 
@@ -1037,12 +1014,7 @@ def _p_text(spark, sf):
     pages = pages_from_documents(spark, sf)
     dec = decode_pages(pages).filter(F.col("event_type").isin("html", "plain"))
     doc_id = F.regexp_extract("url", r"/d/(\d+)$", 1).cast("long")
-    # ordered(): materialize ahead of the sort — without it the range
-    # sampling re-executes BOTH Python stages (page gen + decode UDF)
-    return ordered(
-        dec.select(doc_id.alias("doc_id"), F.md5("text").alias("text_md5")),
-        "doc_id",
-    )
+    return dec.select(doc_id.alias("doc_id"), F.md5("text").alias("text_md5"))
 
 
 @q(
@@ -1070,7 +1042,6 @@ def _p_routes(spark, sf):
     return (
         enriched.groupBy("route", "region")
         .agg(F.count("*").alias("n"))
-        .orderBy("route", "region")
     )
 
 
@@ -1136,7 +1107,6 @@ def _a8(spark, sf):
             F.max("e").alias("max_id"),
             F.array_join(fmt, ":").alias("gtid_set"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -1354,13 +1324,8 @@ def _ivf_train(spark, sf):
     Completes the IVF path: kmeans_train_int -> ivf_assign -> ivf_topk."""
     emb = spread(load(spark, sf, "embeddings"))
     out = SIM.kmeans_train_int(emb, dim=_EMB_DIM, k=_IVF_CELLS, iters=_KMEANS_ITERS)
-    # ordered(): the final assignment is a map-only interpreted argmin fold
-    # over the corpus — materialize it before the sort samples it
-    return ordered(
-        out.select(
-            "vec_id", F.col("cent_id").cast("long").alias("cent_id"), "dist"
-        ),
-        "vec_id",
+    return out.select(
+        "vec_id", F.col("cent_id").cast("long").alias("cent_id"), "dist"
     )
 
 
@@ -1382,7 +1347,7 @@ def _salted(spark, sf):
         "hot_key",
         "event_id",
         {"n": F.lit(1), "sum_value_e2": e_units(F.col("value"), 2)},
-    ).orderBy("hot_key")
+    )
 
 
 @q(
@@ -1419,9 +1384,7 @@ def _c12(spark, sf):
         decoded, _ = parse_decimal(wire, 0, 18, 2)  # <- and back
         return [(k, decoded)]
 
-    return map_rows(orders, rt, "o_orderkey long, decimal_str string").orderBy(
-        "o_orderkey"
-    )
+    return map_rows(orders, rt, "o_orderkey long, decimal_str string")
 
 
 @q(
@@ -1461,7 +1424,7 @@ def _c1314(spark, sf):
     return decoded.withColumn(
         "k_mod7",
         F.get_json_object("canonical_json", "$.k").cast("long") % 7,
-    ).orderBy("event_id")
+    )
 
 
 @q(
@@ -1513,7 +1476,7 @@ def _c810(spark, sf):
 
     return map_rows(
         ev, rt, "event_id long, time_micros long, epoch_micros_rt long"
-    ).orderBy("event_id")
+    )
 
 
 _ENUM_LABELS = ["click", "error", "purchase", "signup", "view"]
@@ -1594,14 +1557,11 @@ def _p3(spark, sf):
             sum(cells[8]), err,
         )]
 
-    return ordered(
-        map_rows(
-            ev, rt,
-            "event_id long, etype_ord int, value_str string, d string, "
-            "yr int, set_mask int, props_rt string, nd string, "
-            "arr_sum int, decode_err string",
-        ),
-        "event_id",
+    return map_rows(
+        ev, rt,
+        "event_id long, etype_ord int, value_str string, d string, "
+        "yr int, set_mask int, props_rt string, nd string, "
+        "arr_sum int, decode_err string",
     )
 
 
@@ -1673,7 +1633,6 @@ def _p8_labels(spark, sf):
             "set_mask",
             set_labels.alias("set_labels"),
         )
-        .orderBy("event_id")
     )
 
 
@@ -1718,7 +1677,7 @@ def _c1(spark, sf):
     return map_rows(
         ev, rt,
         "event_id long, id_rt long, props_rt string, bit_ones int, blob_rt string",
-    ).orderBy("event_id")
+    )
 
 
 @q(
@@ -1773,7 +1732,7 @@ def _s7(spark, sf):
     return map_rows(
         docs, rt,
         "chunk_id long, n_good int, n_crc_errors int, payload_md5 string",
-    ).orderBy("chunk_id")
+    )
 
 
 _CS_HASH = "(('0x' || substr(md5('cs:' || doc_id), 1, 15))::BIGINT)"
@@ -1862,7 +1821,7 @@ def _f7(spark, sf):
         ev, rt,
         "event_id long, schema_name string, table_name string, n_cols int, "
         "name_len int, pk string, alter_add string, alter_drop string",
-    ).orderBy("event_id")
+    )
 
 
 @q(
@@ -1914,7 +1873,7 @@ def _d3(spark, sf):
         F.concat_ws(
             ",", F.transform(keys, lambda key: F.element_at(m, key))
         ).alias("changed_vals"),
-    ).orderBy("event_id")
+    )
 
 
 @q(
@@ -1968,7 +1927,7 @@ def _s4(spark, sf):
     return map_rows(
         docs, rt,
         "chunk_id long, n_records int, frame_error string, bodies_md5 string",
-    ).orderBy("chunk_id")
+    )
 
 
 @q(
@@ -2022,7 +1981,7 @@ def _r4(spark, sf):
     )
     return dispatch_messages(msgs).select(
         "event_id", "session_id", "action", "route", "payload"
-    ).orderBy("event_id")
+    )
 
 
 @q(
@@ -2063,9 +2022,7 @@ def _p4_deflate(spark, sf):
         text_md5 = hashlib.md5((d["text"] or "").encode("utf-8")).hexdigest()
         return [(did, text_md5, d["route"])]
 
-    return map_rows(docs, rt, "doc_id long, text_md5 string, route string").orderBy(
-        "doc_id"
-    )
+    return map_rows(docs, rt, "doc_id long, text_md5 string, route string")
 
 
 def _mm_oracle() -> str:
@@ -2205,15 +2162,12 @@ def _mm(spark, sf):
                  full, None, len(sampled_frames), samp,
                  st["n_frames"], status)]
 
-    return ordered(
-        map_rows(
-            docs, rt,
-            "doc_id long, mime string, width int, height int, "
-            "channels int, n_samples int, sample_rate int, "
-            "payload_sum long, resized_sum long, n_sampled int, "
-            "sampled_sum long, n_frames int, decode_status string",
-        ),
-        "doc_id",
+    return map_rows(
+        docs, rt,
+        "doc_id long, mime string, width int, height int, "
+        "channels int, n_samples int, sample_rate int, "
+        "payload_sum long, resized_sum long, n_sampled int, "
+        "sampled_sum long, n_frames int, decode_status string",
     )
 
 
@@ -2286,9 +2240,7 @@ def _c15(spark, sf):
         g["srid"] = 4326
         return [(k, canonical_json(parse_mysql_geometry(encode_geometry(g))))]
 
-    return map_rows(na, rt, "n_nationkey int, geo_json string").orderBy(
-        "n_nationkey"
-    )
+    return map_rows(na, rt, "n_nationkey int, geo_json string")
 
 
 @q(
@@ -2336,7 +2288,6 @@ def _f4(spark, sf):
         ev.withColumn("sql_class", classify_sql_col(sql))
         .groupBy("sql_class")
         .agg(F.count("*").alias("n"))
-        .orderBy("sql_class")
     )
 
 
@@ -2380,7 +2331,6 @@ def _d2(spark, sf):
         .withColumn("pv", pv)
         .filter(F.col("pv").isNotNull())
         .select("event_id", "delta")
-        .orderBy("event_id")
     )
 
 
@@ -2440,12 +2390,9 @@ def _curate(spark, sf):
 
     pages = pages_from_documents(spark, sf)
     survivors = curate(pages, min_tokens=20)
-    # deliberately NOT ordered(): the anti-join's own exchanges shield the
-    # heavy subtree from the sort sampler (A/B at sf1.0: 1.81s plain vs
-    # 1.90s with the extra exchange)
     return survivors.select(
         "doc_id", F.md5("text").alias("text_md5")
-    ).orderBy("doc_id")
+    )
 
 
 @q(

@@ -10,6 +10,8 @@ from __future__ import annotations
 import tempfile
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from mysql_cdc_rs_spark.operators.decode import decode_pages, split_errors
@@ -486,6 +488,60 @@ def test_hostile_pages_through_the_pipeline(spark):
             assert record["error.other"] == 0
     finally:
         R.clear_extensions()
+
+
+#: generated pages to truncate or corrupt (seed 7's first 60 hold all
+#: eight record classes of the generator)
+_WELL_FORMED = [raw for _, _, raw, _, _ in pages_rows(60, seed=7)]
+
+
+def _flip(raw: bytes, pos: int, mask: int) -> bytes:
+    out = bytearray(raw)
+    out[pos % len(out)] ^= mask
+    return bytes(out)
+
+
+#: one adversarial record: arbitrary bytes (the strategy of the kernel's
+#: ``test_decode_page_total``), or a well-formed page truncated at a drawn
+#: offset, or one with one byte flipped
+_ADVERSARIAL = st.one_of(
+    st.binary(max_size=500),
+    st.builds(
+        lambda raw, cut: raw[: cut % (len(raw) + 1)],
+        st.sampled_from(_WELL_FORMED),
+        st.integers(min_value=0),
+    ),
+    st.builds(
+        _flip,
+        st.sampled_from(_WELL_FORMED),
+        st.integers(min_value=0),
+        st.integers(min_value=1, max_value=255),
+    ),
+)
+
+
+@settings(max_examples=4, deadline=None)
+@given(raws=st.lists(_ADVERSARIAL, min_size=1, max_size=8))
+def test_adversarial_records_through_the_pipeline(spark, raws):
+    """Hypothesis records next to well-formed pages, through
+    ``run_pipeline``: the routes hold exactly the input urls, the record
+    counts every row, each error row is counted once in the record's
+    ``error.*`` counts, and none falls outside the listed classes."""
+    FUZZ = "https://fuzz.test/"
+    pages = spark.createDataFrame(
+        [(f"{FUZZ}{i}", None, raw, None, "en") for i, raw in enumerate(raws)],
+        PAGES_SCHEMA,
+    ).unionByName(pages_df(spark, 50))
+    with tempfile.TemporaryDirectory() as base:
+        cat = SinkCatalog(spark, base)
+        record = run_pipeline(pages, cat).metrics
+        routed = cat.read("routed")
+        assert routed.select("url").exceptAll(pages.select("url")).count() == 0
+        assert pages.select("url").exceptAll(routed.select("url")).count() == 0
+        assert record["rows"] == len(raws) + 50
+        errors = sum(v for k, v in record.items() if k.startswith("error."))
+        assert errors == routed.where(F.col("error").isNotNull()).count()
+        assert record["error.other"] == 0
 
 
 def test_charset_variety(decoded):

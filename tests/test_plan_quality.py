@@ -172,6 +172,21 @@ def test_enum_label_dim_is_broadcast(spark):
     assert "SortMergeJoin" not in plan
 
 
+def test_queries_plan_no_range_sort(spark):
+    """A query returns a row set (the driver compares it order-insensitively),
+    so no registry plan carries a global sort's range exchange; q3's sort is
+    read by its limit and plans as ``TakeOrderedAndProject``."""
+    from mysql_cdc_rs_spark.queries import QUERIES
+
+    ranged = [
+        name
+        for name, build in QUERIES.items()
+        if "rangepartitioning"
+        in build(spark, SF)._jdf.queryExecution().executedPlan().toString()
+    ]
+    assert ranged == []
+
+
 def test_neardup_single_embeddings_scan(spark):
     from mysql_cdc_rs_spark.queries import QUERIES
 
@@ -191,6 +206,11 @@ def test_explain_snapshots_carry_invariants():
     def read(name: str) -> str:
         with open(os.path.join(d, name)) as f:
             return f.read()
+
+    # queries return row sets: no snapshot carries a range sort's exchange
+    snaps = sorted(n for n in os.listdir(d) if n.endswith(".txt"))
+    assert len(snaps) == 14
+    assert [n for n in snaps if "rangepartitioning" in read(n)] == []
 
     # map-literal dims: no join, no broadcast, one Python node over the
     # generated pages, spread's round-robin the only exchange
