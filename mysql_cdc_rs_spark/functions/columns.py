@@ -26,14 +26,6 @@ def mysql_date(col: Column) -> Column:
     )
 
 
-def mysql_time_seconds(col: Column) -> Column:
-    """Legacy TIME decimal-packed HHMMSS int -> seconds since midnight (C8)."""
-    h = (col / 10000).cast("long")
-    m = ((col / 100) % 100).cast("long")
-    s = (col % 100).cast("long")
-    return (h * 3600 + m * 60 + s).alias("seconds")
-
-
 def mysql_datetime(col: Column) -> Column:
     """Legacy DATETIME u64 decimal-packed YYYYMMDDHHMMSS -> timestamp (C9)."""
     d = (col / F.lit(1000000)).cast("long")

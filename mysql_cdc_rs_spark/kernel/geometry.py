@@ -80,16 +80,6 @@ def _parse_wkb(buf: bytes, pos: int) -> tuple[dict[str, Any], int]:
     return {"type": name, "coordinates": coords}, pos
 
 
-def encode_point(x: float, y: float, srid: int = 0) -> bytes:
-    """Test helper: MySQL geometry cell for a Point (little-endian WKB)."""
-    return (
-        srid.to_bytes(4, "little")
-        + b"\x01"
-        + struct.pack("<I", 1)
-        + struct.pack("<dd", x, y)
-    )
-
-
 _TYPE_CODES = {v: k for k, v in TYPE_NAMES.items()}
 
 

@@ -10,7 +10,7 @@ verifiability second:
              (pairwise cosine/jaccard is O(n^2) and dead on arrival).
 - simhash:   64->32-bit sign-sketch; near-dups share the sketch value
              (or low hamming distance at scale).
-- ngram jaccard: EXACT verifier applied only to LSH candidate pairs.
+- ngram jaccard: exact word-3-gram Jaccard over shared-shingle pairs.
 
 All hashing is portable_hash60 (md5-based) so every operator has an exact
 DuckDB oracle.  Skew note: shingle explode multiplies rows ~Nx; the explode
@@ -45,13 +45,6 @@ def exact_dedup_stats(docs: DataFrame) -> DataFrame:
         F.count("*").alias("n_docs"),
         F.count_distinct(F.md5("text")).alias("n_distinct_texts"),
         (F.count("*") - F.count_distinct(F.md5("text"))).alias("n_redundant"),
-    )
-
-
-def exact_dedup_keep_first(docs: DataFrame) -> DataFrame:
-    """Exact dedup keeping the lowest doc_id per text hash."""
-    return docs.groupBy(F.md5("text").alias("text_hash")).agg(
-        F.min("doc_id").alias("keeper_id"), F.count("*").alias("n_copies")
     )
 
 
@@ -168,11 +161,7 @@ def _capped_pairs(ranked: DataFrame, max_bucket: int, *keys: str) -> DataFrame:
     )
 
 
-def lsh_candidate_pairs(
-    docs: DataFrame,
-    max_bucket: int = MAX_BUCKET,
-    obs: Observation | None = None,
-) -> DataFrame:
+def lsh_candidate_pairs(docs: DataFrame, max_bucket: int = MAX_BUCKET) -> DataFrame:
     """Near-dup candidate pairs: docs sharing any LSH band bucket.
 
     Scale-critical shape: NO self-join (a self-join would recompute the
@@ -185,22 +174,18 @@ def lsh_candidate_pairs(
     signature) are HARD-CAPPED at ``max_bucket`` members, the lowest
     doc_ids (deterministic; see ``_capped_pairs``).  Curation needs only
     the distinct ``doc_b`` and takes it from ``keep_first_drops``; the
-    pairs are for consumers of the partners (the Jaccard verifier).
-
-    ``obs`` observes the cap census (``stats.cap_record``) on the window,
-    in whatever action runs the pairs; the pairs do not change.
+    pairs are the ``dedup_lsh_pairs`` query's answer.
     """
-    ranked = ranked_buckets(docs)
-    if obs is not None:
-        ranked = ranked.observe(obs, *S.cap_record("rn", max_bucket))
-    return _capped_pairs(ranked, max_bucket, "band_id", "bucket").distinct()
+    return _capped_pairs(
+        ranked_buckets(docs), max_bucket, "band_id", "bucket"
+    ).distinct()
 
 
 def shared_shingle_inter(
     docs: DataFrame, max_bucket: int = MAX_BUCKET
 ) -> DataFrame:
-    """(doc_a, doc_b, n_inter) for docs sharing >=1 shingle — the standalone
-    feed of the Jaccard verifier.
+    """(doc_a, doc_b, n_inter) for docs sharing >=1 shingle — the feed of
+    ngram_jaccard_pairs.
 
     Same degenerate-group discipline as lsh_candidate_pairs: a stop-word
     3-gram shared by millions of docs would otherwise explode O(n^2) pairs
@@ -218,54 +203,14 @@ def shared_shingle_inter(
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    min_jaccard: float = 0.0,
-    candidates: DataFrame | None = None,
-    max_bucket: int = MAX_BUCKET,
-) -> DataFrame:
-    """Exact word-3-gram Jaccard verifier.
-
-    Two modes:
-    - ``candidates`` given — the 100 TB shape: exact Jaccard is computed
-      ONLY for the supplied (doc_a, doc_b) pairs (lsh_candidate_pairs
-      output is the natural feed), via two equi-joins of the pairs against
-      the shingle rows.  Work is O(|candidates| * shingles-per-doc), never
-      corpus-quadratic.
-    - standalone — small-SF exactness over shared-shingle pairs, with the
-      ``max_bucket`` cap enforced (see shared_shingle_inter): a degenerate
-      common shingle cannot explode the group.
+def ngram_jaccard_pairs(docs: DataFrame, max_bucket: int = MAX_BUCKET) -> DataFrame:
+    """Exact word-3-gram Jaccard over shared-shingle pairs, with the
+    ``max_bucket`` cap enforced (see shared_shingle_inter): a degenerate
+    common shingle cannot explode the group.
     """
-    sh = shingled(docs)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    if candidates is not None:
-        cand = candidates.select("doc_a", "doc_b").distinct()
-        a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-        b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-        # merge-join hints, deliberately: every input here scales with the
-        # corpus (|pairs| with its dup mass, shingles with its text), and
-        # the pair x shingle intermediate defeats Catalyst's size
-        # estimation — at 200k generator docs the planner mis-estimated it
-        # under the broadcast threshold and OOM'd the driver building the
-        # broadcast (caught by the round-5 verify census).  SMJ is the
-        # spill-safe strategy for joins whose BOTH sides are unbounded by
-        # construction; this is the same reasoning as curate's un-hinted
-        # anti-join, landing on the opposite conclusion because there the
-        # small side CAN legitimately be small.
-        inter = (
-            cand.hint("merge")
-            .join(a.hint("merge"), "doc_a")
-            .join(b.hint("merge"), ["doc_b", "shingle"])
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count("*").alias("n_inter"))
-        )
-        # the per-doc size table is corpus-sized too (one row per doc) —
-        # same no-broadcast reasoning on the at-scale path; standalone
-        # mode below stays planner-chosen (it is the small-SF oracle leg)
-        sizes = sizes.hint("merge")
-    else:
-        inter = shared_shingle_inter(docs, max_bucket)
-    out = (
+    sizes = shingled(docs).groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+    inter = shared_shingle_inter(docs, max_bucket)
+    return (
         inter.join(sizes.withColumnRenamed("doc_id", "doc_a").alias("sa"), "doc_a")
         .withColumnRenamed("n_sh", "n_a")
         .join(sizes.withColumnRenamed("doc_id", "doc_b").alias("sb"), "doc_b")
@@ -280,9 +225,6 @@ def ngram_jaccard_pairs(
         )
         .select("doc_a", "doc_b", "n_inter", "jaccard")
     )
-    if min_jaccard > 0:
-        out = out.filter(F.col("jaccard") >= min_jaccard)
-    return out
 
 
 def simhash(docs: DataFrame) -> DataFrame:

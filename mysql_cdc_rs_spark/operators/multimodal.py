@@ -14,9 +14,9 @@ libraries):
   plumbing (schema, Arrow batch shape, partitioning) is identical, so a
   future ffmpeg-style decoder swaps in without touching the plan.
 
-Scale design: feature extraction is a ``functions.udfs.map_rows`` over the
-binary column — embarrassingly parallel, no shuffle; the output schema
-carries the feature as array<float> ready for the similarity operators.
+Scale design: ``decode_blob`` is a pure per-row function, so a query runs
+it through ``functions.udfs.map_rows`` over the binary column (the
+``mm_decode_stats`` query) — embarrassingly parallel, no shuffle.
 """
 
 from __future__ import annotations
@@ -25,14 +25,7 @@ import hashlib
 import struct
 import zlib
 
-from mysql_cdc_rs_spark.functions.udfs import map_rows
-
 FEATURE_DIM = 8
-
-OUT_SCHEMA = (
-    "id long, mime string, n_bytes int, decode_status string, "
-    "feature array<float>"
-)
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}  # PNG color type -> channel count
@@ -349,13 +342,3 @@ def decode_blob(blob: bytes, mime: str) -> tuple[str, dict | None, list]:
     except (ValueError, zlib.error, struct.error):
         return "decode_error", None, _fallback_feature(blob)
     return "fallback_hash", None, _fallback_feature(blob)
-
-
-def extract_features(df):
-    """(id, blob, mime) -> (id, mime, n_bytes, decode_status, feature)."""
-    def features(rid, blob, mime):
-        blob = blob if blob is not None else b""
-        status, _, feat = decode_blob(blob, mime)
-        return [(rid, mime, len(blob), status, feat)]
-
-    return map_rows(df.select("id", "blob", "mime"), features, OUT_SCHEMA)

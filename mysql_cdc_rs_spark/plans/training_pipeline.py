@@ -34,18 +34,6 @@ from mysql_cdc_rs_spark.operators.decode import decode_pages
 from mysql_cdc_rs_spark.session import require_census_conf
 
 DEFAULT_MIN_TOKENS = 20
-# With ``verify_jaccard`` set, only each doc_b's VERIFY_MAX_PAIRS
-# lowest-doc_a candidate pairs are verified (a partitioned row_number, no
-# global sort).  This is scale-critical, not cosmetic: on a high-dup-mass
-# corpus candidacy is quadratic-ish inside the capped buckets — the 200k
-# generator corpus yields 12.77M candidate pairs for 151k candidate drops
-# (84 pairs/doc_b), and verifying ALL of them is O(|pairs| x shingles/doc)
-# ≈ 4B join rows, which OOM'd a 32-core local run and would dominate a
-# fleet job for no recall gain.  The lowest-id partners are the near-dup
-# cluster's core members, so a real duplicate verifies against them; a
-# doc_b whose only high-J partner falls outside the window survives
-# (documented under-drop risk, favoring keeping data over dropping it).
-VERIFY_MAX_PAIRS = 4
 
 
 def quality_corpus(
@@ -82,20 +70,12 @@ def curation_record(n_quality: int, lsh: Observation) -> dict:
     return {"quality": n_quality, **(S.observed(lsh) if n_quality else S.NO_CAP)}
 
 
-def curate(
-    pages: DataFrame,
-    min_tokens: int = DEFAULT_MIN_TOKENS,
-    verify_jaccard: float | None = None,
-) -> DataFrame:
+def curate(pages: DataFrame, min_tokens: int = DEFAULT_MIN_TOKENS) -> DataFrame:
     """pages -> surviving (doc_id, text) corpus.
 
-    verify_jaccard: opt-in exact-verification stage.  By default survivors
-    drop on LSH candidacy alone (``dedup.keep_first_drops``, no pairs),
-    which over-drops on band collisions (bucket agreement without real
-    similarity).  With a threshold set, the exact word-3-gram Jaccard is
-    computed for each doc_b's ``VERIFY_MAX_PAIRS`` lowest-doc_a candidate
-    pairs (``ngram_jaccard_pairs(candidates=...)``) and only pairs at or
-    above the threshold drop their doc_b.
+    Survivors drop on LSH candidacy alone (``dedup.keep_first_drops``, no
+    pairs), which over-drops on band collisions (bucket agreement without
+    real similarity); the curation stream applies the same rule.
 
     The session must exclude AQE's empty-relation rule
     (``session.require_census_conf``), as ``build_session``'s does.
@@ -125,24 +105,7 @@ def curate(
     # the cap census is observed ABOVE the persist: inside it, every
     # call's cached plan (and cache entry) would be a new one
     lsh = Observation()
-    if verify_jaccard is None:
-        drops = DD.keep_first_drops(DD.ranked_buckets(quality), "rn", lsh)
-    else:
-        from pyspark.sql import Window
-
-        # verification needs each doc_b's partners, so this branch keeps
-        # the pairs
-        pairs = DD.lsh_candidate_pairs(quality, obs=lsh)
-        w = Window.partitionBy("doc_b").orderBy("doc_a")
-        bounded = (
-            pairs.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= VERIFY_MAX_PAIRS)
-            .drop("_rn")
-        )
-        verified = DD.ngram_jaccard_pairs(
-            quality, min_jaccard=verify_jaccard, candidates=bounded
-        )
-        drops = verified.select(F.col("doc_b").alias("doc_id")).distinct()
+    drops = DD.keep_first_drops(DD.ranked_buckets(quality), "rn", lsh)
     # No broadcast hint: the drop set is proportional to the corpus's
     # near-dup mass (20-40%+ on web corpora), so a forced broadcast would
     # OOM the driver exactly when dedup matters most.  Left to the planner,

@@ -224,7 +224,3 @@ def pages_df(spark, n: int, seed: int = 42):
     nparts = max(1, min(64, n // 2000 or 1))
     return pages_from_ids(spark.range(0, n, numPartitions=nparts), seed)
 
-
-def pages_rows(n: int, seed: int = 42):
-    """Driver-side generation for small golden tests."""
-    return [make_record(seed, i) for i in range(n)]

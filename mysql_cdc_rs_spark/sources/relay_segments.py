@@ -11,8 +11,8 @@ In the Spark engine the PRODUCTION sink is Iceberg/Parquet (transactional
 append subsumes segment+CRC).  This module exists for (a) capability parity —
 a user of the reference's relay log can round-trip the same byte format, and
 (b) as an export/import side-channel (e.g. shipping decoded events to a
-non-Spark consumer).  Reading segments back into Spark is a binaryFile scan
-+ the framing ``map_rows`` pattern.
+non-Spark consumer).  ``read_segment`` reads a segment back, record by record,
+as the reference's recovery scan does.
 
 Segment layout:
     magic  4B  b"RLSG"
@@ -28,9 +28,6 @@ import io
 import os
 import zlib
 from dataclasses import dataclass
-from urllib.parse import unquote, urlsplit
-
-from mysql_cdc_rs_spark.functions.udfs import map_rows
 
 MAGIC = b"RLSG"
 VERSION = 1
@@ -123,39 +120,3 @@ def read_segment(path: str):
             yield None, err
             return
         yield from decode_records(f.read())
-
-
-def segments_to_df(spark, base_dir: str):
-    """Segments -> DataFrame[segment, record_idx, payload, error] via a
-    binaryFile scan + per-partition decode (no driver-side reads); a bad
-    header is one row with ``record_idx`` -1, and so is an empty file
-    (``BAD_MAGIC``, as in ``read_segment``).  The scan plans no split for an
-    empty file, so those rows come from the scan's file listing instead."""
-    files = spark.read.format("binaryFile").load(os.path.join(base_dir, "*.rlsg"))
-    listed = spark.createDataFrame(
-        [(_scan_path(uri),) for uri in files.inputFiles()], "path string"
-    )
-    empty = listed.join(files.select("path"), "path", "left_anti").selectExpr(
-        "path AS segment", "-1 AS record_idx", "CAST(NULL AS binary) AS payload",
-        "'BAD_MAGIC' AS error",
-    )
-
-    def records(path, blob):
-        err = _header_error(blob[:HEADER_LEN])
-        if err:
-            yield path, -1, None, err
-            return
-        for i, (payload, err) in enumerate(decode_records(blob[HEADER_LEN:])):
-            yield path, i, payload, err
-
-    return map_rows(
-        files.select("path", "content"), records,
-        "segment string, record_idx int, payload binary, error string",
-    ).union(empty)
-
-
-def _scan_path(uri: str) -> str:
-    """A listed file's URI (``inputFiles``: ``file:///d/a%20b``) as the scan's
-    ``path`` column spells it (Hadoop ``Path.toString``: ``file:/d/a b``)."""
-    u = urlsplit(uri)
-    return f"{u.scheme}:{'//' + u.netloc if u.netloc else ''}{unquote(u.path)}"

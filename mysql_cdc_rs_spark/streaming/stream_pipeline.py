@@ -524,8 +524,6 @@ def compact_seen_buckets(catalog) -> int:
     import hashlib
     import os
 
-    from mysql_cdc_rs_spark.operators.bucketing import write_bucketed
-
     spark = catalog.spark
     n_buckets = cm["n_buckets"] if cm else spark.sparkContext.defaultParallelism
     gen = (cm["gen"] if cm else 0) + 1
@@ -537,13 +535,15 @@ def compact_seen_buckets(catalog) -> int:
     #    repartition on the bucket columns uses the same hash as bucketBy,
     #    so each task owns exactly one bucket -> ONE file per bucket; a
     #    crash here leaves an orphan table the retry overwrites.
-    write_bucketed(
-        as_declared(seen, SEEN_COLUMNS).repartition(n_buckets, "band_id", "bucket"),
-        table,
-        ["band_id", "bucket"],
-        n_buckets,
-        sort_cols=["band_id", "bucket"],
-        path=os.path.join(os.path.abspath(catalog.base), table),
+    (
+        as_declared(seen, SEEN_COLUMNS)
+        .repartition(n_buckets, "band_id", "bucket")
+        .write.mode("overwrite")
+        .bucketBy(n_buckets, "band_id", "bucket")
+        .sortBy("band_id", "bucket")
+        .option("path", os.path.join(os.path.abspath(catalog.base), table))
+        .format("parquet")
+        .saveAsTable(table)
     )
     # 2. the commit: one atomic manifest replace
     catalog.write_manifest(

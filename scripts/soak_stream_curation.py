@@ -7,10 +7,15 @@ Protocol (VERDICT r4 ask #4):
   2. phase A: drain chunks 0-7 with availableNow (maxFilesPerTrigger=1 ->
      one micro-batch per chunk);
   3. run compact_seen_buckets MID-RUN (between stream runs, the documented
-     contract) and record state-table rows/bytes before and after;
+     contract) and record state-table rows/bytes before and after, and the
+     flat state rows each batch wrote (``seen_rows_by_batch``);
   4. phase B: drain chunks 8-15 across the restart (state read back from
      the compacted table);
   5. compare the full survivor set against batch curate() over all 1.6M.
+
+Each drain also records one entry per micro-batch from the query's
+``recentProgress`` (``batchId``, ``numInputRows``, ``durationMs.addBatch``),
+so a batch's time can be set against the state it probed.
 
 Usage: python scripts/soak_stream_curation.py [n_total] [n_chunks]
 Prints one JSON line; paste the numbers into BENCH/SOAK.md.
@@ -117,7 +122,9 @@ def main() -> None:
 
     out["compact_every"] = COMPACT_EVERY
 
-    def drain() -> float:
+    def drain() -> tuple[float, list[dict]]:
+        """Run the stream to the end of its input: (seconds, one entry per
+        micro-batch that ran)."""
         t0 = time.monotonic()
         q = start_curation_stream(
             stream_pages(spark, src, max_files_per_trigger=1),
@@ -126,7 +133,17 @@ def main() -> None:
             compact_every=COMPACT_EVERY,
         )
         q.awaitTermination()
-        return time.monotonic() - t0
+        sec = time.monotonic() - t0
+        batches = [
+            {
+                "batch_id": p.batchId,
+                "input_rows": p.numInputRows,
+                "add_batch_ms": p.durationMs["addBatch"],
+            }
+            for p in q.recentProgress
+            if "addBatch" in p.durationMs
+        ]
+        return sec, batches
 
     # --- 2. phase A: first half (chunk order == mtime order) ---------------
     # NEVER move source files when resuming over an existing checkpoint: a
@@ -146,20 +163,26 @@ def main() -> None:
     if os.environ.get("SOAK_RESUME") != "1":
         for f in half[N_CHUNKS // 2 :]:
             shutil.move(os.path.join(src, f), os.path.join(hold, f))
-    a_sec = drain()
+    a_sec, a_batches = drain()
     out["phase_a"] = {
         "docs": N_TOTAL // 2,
         "sec": round(a_sec, 3),
         "docs_per_sec": round((N_TOTAL / 2) / a_sec, 1),
+        "batches": a_batches,
     }
 
     # --- 3. mid-run compaction ---------------------------------------------
     # (under a cadence the in-stream compactions may have consumed the
     # whole flat tail already — then this just measures the no-op/remainder)
     if cat.exists("dedup_seen_buckets"):
-        seen_before = cat.read("dedup_seen_buckets").count()
+        by_batch = sorted(
+            cat.read("dedup_seen_buckets").groupBy("batch_id").count().collect()
+        )
+        out["seen_rows_by_batch"] = {str(b): n for b, n in by_batch}
+        seen_before = sum(n for _, n in by_batch)
         mb_before = du_mb(os.path.join(cur, "dedup_seen_buckets"))
     else:
+        out["seen_rows_by_batch"] = {}
         seen_before, mb_before = 0, 0.0
     t0 = time.monotonic()
     seen_after = compact_seen_buckets(cat)
@@ -178,11 +201,12 @@ def main() -> None:
     # --- 4. phase B: second half across the restart ------------------------
     for f in sorted(os.listdir(hold)):
         shutil.move(os.path.join(hold, f), os.path.join(src, f))
-    b_sec = drain()
+    b_sec, b_batches = drain()
     out["phase_b"] = {
         "docs": N_TOTAL // 2,
         "sec": round(b_sec, 3),
         "docs_per_sec": round((N_TOTAL / 2) / b_sec, 1),
+        "batches": b_batches,
     }
     out["stream_total"] = {
         "sec": round(a_sec + b_sec, 3),

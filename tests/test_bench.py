@@ -142,3 +142,71 @@ def test_scripts_engine_names_resolve():
                 checked.add((path.name, ref))
     assert ("bench_seen_probe.py", "DD.keep_first_drops") in checked
     assert ("soak_stream_curation.py", "mysql_cdc_rs_spark.plans.training_pipeline.curate") in checked
+
+
+def test_engine_names_have_a_caller_or_a_coverage_row():
+    """Every public top-level ``def``/``class`` of the engine is either
+    referenced, outside its own definition, by the engine, ``scripts/``,
+    ``perfbench/``, ``bench.py`` or ``__spark_entry__.py``, or named inside
+    a backticked span of COVERAGE.md.  A name that only a test calls, and
+    that maps to no reference capability, is code nothing here runs."""
+    import ast
+    import re
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parents[1]
+    engine = sorted((repo / "mysql_cdc_rs_spark").rglob("*.py"))
+    callers = [
+        *engine,
+        *sorted((repo / "scripts").glob("*.py")),
+        *sorted((repo / "perfbench").glob("*.py")),
+        repo / "bench.py",
+        repo / "__spark_entry__.py",
+    ]
+
+    def names_in(node) -> set[str]:
+        """Identifiers ``node`` uses: names, attributes, imported names and
+        dotted-identifier strings (perfbench patches entry points by name)."""
+        out = set()
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                out.add(n.attr)
+            elif isinstance(n, ast.alias):
+                out.update(n.name.split("."))
+            elif (
+                isinstance(n, ast.Constant)
+                and isinstance(n.value, str)
+                and re.fullmatch(r"[A-Za-z_][\w.]*", n.value)
+            ):
+                out.update(n.value.split("."))
+        return out
+
+    defined = {}  # name -> [(path, index of its top-level node)]
+    referenced = {}  # (path, index of a top-level node) -> names it uses
+    for path in callers:
+        tree = ast.parse(path.read_text(), str(path))
+        for i, node in enumerate(tree.body):
+            referenced[(path, i)] = names_in(node)
+            if (
+                path in engine
+                and isinstance(node, (ast.FunctionDef, ast.ClassDef))
+                and not node.name.startswith("_")
+            ):
+                defined.setdefault(node.name, []).append((path, i))
+    coverage = set()
+    for span in re.findall(r"`([^`\n]+)`", (repo / "COVERAGE.md").read_text()):
+        coverage.update(re.findall(r"\w+", span))
+
+    orphans = sorted(
+        f"{paths[0][0].relative_to(repo)}::{name}"
+        for name, paths in defined.items()
+        if name not in coverage
+        and not any(
+            name in names
+            for key, names in referenced.items()
+            if key not in paths
+        )
+    )
+    assert not orphans, "no caller and no COVERAGE row:\n" + "\n".join(orphans)

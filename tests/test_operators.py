@@ -103,10 +103,6 @@ def test_mysql_column_decoders(spark):
         C.mysql_date(F.col("v")).alias("d")
     ).first()["d"]
     assert str(d) == "2025-08-16"
-    t = spark.createDataFrame([(235959,)], "t long").select(
-        C.mysql_time_seconds(F.col("t")).alias("s")
-    ).first()["s"]
-    assert t == 23 * 3600 + 59 * 60 + 59
 
 
 def test_dedup_exact_on_known_dups(spark):
@@ -121,9 +117,6 @@ def test_dedup_exact_on_known_dups(spark):
         2,
         1,
     )
-    groups = {r["keeper_id"]: r["n_copies"] for r in
-              DD.exact_dedup_keep_first(docs).collect()}
-    assert groups == {1: 2, 3: 1}
 
 
 def test_minhash_detects_near_dup(spark):
@@ -200,9 +193,9 @@ def test_lsh_degenerate_bucket_is_capped(spark):
 
     Keep-first's positional drop set (``keep_first_drops``, capped at
     ``MAX_BUCKET``) is the distinct ``doc_b`` of the capped pairs, and
-    both observe the same cap census, which counts exactly what a groupBy
-    of the bucket sizes says the cap sheds: on more than ``MAX_BUCKET``
-    identical docs and on the quality docs of 400 generated pages."""
+    the cap census it observes counts exactly what a groupBy of the bucket
+    sizes says the cap sheds: on more than ``MAX_BUCKET`` identical docs
+    and on the quality docs of 400 generated pages."""
     from pyspark.sql import Observation
 
     from mysql_cdc_rs_spark.operators import dedup as DD
@@ -215,10 +208,9 @@ def test_lsh_degenerate_bucket_is_capped(spark):
     docs = spark.createDataFrame(
         [(i, text) for i in range(100)], "doc_id long, text string"
     )
-    pairs = DD.lsh_candidate_pairs(docs, max_bucket=10, obs=Observation()).collect()
+    pairs = DD.lsh_candidate_pairs(docs, max_bucket=10).collect()
     assert len(pairs) == 45  # C(10,2), lowest doc_ids kept
     assert {r["doc_a"] for r in pairs} | {r["doc_b"] for r in pairs} == set(range(10))
-    assert sorted(pairs) == sorted(DD.lsh_candidate_pairs(docs, max_bucket=10).collect())
 
     cap = DD.MAX_BUCKET
     same = spark.createDataFrame(
@@ -227,10 +219,10 @@ def test_lsh_degenerate_bucket_is_capped(spark):
     generated = quality_corpus(decode_pages(pages_df(spark, 400, seed=42)))
     capped = {"lsh.cap_shed": DD.LSH_BANDS * 88, "lsh.cap_buckets": DD.LSH_BANDS}
     for docs, expected in ((same, capped), (generated, S.NO_CAP)):
-        by_pairs, by_pos = Observation(), Observation()
+        by_pos = Observation()
         want = {
             r["doc_b"]
-            for r in DD.lsh_candidate_pairs(docs, obs=by_pairs)
+            for r in DD.lsh_candidate_pairs(docs)
             .select("doc_b")
             .distinct()
             .collect()
@@ -253,7 +245,7 @@ def test_lsh_degenerate_bucket_is_capped(spark):
             "lsh.cap_shed": sum(n - cap for n in sizes if n > cap),
             "lsh.cap_buckets": sum(n > cap for n in sizes),
         }
-        assert by_pos.get == by_pairs.get == census == expected
+        assert by_pos.get == census == expected
 
 
 def test_ngram_jaccard_degenerate_shingle_is_capped(spark):
@@ -273,29 +265,6 @@ def test_ngram_jaccard_degenerate_shingle_is_capped(spark):
     # uncapped-enough run still finds every pair exactly
     full = DD.ngram_jaccard_pairs(docs, max_bucket=512).collect()
     assert len(full) == 60 * 59 // 2
-
-
-def test_ngram_jaccard_on_candidates(spark):
-    """candidates mode: exact Jaccard computed ONLY for the supplied pairs
-    (the LSH-feed shape at scale), values identical to the standalone run."""
-    from mysql_cdc_rs_spark.operators import dedup as DD
-
-    base = "the quick brown fox jumps over the lazy dog again and again " * 3
-    docs = spark.createDataFrame(
-        [(1, base), (2, base + "extra tail words here"),
-         (3, "completely different content with no overlap at all " * 3),
-         (4, base + "another variant suffix")],
-        "doc_id long, text string",
-    )
-    cand = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
-    got = DD.ngram_jaccard_pairs(docs, candidates=cand).collect()
-    assert [(r["doc_a"], r["doc_b"]) for r in got] == [(1, 2)]
-    standalone = {
-        (r["doc_a"], r["doc_b"]): (r["n_inter"], r["jaccard"])
-        for r in DD.ngram_jaccard_pairs(docs).collect()
-    }
-    assert (got[0]["n_inter"], got[0]["jaccard"]) == standalone[(1, 2)]
-    assert (1, 4) in standalone  # standalone sees pairs candidates omitted
 
 
 def test_emb_neardup_capped_and_single_scan(spark):
@@ -423,28 +392,29 @@ def test_multimodal_real_codecs_kernel():
     assert wst["peak"] == max(abs(s) for s in samples)
 
 
-def test_multimodal_spark_plumbing(spark):
-    """Real decode through map_rows: PNG + WAV blobs decode, garbage
-    falls to decode_error, unknown mime to fallback_hash — no crashes."""
+def test_multimodal_spark_plumbing():
+    """``decode_blob``'s status and feature per mime (the row function the
+    ``mm_decode_stats`` query maps): PNG + WAV blobs decode, garbage falls
+    to decode_error, unknown mime to fallback_hash — no crashes."""
     from mysql_cdc_rs_spark.operators import multimodal as MM
 
     png = MM.encode_png(2, 2, bytes(range(12)))
     wav = MM.encode_wav([100, -200, 300], sample_rate=44100)
-    rows = [
-        (0, png, "image/png"),
-        (1, wav, "audio/wav"),
-        (2, b"\x00garbage", "image/png"),
-        (3, b"\x01video-bytes", "video/mp4"),
+    got = [
+        MM.decode_blob(blob, mime)
+        for blob, mime in [
+            (png, "image/png"),
+            (wav, "audio/wav"),
+            (b"\x00garbage", "image/png"),
+            (b"\x01video-bytes", "video/mp4"),
+        ]
     ]
-    df = spark.createDataFrame(rows, "id long, blob binary, mime string")
-    got = {r["id"]: r for r in MM.extract_features(df).collect()}
-    assert got[0]["decode_status"] == "decoded"
-    assert got[0]["feature"][:2] == [2.0, 2.0]  # width, height
-    assert got[1]["decode_status"] == "decoded"
-    assert got[1]["feature"][3] == 3.0  # n_samples
-    assert got[2]["decode_status"] == "decode_error"
-    assert got[3]["decode_status"] == "fallback_hash"
-    assert all(len(r["feature"]) == 8 for r in got.values())
+    assert [status for status, _, _ in got] == [
+        "decoded", "decoded", "decode_error", "fallback_hash"
+    ]
+    assert got[0][2][:2] == [2.0, 2.0]  # png width, height
+    assert got[1][2][3] == 3.0  # wav n_samples
+    assert all(len(feat) == MM.FEATURE_DIM for _, _, feat in got)
 
 
 def test_multimodal_transforms():

@@ -20,9 +20,14 @@ from mysql_cdc_rs_spark.operators.route import ROUTES, write_routes
 from mysql_cdc_rs_spark.operators import stats as S
 from mysql_cdc_rs_spark.plans.pipeline import run_pipeline
 from mysql_cdc_rs_spark.sources.catalog import SinkCatalog
-from mysql_cdc_rs_spark.sources.pages import PAGES_SCHEMA, pages_df, pages_rows
+from mysql_cdc_rs_spark.sources.pages import PAGES_SCHEMA, make_record, pages_df
 
 N = 1500
+
+
+def pages_rows(n: int, seed: int = 42):
+    """Driver-side generation for small golden tests."""
+    return [make_record(seed, i) for i in range(n)]
 
 
 @pytest.fixture(scope="module")
@@ -936,70 +941,6 @@ def test_pipeline_source_format_agnostic(spark, tmp_path):
         assert got.count() == 300, fmt
         assert got.exceptAll(want).count() == 0, fmt
         assert want.exceptAll(got).count() == 0, fmt
-
-
-def test_curate_verify_jaccard_rescues_lsh_false_positive(spark):
-    """Round-5 opt-in exact-verify stage: an LSH band collision with LOW
-    true Jaccard (boilerplate-prefix docs — the classic web false positive)
-    must drop its doc_b under default candidacy-only curation but SURVIVE
-    with ``verify_jaccard`` on, while a true near-dup drops in both modes.
-    The pair is deterministic: docs 1/103 share a 33-word prefix (word-
-    3-gram Jaccard 0.365, verified in-test) yet collide in >=1 of the 16
-    minhash bands; doc 5 is doc 1 plus one word (Jaccard 0.983)."""
-    import hashlib as _hl
-
-    from mysql_cdc_rs_spark.operators import dedup as DD
-    from mysql_cdc_rs_spark.plans.training_pipeline import curate, release
-
-    def words(seed, n, tag):
-        return [
-            f"{tag}{_hl.blake2b(f'{seed}|{tag}|{i}'.encode(), digest_size=4).hexdigest()}"
-            for i in range(n)
-        ]
-
-    base = words(1, 60, "w")
-    texts = {
-        1: " ".join(base),
-        5: " ".join(base) + " tinytail",
-        103: " ".join(base[:33] + words(103, 27, "v3_")),
-    }
-
-    # precondition: (1,103) IS an LSH candidate yet its exact Jaccard is
-    # far below the 0.5 threshold; (1,5) is a true near-dup above it
-    docs = spark.createDataFrame(
-        list(texts.items()), "doc_id long, text string"
-    )
-    cand = DD.lsh_candidate_pairs(docs)
-    ver = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in DD.ngram_jaccard_pairs(docs, candidates=cand).collect()
-    }
-    assert (1, 103) in ver and ver[(1, 103)] < 0.5
-    assert (1, 5) in ver and ver[(1, 5)] > 0.9
-
-    def page(i, text):
-        body = f"<html><body>{text}</body></html>".encode()
-        raw = (
-            f"HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n"
-            f"Content-Length: {len(body)}\r\n\r\n"
-        ).encode() + body
-        return (f"https://ex.com/d/{i}", None, raw, None, "en")
-
-    pages = spark.createDataFrame(
-        [page(i, t) for i, t in texts.items()], PAGES_SCHEMA
-    )
-
-    # default (candidacy-only): the false positive is over-dropped
-    s0 = curate(pages)
-    got0 = {r["doc_id"] for r in s0.select("doc_id").collect()}
-    release(s0)
-    assert got0 == {1}
-
-    # verification on: the false positive survives, the true dup still drops
-    s1 = curate(pages, verify_jaccard=0.5)
-    got1 = {r["doc_id"] for r in s1.select("doc_id").collect()}
-    release(s1)
-    assert got1 == {1, 103}
 
 
 def test_overwrite_partitions_parquet_leg_keeps_absent_partitions(spark):

@@ -111,40 +111,6 @@ def test_ann_corpus_not_shuffled(spark):
     assert "BroadcastNestedLoop" in plan or "BroadcastHashJoin" in plan
 
 
-def test_bucketed_join_no_shuffle(spark, tmp_path_factory):
-    """J5/O10: same-bucketed tables join with ZERO exchange in the plan."""
-    from pyspark.sql import functions as F
-
-    from mysql_cdc_rs_spark.operators.bucketing import (
-        colocated_join,
-        write_bucketed,
-    )
-    from mysql_cdc_rs_spark.sources.testdata import load
-
-    import shutil
-
-    li = load(spark, SF, "lineitem").select(
-        "l_orderkey", "l_quantity", "l_extendedprice"
-    )
-    orders = load(spark, SF, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
-    )
-    for t in ("b_lineitem", "b_orders"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-    write_bucketed(li, "b_lineitem", ["l_orderkey"], 8)
-    write_bucketed(orders, "b_orders", ["l_orderkey"], 8)
-    joined = colocated_join(spark, "b_lineitem", "b_orders", ["l_orderkey"])
-    plan = _formatted(spark, joined)
-    assert "Exchange" not in plan, plan[:2000]
-    assert "SortMergeJoin" in plan
-    # correctness: same count as the plain (shuffling) join
-    plain = li.join(orders, "l_orderkey").count()
-    assert joined.count() == plain
-    spark.sql("DROP TABLE IF EXISTS b_lineitem")
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-
-
 def test_row_decode_queries_single_python_node(spark):
     """p3/p8/c8/c10/mm/p4: exactly one Python (map_rows) node each and
     the event_id prefilter reaches the parquet scan as a pushed filter."""
@@ -496,23 +462,3 @@ def test_seen_probe_lsm_generations_one_exchange(spark, tmp_path):
     )
     for t in [m["table"]] + m["minors"]:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_verify_jaccard_candidates_no_broadcast(spark):
-    """Round-5 OOM fix pinned: in candidates mode every ngram-Jaccard join
-    input scales with the corpus (pairs with dup mass, shingles with
-    text, sizes one-row-per-doc), so the plan must contain NO broadcast
-    join — Catalyst mis-estimated the pair×shingle intermediate under the
-    threshold at 200k docs and OOM'd the driver building the broadcast.
-    The merge hints force spill-safe SMJ regardless of the estimate."""
-    from mysql_cdc_rs_spark.operators import dedup as DD
-    from mysql_cdc_rs_spark.sources.testdata import load
-
-    docs = load(spark, SF, "documents").selectExpr(
-        "doc_id", "lower(text) as text"
-    )
-    pairs = DD.lsh_candidate_pairs(docs)
-    ver = DD.ngram_jaccard_pairs(docs, candidates=pairs)
-    plan = _formatted(spark, ver)
-    assert "BroadcastHashJoin" not in plan and "BroadcastExchange" not in plan
-    assert "SortMergeJoin" in plan
