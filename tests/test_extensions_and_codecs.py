@@ -406,6 +406,14 @@ def test_parse_create_table():
 
 # --- geometry / string meta ----------------------------------------------------
 
+def test_wkb_point_roundtrip():
+    from mysql_cdc_rs_spark.kernel.geometry import encode_geometry
+
+    cell = {"type": "Point", "coordinates": [12.5, -3.25], "srid": 4326}
+    g = parse_mysql_geometry(encode_geometry(cell))
+    assert g == {"type": "Point", "coordinates": [12.5, -3.25], "srid": 4326}
+
+
 def test_wkb_all_shapes_roundtrip():
     """Every shape the reference enumerates (geometry.rs:18-160) survives
     encode -> parse with SRID, including nested Multi*/Collection."""
